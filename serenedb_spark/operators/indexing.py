@@ -3,8 +3,8 @@
 Reference semantics: ``CREATE INDEX ... USING inverted(col tokenizer ...)``
 (server/catalog/inverted_index.h:176; build operator
 server/connector/duckdb_physical_create_index.cpp). Instead of a custom
-columnstore we represent the index as THREE DataFrames (parquet tables when
-persisted), exactly the layout SURVEY.md §7 prescribes:
+columnstore we represent the index as DataFrames, the layout SURVEY.md §7
+prescribes:
 
   postings: (field, term, doc_id, freq, positions array<int>)
             bucketed/partitioned by term hash — a term's posting list is
@@ -14,6 +14,19 @@ persisted), exactly the layout SURVEY.md §7 prescribes:
   stats:    per-(field,term) df; per-(field,doc) length; global N, avgdl —
             feeds BM25/TFIDF/LM formulas
             (reference scorers: server/catalog/scorer_options.cpp:197-199).
+  universe: per-(field,doc) rows where the source column is not NULL.
+
+``build_index`` only builds: its six parts are lazy lineage over the
+source. An owner that queries the index repeatedly (the SQL door's CREATE
+INDEX, ``SereneSession.create_index``, the ES shim's snapshot) calls
+``InvertedIndex.persist()``, which holds the parts in Spark's block store
+on local disk (``StorageLevel.DISK_ONLY``, under ``spark.local.dir``) —
+the analogue of the reference writing IResearch segments once. A part is
+persisted on its first read and filled by the first query that runs on
+it; all are released when the index object dies (DROP INDEX, DROP TABLE,
+a replacing CREATE or refresh, a ROLLBACK that discards it, an ES
+snapshot invalidation). ``save_index`` writes the same parts as
+partitioned parquet for reopening elsewhere.
 
 100 TB notes: the build is one wide scan + explode + two aggregations (all
 map-side-combinable); postings are written bucketed by term so query-time
@@ -23,8 +36,10 @@ term lookups are partition-pruned joins; stats tables are tiny (|vocab| and
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,25 +49,53 @@ from serenedb_spark.analysis.analyzers import Analyzer, get_analyzer
 DEFAULT_TERM_BUCKETS = 64
 
 
-@dataclass
+#: the six relations an index build defines, in build order
+_PARTS = ("postings", "docstore", "term_stats", "doc_stats", "globals_",
+         "universe")
+
+
+class _Part:
+    """One of an index's six relations. Once the index is held
+    (InvertedIndex.persist), the first read of the attribute persists the
+    relation: a part no query reads is never planned for the cache."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.name = name
+
+    def __get__(self, idx, owner=None) -> DataFrame:
+        if idx is None:  # class access: tells @dataclass "no default"
+            raise AttributeError(self.name)
+        df = idx.__dict__[self.name]
+        held = idx.__dict__.get("_held")
+        if held is not None and self.name not in held:
+            held[self.name] = df.persist(StorageLevel.DISK_ONLY)
+        return df
+
+    def __set__(self, idx, df: DataFrame) -> None:
+        idx.__dict__[self.name] = df
+
+
+@dataclass(eq=False)
 class InvertedIndex:
     """An index over one source DataFrame: queryable as relations.
 
     The reference exposes the index itself as a relation
     (``SELECT ... FROM idx_name``, server/connector/duckdb_index_scan_entry.h);
     here `postings`/`docstore`/`term_dict` ARE DataFrames, so that falls out
-    for free.
+    for free. Compared and hashed by identity: each object owns the
+    lifetime of its persisted parts and memos.
     """
 
     name: str
     fields: dict[str, str]  # column -> analyzer name
     key: str
-    postings: DataFrame
-    docstore: DataFrame
-    term_stats: DataFrame  # (field, term, df, ctf)
-    doc_stats: DataFrame  # (field, doc_id, dl)
-    globals_: DataFrame  # (field, n_docs, avgdl, total_dl)
-    universe: DataFrame  # (field, doc_id) where the source column IS NOT NULL
+    postings: DataFrame = _Part()
+    docstore: DataFrame = _Part()
+    term_stats: DataFrame = _Part()  # (field, term, df, ctf)
+    doc_stats: DataFrame = _Part()  # (field, doc_id, dl)
+    globals_: DataFrame = _Part()  # (field, n_docs, avgdl, total_dl)
+    #: (field, doc_id) where the source column IS NOT NULL
+    universe: DataFrame = _Part()
     #: raw per-term total frequency carried across refreshes: deleted
     #: docs stay counted until compaction — the reference's "freq keeps
     #: the raw index value" (ts_dict_deletes.test:125). None = same as
@@ -72,6 +115,29 @@ class InvertedIndex:
     def default_field(self) -> str:
         return next(iter(self.fields))
 
+    def persist(self) -> "InvertedIndex":
+        """Hold the parts on local disk for as long as this object lives.
+
+        Lazy twice over: a part is registered with Spark's cache on its
+        first read (see _Part) and filled by the first query that runs on
+        it, so an index that is rebuilt and never queried costs nothing.
+        When the object is garbage (its owner dropped, replaced or rolled
+        it back) a finalizer unpersists the parts, so no owner releases by
+        hand. DISK_ONLY: MEMORY_AND_DISK ran no faster on the 5,000-doc
+        benchmark corpus and took about 12 MB more JVM heap. Idempotent."""
+        if "_held" not in self.__dict__:
+            held = self.__dict__["_held"] = {}
+            _HOLDERS.add(self)
+            release = weakref.finalize(self, _unpersist, held)
+            release.atexit = False  # the JVM may be gone by then
+        return self
+
+    def memo(self, kind: str) -> dict:
+        """A dict living exactly as long as this index, for statistics
+        derived from it (an index never changes once built; DML and
+        refresh produce new index objects, which start empty)."""
+        return self.__dict__.setdefault(f"_memo_{kind}", {})
+
     def term_dict(self, field: str | None = None) -> DataFrame:
         """Term dictionary with document frequency (drives ts_dict_* facets
         and prefix/wildcard/regexp/fuzzy term expansion)."""
@@ -79,6 +145,30 @@ class InvertedIndex:
         if field is not None:
             td = td.where(F.col("field") == field)
         return td
+
+
+#: live indexes that hold their parts. Spark keys its cache by plan, so
+#: two of them can share one entry: a refresh with nothing written
+#: rebuilds the very same plans, and the new index's persist of a part
+#: joins the old index's entry. A dying index releases a part only when
+#: no other holder has the same part.
+_HOLDERS: "weakref.WeakSet[InvertedIndex]" = weakref.WeakSet()
+
+
+def _unpersist(held: dict[str, DataFrame]) -> None:
+    others = [ix.__dict__["_held"] for ix in list(_HOLDERS)]
+    # derived parts first: term_stats/globals_ were built reading the
+    # postings/doc_stats caches
+    for name in reversed(_PARTS):
+        p = held.get(name)
+        if p is None:
+            continue
+        try:
+            if not any(name in o and p.sameSemantics(o[name])
+                       for o in others):
+                p.unpersist()
+        except Exception:  # noqa: BLE001 — its Spark session was stopped
+            pass
 
 
 def build_index(
@@ -285,12 +375,14 @@ def build_index(
     # from a pinned snapshot after DROP TEXT SEARCH DICTIONARY
     # (ts_offsets_isolation.test:50)
     idx.__dict__["_an_cache"] = an_cache
-    # NB: no tokenized intermediate is shared between postings and
-    # doc_stats (each evaluates its tokenize expression once inside its
-    # own Generate): persisting one would mean reading array<struct>
-    # columns back from the in-memory columnar cache, which is
-    # pathologically slow (measured 185 s vs 23 s to recompute postings
-    # at the 100× corpus)
+    # NB: a pure builder — nothing is persisted here; owners that query
+    # the index repeatedly call idx.persist() (each part on disk from its
+    # first read, released with the index object). No tokenized
+    # intermediate is shared between postings and doc_stats (each
+    # evaluates its tokenize expression once inside its own Generate):
+    # holding one would mean reading its array<struct> token column back
+    # from the columnar cache, which is pathologically slow (measured
+    # 185 s vs 23 s to recompute postings at the 100× corpus)
     return idx
 
 

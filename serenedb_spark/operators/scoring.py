@@ -259,9 +259,9 @@ def scored_contributions_multi(
     # keep predicate + contribution, hundreds of py4j calls) is memoized
     # per (index, query shape) alongside the stats cache — expressions
     # only; the plan is still built and executed fresh per call.
-    mck = (id(idx), tuple(field_terms), scorer,
-           tuple(sorted(params.items())))
-    cached = _MULTI_EXPR_CACHE.get(mck)
+    multi_exprs = idx.memo("multi_exprs")
+    mck = (tuple(field_terms), scorer, tuple(sorted(params.items())))
+    cached = multi_exprs.get(mck)
     if cached is None:
         stats: dict = {}
         gl: dict = {}
@@ -313,8 +313,8 @@ def scored_contributions_multi(
                     lambda f, g: float(n_by_field[f])).alias("n_terms"),
             ]
         contrib = _contrib_expr_n(scorer, F.col("n_terms"), params)
-        cached = _MULTI_EXPR_CACHE[mck] = (idx, keep, sel, contrib)
-    _idx_ref, keep, sel, contrib = cached
+        cached = multi_exprs[mck] = (keep, sel, contrib)
+    keep, sel, contrib = cached
 
     # the isin filters are pushable predicates (term-bucket pruning on a
     # persisted index)
@@ -410,33 +410,28 @@ DISABLE_TOPK_PRUNING = False
 #: bound computation (driver-side per-term stats stop paying off)
 SCORED_TERMS_LIMIT = 64
 
-#: per-(index, field) cache of the collected stats rows used for bounds —
-#: index stats are immutable once built (DML produces new InvertedIndex
-#: objects), so the driver pays the tiny collects once, not per query
-_STATS_CACHE: dict[tuple[int, str], tuple[object, object, dict]] = {}
-
-#: per-(index, query-shape) cache of the phase-A pruning floor θ — like
-#: _bound_stats, a statistic of the immutable index (the k-th best
-#: single-term contribution of the strongest term), NOT a result: it only
-#: decides which terms are non-essential, and the pruned plan is provably
-#: identical to the unpruned one. Keyed on the index OBJECT (held in the
-#: value so its id() can't be reused); rebuilt indexes are new objects.
-_THETA_CACHE: dict[tuple, tuple[object, float | None]] = {}
-
-#: per-(index, multi-field query shape) memo of the literal-stats CASE
-#: columns scored_contributions_multi builds (expressions only — see the
-#: function body); the index object is held in the value so its id()
-#: cannot be reused by a rebuilt index
-_MULTI_EXPR_CACHE: dict[tuple, tuple] = {}
+# Three statistics of an index are memoized ON the index (idx.memo), so
+# they die with it and a rebuilt index starts empty:
+#  * "bound_stats": per field, the collected stats rows used for bounds —
+#    index stats are immutable once built (DML produces new InvertedIndex
+#    objects), so the tiny collects run once per index, not per query;
+#  * "theta": per query shape, the phase-A pruning floor θ — a statistic
+#    of the immutable index (the k-th best single-term contribution of
+#    the strongest term), NOT a result: it only decides which terms are
+#    non-essential, and the pruned plan is provably identical to the
+#    unpruned one;
+#  * "multi_exprs": per multi-field query shape, the literal-stats CASE
+#    columns scored_contributions_multi builds (expressions only — see
+#    the function body).
 
 
 def _bound_stats(idx: InvertedIndex, field: str, terms: list[str]):
     """(globals_row | None, {term: stats_dict}) with incremental caching."""
-    ck = (id(idx), field)
-    if ck not in _STATS_CACHE:
+    cache = idx.memo("bound_stats")
+    if field not in cache:
         g_rows = idx.globals_.where(F.col("field") == field).collect()
-        _STATS_CACHE[ck] = (idx, g_rows[0] if g_rows else None, {})
-    _idx_ref, g, known = _STATS_CACHE[ck]
+        cache[field] = (g_rows[0] if g_rows else None, {})
+    g, known = cache[field]
     missing = [t for t in terms if t not in known]
     if missing and g is not None:
         for r in idx.term_stats.where(
@@ -540,10 +535,11 @@ def scored_topk(
     # and, being a statistic of the immutable index, cached per
     # (index, t*, k, scorer, params) so repeated top-k runs skip the job.
     t_star = max(ubs, key=ubs.get)
-    tck = (id(idx), field, t_star, boosts[t_star], k, scorer, round_to,
+    thetas = idx.memo("theta")
+    tck = (field, t_star, boosts[t_star], k, scorer, round_to,
            tuple(sorted(params.items())))
-    if tck in _THETA_CACHE:
-        theta = _THETA_CACHE[tck][1]
+    if tck in thetas:
+        theta = thetas[tck]
         if theta is None:
             return full()  # cached "not enough floor docs" outcome
     else:
@@ -554,12 +550,12 @@ def scored_topk(
             .orderBy(F.col("score").desc(), "doc_id").limit(k).collect()
         )
         if len(top_a) < k:
-            _THETA_CACHE[tck] = (idx, None)
+            thetas[tck] = None
             return full()  # not enough floor docs — no pruning possible
         # margin: strictly wider than the 10^-round_to rounding quantum,
         # so a pruned doc can never round into a tie with the k-th kept doc
         theta = top_a[-1]["score"] - 10.0 ** (-round_to + 1)
-        _THETA_CACHE[tck] = (idx, theta)
+        thetas[tck] = theta
 
     # phase B — essential terms: drop the longest ascending-UB prefix with
     # cumulative bound < θ

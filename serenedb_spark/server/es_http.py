@@ -62,14 +62,24 @@ class EsShim:
         from serenedb_spark.operators.maintenance import SearchTable
 
         self.tables[name] = SearchTable(source, fields, key=key, name=name)
-        self._snapshots.pop(name, None)
+        self._drop_snapshot(name)
 
     def _index(self, name: str):
+        """The index's snapshot: built on first use after a write and held
+        on disk (InvertedIndex.persist) until the next write drops it."""
         if name not in self._snapshots:
-            idx = self.tables[name].index()
+            idx = self.tables[name].index().persist()
             self._snapshots[name] = idx
             self.session._indexes[name] = idx
         return self._snapshots[name]
+
+    def _drop_snapshot(self, name: str) -> None:
+        """Forget the snapshot after a write: with the session's entry
+        gone too, nothing holds the old index, so its parts are released
+        now rather than at the next _index()."""
+        old = self._snapshots.pop(name, None)
+        if old is not None and self.session._indexes.get(name) is old:
+            del self.session._indexes[name]
 
     # ---- route implementations ------------------------------------------
     def search(self, index: str, body: dict) -> dict:
@@ -132,7 +142,7 @@ class EsShim:
                     F.col("_id").alias(st.key), "text"
                 )
             st.insert(typed)
-            self._snapshots.pop(index, None)
+            self._drop_snapshot(index)
             n += sub.count()
         return {"errors": False, "items": n}
 
@@ -175,7 +185,7 @@ class EsShim:
                          name=name)
         st.es_types = es_types
         self.tables[name] = st
-        self._snapshots.pop(name, None)
+        self._drop_snapshot(name)
         return {"acknowledged": True, "index": name}
 
     def mapping(self, index: str) -> dict:
@@ -217,7 +227,7 @@ class EsShim:
                 [(int(doc_id), str(body.get("text", "")))],
                 f"{st.key} long, text string")
         st.update(row)
-        self._snapshots.pop(index, None)
+        self._drop_snapshot(index)
         return {"_index": index, "_id": doc_id,
                 "result": "updated" if existed else "created"}
 
@@ -226,7 +236,7 @@ class EsShim:
         key_t = dict(st._empty.dtypes).get(st.key, "string")
         val = doc_id if key_t == "string" else int(doc_id)
         st.delete(self.spark.createDataFrame([(val,)], f"{st.key} {key_t}"))
-        self._snapshots.pop(index, None)
+        self._drop_snapshot(index)
         return {"_index": index, "_id": doc_id, "result": "deleted"}
 
     def get_doc(self, index: str, doc_id: str) -> dict:
@@ -375,7 +385,7 @@ class EsShim:
         }
 
     def refresh(self, index: str) -> dict:
-        self._snapshots.pop(index, None)
+        self._drop_snapshot(index)
         self._index(index)
         return {"_shards": {"total": 1, "successful": 1, "failed": 0}}
 

@@ -1051,7 +1051,8 @@ class SereneSession:
         from serenedb_spark.plans.dialect import rewrite_ts_split
         exprs = {name: F.expr(rewrite_ts_split(self._inline_macros(e)))
                  for name, e in (getattr(ddl, "exprs", None) or {}).items()}
-        old = self._indexes.get(ddl.name)
+        old_segments = getattr(self._indexes.get(ddl.name), "_segments",
+                               None)
         idx = build_index(df, fields, key=key, include=include,
                           name=ddl.name, exprs=exprs or None)
         # segment model: each refresh freezes a segment holding the
@@ -1062,9 +1063,9 @@ class SereneSession:
         # stats: a term's segment contributes its RAW ctf only while it
         # still has a live latest-copy doc there
         # (ts_dict_deletes_matrix.test:300).
-        if old is not None and getattr(old, "_segments", None):
+        if old_segments:
             prev_ids = None
-            for ids_i, _p in old._segments:
+            for ids_i, _p in old_segments:
                 prev_ids = ids_i if prev_ids is None \
                     else prev_ids.unionByName(ids_i)
             prev_ids = prev_ids.distinct()
@@ -1075,11 +1076,16 @@ class SereneSession:
                 new_ids = new_ids.unionByName(
                     dirty.toDF("doc_id").distinct()).distinct()
             seg_post = idx.postings.join(new_ids, "doc_id", "left_semi")
-            idx._segments = list(old._segments) + [(new_ids, seg_post)]
+            idx._segments = list(old_segments) + [(new_ids, seg_post)]
         else:
             idx._segments = [(df.select(F.col(key).alias("doc_id"))
                               .distinct(), idx.postings)]
         self._indexes[ddl.name] = idx
+        # held only once the index it replaces is unreferenced and has
+        # released its parts: the old docstore is a subtree of the new
+        # plans, and releasing it after new parts were registered makes
+        # Spark re-plan every one of them (~270 ms per refresh)
+        idx.persist()
         if not hasattr(self, "_index_sources"):
             self._index_sources = {}
         self._index_sources[ddl.name] = ddl.table
@@ -1491,7 +1497,7 @@ class SereneSession:
         if not hasattr(self, "_index_sources"):
             self._index_sources = {}
         self._index_sources[name] = table if isinstance(table, str) else None
-        return idx
+        return idx.persist()  # after any index it replaces is released
 
     # ---- search ----------------------------------------------------------
     def match(
