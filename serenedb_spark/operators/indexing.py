@@ -6,10 +6,12 @@ server/connector/duckdb_physical_create_index.cpp). Instead of a custom
 columnstore we represent the index as DataFrames, the layout SURVEY.md §7
 prescribes:
 
-  postings: (field, term, doc_id, freq, positions array<int>)
-            bucketed/partitioned by term hash — a term's posting list is
-            co-located, so every predicate→semi-join shuffles only the
-            (small) claimed terms, not the corpus.
+  postings: (field, term, doc_id, freq, positions array<int>) — a
+            query filters it to the (small) claimed terms, so no
+            predicate shuffles the corpus. ``save_index`` output is
+            partitioned by term hash bucket, so there a term lookup
+            also prunes partitions; the in-process persisted postings
+            carry no bucket (the term predicate runs in the cached scan).
   docstore: (doc_id, <included columns...>) — IResearch columnstore/INCLUDE.
   stats:    per-(field,term) df; per-(field,doc) length; global N, avgdl —
             feeds BM25/TFIDF/LM formulas
@@ -29,9 +31,9 @@ snapshot invalidation). ``save_index`` writes the same parts as
 partitioned parquet for reopening elsewhere.
 
 100 TB notes: the build is one wide scan + explode + two aggregations (all
-map-side-combinable); postings are written bucketed by term so query-time
-term lookups are partition-pruned joins; stats tables are tiny (|vocab| and
-|docs| rows) and always broadcastable.
+map-side-combinable); ``save_index`` writes postings bucketed by term so
+term lookups on a reopened index are partition-pruned; stats tables are
+tiny (|vocab| and |docs| rows) and always broadcastable.
 """
 
 from __future__ import annotations

@@ -316,8 +316,9 @@ def scored_contributions_multi(
         cached = multi_exprs[mck] = (keep, sel, contrib)
     keep, sel, contrib = cached
 
-    # the isin filters are pushable predicates (term-bucket pruning on a
-    # persisted index)
+    # the isin filters push into the scan: a parquet filter on a reopened
+    # save_index layout, the cached-scan predicate on a persisted index
+    # (no bucket predicate is added, so no partition pruning)
     P = idx.postings.where(
         F.col("field").isin(fields) & F.col("term").isin(terms))
     if sel is None:
@@ -396,7 +397,7 @@ def _contrib_expr_n(scorer, n_terms_col, params):
 #            with ΣUB < θ is "non-essential" — a doc matching ONLY those
 #            can score at most ΣUB < θ, strictly below k already-seen docs,
 #            so the candidate set is docs matching ≥1 ESSENTIAL term, and
-#            only their postings are re-read (bucket-pruned on disk).
+#            only their postings are re-read (term-filtered).
 # Exact, not approximate: pruning uses strict bounds with a margin wider
 # than the output rounding quantum, so the rounded (score, doc_id) ordering
 # is bit-identical to the unpruned plan.

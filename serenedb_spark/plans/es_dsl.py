@@ -430,7 +430,7 @@ def es_search(
     the handlers.cpp:635 path with the SQL generation replaced by the
     DataFrame plan. Returns (doc_id, score) like an ES hits list."""
     from serenedb_spark.operators.scoring import score as _score
-    from serenedb_spark.plans.planner import compile_query
+    from serenedb_spark.plans.planner import compile_query, is_pure_disjunction
 
     field = default_field or idx.default_field()
     query = body.get("query", {"match_all": {}})
@@ -451,10 +451,13 @@ def es_search(
         f, node = parse_query(query, idx.analyzer(field))
         field = f or field
         compiled = compile_query(idx, field, node)
-        s = _score(idx, field, compiled.score_terms, scorer)
+        s = _score(idx, field, compiled.score_terms, scorer,
+                   terms_local=compiled.terms_local)
+        # scorer-reuse: a pure disjunction's score keys ARE the match set
+        hits = (s if is_pure_disjunction(node)
+                else compiled.doc_ids.join(s, "doc_id", "left"))
         out = (
-            compiled.doc_ids.join(s, "doc_id", "left")
-            .select(
+            hits.select(
                 "doc_id",
                 F.round(F.coalesce(F.col("score"), F.lit(0.0)), 4)
                 .alias("score"),

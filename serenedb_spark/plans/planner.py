@@ -3,20 +3,28 @@
 Reference flow: predicates are claimed at plan time and compiled to an
 irs::Filter executed per segment, producing doc ids that are then
 materialized from the columnstore (server/connector/duckdb_table_function.cpp
-:1178-1226, search_filter_builder.cpp). Here the same claim produces a
-DataFrame graph: term-filtered postings scans → set algebra on doc_id →
-late-materialization join back to the docstore.
+:1178-1226, search_filter_builder.cpp). IResearch evaluates the whole
+boolean filter as one iterator tree over the posting lists. Here the same
+claim produces a DataFrame graph, then a late-materialization join back to
+the docstore:
+  * a boolean tree over Term/AnyOf/AllOf/Phrase leaves is ONE postings
+    scan and ONE groupBy(doc_id) carrying a presence flag per term (and the
+    positions of phrase words), with the tree evaluated as a column
+    predicate (_flag_compile);
+  * every other shape (dictionary expansions, phrase sequences, n-gram
+    similarity, compounds, unanchored trees) falls back to one
+    term-filtered postings scan per leaf and set algebra on doc_id.
 
 Scale discipline (100 TB):
   * every leaf starts from postings filtered by literal term predicates —
-    these push down to the parquet scan (PushedFilters) and prune term
-    buckets; the corpus is never scanned.
+    pushed into the scan (a parquet filter that also prunes term buckets on
+    a reopened save_index layout); the corpus is never scanned.
   * term-dictionary expansions (prefix/wildcard/regexp/fuzzy/range) filter
     the tiny term_stats table and BROADCAST the matched term list into the
     postings join.
-  * doc-id set algebra uses semi/anti joins on doc_id, which AQE converts to
-    broadcast joins when one side is small (the common case: selective
-    predicates).
+  * the fallback's doc-id set algebra uses semi/anti joins on doc_id, which
+    AQE converts to broadcast joins when one side is small (the common
+    case: selective predicates).
   * NULL soundness: `col @@ q` is NULL for NULL col under SQL 3VL, so NOT
     excludes those docs. We carry a per-field `universe` of non-null docs and
     compute NOT as anti-join against it (reference soundness note:
@@ -447,24 +455,31 @@ _FLAG_MAX_TERMS = 64
 
 def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
                   boost: float) -> "CompiledQuery | None":
-    """Boolean trees over pure Term/AnyOf/AllOf leaves compiled as ONE
+    """Boolean trees over Term/AnyOf/AllOf/Phrase leaves compiled as ONE
     aggregation (guide §2.4 — remove shuffles outright): filter postings
     to every involved term, groupBy(doc_id) with a presence flag per
     term, and evaluate the tree as a column predicate over the flags.
-    The per-leaf shape shuffled one distinct aggregate per leaf and
-    chained semi/anti joins; this is one exchange regardless of tree
-    size, and the exchange carries only (doc_id, term) pairs for the
-    involved terms.
+    A phrase word also gets its positions array in the same aggregate
+    (postings are unique per (term, doc_id), so `first` sees one value
+    at most); the phrase predicate is _compile_phrase's slop fold over
+    those columns, a word absent from the doc being an empty array. The
+    per-leaf shape shuffled one distinct aggregate per leaf, chained
+    semi/anti joins and ran a driver job to order each phrase's join;
+    this is one exchange regardless of tree size, and the exchange
+    carries only the involved terms' rows (plus phrase positions).
 
     Sound only when the all-leaves-false evaluation is False
     ("positive-anchored"): every matching doc then carries at least one
     involved term, so the grouped relation covers the match set. NOT
     stays 3VL-correct because every candidate doc has a posting in this
     field, hence is in the field's non-null universe. Returns None (→
-    general path) for non-term leaves (phrases, dictionary expansions),
-    unanchored shapes (e.g. a bare NOT), or oversized term sets."""
+    set-algebra fallback) for other leaves (dictionary expansions,
+    phrase sequences, n-gram similarity, compounds), unanchored shapes
+    (e.g. a bare NOT), or oversized term sets. compile_query routes only
+    And/Or/Not here; a bare phrase keeps _compile_phrase."""
     terms: list[str] = []
     t_ix: dict[str, int] = {}
+    positional: set[int] = set()
 
     def intern(t: str) -> int:
         if t not in t_ix:
@@ -473,12 +488,25 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
         return t_ix[t]
 
     # conv → (pred_builder, value-under-all-false, [(term, boost)...]) | None
+    # where pred_builder(flag columns, positions columns) → predicate
     def conv(n, b):
         if isinstance(n, q.Boost):
             return conv(n.part, b * n.factor)
+        if isinstance(n, q.Phrase) and len(n.words) == 1:
+            n = q.Term(n.words[0])
         if isinstance(n, q.Term):
             i = intern(n.term)
-            return (lambda fl, i=i: fl[i]), False, [(n.term, b)]
+            return (lambda fl, pos, i=i: fl[i]), False, [(n.term, b)]
+        if isinstance(n, q.Phrase):
+            if not n.words:
+                return None
+            ixs = [intern(w) for w in n.words]
+            positional.update(ixs)
+
+            def pred(fl, pos, ixs=ixs, gaps=n.gaps):
+                return F.size(_slop_fold([pos[i] for i in ixs], gaps)) > 0
+
+            return pred, False, [(w, b) for w in dict.fromkeys(n.words)]
         if isinstance(n, (q.AnyOf, q.AllOf)):
             ts = list(dict.fromkeys(n.terms))
             if not ts:
@@ -487,9 +515,10 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
                     else max(1, n.min_match))
             ixs = [intern(t) for t in ts]
             if need > len(ts):
-                return (lambda fl: F.lit(False)), False, [(t, b) for t in ts]
+                return ((lambda fl, pos: F.lit(False)), False,
+                        [(t, b) for t in ts])
 
-            def pred(fl, ixs=ixs, need=need):
+            def pred(fl, pos, ixs=ixs, need=need):
                 if need == 1:
                     c = fl[ixs[0]]
                     for i in ixs[1:]:
@@ -507,10 +536,10 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
                 return None
             is_and = isinstance(n, q.And)
 
-            def pred(fl, subs=subs, is_and=is_and):
-                c = subs[0][0](fl)
+            def pred(fl, pos, subs=subs, is_and=is_and):
+                c = subs[0][0](fl, pos)
                 for s in subs[1:]:
-                    c = (c & s[0](fl)) if is_and else (c | s[0](fl))
+                    c = (c & s[0](fl, pos)) if is_and else (c | s[0](fl, pos))
                 return c
 
             af = (all if is_and else any)(s[1] for s in subs)
@@ -521,7 +550,8 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
             if sub is None:
                 return None
             # negative clauses contribute no score terms (Lucene/reference)
-            return (lambda fl, sub=sub: ~sub[0](fl)), (not sub[1]), []
+            return ((lambda fl, pos, sub=sub: ~sub[0](fl, pos)),
+                    (not sub[1]), [])
         return None
 
     res = conv(node, boost)
@@ -531,11 +561,15 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
     if all_false:
         return None  # not positive-anchored: needs the universe relation
     P = _postings_for_terms(idx, field, terms)
+    is_t = [F.col("term") == F.lit(t) for t in terms]
     g = P.groupBy("doc_id").agg(
-        *[F.max(F.col("term") == F.lit(t)).alias(f"__f{i}")
-          for i, t in enumerate(terms)])
+        *[F.max(c).alias(f"__f{i}") for i, c in enumerate(is_t)],
+        *[F.first(F.when(is_t[i], F.col("positions")), ignorenulls=True)
+          .alias(f"__p{i}") for i in sorted(positional)])
     flags = [F.col(f"__f{i}") for i in range(len(terms))]
-    docs = g.where(pred(flags)).select("doc_id")
+    pos = {i: F.coalesce(F.col(f"__p{i}"), F.array().cast("array<int>"))
+           for i in positional}
+    docs = g.where(pred(flags, pos)).select("doc_id")
     merged: dict[str, float] = {}
     for t, b in tl:
         merged[t] = max(merged.get(t, b), b)
@@ -609,7 +643,16 @@ def _compile_phrase(idx: InvertedIndex, field: str, ph: q.Phrase) -> DataFrame:
         )
         joined = part if joined is None else joined.join(part, "doc_id")
 
-    def _gap_pred(prev, lo, hi):
+    valid = _slop_fold([F.col(f"pos{i}") for i in range(len(words))],
+                       ph.gaps)
+    return joined.where(F.size(valid) > 0).select("doc_id")
+
+
+def _slop_fold(positions: list, gaps) -> "F.Column":
+    """The positions of the phrase's last word that end a match — the
+    fold _compile_phrase documents; the phrase matches iff non-empty."""
+
+    def gap_pred(prev, lo, hi):
         def pred(p):
             return F.exists(
                 prev, lambda v: (p - v >= F.lit(lo)) & (p - v <= F.lit(hi))
@@ -617,12 +660,10 @@ def _compile_phrase(idx: InvertedIndex, field: str, ph: q.Phrase) -> DataFrame:
 
         return pred
 
-    valid = F.col("pos0")
-    for i in range(1, len(words)):
-        lo, hi = ph.gaps[i - 1]
-        valid = F.filter(F.col(f"pos{i}"), _gap_pred(valid, lo, hi))
-
-    return joined.where(F.size(valid) > 0).select("doc_id")
+    valid = positions[0]
+    for col, (lo, hi) in zip(positions[1:], gaps):
+        valid = F.filter(col, gap_pred(valid, lo, hi))
+    return valid
 
 
 #: leaves allowed as phrase-sequence parts (reference search.h:37-39)
@@ -671,19 +712,8 @@ def _compile_phrase_seq(idx: InvertedIndex, field: str,
         rel = _seq_part_positions(idx, field, part, i)
         joined = rel if joined is None else joined.join(rel, "doc_id")
 
-    def _gap_pred(prev, lo, hi):
-        def pred(p):
-            return F.exists(
-                prev, lambda v: (p - v >= F.lit(lo)) & (p - v <= F.lit(hi))
-            )
-
-        return pred
-
-    valid = F.col("pos0")
-    for i in range(1, len(parts)):
-        lo, hi = ph.gaps[i - 1]
-        valid = F.filter(F.col(f"pos{i}"), _gap_pred(valid, lo, hi))
-
+    valid = _slop_fold([F.col(f"pos{i}") for i in range(len(parts))],
+                       ph.gaps)
     return joined.where(F.size(valid) > 0).select("doc_id")
 
 

@@ -1890,6 +1890,7 @@ def execute_select(stmt: SearchSelect, get_index,
         parts = []
         for idx, col, node, c in compiled:
             parts.append(_score(idx, col, c.score_terms, stmt.scorer,
+                                terms_local=c.terms_local,
                                 **stmt.scorer_params))
         score_df = parts[0]
         for p in parts[1:]:
@@ -1897,14 +1898,19 @@ def execute_select(stmt: SearchSelect, get_index,
                 score_df.unionByName(p)
                 .groupBy("doc_id").agg(F.sum("score").alias("score"))
             )
+
+    if score_df is None:
+        out = idx0.docstore.join(doc_ids, "doc_id", "left_semi")
+    else:
         if (len(compiled) == 1 and not stmt.or_groups
                 and is_pure_disjunction(compiled[0][2])):
-            # scorer-reuse: the score relation's keys ARE the match set
-            doc_ids = score_df.select("doc_id")
-
-    out = idx0.docstore.join(doc_ids, "doc_id", "left_semi")
-    if score_df is not None:
-        out = out.join(score_df, "doc_id", "left").withColumn(
+            # scorer-reuse: the score relation's keys ARE the match set,
+            # so one inner join replaces the semi join + left join
+            out = idx0.docstore.join(score_df, "doc_id", "inner")
+        else:
+            out = (idx0.docstore.join(doc_ids, "doc_id", "left_semi")
+                   .join(score_df, "doc_id", "left"))
+        out = out.withColumn(
             "__score", F.coalesce(F.col("score"), F.lit(0.0))
         ).drop("score")
     return _finish_select(stmt, _restore_key_name(idx0, out), idx=idx0)

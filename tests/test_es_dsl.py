@@ -66,24 +66,34 @@ def test_es_search_equals_direct_plan(spark):
     from tests.conftest import SF_DIR
 
     idx = Q.doc_index(spark, SF_DIR)
-    body = {"query": {"bool": {
-        "must": [{"match": {"text": "spark"}}],
-        "should": [{"term": {"text": "stream"}}],
-    }}, "size": 15}
-    got = es_search(idx, body).collect()
+    cases = [
+        ({"query": {"bool": {
+            "must": [{"match": {"text": "spark"}}],
+            "should": [{"term": {"text": "stream"}}],
+        }}, "size": 15},
+         q.Compound(must=[q.AnyOf(["spark"])], should=[q.Term("stream")])),
+        # paged: served by the DataFrame plan, not the SQL rendering
+        ({"query": {"match": {"text": "spark stream"}}, "from": 5,
+          "size": 10},
+         q.AnyOf(["spark", "stream"])),
+    ]
+    for body, node in cases:
+        got = es_search(idx, body).collect()
 
-    node = q.Compound(must=[q.AnyOf(["spark"])], should=[q.Term("stream")])
-    compiled = compile_query(idx, "text", node)
-    s = _score(idx, "text", compiled.score_terms, "bm25")
-    want = (
-        compiled.doc_ids.join(s, "doc_id", "left")
-        .select("doc_id",
-                F.round(F.coalesce(F.col("score"), F.lit(0.0)), 4).alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id"))
-        .limit(15)
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+        compiled = compile_query(idx, "text", node)
+        s = _score(idx, "text", compiled.score_terms, "bm25")
+        offset = body.get("from", 0)
+        want = (
+            compiled.doc_ids.join(s, "doc_id", "left")
+            .select("doc_id",
+                    F.round(F.coalesce(F.col("score"), F.lit(0.0)), 4)
+                    .alias("score"))
+            .orderBy(F.col("score").desc(), F.col("doc_id"))
+            .limit(offset + body["size"])
+            .collect()[offset:]
+        )
+        assert want
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], body
 
 
 def test_multi_match_field_boost_and_tie_breaker(spark):

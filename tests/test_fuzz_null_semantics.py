@@ -37,6 +37,11 @@ leaves = st.one_of(
     st.tuples(terms, terms, st.integers(0, 3)).map(
         lambda p: q.Phrase([p[0], p[1]], slop=p[2])
     ),
+    # a window starting at 0: the second word may share the first's
+    # position, so `a a` matches a single occurrence of `a`
+    st.tuples(terms, terms).map(
+        lambda p: q.Phrase([p[0], p[1]], gaps=[(0, 3)])
+    ),
     st.sampled_from(["sp", "da", "jo", "zz"]).map(q.Prefix),
     st.sampled_from(["%ar%", "d_ta", "%ow"]).map(q.Wildcard),
     st.sampled_from(["sprk", "joon", "dta"]).map(lambda w: q.Fuzzy(w, 1)),

@@ -265,6 +265,62 @@ def test_sql_scored_topk_wand_delegation(session, monkeypatch):
     assert delegated.values.tolist() == general.values.tolist()
 
 
+def _postings_scans(df) -> int:
+    """Top-level reads of the persisted postings in df's executed (after
+    a collect, final adaptive) plan:
+    InMemoryTableScan nodes whose cached relation carries `positions`.
+    Scans nested inside another cached relation's plan (term_stats is
+    built from postings) are not reads of this query."""
+    def walk(p) -> int:
+        name = p.nodeName()
+        if name == "InMemoryTableScan":
+            cols = p.relation().output()
+            return int(any(cols.apply(i).name() == "positions"
+                           for i in range(cols.size())))
+        if name == "AdaptiveSparkPlan":
+            return walk(p.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(p.plan())
+        kids = p.children()
+        return sum(walk(kids.apply(i)) for i in range(kids.size()))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+@pytest.mark.parametrize("sql,node", [
+    ("SELECT doc_id FROM documents WHERE text @@ websearch_to_tsquery("
+     "'spark -dup \"hash join\" OR stream') ORDER BY doc_id",
+     (q.Term("spark") & ~q.Term("dup") & q.Phrase(["hash", "join"]))
+     | q.Term("stream")),
+    # the ES shim's `match` SQL: ordered by the unrounded score
+    ("SELECT doc_id, round(BM25(doc_idx.tableoid)::numeric, 4) AS score "
+     "FROM documents WHERE text @@ ts_any(ARRAY['spark','stream']) "
+     "ORDER BY BM25(doc_idx.tableoid) DESC, doc_id LIMIT 7",
+     q.AnyOf(["spark", "stream"])),
+])
+def test_one_postings_pass_per_query(session, duck, sql, node):
+    """A boolean tree with a phrase leaf is one aggregation over one
+    postings scan, and the unrounded BM25 order (which misses the WAND
+    top-k) scores in the one pass that also yields the match set."""
+    from serenedb_spark.plans.oracle import match_sql, scored_sql
+
+    df = session.sql(sql)
+    rows = df.collect()
+    assert rows and _postings_scans(df) == 1
+    if "BM25" not in sql:
+        want = [r[0] for r in duck.sql(match_sql(
+            "documents", "text", "simple", node, order="doc_id")).fetchall()]
+        assert [r.doc_id for r in rows] == want
+        return
+    want = duck.sql(scored_sql("documents", "text", "simple", node,
+                               k=None)).fetchall()
+    by_id = {d: float(s) for d, s in want}
+    for r, (_, ws) in zip(rows, want):
+        assert abs(float(r.score) - by_id[r.doc_id]) < 1e-4
+        assert abs(float(r.score) - float(ws)) < 1e-4
+    assert len(rows) == min(7, len(want))
+
+
 def test_sql_residual_predicate(session):
     df = session.sql(
         "SELECT doc_id, lang FROM documents "
