@@ -72,8 +72,8 @@ def acl_array(items) -> list | None:
 def relacl_for(session, table: str) -> list | None:
     """pg_class.relacl: NULL until the first grant; then the owner's
     implicit entry followed by each grantee's letters (PG order)."""
-    grants = getattr(session, "_grants", {})
-    grantors = getattr(session, "_grantors", {})
+    grants = session._grants
+    grantors = session._grantors
     owner = session._table_owner(table)
     entries = []
     for principal in grants:
@@ -93,8 +93,8 @@ def relacl_for(session, table: str) -> list | None:
 
 def attacl_for(session, table: str, column: str) -> list | None:
     """pg_attribute.attacl from the per-column grant store."""
-    cg = getattr(session, "_col_grants", {}) or {}
-    grantors = getattr(session, "_grantors", {})
+    cg = session._col_grants
+    grantors = session._grantors
     owner = session._table_owner(table)
     entries = []
     for principal in cg:
@@ -116,7 +116,7 @@ def objacl_for(session, kind: str, name: str,
     until the acl is materialized (first GRANT or REVOKE touch — PG's
     REVOKE FROM PUBLIC instantiates the default minus PUBLIC); then
     the owner's implicit entry leads."""
-    og = getattr(session, "_obj_grants", {}) or {}
+    og = session._obj_grants
     if (kind, name) not in og:
         return None
     gm = og[(kind, name)]

@@ -35,7 +35,8 @@ def _gateway_token() -> int:
 
 
 def memo_exprs(key: tuple, build: Callable[[], T]) -> T:
-    """Return ``build()`` memoized on ``key`` (primitives only) for the
+    """Return ``build()`` memoized on ``key`` (hashable values:
+    primitives, or a frozen definition such as an ``Analyzer``) for the
     lifetime of the backing JVM gateway."""
     full = (_gateway_token(), *key)
     out = _CACHE.get(full)

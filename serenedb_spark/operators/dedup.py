@@ -119,9 +119,11 @@ def minhash_lsh_pairs(
     py4j round-trips per call (guide §1.3); expressions only, the plan is
     still built and executed fresh per call (expr_memo docs)."""
     rows = num_hashes // bands
+    # the memo keys on the analyzer VALUE: a redefined dictionary of the
+    # same name is a different (frozen, hashable) Analyzer
+    an = get_analyzer(shingle)
 
     def _build():
-        an = get_analyzer(shingle)
         toks = F.array_distinct(an.expr(F.col(text_col)))
         sig = minhash_signature(F.col("toks"), num_hashes)
         return (
@@ -133,7 +135,7 @@ def minhash_lsh_pairs(
     from serenedb_spark.functions.expr_memo import memo_exprs
 
     toks, band_col = memo_exprs(
-        ("minhash_lsh_pairs", text_col, shingle, num_hashes, bands), _build)
+        ("minhash_lsh_pairs", text_col, an, num_hashes, bands), _build)
     base = df.select(F.col(id_col).alias("id"), toks.alias("toks")).where(
         F.size("toks") > 0
     )

@@ -29,12 +29,6 @@ def _and_all(conds: list[Column]) -> Column:
     return out
 
 
-#: broadcast-decomposition ceiling for merge_into's `source_rows` hint:
-#: the source is broadcast twice (full rows + its key set), so the hint
-#: must bound a comfortably driver-sized relation.
-MERGE_BROADCAST_MAX_ROWS = 100_000
-
-
 def merge_into(
     target: DataFrame,
     source: DataFrame,
@@ -42,7 +36,6 @@ def merge_into(
     when_matched_update: dict[str, Column] | None = None,
     when_not_matched_insert: bool = True,
     when_matched_delete: Column | None = None,
-    source_rows: int | None = None,
 ) -> DataFrame:
     """MERGE INTO target USING source ON target.key = source.key
     (composite keys AND over every column).
@@ -50,31 +43,20 @@ def merge_into(
     * matched + delete-condition → row dropped
     * matched → columns replaced per `when_matched_update` (default: all
       source columns win)
-    * not matched → source row inserted (if enabled)
+    * not matched → source row inserted (if enabled), else dropped — a
+      NULL-key source row never matches, as in PG MERGE
 
     Returns the new table state (same schema as target).
-
-    ``source_rows`` is an optional caller-known BOUND on the source row
-    count (a statistic, like the LSH layout's counted base_rows). Spark
-    cannot broadcast a FULL OUTER join, so the default shape shuffles the
-    entire target — the one relation that is corpus-sized at scale. When
-    the source is known-small, the merge decomposes into target
-    LEFT JOIN broadcast(source) (matched update/delete; map-only over
-    the target) plus broadcast anti-join inserts: no wide exchange of
-    the target at all (guide §3: pick the join strategy deliberately,
-    never shuffle the big side for a small probe).
     """
     kc = key_cols(key)
-    small = (source_rows is not None
-             and source_rows <= MERGE_BROADCAST_MAX_ROWS)
-    t = target.alias("t")
-    s = source.alias("s")
+    # which side a full_outer row came from: a NULL key cannot tell
+    t = target.withColumn("__in_t", F.lit(True)).alias("t")
+    s = source.withColumn("__in_s", F.lit(True)).alias("s")
     cond = _and_all([F.col(f"t.{k}") == F.col(f"s.{k}") for k in kc])
-    joined = (t.join(F.broadcast(s), cond, "left") if small
-              else t.join(s, cond, "full_outer"))
+    joined = t.join(s, cond, "full_outer")
 
-    has_t = _and_all([F.col(f"t.{k}").isNotNull() for k in kc])
-    has_s = _and_all([F.col(f"s.{k}").isNotNull() for k in kc])
+    has_t = F.col("t.__in_t").isNotNull()
+    has_s = F.col("s.__in_s").isNotNull()
 
     out_cols = []
     for c in target.columns:
@@ -88,7 +70,7 @@ def merge_into(
         val = (
             F.when(has_t & has_s, upd)
             .when(has_t, F.col(f"t.{c}"))
-            .otherwise(src if when_not_matched_insert else F.lit(None))
+            .otherwise(src)
         )
         out_cols.append(val.alias(c))
 
@@ -96,40 +78,9 @@ def merge_into(
     if when_matched_delete is not None:
         keep = ~(has_t & has_s & when_matched_delete)
     if not when_not_matched_insert:
-        keep = keep & (has_t | ~has_s)
+        keep = keep & has_t
 
-    kept = joined.where(keep).select(*out_cols)
-    if not small or not when_not_matched_insert:
-        return kept
-
-    # inserts: source keys with no target match. The key set that DID
-    # match is found with a second map-only pass over the target's key
-    # columns (column-pruned scan; at scale this is far cheaper than
-    # shuffling the target once), then anti-joined against the source —
-    # both joins broadcast the small side. NULL source keys never match
-    # a null-rejecting equi-join, so they insert here exactly as they
-    # fall out of the full_outer's unmatched branch.
-    skeys = source.select(
-        *[F.col(k).alias(f"__s_{k}") for k in kc]).dropDuplicates()
-    matched_keys = (
-        target.select(*kc)
-        .join(F.broadcast(skeys),
-              _and_all([F.col(k) == F.col(f"__s_{k}") for k in kc]),
-              "inner")
-        .select(*[F.col(f"__s_{k}") for k in kc])
-        .dropDuplicates()
-    )
-    inserts = source.alias("s").join(
-        F.broadcast(matched_keys),
-        _and_all([F.col(f"s.{k}") == F.col(f"__s_{k}") for k in kc]),
-        "left_anti")
-    tschema = {f.name: f.dataType for f in target.schema.fields}
-    ins_cols = [
-        (F.col(c) if c in source.columns
-         else F.lit(None)).cast(tschema[c]).alias(c)
-        for c in target.columns
-    ]
-    return kept.unionByName(inserts.select(*ins_cols))
+    return joined.where(keep).select(*out_cols)
 
 
 def upsert(target: DataFrame, source: DataFrame, key) -> DataFrame:

@@ -154,6 +154,7 @@ class DiskSearchTable:
         self.name = name
         self._tick = tick
         self._ops = list(ops)  # (tick, "seg"|"del", relpath)
+        self._snapshot = False  # open(tick=N): read-only time travel
 
     # ---- lifecycle -------------------------------------------------------
     @classmethod
@@ -203,7 +204,7 @@ class DiskSearchTable:
         return inst
 
     def _forbid_snapshot_writes(self) -> None:
-        if getattr(self, "_snapshot", False):
+        if self._snapshot:
             raise ValueError(
                 "time-travel snapshot is read-only (writing would fork "
                 "history); open() without tick for the live table"

@@ -327,7 +327,7 @@ def fold_info_functions(session, q: str) -> str:
             kind = low[len("has_"):-len("_privilege")]
             kind = {"foreign_data_wrapper": "fdw"}.get(kind, kind)
             obj = re.sub(r"\(.*\)$", "", obj).strip()
-            og = getattr(session, "_obj_grants", {}) or {}
+            og = session._obj_grants
             key = (kind, obj)
             pub_default = {
                 "database": ("CONNECT", "TEMPORARY", "TEMP"),

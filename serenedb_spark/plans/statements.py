@@ -120,8 +120,8 @@ def _rewrite_usertypes(toks: list[Tok], session) -> list[Tok]:
     `x::struct<...>` (ddl/composite.test INSERT bodies)."""
     if session is None:
         return toks
-    etypes = getattr(session, "_enum_types", {}) or {}
-    ctypes = getattr(session, "_composite_types", {}) or {}
+    etypes = session._enum_types
+    ctypes = session._composite_types
     out: list[Tok] = []
     i = 0
     while i < len(toks):
@@ -241,35 +241,35 @@ def route_statement(session, sql: str) -> DataFrame | None:
         if target not in ("ALL", "PLANS", "SEQUENCES", "TEMP",
                           "TEMPORARY"):
             raise ValueError(f'syntax error at or near "{target}"')
-        _prepared_store(session).clear()
+        session._prepared.clear()
         return _status_df(session, "DISCARD", target)
     if kw == "USE":
         target = s.split(None, 1)[-1].strip().rstrip(";")
         if (target in ("serene", "$__DATABASE__",
-                       getattr(session, "_current_db", "serene"))
-                and target not in getattr(session, "_schemas", ())
-                and (("_databases" not in session.__dict__)
-                     or target == getattr(session, "_current_db",
-                                          "serene"))):
-            # single-database default / USE of the CURRENT database
-            # (the docs tests' USE $__DATABASE__): a no-op
+                       session._current_db)
+                and target not in session._schemas
+                and (session._databases == {"serene": None}
+                     or target == session._current_db)):
+            # single-database default (the registry never changed) /
+            # USE of the CURRENT database (the docs tests' USE
+            # $__DATABASE__): a no-op
             return _status_df(session, "USE", target)
         if "." in target:
             db, schema = target.split(".", 1)
             session.use_database(db)
-            if schema not in getattr(session, "_schemas", {}):
+            if schema not in session._schemas:
                 raise ValueError(f'schema "{schema}" does not exist')
             session._current_schema = schema
-            _pg_vars(session)["search_path"] = schema
-        elif target in getattr(session, "_schemas", {}):
+            session._pg_vars_store["search_path"] = schema
+        elif target in session._schemas:
             # a schema in the current database wins over a database of
             # the same name (use/index.test example_005)
             session._current_schema = target
-            _pg_vars(session)["search_path"] = target
+            session._pg_vars_store["search_path"] = target
         else:
             session.use_database(target)
             session._current_schema = "public"
-            _pg_vars(session)["search_path"] = '"$user", public'
+            session._pg_vars_store["search_path"] = '"$user", public'
         return _status_df(session, "USE", target)
     if kw in ("CREATE", "DROP") and re.match(
             r"\s*(CREATE|DROP)\s+DATABASE\b", s, re.IGNORECASE):
@@ -325,15 +325,13 @@ def route_statement(session, sql: str) -> DataFrame | None:
             olds.append(_ident(ts2))
         ts2.expect("TO")
         new = _ident(ts2)
-        owners = getattr(session, "_owners", None)
-        if owners is None:
-            owners = session._owners = {}
+        owners = session._owners
         for t, o in list(owners.items()):
             if o in olds:
                 owners[t] = new
         return _status_df(session, "REASSIGN OWNED", new)
     if kw in ("CREATE", "DROP") and \
-            getattr(session, "_txn_backup", None) is not None and \
+            session._txn_backup is not None and \
             session.show_variable("sdb_strict_ddl"):
         # strict mode refuses DDL inside a block with the reference's
         # wording (recovery/ddl_in_transaction.test:60)
@@ -891,8 +889,8 @@ def _copy(session, s: str, dry_run: bool = False):
     if direction == "FROM" and table is not None:
         _require_base_table(session, table, "{t} is not an table")
         if (table not in session._tables
-                and table in getattr(session, "_indexes", {})):
-            src = getattr(session, "_index_sources", {}).get(table)
+                and table in session._indexes):
+            src = session._index_sources.get(table)
             if not src:
                 # indexes built via the DataFrame API have no source
                 # table registered — nothing to write through to
@@ -1013,13 +1011,6 @@ def _select_into(session, s: str) -> DataFrame | None:
 # and RBAC revokes take effect between EXECUTEs)
 # --------------------------------------------------------------------------
 
-def _prepared_store(session) -> dict:
-    p = getattr(session, "_prepared", None)
-    if p is None:
-        p = session._prepared = {}
-    return p
-
-
 def _prepare(session, s: str) -> DataFrame:
     m = re.match(
         r"\s*PREPARE\s+(\w+)\s*(?:\(([^()]*)\))?\s+AS\s+(.+)$",
@@ -1028,7 +1019,7 @@ def _prepare(session, s: str) -> DataFrame:
         raise ValueError("PREPARE expects: PREPARE name [(types)] AS stmt")
     name, types, body = m.group(1), m.group(2), m.group(3).strip()
     tlist = [t.strip() for t in types.split(",")] if types else None
-    _prepared_store(session)[name] = (body, tlist)
+    session._prepared[name] = (body, tlist)
     return _status_df(session, "PREPARE", name)
 
 
@@ -1037,7 +1028,7 @@ def _deallocate(session, s: str) -> DataFrame:
     ts.expect("DEALLOCATE")
     if ts.peek() and ts.peek().upper == "PREPARE":
         ts.next()
-    store = _prepared_store(session)
+    store = session._prepared
     if ts.peek() is None:
         raise ValueError("DEALLOCATE expects a statement name or ALL")
     if ts.peek().upper == "ALL":
@@ -1125,7 +1116,7 @@ def _execute(session, s: str) -> DataFrame:
     ts = _Stream(toks)
     ts.expect("EXECUTE")
     name = _ident(ts)
-    store = _prepared_store(session)
+    store = session._prepared
     if name not in store:
         raise ValueError(f'prepared statement "{name}" does not exist')
     body, types = store[name]
@@ -1179,7 +1170,7 @@ def _txn(session, kw: str, s: str) -> DataFrame:
     elif words[:3] == ["AND", "NO", "CHAIN"]:
         words = words[3:]
     if kw in ("BEGIN", "START"):
-        if getattr(session, "_txn_backup", None) is not None:
+        if session._txn_backup is not None:
             # PG: BEGIN inside a block is a WARNING no-op
             # (settings/txn.test)
             return _status_df(
@@ -1194,11 +1185,11 @@ def _txn(session, kw: str, s: str) -> DataFrame:
         session.begin(isolation=isolation)
         session._txn_read_only = read_only
         # each block starts at the session default isolation (PG)
-        _pg_vars(session)["transaction_isolation"] = \
+        session._pg_vars_store["transaction_isolation"] = \
             (isolation.lower() if isolation
-             else _pg_vars(session)["default_transaction_isolation"])
+             else session._pg_vars_store["default_transaction_isolation"])
         return _status_df(session, "BEGIN")
-    if getattr(session, "_txn_backup", None) is None:
+    if session._txn_backup is None:
         if chain:
             # AND CHAIN outside a block has no characteristics to carry
             raise ValueError(
@@ -1207,10 +1198,10 @@ def _txn(session, kw: str, s: str) -> DataFrame:
         # (txn/chain.test opens with a bare COMMIT)
         return _status_df(session, "WARNING",
                           "there is no transaction in progress")
-    level = _pg_vars(session)["transaction_isolation"]
-    read_only = getattr(session, "_txn_read_only", False)
-    _pg_vars(session)["transaction_isolation"] = \
-        _pg_vars(session)["default_transaction_isolation"]
+    level = session._pg_vars_store["transaction_isolation"]
+    read_only = session._txn_read_only
+    session._pg_vars_store["transaction_isolation"] = \
+        session._pg_vars_store["default_transaction_isolation"]
     if kw in ("COMMIT", "END"):
         session.commit()
         tag = "COMMIT"
@@ -1221,7 +1212,7 @@ def _txn(session, kw: str, s: str) -> DataFrame:
         # re-enter immediately, carrying the characteristics over
         session.begin()
         session._txn_read_only = read_only
-        _pg_vars(session)["transaction_isolation"] = level
+        session._pg_vars_store["transaction_isolation"] = level
     return _status_df(session, tag)
 
 
@@ -1237,16 +1228,6 @@ _PG_VAR_DEFAULTS = {
 }
 
 
-def _pg_vars(session) -> dict:
-    v = getattr(session, "_pg_vars_store", None)
-    if v is None:
-        v = session._pg_vars_store = dict(_PG_VAR_DEFAULTS)
-    else:  # a txn snapshot may restore an empty pre-creation dict
-        for k, d in _PG_VAR_DEFAULTS.items():
-            v.setdefault(k, d)
-    return v
-
-
 def _set(session, s: str) -> DataFrame | None:
     try:
         toks = tokenize(s)
@@ -1260,8 +1241,8 @@ def _set(session, s: str) -> DataFrame | None:
         # block; outside one PG only warns (txn/variables.test)
         ts.next()
         level = _isolation_level(ts)
-        if getattr(session, "_txn_backup", None) is not None:
-            _pg_vars(session)["transaction_isolation"] = level
+        if session._txn_backup is not None:
+            session._pg_vars_store["transaction_isolation"] = level
             return _status_df(session, "SET", "transaction_isolation")
         return _status_df(
             session, "WARNING",
@@ -1271,8 +1252,8 @@ def _set(session, s: str) -> DataFrame | None:
             and ts.peek(1).upper == "CHARACTERISTICS"):
         ts.next(); ts.next(); ts.expect("AS"); ts.expect("TRANSACTION")
         level = _isolation_level(ts)
-        _pg_vars(session)["default_transaction_isolation"] = level
-        _pg_vars(session)["transaction_isolation"] = level
+        session._pg_vars_store["default_transaction_isolation"] = level
+        session._pg_vars_store["transaction_isolation"] = level
         return _status_df(session, "SET",
                           "default_transaction_isolation")
     if nxt is not None and nxt.upper in ("LOCAL", "SESSION",
@@ -1328,7 +1309,7 @@ def _set(session, s: str) -> DataFrame | None:
             entries = []
             first = _one_entry()
             if first == '"$user", public':
-                _pg_vars(session)["search_path"] = first
+                session._pg_vars_store["search_path"] = first
                 return _status_df(session, "SET", name)
             if first is not None:
                 entries.append(first)
@@ -1343,7 +1324,7 @@ def _set(session, s: str) -> DataFrame | None:
                     return e
                 head = e[:-len(tail)]
                 return f'{head}"{tail}"'
-            _pg_vars(session)["search_path"] = ", ".join(
+            session._pg_vars_store["search_path"] = ", ".join(
                 _q(e) for e in entries)
             return _status_df(session, "SET", name)
         val = str(_literal_value(ts.next())).lower()
@@ -1352,10 +1333,10 @@ def _set(session, s: str) -> DataFrame | None:
             raise ValueError(
                 f'transaction isolation level "{val}" is not supported. '
                 "Available values: repeatable read, read committed.")
-        _pg_vars(session)[name] = val
+        session._pg_vars_store[name] = val
         if name == "default_transaction_isolation" and \
-                getattr(session, "_txn_backup", None) is None:
-            _pg_vars(session)["transaction_isolation"] = val
+                session._txn_backup is None:
+            session._pg_vars_store["transaction_isolation"] = val
         return _status_df(session, "SET", name)
     return None  # Spark SQL handles its own SET k=v
 
@@ -1398,12 +1379,12 @@ def _show(session, s: str) -> DataFrame | None:
         return session.show_variables()
     name = _ident(ts).lower()
     if name in _PG_VAR_DEFAULTS:
-        val = _pg_vars(session)[name]
+        val = session._pg_vars_store[name]
         if name == "search_path":
             # SHOW strips catalog prefixes that name the current DB
             # (any/pg/system/functions.test: postgres.public → public;
             # 'postgres' is PG's connection-default catalog)
-            db = getattr(session, "_current_db", "serene")
+            db = session._current_db
             parts = []
             for e in _split_search_path(val):
                 head, _, tail = e.rpartition(".")
@@ -1574,7 +1555,7 @@ def _dml_where(session, table: str, where_toks: list[Tok]):
     where_sql = _render(where_toks)
     if not has_search_construct(where_sql):
         return ("col", F.expr(_expr_sql(where_toks, session)))
-    pk = getattr(session, "_pks", {}).get(table)
+    pk = session._pks.get(table)
     if pk is None:
         raise ValueError(
             f"DML with a search predicate needs a PRIMARY KEY on "
@@ -1588,7 +1569,7 @@ def _dml_where(session, table: str, where_toks: list[Tok]):
 
 def _refuse_index_relation(session, table: str) -> None:
     if (table not in session._tables
-            and table in getattr(session, "_indexes", {})):
+            and table in session._indexes):
         raise ValueError(
             f'cannot open relation "{table}"\nDETAIL: This operation '
             "is not supported for indexes.")
@@ -1616,10 +1597,10 @@ def _insert(session, s: str) -> DataFrame:
     table = _ident(ts)
     _require_base_table(session, table, "{t} is not an table")
     if (table not in session._tables
-            and table in getattr(session, "_indexes", {})):
+            and table in session._indexes):
         # INSERT INTO an index relation writes through to its source
         # table (basic.test:403)
-        src = getattr(session, "_index_sources", {}).get(table)
+        src = session._index_sources.get(table)
         if not src:
             raise ValueError(f"cannot open relation {table}")
         table = src
@@ -1655,7 +1636,7 @@ def _insert(session, s: str) -> DataFrame:
         raise ValueError("INSERT expects VALUES or a SELECT")
     target = session._tables[table]
     dtypes = dict(target.dtypes)
-    gen_cols = set(getattr(session, "_generated", {}).get(table, {}))
+    gen_cols = set(session._generated.get(table, {}))
     if (len(body) == 2 and body[0].upper == "DEFAULT"
             and body[1].upper == "VALUES"):
         # INSERT ... DEFAULT VALUES (default_values.test): one row, every
@@ -1670,7 +1651,7 @@ def _insert(session, s: str) -> DataFrame:
             raise ValueError(
                 f"INSERT has {arity} values per row for "
                 f"{len(use_cols)} columns")
-        defaults = getattr(session, "_col_defaults", {}).get(table, {})
+        defaults = session._col_defaults.get(table, {})
         tuples_sql = []
         for g in groups:
             cells = []
@@ -1842,7 +1823,7 @@ def _update(session, s: str) -> DataFrame:
     w = _find_clause(toks, ("WHERE",), start=ts.i)
     set_span = toks[ts.i:w] if w >= 0 else toks[ts.i:]
     assignments: dict[str, object] = {}
-    defaults = getattr(session, "_col_defaults", {}).get(table, {})
+    defaults = session._col_defaults.get(table, {})
     dtypes = dict(session._tables[table].dtypes)
     for asg in _split_top(set_span, (",",)):
         eq = _find_clause(asg, ("=",))
@@ -1853,7 +1834,7 @@ def _update(session, s: str) -> DataFrame:
             raise ValueError(
                 f'multiple assignments to same column "{lhs}"')
         rhs = asg[eq + 1:]
-        if lhs in getattr(session, "_generated", {}).get(table, {}):
+        if lhs in session._generated.get(table, {}):
             raise ValueError(
                 f'column "{lhs}" can only be updated to DEFAULT: it is '
                 "a generated column")
@@ -1938,7 +1919,7 @@ def _truncate(session, s: str) -> DataFrame:
     # accepted PG noise here (no inheritance, no identity columns)
     for table in tables:
         if table not in session._tables:
-            if table in getattr(session, "_view_defs", {}):
+            if table in session._view_defs:
                 raise ValueError(
                     f'Can only delete from base table: "{table}" is a '
                     "view")
@@ -2080,7 +2061,7 @@ def _grant(session, s: str, revoke: bool) -> DataFrame:
     if kind == "table":
         for table in targets:
             if table not in session._tables and \
-                    table not in getattr(session, "_view_defs", {}):
+                    table not in session._view_defs:
                 raise ValueError(
                     f'relation "{table}" does not exist')
             for r in rnames:
@@ -2100,7 +2081,7 @@ def _grant(session, s: str, revoke: bool) -> DataFrame:
                                 raise ValueError(
                                     f"invalid privilege type {one} "
                                     "for column")
-                            cg = session._col_grant_store()
+                            cg = session._col_grants
                             cm2 = cg.setdefault(r, {}).setdefault(
                                 table, {})
                             cset = cm2.setdefault(one, set())
@@ -2115,8 +2096,6 @@ def _grant(session, s: str, revoke: bool) -> DataFrame:
                                 if grant_opt:
                                     cm2.setdefault(one + "*",
                                                    set()).update(cols)
-                                session._grantors = getattr(
-                                    session, "_grantors", {})
                                 session._grantors[(r, table)] = grantor
                         elif revoke:
                             session.revoke(r, table, one)
@@ -2125,7 +2104,7 @@ def _grant(session, s: str, revoke: bool) -> DataFrame:
                                 # a revoke of the priv also clears any
                                 # column-level grant of it (PG folds
                                 # attacl into the relation revoke)
-                                session._col_grant_store().get(
+                                session._col_grants.get(
                                     r, {}).get(table, {}).pop(one,
                                                               None)
                             else:
@@ -2134,20 +2113,15 @@ def _grant(session, s: str, revoke: bool) -> DataFrame:
                             session.grant(r, table, one)
                             if grant_opt:
                                 session.grant(r, table, one + "*")
-                            session._grantors = getattr(
-                                session, "_grantors", {})
                             session._grantors[(r, table)] = grantor
         return _status_df(session, "REVOKE" if revoke else "GRANT",
                           ", ".join(targets))
     # non-table object privileges (DATABASE/SCHEMA/FUNCTION/...)
-    og = getattr(session, "_obj_grants", None)
-    if not isinstance(og, dict):
-        og = session._obj_grants = {}
+    og = session._obj_grants
     if kind == "type":
         for name in targets:
-            if name not in getattr(session, "_enum_types", {}) and \
-                    name not in getattr(session, "_composite_types",
-                                        {}):
+            if name not in session._enum_types and \
+                    name not in session._composite_types:
                 raise ValueError(
                     "cannot change privileges of built-in type "
                     f"{name}")
@@ -2206,7 +2180,7 @@ def _grant_membership(session, ts, granted_roles, revoke: bool,
     for r in granted_roles + members:
         if r.lower() != "public" and r not in attrs:
             raise ValueError(f'role "{r}" does not exist')
-    rm = session.role_members()
+    rm = session._role_members
     for r in granted_roles:
         for m in members:
             if not revoke and r == m:
@@ -2381,15 +2355,11 @@ def _create(session, s: str) -> DataFrame | None:
         tname = _ident(ts)
         if "." in tname:
             tsch = tname.split(".", 1)[0]
-            if tsch not in getattr(session, "_schemas", set()):
+            if tsch not in session._schemas:
                 raise ValueError(f'schema "{tsch}" does not exist')
         ts.expect("AS")
-        etypes = getattr(session, "_enum_types", None)
-        if etypes is None or not isinstance(etypes, dict):
-            etypes = session._enum_types = {}
-        ctypes = getattr(session, "_composite_types", None)
-        if ctypes is None or not isinstance(ctypes, dict):
-            ctypes = session._composite_types = {}
+        etypes = session._enum_types
+        ctypes = session._composite_types
         if tname in etypes or tname in ctypes:
             raise ValueError(f'type "{tname}" already exists')
         if ts.peek() is not None and ts.peek().text == "(":
@@ -2464,7 +2434,7 @@ def _create(session, s: str) -> DataFrame | None:
                 f'unacceptable schema name "{sch}"\n'
                 'DETAIL: The prefix "pg_" is reserved for system '
                 "schemas.")
-        schemas = session._set_store("_schemas", ("public",))
+        schemas = session._schemas
         if sch in schemas or sch == "information_schema":
             if if_not_exists:
                 return _status_df(session, "CREATE SCHEMA",
@@ -2479,7 +2449,7 @@ def _create(session, s: str) -> DataFrame | None:
         # CREATE USER defaults LOGIN; CREATE ROLE defaults NOLOGIN.
         is_user = ts.next().upper == "USER"
         rname = _ident(ts)
-        roles = session._set_store("_roles")
+        roles = session._roles
         attrs = session.role_attrs()
         if rname in roles or rname in attrs:
             raise ValueError(f'role "{rname}" already exists')
@@ -2488,7 +2458,7 @@ def _create(session, s: str) -> DataFrame | None:
         memberships = _role_options(ts, a)
         roles.add(rname)
         attrs[rname] = a
-        rm = session.role_members()
+        rm = session._role_members
         for kind, other in memberships:
             if kind == "in_role":      # new role becomes member of other
                 rm[(other, rname)] = {"admin": False,
@@ -2632,7 +2602,7 @@ def _create(session, s: str) -> DataFrame | None:
         iname = _ident(ts)
         ts.expect("ON")
         table = _ident(ts)
-        if getattr(session, "_storage", {}).get(table) == "search":
+        if session._storage.get(table) == "search":
             raise ValueError(
                 "CREATE INDEX on a search-backed table is not yet "
                 "supported")
@@ -2666,9 +2636,7 @@ def _create(session, s: str) -> DataFrame | None:
             raise ValueError(
                 "partial indexes are only supported for inverted "
                 "indexes")
-        si = getattr(session, "_secondary_indexes", None)
-        if not isinstance(si, dict):
-            si = session._secondary_indexes = {}
+        si = session._secondary_indexes
         if iname in si:
             raise ValueError(f'index "{iname}" already exists')
         si[iname] = (table, tuple(cols))
@@ -2679,7 +2647,7 @@ def _create(session, s: str) -> DataFrame | None:
 def _create_view(session, toks, ts, or_replace: bool) -> DataFrame:
     name = _ident(ts)
     ts.expect("AS")
-    if name in getattr(session, "_view_defs", {}) and not or_replace:
+    if name in session._view_defs and not or_replace:
         raise ValueError(f"view {name!r} already exists "
                          "(use CREATE OR REPLACE VIEW)")
     session.create_view(name, _render(toks[ts.i:]))
@@ -2695,7 +2663,7 @@ def _create_table(session, s, toks, ts: _Stream,
     name = _ident(ts)
     if "." in name:
         sch = name.split(".", 1)[0]
-        if sch not in getattr(session, "_schemas", set()):
+        if sch not in session._schemas:
             raise ValueError(f'schema "{sch}" does not exist')
     nxt = ts.peek()
     storage = None
@@ -2722,9 +2690,7 @@ def _create_table(session, s, toks, ts: _Stream,
         session.create_table(name, session.sql(_render(toks[ts.i:])),
                              or_replace=or_replace)
         if storage is not None:
-            st = getattr(session, "_storage", None)
-            if st is None:
-                st = session._storage = {}
+            st = session._storage
             st[name] = storage
             if storage == "search":
                 _implicit_search_index(session, name)
@@ -2753,11 +2719,9 @@ def _create_table(session, s, toks, ts: _Stream,
     schema_parts, after = _parse_coldefs(session, coldefs)
     df = session.spark.createDataFrame([], ", ".join(schema_parts))
     session.create_table(name, df, or_replace=or_replace)
-    getattr(session, "_generated", {}).pop(name, None)  # replaced table
+    session._generated.pop(name, None)  # replaced table
     if storage is not None:
-        st = getattr(session, "_storage", None)
-        if st is None:
-            st = session._storage = {}
+        st = session._storage
         st[name] = storage
     try:
         for apply_constraint in after:
@@ -2767,7 +2731,7 @@ def _create_table(session, s, toks, ts: _Stream,
             _implicit_search_index(session, name)
     except Exception:
         session.drop_table(name)  # all-or-nothing CREATE
-        getattr(session, "_generated", {}).pop(name, None)
+        session._generated.pop(name, None)
         raise
     return _status_df(session, "CREATE TABLE", name)
 
@@ -2787,9 +2751,7 @@ def _implicit_search_index(session, table: str) -> None:
     ddl = CreateInvertedIndex(name=f"{table}_search", table=table,
                               fields=fields, includes=[], where=None)
     session._create_inverted_index_sql(ddl, internal=True)
-    marks = getattr(session, "_internal_indexes", None)
-    if marks is None:
-        marks = session._internal_indexes = set()
+    marks = session._internal_indexes
     marks.add(ddl.name)
 
 
@@ -2863,13 +2825,13 @@ def _user_type_ddl(session, ts: _Stream) -> str:
     t = ts.peek()
     out = None
     if t is not None and t.kind == "IDENT":
-        name = t.text if t.text in getattr(
-            session, "_composite_types", {}) else t.text.lower()
-        if name in getattr(session, "_composite_types", {}):
+        name = (t.text if t.text in session._composite_types
+                else t.text.lower())
+        if name in session._composite_types:
             ts.next()
             out = _composite_ddl(session, name)
-        elif (t.text in getattr(session, "_enum_types", {})
-              or t.text.lower() in getattr(session, "_enum_types", {})):
+        elif (t.text in session._enum_types
+              or t.text.lower() in session._enum_types):
             ts.next()
             out = "string"
     if out is None:
@@ -2938,8 +2900,8 @@ def _parse_coldefs(session, coldefs: list[Tok]):
         if col.lower() in seen:  # create_table_errors.test
             raise ValueError(f'duplicate column name "{col}"')
         seen.add(col.lower())
-        etypes = getattr(session, "_enum_types", {})
-        ctypes = getattr(session, "_composite_types", {})
+        etypes = session._enum_types
+        ctypes = session._composite_types
         tpk = ts.peek()
         if tpk is not None and tpk.kind == "IDENT" and (
                 tpk.text in ctypes or tpk.text.lower() in ctypes):
@@ -2952,9 +2914,7 @@ def _parse_coldefs(session, coldefs: list[Tok]):
             schema.append(f"{col} {ddl}")
 
             def _mkcompcol(t, c=col, ty=cty):
-                cc = getattr(session, "_composite_cols", None)
-                if not isinstance(cc, dict):
-                    cc = session._composite_cols = {}
+                cc = session._composite_cols
                 cc.setdefault(t, {})[c] = ty
             after.append(_mkcompcol)
             after.extend(_col_constraints(session, col, ts, check_i))
@@ -2967,9 +2927,7 @@ def _parse_coldefs(session, coldefs: list[Tok]):
             schema.append(f"{col} string")
 
             def _mkenumcol(t, c=col, ty=ety):
-                ec = getattr(session, "_enum_cols", None)
-                if not isinstance(ec, dict):
-                    ec = session._enum_cols = {}
+                ec = session._enum_cols
                 ec.setdefault(t, {})[c] = ty
                 labels = session._enum_types[ty]
                 quoted = ", ".join(
@@ -3020,7 +2978,7 @@ def _align_rows(session, table: str, rows: DataFrame,
     sequences.assign — never a driver row loop) or NULL."""
     target = session._tables[table]
     dtypes = dict(target.dtypes)
-    defaults = getattr(session, "_col_defaults", {}).get(table, {})
+    defaults = session._col_defaults.get(table, {})
     out, seq_cols = [], []
     for c in target.columns:
         if c in use_cols:
@@ -3103,7 +3061,7 @@ def _col_constraints(session, col: str, ts: _Stream, check_i: list):
                     # PG auto-name shape (constraint_index_catalog.test)
                     n = f"{t}_{c}_check"
                     k = 1
-                    while n in getattr(session, "_checks", {}).get(t, {}):
+                    while n in session._checks.get(t, {}):
                         k += 1
                         n = f"{t}_{c}_check{k}"
                 session.add_check(t, n, p)
@@ -3143,9 +3101,7 @@ def _col_constraints(session, col: str, ts: _Stream, check_i: list):
             saw_default = True  # a later DEFAULT conflicts the same way
 
             def _gen(t, c=col, e=expr):
-                g = getattr(session, "_generated", None)
-                if g is None:
-                    g = session._generated = {}
+                g = session._generated
                 g.setdefault(t, {})[c] = e
             hooks.append(_gen)
         elif kw == "USING":
@@ -3156,9 +3112,7 @@ def _col_constraints(session, col: str, ts: _Stream, check_i: list):
         elif kw == "COLLATE":
             # per-column collation recorded as declared-only metadata
             cname = ts.next().text.strip("'\"")
-            colls = getattr(session, "_collations", None)
-            if colls is None:
-                colls = session._collations = {}
+            colls = session._collations
             colls[col] = cname
         else:
             raise NotImplementedError(
@@ -3172,7 +3126,7 @@ def _unique(session, table: str, col: str,
     _uniques path (PG allows any number of NULLs in a UNIQUE column;
     hijacking the PK slot would reject them, constraint.test). The
     column still arbitrates ON CONFLICT targets via _uniques."""
-    if getattr(session, "_pks", {}).get(table) == col:
+    if session._pks.get(table) == col:
         return  # already the PK: UNIQUE is implied
     session.add_unique(table, col, name=name)
 
@@ -3254,11 +3208,11 @@ def _drop(session, s: str) -> DataFrame | None:
         while ts.peek() is not None:          # CASCADE/RESTRICT
             ts.next()
         for rname in names:
-            getattr(session, "_grants", {}).pop(rname, None)
-            session._col_grant_store().pop(rname, None)
-            for gm in getattr(session, "_obj_grants", {}).values():
+            session._grants.pop(rname, None)
+            session._col_grants.pop(rname, None)
+            for gm in session._obj_grants.values():
                 gm.pop(rname, None)
-            owners = getattr(session, "_owners", {})
+            owners = session._owners
             for t in [t for t, o in owners.items() if o == rname]:
                 if t in session._tables:
                     session.drop_table(t, cascade=True)
@@ -3271,8 +3225,8 @@ def _drop(session, s: str) -> DataFrame | None:
             if_exists = True
         tname = _ident(ts)
         cascade = bool(ts.peek() and ts.peek().upper == "CASCADE")
-        etypes = getattr(session, "_enum_types", {})
-        ctypes = getattr(session, "_composite_types", {})
+        etypes = session._enum_types
+        ctypes = session._composite_types
         if tname not in etypes and tname not in ctypes:
             if if_exists:
                 return _status_df(session, "DROP TYPE")
@@ -3290,7 +3244,7 @@ def _drop(session, s: str) -> DataFrame | None:
             # PG: DROP TYPE CASCADE drops the dependent COLUMNS
             session.alter_drop_column(t, c)
             getattr(session, store)[t].pop(c, None)
-            getattr(session, "_checks", {}).get(t, {}).pop(
+            session._checks.get(t, {}).pop(
                 f"{t}_{c}_enum_check", None)
         (etypes if tname in etypes else ctypes).pop(tname)
         return _status_df(session, "DROP TYPE", tname)
@@ -3306,7 +3260,7 @@ def _drop(session, s: str) -> DataFrame | None:
             raise ValueError(
                 f"cannot drop schema {sch} because it is required by "
                 "the database system")
-        schemas = session._set_store("_schemas", ("public",))
+        schemas = session._schemas
         if sch not in schemas:
             if if_exists:
                 return _status_df(session, "DROP SCHEMA")
@@ -3322,7 +3276,7 @@ def _drop(session, s: str) -> DataFrame | None:
                     "objects too.")
         members = [t for t in session._tables
                    if t.startswith(sch + ".")]
-        vmembers = [v for v in getattr(session, "_view_defs", {})
+        vmembers = [v for v in session._view_defs
                     if v.startswith(sch + ".")]
         smembers = [q for q in session.sequences._seqs
                     if q.startswith(sch + ".")]
@@ -3339,7 +3293,7 @@ def _drop(session, s: str) -> DataFrame | None:
             if q in session.sequences._seqs:
                 session.drop_sequence_checked(q, cascade=True)
         schemas.discard(sch)
-        getattr(session, "_obj_grants", {}).pop(("schema", sch), None)
+        session._obj_grants.pop(("schema", sch), None)
         return _status_df(session, "DROP SCHEMA", sch)
     if kind in ("ROLE", "USER", "GROUP"):
         if_exists = False
@@ -3349,7 +3303,7 @@ def _drop(session, s: str) -> DataFrame | None:
         names = [_ident(ts)]
         while ts.match(","):
             names.append(_ident(ts))
-        roles = session._set_store("_roles")
+        roles = session._roles
         attrs = session.role_attrs()
         for rname in names:
             if rname not in roles and rname not in attrs:
@@ -3362,25 +3316,25 @@ def _drop(session, s: str) -> DataFrame | None:
             # PG 2BP01: refuse while privileges/objects depend on it
             # (dr_drop_role_dependency.test)
             has_grants = bool(
-                any(getattr(session, "_grants", {}).get(rname, {})
+                any(session._grants.get(rname, {})
                     .values())
-                or any(v for t in session._col_grant_store()
+                or any(v for t in session._col_grants
                        .get(rname, {}).values() for v in t.values())
                 or any(gm.get(rname) for gm in
-                       getattr(session, "_obj_grants", {}).values())
+                       session._obj_grants.values())
                 or any(o == rname for o in
-                       getattr(session, "_owners", {}).values()))
+                       session._owners.values()))
             if has_grants:
                 raise ValueError(
                     f'role "{rname}" cannot be dropped because some '
                     "objects depend on it")
             roles.discard(rname)
             attrs.pop(rname, None)
-            rm = session.role_members()
+            rm = session._role_members
             for key in [k for k in rm if rname in k]:
                 rm.pop(key)
-            getattr(session, "_grants", {}).pop(rname, None)
-            session._col_grant_store().pop(rname, None)
+            session._grants.pop(rname, None)
+            session._col_grants.pop(rname, None)
         return _status_df(session, "DROP ROLE", ", ".join(names))
     if kind in ("FUNCTION", "MACRO"):
         if_exists = False
@@ -3416,7 +3370,7 @@ def _drop(session, s: str) -> DataFrame | None:
             ts.next(); ts.expect("EXISTS")
             if_exists = True
         iname = _ident(ts)
-        si = getattr(session, "_secondary_indexes", {})
+        si = session._secondary_indexes
         if iname in si:
             del si[iname]
             return _status_df(session, "DROP INDEX", iname)
@@ -3439,8 +3393,7 @@ def _drop(session, s: str) -> DataFrame | None:
         if kind == "TABLE":
             n = session.resolve_relation(n)
             if n not in session._tables:
-                if n in getattr(session, "_secondary_indexes", {}) \
-                        or n in session._indexes:
+                if n in session._secondary_indexes or n in session._indexes:
                     # drop.test: even with IF EXISTS, PG names the kind
                     raise ValueError(
                         f'"{n}" is not a table. Use DROP INDEX to '
@@ -3449,9 +3402,9 @@ def _drop(session, s: str) -> DataFrame | None:
                     continue
                 raise ValueError(f"table {n!r} does not exist")
             session.drop_table(n, cascade=cascade)
-            getattr(session, "_storage", {}).pop(n, None)
+            session._storage.pop(n, None)
         else:
-            if n not in getattr(session, "_view_defs", {}):
+            if n not in session._view_defs:
                 if if_exists:
                     continue
                 raise ValueError(f"view {n!r} does not exist")
@@ -3463,8 +3416,8 @@ def _rename_any(session, kindw: str, name: str, new: str) -> DataFrame:
     """RENAME for any relation kind (alter_rename.test — DuckDB routes
     ALTER TABLE/INDEX through one relation-rename path, so each works on
     tables, views and indexes; ALTER VIEW insists on a view)."""
-    vd = getattr(session, "_view_defs", {})
-    si = getattr(session, "_secondary_indexes", {})
+    vd = session._view_defs
+    si = session._secondary_indexes
     is_view = name in vd
     is_table = name in session._tables
     is_index = name in si or name in session._indexes
@@ -3482,7 +3435,7 @@ def _rename_any(session, kindw: str, name: str, new: str) -> DataFrame:
     elif is_view:
         d = vd.pop(name)
         vd[new] = d
-        lazy = getattr(session, "_lazy_views", set())
+        lazy = session._lazy_views
         if name in lazy:
             lazy.discard(name)
             lazy.add(new)
@@ -3495,10 +3448,10 @@ def _rename_any(session, kindw: str, name: str, new: str) -> DataFrame:
         si[new] = si.pop(name)
     else:  # inverted index
         session._indexes[new] = session._indexes.pop(name)
-        srcs = getattr(session, "_index_sources", {})
+        srcs = session._index_sources
         if name in srcs:
             srcs[new] = srcs.pop(name)
-        ddls = getattr(session, "_index_ddl", {})
+        ddls = session._index_ddl
         if name in ddls:
             ddls[new] = ddls.pop(name)
     return _status_df(session, f"ALTER {kindw}", new)
@@ -3542,9 +3495,7 @@ def _alter(session, s: str) -> DataFrame | None:
         grantees = [_ident(ts)]
         while ts.match(","):
             grantees.append(_ident(ts))
-        da = getattr(session, "_default_acls", None)
-        if da is None:
-            da = session._default_acls = {}
+        da = session._default_acls
         ent = da.setdefault((owner, sch, objtype), {})
         for g in grantees:
             pm = ent.setdefault(g, set())
@@ -3576,18 +3527,18 @@ def _alter(session, s: str) -> DataFrame | None:
             if new in attrs:
                 raise ValueError(f'role "{new}" already exists')
             attrs[new] = attrs.pop(rname)
-            roles = session._set_store("_roles")
+            roles = session._roles
             roles.discard(rname)
             roles.add(new)
-            rm = session.role_members()
+            rm = session._role_members
             for (r, m) in list(rm):
                 if rname in (r, m):
                     rm[(new if r == rname else r,
                         new if m == rname else m)] = rm.pop((r, m))
-            g = getattr(session, "_grants", {})
+            g = session._grants
             if rname in g:
                 g[new] = g.pop(rname)
-            cg = session._col_grant_store()
+            cg = session._col_grants
             if rname in cg:
                 cg[new] = cg.pop(rname)
             return _status_df(session, "ALTER ROLE", new)
@@ -3623,9 +3574,8 @@ def _alter(session, s: str) -> DataFrame | None:
             if_exists = True
         name = _ident(ts)
         if if_exists and name not in session._tables \
-                and name not in getattr(session, "_view_defs", {}) \
-                and name not in getattr(session, "_secondary_indexes",
-                                        {}) \
+                and name not in session._view_defs \
+                and name not in session._secondary_indexes \
                 and name not in session._indexes:
             return _status_df(session, f"ALTER {kindw}",
                               f"{name} (skipped, no such relation)")
@@ -3671,7 +3621,7 @@ def _alter(session, s: str) -> DataFrame | None:
             # (alter_rename.test:99-108)
             ts.next(); ts.next()
             return _rename_any(session, "TABLE", table, _ident(ts))
-        if table in getattr(session, "_view_defs", {}):
+        if table in session._view_defs:
             if (ts.peek() and ts.peek().upper == "RENAME"
                     and ts.peek(1) and ts.peek(1).upper == "COLUMN"):
                 raise ValueError(
@@ -3687,7 +3637,7 @@ def _alter(session, s: str) -> DataFrame | None:
                 f'"{table}": this operation is not supported for views')
         raise ValueError(f"Table with name {table} does not exist!")
     action = ts.next().upper
-    if getattr(session, "_storage", {}).get(table) == "search":
+    if session._storage.get(table) == "search":
         # fixed iresearch schema: structural ALTERs rejected, renames
         # (catalog-only) allowed (search_table.test:218-252)
         nxt = ts.peek().upper if ts.peek() else ""
@@ -3735,11 +3685,11 @@ def _alter(session, s: str) -> DataFrame | None:
             old = _ident(ts)
             ts.expect("TO")
             new = _ident(ts)
-            checks = getattr(session, "_checks", {}).get(table, {})
-            fks = getattr(session, "_fks", {})
-            uq = getattr(session, "_uq_names", {}).get(table, {})
-            nn = getattr(session, "_nn_names", {}).get(table, {})
-            pkn = getattr(session, "_pk_names", {})
+            checks = session._checks.get(table, {})
+            fks = session._fks
+            uq = session._uq_names.get(table, {})
+            nn = session._nn_names.get(table, {})
+            pkn = session._pk_names
             if old in checks:
                 checks[new] = checks.pop(old)
             elif old in fks and fks[old][0] == table:
@@ -3783,7 +3733,7 @@ def _alter(session, s: str) -> DataFrame | None:
         if sub == "SET":
             what = ts.next().upper
             if what == "DEFAULT":
-                if col in getattr(session, "_generated", {}).get(
+                if col in session._generated.get(
                         table, {}):
                     raise ValueError(
                         "cannot set a default on generated column "
@@ -3798,11 +3748,11 @@ def _alter(session, s: str) -> DataFrame | None:
         elif sub == "DROP":
             what = ts.next().upper
             if what == "DEFAULT":
-                getattr(session, "_col_defaults", {}).get(
+                session._col_defaults.get(
                     table, {}).pop(col, None)
             elif what == "NOT":
                 ts.expect("NULL")
-                getattr(session, "_not_null", {}).get(
+                session._not_null.get(
                     table, set()).discard(col)
             else:
                 raise NotImplementedError(f"unsupported ALTER COLUMN DROP {what}")
@@ -3886,16 +3836,16 @@ def _rename_table(session, old: str, new: str) -> None:
         d = getattr(session, store, None)
         if isinstance(d, dict) and old in d:
             d[new] = d.pop(old)
-    srcs = getattr(session, "_index_sources", {})
+    srcs = session._index_sources
     for iname, src in list(srcs.items()):
         if src == old:
             srcs[iname] = new
-    si = getattr(session, "_secondary_indexes", {})
+    si = session._secondary_indexes
     for iname, (t, cols) in list(si.items()):
         if t == old:
             si[iname] = (new, cols)
     import dataclasses
-    ddls = getattr(session, "_index_ddl", {})
+    ddls = session._index_ddl
     for iname, ddl in list(ddls.items()):
         if ddl.table == old:
             ddls[iname] = dataclasses.replace(ddl, table=new)

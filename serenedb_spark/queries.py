@@ -2065,13 +2065,6 @@ def _merge_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_suppkey long, s_name string, s_nationkey int, s_acctbal double",
         )
     )
-    # NB: merge_into's source_rows broadcast decomposition (no target
-    # shuffle) is deliberately NOT hinted here: at sf0.1 the 1000-row
-    # supplier merge is job-count-bound and the decomposition's extra
-    # broadcast/anti jobs measure ~2x slower (1.46 vs 2.5 s paired),
-    # reaching parity only by ~20M target rows locally — the shuffle it
-    # removes only costs on a real cluster's network (measurements in
-    # OPTIMIZATION_r14.md)
     merged = merge_into(sup, source, "s_suppkey",
                         when_matched_delete=F.col("s.s_nationkey") == 24)
     return merged.select(

@@ -49,6 +49,7 @@ class EsShim:
         self.spark = spark
         self.tables: dict[str, object] = {}   # index name -> SearchTable
         self._snapshots: dict[str, object] = {}  # index name -> InvertedIndex
+        self._scroll_state: dict[str, dict] = {}  # scroll id -> cursor
         # the reference feeds ES DSL through the ONE engine path
         # (dsl.cpp → SQL text → PendingQuery); the shim mirrors that by
         # rendering the parsed query back to dialect SQL and running it
@@ -317,8 +318,6 @@ class EsShim:
         reference's scroll contract)."""
         import uuid
 
-        if not hasattr(self, "_scroll_state"):
-            self._scroll_state = {}
         size = int(body.get("size", 10))
         sort_field, asc = self._parse_sort(body)
         sid = uuid.uuid4().hex

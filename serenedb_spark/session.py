@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from serenedb_spark.operators.indexing import InvertedIndex, build_index
 from serenedb_spark.operators.scoring import score as _score
+from serenedb_spark.operators.sequences import SequenceCatalog
 from serenedb_spark.plans import tsquery as tsq
 from serenedb_spark.plans.planner import compile_query
 
@@ -96,12 +97,121 @@ def _pad_highlight_calls(q: str) -> str:
     return "".join(out)
 
 
+def _is(value):
+    """Factory for an immutable empty form."""
+    return lambda: value
+
+
+def _bootstrap_roles() -> dict:
+    # the bootstrap superuser — oid matches the repo's existing
+    # pg_class.relowner/pg_get_userbyid convention
+    return {"postgres": dict(SereneSession._ROLE_DEFAULTS, super=True,
+                             inherit=True, createrole=True,
+                             createdb=True, canlogin=True,
+                             replication=True, bypassrls=True,
+                             oid=1000000)}
+
+
+def _pg_var_defaults() -> dict:
+    from serenedb_spark.plans.statements import _PG_VAR_DEFAULTS
+    return dict(_PG_VAR_DEFAULTS)
+
+
+#: state scopes: TXN state is snapshotted by BEGIN; TXN and SHARED state
+#: make up a database's catalog store (shared by attached connections,
+#: swapped by USE); CONN state belongs to the connection alone
+_TXN, _SHARED, _CONN = "txn", "shared", "conn"
+
+
 class SereneSession:
+    #: every attribute of the session's state: name → (empty form, scope).
+    #: __init__ sets each one, so readers use the attribute directly.
+    _STATE = {
+        "_tables": (dict, _TXN),
+        "_pks": (dict, _TXN),
+        "_row_policies": (dict, _TXN),
+        "_col_masks": (dict, _TXN),
+        "_grants": (dict, _TXN),
+        "_comments": (dict, _TXN),
+        "_checks": (dict, _TXN),
+        "_not_null": (dict, _TXN),
+        "_indexes": (dict, _TXN),
+        "_index_sources": (dict, _TXN),
+        "_variables": (dict, _TXN),
+        "_fks": (dict, _TXN),
+        "_col_defaults": (dict, _TXN),
+        "_generated": (dict, _TXN),
+        "_uniques": (dict, _TXN),
+        "_storage": (dict, _TXN),
+        "_index_ddl": (dict, _TXN),
+        "_view_defs": (dict, _TXN),
+        "_analyze_stats": (dict, _TXN),
+        "_pg_vars_store": (_pg_var_defaults, _TXN),
+        "_schemas": (lambda: {"public"}, _TXN),
+        "_roles": (set, _TXN),
+        "_role_attrs": (_bootstrap_roles, _TXN),
+        "_role_members": (dict, _TXN),
+        "_col_grants": (dict, _TXN),
+        "_obj_grants": (dict, _TXN),
+        "_owners": (dict, _TXN),
+        "_default_acls": (dict, _TXN),
+        "_enum_types": (dict, _TXN),
+        "_enum_cols": (dict, _TXN),
+        "_composite_types": (dict, _TXN),
+        "_composite_cols": (dict, _TXN),
+        "_secondary_indexes": (dict, _TXN),
+        "_pk_names": (dict, _TXN),
+        "_nn_names": (dict, _TXN),
+        "_uq_names": (dict, _TXN),
+        # sequences and macros are not transactional (PG nextval)
+        "_sequences": (SequenceCatalog, _SHARED),
+        "_vector_indexes": (dict, _SHARED),
+        "_internal_indexes": (set, _SHARED),
+        "_macros_meta": (dict, _SHARED),
+        # transaction block
+        "_txn_backup": (_is(None), _CONN),
+        "_txn_prebegin": (_is(None), _CONN),
+        "_txn_detached": (_is(False), _CONN),
+        "_txn_rc": (_is(False), _CONN),
+        "_txn_snapshot_pending": (_is(False), _CONN),
+        "_txn_aborted": (_is(False), _CONN),
+        "_txn_read_only": (_is(False), _CONN),
+        # multi-connection mode and databases
+        "_shared_store": (_is(None), _CONN),
+        "_shared_base": (_is(None), _CONN),
+        "_databases": (lambda: {"serene": None}, _CONN),
+        "_current_db": (_is("serene"), _CONN),
+        "_current_schema": (_is("public"), _CONN),
+        "_current_user": (_is(None), _CONN),
+        "_session_user": (_is(None), _CONN),
+        "_dead": (_is(False), _CONN),
+        "_crash_seen": (_is(0), _CONN),
+        # PG session-scoped objects: ROLLBACK keeps them
+        "_prepared": (dict, _CONN),
+        "_grantors": (dict, _CONN),
+        "_unique_indexes": (dict, _CONN),
+        "_owned_seqs_store": (dict, _CONN),
+        "_collations": (dict, _CONN),
+        # caches and bookkeeping
+        "_last_query": (_is(None), _CONN),
+        "_pg_catalog_fp": (_is(None), _CONN),
+        "_df_tokens": (dict, _CONN),
+        "_df_token_seq": (_is(0), _CONN),
+        "_dirty_rows": (dict, _CONN),
+        "_reltuples_cache": (dict, _CONN),
+        "_lazy_views": (set, _CONN),
+        "_refreshing_views": (_is(False), _CONN),
+        "_hl_udf_registered": (_is(False), _CONN),
+    }
+    _TXN_STATE = tuple(a for a, (_, s) in _STATE.items() if s == _TXN)
+    #: a database's catalog store (shared between attached sessions)
+    _SHARED_STATE = tuple(a for a, (_, s) in _STATE.items()
+                          if s != _CONN)
+
     def __init__(self, spark: SparkSession):
         self.spark = spark
-        self._tables: dict[str, DataFrame] = {}
-        self._indexes: dict[str, InvertedIndex] = {}
-        self._row_policies: dict[str, object] = {}
+        for a, (empty, _scope) in self._STATE.items():
+            setattr(self, a, empty())
         self._register_vector_sql_functions()
 
     def _register_vector_sql_functions(self) -> None:
@@ -204,7 +314,7 @@ class SereneSession:
         self._last_query = q  # surfaced by pg_stat_activity
         head = _re.match(r"\s*([A-Za-z_]+)", q)
         head = head.group(1).upper() if head else ""
-        if getattr(self, "_txn_aborted", False) and head not in (
+        if self._txn_aborted and head not in (
                 "COMMIT", "END", "ROLLBACK", "ABORT"):
             raise RuntimeError(
                 "current transaction is aborted, commands ignored until "
@@ -212,16 +322,15 @@ class SereneSession:
         gate = self._connection_gate(head, q)
         if gate is not None:
             return gate
-        if getattr(self, "_txn_snapshot_pending", False) and head not in (
+        if self._txn_snapshot_pending and head not in (
                 "COMMIT", "END", "ROLLBACK", "ABORT", "BEGIN", "START"):
             self._take_txn_snapshot()
-        if getattr(self, "_txn_detached", False) \
-                and getattr(self, "_txn_rc", False):
+        if self._txn_detached and self._txn_rc:
             self._rc_sync()
         try:
             return self._sql_body(q)
         except Exception as e:
-            if getattr(self, "_txn_backup", None) is not None:
+            if self._txn_backup is not None:
                 self._txn_aborted = True
             if ("UNRESOLVED_ROUTINE" in str(e)
                     and "`nextval`" in str(e)):
@@ -242,18 +351,16 @@ class SereneSession:
     # connection attaches to exactly the committed state, which is the
     # reference's WAL-recovery contract observed through SQL.
     def _faults_active(self) -> set:
-        v = str(getattr(self, "_variables", {}).get("sdb_faults", "")
+        v = str(self._variables.get("sdb_faults", "")
                 or "")
         return {p for p in v.split(",") if p}
 
     def _server_crash(self) -> None:
         from serenedb_spark.operators import maintenance as _M
         _M.FAULTS.clear()
-        v = getattr(self, "_variables", None)
-        if isinstance(v, dict):
-            # a restarted server comes up with GUCs at defaults
-            v.pop("sdb_faults", None)
-        store = getattr(self, "_shared_store", None)
+        # a restarted server comes up with GUCs at defaults
+        self._variables.pop("sdb_faults", None)
+        store = self._shared_store
         if store is not None:
             store["_crash_count"] = store.get("_crash_count", 0) + 1
         self._dead = True
@@ -266,10 +373,10 @@ class SereneSession:
                      "crash_before_search_commit")
 
     def _connection_gate(self, head: str, q: str):
-        store = getattr(self, "_shared_store", None)
-        if getattr(self, "_dead", False) or (
+        store = self._shared_store
+        if self._dead or (
                 store is not None
-                and getattr(self, "_crash_seen", 0)
+                and self._crash_seen
                 < store.get("_crash_count", 0)):
             raise RuntimeError("connection closed")
         faults = self._faults_active()
@@ -486,7 +593,7 @@ class SereneSession:
         if drop is not None:
             kind, name = drop
             if kind == "index":
-                vi = getattr(self, "_vector_indexes", {})
+                vi = self._vector_indexes
                 if name in vi:
                     vi.pop(name)
                 elif name not in self._indexes:
@@ -494,7 +601,7 @@ class SereneSession:
                         f"Index with name {name} does not exist!")
                 else:
                     self._indexes.pop(name)
-                    getattr(self, "_index_sources", {}).pop(name, None)
+                    self._index_sources.pop(name, None)
             else:
                 from serenedb_spark.analysis.analyzers import drop_dictionary
 
@@ -558,7 +665,7 @@ class SereneSession:
             frm = _frm.group(1) if _frm is not None else None
             if (frm is not None and frm not in self._indexes
                     and any(src == frm for src in
-                            getattr(self, "_index_sources", {}).values())):
+                            self._index_sources.values())):
                 # the reference binds ts_dict aggregates to the index
                 # RELATION only; a base table has no term dictionary to
                 # claim (ts_dict.test:222). DataFrame-API sessions keep
@@ -589,7 +696,7 @@ class SereneSession:
         self._expose_index_relations(q)
         import re as _re
 
-        if getattr(self, "_shared_store", None) is not None:
+        if self._shared_store is not None:
             # shared sessions race on the ONE SparkSession temp-view
             # namespace: re-register referenced tables from THIS
             # session's dicts before running (a peer's detached block
@@ -601,7 +708,7 @@ class SereneSession:
                            rf"\b{_re.escape(self._view_name(t))}\b", q)]
             for t in touched:
                 self._reregister(t)
-            if not getattr(self, "_txn_detached", False):
+            if not self._txn_detached:
                 return self._plain_sql_body(q)
             try:
                 return self._plain_sql_body(q)
@@ -731,7 +838,7 @@ class SereneSession:
         return "".join(out)
 
     def _ensure_highlight_udf(self) -> None:
-        if getattr(self, "_hl_udf_registered", False):
+        if self._hl_udf_registered:
             return
         from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -761,8 +868,7 @@ class SereneSession:
         FROM. Session tables win on a name collision."""
         import re as _re
 
-        for name, (tbl, _o) in getattr(self, "_vector_indexes",
-                                       {}).items():
+        for name, (tbl, _o) in self._vector_indexes.items():
             if name in self._tables or tbl not in self._tables:
                 continue
             if _re.search(rf"\b{_re.escape(name)}\b", q, _re.IGNORECASE):
@@ -783,7 +889,7 @@ class SereneSession:
         else an index's docstore (reference FROM idx_name)."""
         if name in self._tables:
             return self.table(name)
-        vi = getattr(self, "_vector_indexes", {})
+        vi = self._vector_indexes
         if name in vi:
             return self.table(vi[name][0])  # the index IS its table
         if name in self._indexes:
@@ -920,7 +1026,7 @@ class SereneSession:
         table carries its own implicit index, so explicit CREATE INDEX on
         one is refused exactly like the reference
         (search_table.test:205-216)."""
-        if (not internal and getattr(self, "_storage", {}).get(ddl.table)
+        if (not internal and self._storage.get(ddl.table)
                 == "search"):
             raise ValueError(
                 "CREATE INDEX on a search-backed table is not yet "
@@ -931,7 +1037,7 @@ class SereneSession:
                 # (basic.test:512-517)
                 ddl.name = f"{ddl.table.rsplit('.', 1)[0]}.{ddl.name}"
             if (ddl.name in self._indexes
-                    or ddl.name in getattr(self, "_vector_indexes", {})):
+                    or ddl.name in self._vector_indexes):
                 if getattr(ddl, "if_not_exists", False):
                     return self.spark.createDataFrame(
                         [(ddl.name, ddl.table, "exists")],
@@ -998,10 +1104,7 @@ class SereneSession:
             # method/options are declarative — the index name becomes a
             # queryable relation over the table, and pgvector operators
             # compute exact distances against it
-            vi = getattr(self, "_vector_indexes", None)
-            if not isinstance(vi, dict):
-                vi = self._vector_indexes = {}
-            vi[ddl.name] = (ddl.table, dict(ddl.vectors))
+            self._vector_indexes[ddl.name] = (ddl.table, dict(ddl.vectors))
             return self.spark.createDataFrame(
                 [(ddl.name, ddl.table, ",".join(
                     f"{c} {o}" for c, o in ddl.vectors.items()))],
@@ -1012,7 +1115,7 @@ class SereneSession:
             df = self.spark.table(ddl.table)  # a session view
         if ddl.where:
             df = df.where(F.expr(ddl.where))
-        pk = getattr(self, "_pks", {}).get(ddl.table)
+        pk = self._pks.get(ddl.table)
         if pk in df.columns:
             key = pk  # reference search tables key the index on the PK
         else:
@@ -1071,7 +1174,7 @@ class SereneSession:
             prev_ids = prev_ids.distinct()
             new_ids = (df.select(F.col(key).alias("doc_id")).distinct()
                        .join(prev_ids, "doc_id", "left_anti"))
-            dirty = getattr(self, "_dirty_rows", {}).get(ddl.table)
+            dirty = self._dirty_rows.get(ddl.table)
             if dirty is not None:
                 new_ids = new_ids.unionByName(
                     dirty.toDF("doc_id").distinct()).distinct()
@@ -1086,11 +1189,7 @@ class SereneSession:
         # plans, and releasing it after new parts were registered makes
         # Spark re-plan every one of them (~270 ms per refresh)
         idx.persist()
-        if not hasattr(self, "_index_sources"):
-            self._index_sources = {}
         self._index_sources[ddl.name] = ddl.table
-        if not hasattr(self, "_index_ddl"):
-            self._index_ddl = {}
         self._index_ddl[ddl.name] = ddl  # kept for VACUUM (REFRESH_TABLE)
         return self.spark.createDataFrame(
             [(ddl.name, ddl.table, ",".join(
@@ -1124,7 +1223,7 @@ class SereneSession:
         if idx is not None and column in idx.fields:
             return idx
         for name, ix in self._indexes.items():
-            if (getattr(self, "_index_sources", {}).get(name) == from_name
+            if (self._index_sources.get(name) == from_name
                     and column in ix.fields):
                 return ix
         raise ValueError(
@@ -1162,13 +1261,11 @@ class SereneSession:
             mask_col = F.expr(mask)
         else:
             mask_col = mask
-        if not hasattr(self, "_col_masks"):
-            self._col_masks: dict[str, dict] = {}
         self._col_masks.setdefault(table, {})[column] = mask_col
         self._reregister(table)
 
     def drop_column_mask(self, table: str, column: str | None = None) -> None:
-        masks = getattr(self, "_col_masks", {})
+        masks = self._col_masks
         if table in masks:
             if column is None:
                 masks.pop(table)
@@ -1177,26 +1274,10 @@ class SereneSession:
         self._reregister(table)
 
     def _apply_masks(self, table: str, df: DataFrame) -> DataFrame:
-        for c, m in getattr(self, "_col_masks", {}).get(table, {}).items():
+        for c, m in self._col_masks.get(table, {}).items():
             typ = dict(df.dtypes).get(c)
             df = df.withColumn(c, m.cast(typ) if typ else m)
         return df
-
-    def _set_store(self, attr: str, seed=()) -> set:
-        """A set-typed catalog store that survives txn restore (a
-        never-initialized attr snapshots as {} — coerce back to set).
-        In shared mode the coerced set replaces the store's copy too,
-        so attached sessions keep seeing one object
-        (recovery/catalog_schema.test reconnect)."""
-        v = getattr(self, attr, None)
-        if not isinstance(v, set):
-            v = set(v or ()) | set(seed)
-            setattr(self, attr, v)
-            store = getattr(self, "_shared_store", None)
-            if store is not None and attr in store \
-                    and not getattr(self, "_txn_detached", False):
-                store[attr] = v
-        return v
 
     @staticmethod
     def _view_name(name: str) -> str:
@@ -1208,19 +1289,18 @@ class SereneSession:
     def _enum_rewrite(self, q: str) -> str:
         """Definition-order enum semantics (plans/enums.py) over the
         constrained-string storage — applied to the plain-SQL path."""
-        ec = getattr(self, "_enum_cols", {})
-        ety = getattr(self, "_enum_types", {})
-        if not isinstance(ety, dict) or not ety:
+        ec = self._enum_cols
+        ety = self._enum_types
+        if not ety:
             return q
         colmap: dict[str, list[str]] = {}
-        if isinstance(ec, dict):
-            for t, cols in ec.items():
-                if t not in self._tables:
-                    continue
-                for c, ty in cols.items():
-                    labs = ety.get(ty)
-                    if labs:
-                        colmap.setdefault(c.lower(), labs)
+        for t, cols in ec.items():
+            if t not in self._tables:
+                continue
+            for c, ty in cols.items():
+                labs = ety.get(ty)
+                if labs:
+                    colmap.setdefault(c.lower(), labs)
         from serenedb_spark.plans.enums import rewrite_enums
 
         return rewrite_enums(q, colmap, ety)
@@ -1234,8 +1314,8 @@ class SereneSession:
         import re as _re
 
         q0 = q
-        db = getattr(self, "_current_db", "serene")
-        sch = getattr(self, "_current_schema", "public")
+        db = self._current_db
+        sch = self._current_schema
         # current_query() echoes the statement as the client sent it —
         # terminated (functions-info.test:75)
         _echo = q0.strip()
@@ -1390,14 +1470,13 @@ class SereneSession:
             # the function-catalog TVF: session macros + the built-in
             # rows the suites probe (functions-info.test arg_max's
             # PG-style column1.. trailing parameter names)
-            db2 = getattr(self, "_current_db", "serene")
+            db2 = self._current_db
             rows = ["SELECT '" + db2 + "' AS database_name, "
                     "'arg_max' AS function_name, "
                     "'aggregate' AS function_type, "
                     "CAST(NULL AS STRING) AS macro_definition, "
                     "array('arg','val','column3') AS parameters"]
-            for fname, meta in sorted(getattr(self, "_macros_meta",
-                                              {}).items()):
+            for fname, meta in sorted(self._macros_meta.items()):
                 params, is_table, *rest = meta
                 body = rest[0] if rest else ""
                 ftype = "table_macro" if is_table else "macro"
@@ -1423,10 +1502,10 @@ class SereneSession:
                 "CAST(NULL AS STRING) AS message WHERE false) "
                 "AS duckdb_logs", q, flags=_re.IGNORECASE)
 
-        for v in list(getattr(self, "_lazy_views", ())):
+        for v in list(self._lazy_views):
             # a side-effecting (nextval) view body executes PER READ —
             # materialize just-in-time when the query references it
-            if v in getattr(self, "_view_defs", {}) and _re.search(
+            if v in self._view_defs and _re.search(
                     rf"\b{_re.escape(v)}\b", q, _re.IGNORECASE):
                 self.sql(self._view_defs[v]).createOrReplaceTempView(
                     self._view_name(v))
@@ -1436,7 +1515,7 @@ class SereneSession:
                 r"\s*\)?\s*\)",
                 lambda m: self._view_name(m.group(1)), q,
                 flags=_re.IGNORECASE)
-        for s in getattr(self, "_schemas", ()):  # only user schemas
+        for s in self._schemas:  # only user schemas
             if s in ("public", "main"):
                 continue
             q = _re.sub(rf"\b{_re.escape(s)}\.(\w+)", rf"{s}__\1", q)
@@ -1478,7 +1557,7 @@ class SereneSession:
         # SQL-defined views capture the base DataFrame at creation:
         # re-resolve dependents so DML is visible through them
         # (drop_cascade_cross_schema.test reads a proxy view post-INSERT)
-        if getattr(self, "_view_defs", None):
+        if self._view_defs:
             self._refresh_dependent_views(table)
 
     # ---- indexing --------------------------------------------------------
@@ -1494,8 +1573,6 @@ class SereneSession:
         name = name or (table if isinstance(table, str) else "idx")
         idx = build_index(df, fields, key=key, include=include, name=name)
         self._indexes[name] = idx
-        if not hasattr(self, "_index_sources"):
-            self._index_sources = {}
         self._index_sources[name] = table if isinstance(table, str) else None
         return idx.persist()  # after any index it replaces is released
 
@@ -1662,32 +1739,30 @@ class SereneSession:
         (sdb/pg/system/schema.test: after SET search_path TO s2, a bare
         `t` means s2.t)."""
         if (name in self._tables
-                or name in getattr(self, "_view_defs", {})):
+                or name in self._view_defs):
             return name
         for s in self._search_path_live():
             if s in ("public", "main"):
                 continue
             key = f"{s}.{name}"
             if (key in self._tables
-                    or key in getattr(self, "_view_defs", {})):
+                    or key in self._view_defs):
                 return key
         return name
 
     def _raw_search_path(self) -> str:
-        from serenedb_spark.plans.statements import _pg_vars
-        return _pg_vars(self).get("search_path", '"$user", public')
+        return self._pg_vars_store["search_path"]
 
     def _search_path_live(self) -> list[str]:
         """search_path entries that NAME EXISTING schemas — what
         current_schemas()/search_path_canonical() expose
         (any/pg/system/functions.test: a SET to a nonexistent schema is
         accepted but filtered from the live view)."""
-        from serenedb_spark.plans.statements import (_pg_vars,
-                                                     _split_search_path)
+        from serenedb_spark.plans.statements import _split_search_path
 
-        sp = _pg_vars(self).get("search_path", '"$user", public')
-        db = getattr(self, "_current_db", "serene")
-        known = set(self._set_store("_schemas", ("public",)))
+        sp = self._pg_vars_store["search_path"]
+        db = self._current_db
+        known = self._schemas
         out = []
         for p in _split_search_path(sp):
             head, _, tail = p.rpartition(".")
@@ -1704,11 +1779,10 @@ class SereneSession:
         """Catalog-qualified display of the FULL path — $user resolved,
         nonexistent entries kept (functions.test search_path_canonical
         blocks)."""
-        from serenedb_spark.plans.statements import (_pg_vars,
-                                                     _split_search_path)
+        from serenedb_spark.plans.statements import _split_search_path
 
-        sp = _pg_vars(self).get("search_path", '"$user", public')
-        db = getattr(self, "_current_db", "serene")
+        sp = self._pg_vars_store["search_path"]
+        db = self._current_db
         parts = []
         for p in _split_search_path(sp):
             head, _, tail = p.rpartition(".")
@@ -1725,13 +1799,11 @@ class SereneSession:
         Holds a strong reference to the object so CPython can never
         recycle a freed id() into a colliding key (bare id(df) could
         silently skip a catalog refresh after GC)."""
-        toks = getattr(self, "_df_tokens", None)
-        if toks is None:
-            toks = self._df_tokens = {}
+        toks = self._df_tokens
         ent = toks.get(name)
         if ent is not None and ent[0] is df:
             return ent[1]
-        nxt = getattr(self, "_df_token_seq", 0) + 1
+        nxt = self._df_token_seq + 1
         self._df_token_seq = nxt
         toks[name] = (df, nxt)
         return nxt
@@ -1743,69 +1815,55 @@ class SereneSession:
         return (
             tuple((t, self._df_token(t, df), tuple(df.columns))
                   for t, df in sorted(self._tables.items())),
-            tuple(sorted(getattr(self, "_indexes", {}) or {})),
-            tuple(sorted(getattr(self, "_view_defs", {}) or {})),
+            tuple(sorted(self._indexes)),
+            tuple(sorted(self._view_defs)),
             tuple(sorted(
                 (p, t, tuple(sorted(ps)))
-                for p, tm in (getattr(self, "_grants", {})
-                              or {}).items()
+                for p, tm in self._grants.items()
                 for t, ps in tm.items())),
             tuple(sorted((n, st.get("current"))
-                         for n, st in (getattr(self.sequences, "_seqs",
-                                               {}) or {}).items())),
-            tuple(sorted((getattr(self, "_comments", {})
-                          or {}).items())),
-            tuple(sorted(getattr(self, "_prepared", {}) or {})),
-            tuple(sorted(getattr(self, "_pks", {}) or {})),
-            tuple(sorted(getattr(self, "_enum_types", {}) or {})),
-            tuple(sorted(getattr(self, "_composite_types", {}) or {})),
-            tuple(sorted(self._set_store("_schemas", ("public",)))),
-            tuple(sorted(getattr(self, "_roles", {}) or {})),
+                         for n, st in self.sequences._seqs.items())),
+            tuple(sorted(self._comments.items())),
+            tuple(sorted(self._prepared)),
+            tuple(sorted(self._pks)),
+            tuple(sorted(self._enum_types)),
+            tuple(sorted(self._composite_types)),
+            tuple(sorted(self._schemas)),
+            tuple(sorted(self._roles)),
             tuple(sorted(
                 (r, tuple(sorted((k, str(v)) for k, v in a.items())))
-                for r, a in (getattr(self, "_role_attrs", {})
-                             or {}).items())),
+                for r, a in self._role_attrs.items())),
             tuple(sorted(
                 (k, tuple(sorted((k2, str(v2))
                                  for k2, v2 in e.items())))
-                for k, e in (getattr(self, "_role_members", {})
-                             or {}).items())),
+                for k, e in self._role_members.items())),
             tuple(sorted(
                 (p, t, pv, tuple(sorted(cs)))
-                for p, tm in (getattr(self, "_col_grants", {})
-                              or {}).items()
+                for p, tm in self._col_grants.items()
                 for t, pm in tm.items()
                 for pv, cs in pm.items())),
             tuple(sorted(
                 (k, g, tuple(sorted(pm)))
-                for k, gm in (getattr(self, "_obj_grants", {})
-                              or {}).items()
+                for k, gm in self._obj_grants.items()
                 for g, pm in gm.items())),
-            tuple(sorted((getattr(self, "_owners", {}) or {}).items())),
+            tuple(sorted(self._owners.items())),
             tuple(sorted(
                 (k, g, tuple(sorted(pm)))
-                for k, ent in (getattr(self, "_default_acls", {})
-                               or {}).items()
+                for k, ent in self._default_acls.items()
                 for g, pm in ent.items())),
-            tuple(sorted((getattr(self, "_analyze_stats", {})
-                          or {}).items())),
+            tuple(sorted(self._analyze_stats.items())),
             tuple(sorted((t, tuple(sorted(cols)))
-                         for t, cols in (getattr(self, "_col_defaults",
-                                                 {}) or {}).items())),
+                         for t, cols in self._col_defaults.items())),
             tuple(sorted((t, tuple(sorted(cs)))
-                         for t, cs in (getattr(self, "_not_null", {})
-                                       or {}).items())),
+                         for t, cs in self._not_null.items())),
             tuple(sorted((t, tuple(sorted(cs)))
-                         for t, cs in (getattr(self, "_checks", {})
-                                       or {}).items())),
+                         for t, cs in self._checks.items())),
             tuple(sorted((t, tuple(sorted(cs)))
-                         for t, cs in (getattr(self, "_fks", {})
-                                       or {}).items())),
-            tuple(sorted((getattr(self, "_pg_vars_store", {})
-                          or {}).items())),
-            getattr(self, "_current_db", "serene"),
+                         for t, cs in self._fks.items())),
+            tuple(sorted(self._pg_vars_store.items())),
+            self._current_db,
             self.current_user,
-            getattr(self, "_txn_backup", None) is not None,
+            self._txn_backup is not None,
         )
 
     def install_pg_catalog(self) -> None:
@@ -1815,7 +1873,7 @@ class SereneSession:
         from serenedb_spark.functions.pg_system import format_type
 
         fp = self._catalog_fingerprint()
-        if getattr(self, "_pg_catalog_fp", None) == fp:
+        if self._pg_catalog_fp == fp:
             return
         self._pg_catalog_fp = fp
 
@@ -1835,9 +1893,9 @@ class SereneSession:
                     "timestamp without time zone": (8, True)}
         from serenedb_spark.functions.acl import attacl_for
         for t, df in self._tables.items():
-            nn = getattr(self, "_not_null", {}).get(t, set())
-            dfl = getattr(self, "_col_defaults", {}).get(t, {})
-            pk = getattr(self, "_pks", {}).get(t)
+            nn = self._not_null.get(t, set())
+            dfl = self._col_defaults.get(t, {})
+            pk = self._pks.get(t)
             pkc = set(pk) if isinstance(pk, tuple) else {pk}
             rid = self.relid(t)
             for i, (c, typ) in enumerate(df.dtypes, start=1):
@@ -1899,9 +1957,9 @@ class SereneSession:
         (user oids start at 16384, enumeration order: sorted tables,
         then insertion-ordered indexes)."""
         rels = (sorted(self._tables) + list(self._indexes)
-                + sorted(getattr(self.sequences, "_seqs", {}))
-                + sorted(getattr(self, "_view_defs", {}))
-                + sorted(getattr(self, "_secondary_indexes", {})))
+                + sorted(self.sequences._seqs)
+                + sorted(self._view_defs)
+                + sorted(self._secondary_indexes))
         return 16384 + rels.index(name) if name in rels else None
 
     def _index_relations(self) -> list:
@@ -1912,27 +1970,24 @@ class SereneSession:
         indexes. Rows: (name, table, cols, is_unique, is_primary,
         analyzer, fields_csv)."""
         out = []
-        for t, col in sorted(getattr(self, "_pks", {}).items()):
+        for t, col in sorted(self._pks.items()):
             cols = list(col) if isinstance(col, tuple) else [col]
-            name = getattr(self, "_pk_names", {}).get(t) or f"{t}_pkey"
+            name = self._pk_names.get(t) or f"{t}_pkey"
             out.append((name, t, cols, True, True, "", ",".join(cols)))
-        for t, ucols in sorted(getattr(self, "_uq_names", {}).items()):
+        for t, ucols in sorted(self._uq_names.items()):
             for c, uname in sorted(ucols.items()):
                 out.append((uname, t, [c], True, False, "", c))
         uq_constraint_names = {
-            n for ucols in getattr(self, "_uq_names", {}).values()
+            n for ucols in self._uq_names.values()
             for n in ucols.values()}
-        for iname, (t, c) in sorted(getattr(self, "_unique_indexes",
-                                            {}).items()):
+        for iname, (t, c) in sorted(self._unique_indexes.items()):
             if iname not in uq_constraint_names:
                 out.append((iname, t, [c], True, False, "", c))
-        for iname, (t, cols) in sorted(getattr(
-                self, "_secondary_indexes", {}).items()):
+        for iname, (t, cols) in sorted(self._secondary_indexes.items()):
             out.append((iname, t, list(cols), False, False, "",
                         ",".join(cols)))
         for name, idx in self._indexes.items():
-            out.append((name, getattr(self, "_index_sources",
-                                      {}).get(name, ""),
+            out.append((name, self._index_sources.get(name, ""),
                         list(idx.fields), False, False,
                         idx.fields.get(next(iter(idx.fields))),
                         ",".join(idx.fields)))
@@ -1963,7 +2018,7 @@ class SereneSession:
         from serenedb_spark.functions.acl import objacl_for as _nsoaf
         sys_ns = [(11, "pg_catalog", 1000000, None),
                   (1000003, "information_schema", 1000000, None)]
-        if "public" in self._set_store("_schemas", ("public",)):
+        if "public" in self._schemas:
             sys_ns.append((2200, "public", 1000000,
                            _nsoaf(self, "schema", "public")))
         spark.createDataFrame(
@@ -1973,7 +2028,7 @@ class SereneSession:
         ).createOrReplaceTempView("pg_namespace")
 
         user_schemas = sorted(
-            s for s in getattr(self, "_schemas", ())
+            s for s in self._schemas
             if s not in ("public", "main"))
 
         def _nsp(name: str) -> tuple[str, int]:
@@ -1987,13 +2042,11 @@ class SereneSession:
             return name, 2200
 
         classes, attrs, depth = [], [], {}
-        _an_stats = getattr(self, "_analyze_stats", {})
+        _an_stats = self._analyze_stats
         # reltuples tracks the LIVE rowcount (the reference refreshes
         # it on every write, pg_class.test:241) — cached per DataFrame
         # identity so repeat installs run no count jobs
-        _rt_cache = getattr(self, "_reltuples_cache", None)
-        if _rt_cache is None:
-            _rt_cache = self._reltuples_cache = {}
+        _rt_cache = self._reltuples_cache
 
         def _reltuples(name, df):
             # keyed on the DataFrame OBJECT (strong ref), not id(df) —
@@ -2033,12 +2086,12 @@ class SereneSession:
             classes.append((self._index_oid(name), bare, nsp, "i",
                             len(cols), -1.0, 1000000, 0, None, False,
                             None))
-        for name in sorted(getattr(self, "_view_defs", {})):
+        for name in sorted(self._view_defs):
             rid = self.relid(name)
             bare, nsp = _nsp(name)
             classes.append((rid, bare, nsp, "v", 0, -1.0, 1000000,
                             0, None, False, relacl_for(self, name)))
-        for name in sorted(getattr(self.sequences, "_seqs", {})):
+        for name in sorted(self.sequences._seqs):
             bare, nsp = _nsp(name)
             classes.append((self.relid(name), bare, nsp, "S", 3, 1.0,
                             1000000, 0, None, False, None))
@@ -2096,13 +2149,13 @@ class SereneSession:
         # user types: enums ('e') and composites ('c'), composite.test
         user = []
         nxt = 90000
-        ety = getattr(self, "_enum_types", {})
-        cty = getattr(self, "_composite_types", {})
-        for name in sorted(ety if isinstance(ety, dict) else ()):
+        ety = self._enum_types
+        cty = self._composite_types
+        for name in sorted(ety):
             user.append((nxt, name.split(".")[-1], -1, False, "e", "E",
                          False, True, ",", 0, 0, 0))
             nxt += 1
-        for name in sorted(cty if isinstance(cty, dict) else ()):
+        for name in sorted(cty):
             user.append((nxt, name.split(".")[-1], -1, False, "c", "C",
                          False, True, ",", 0, 0, 0))
             nxt += 1
@@ -2114,7 +2167,7 @@ class SereneSession:
             " typdelim string, typrelid int, typelem int, typarray int",
         ).createOrReplaceTempView("pg_type")
         enum_rows = []
-        for name in sorted(ety if isinstance(ety, dict) else ()):
+        for name in sorted(ety):
             for i, lab in enumerate(ety[name], start=1):
                 enum_rows.append((name.split(".")[-1], float(i), lab))
         spark.createDataFrame(
@@ -2143,10 +2196,10 @@ class SereneSession:
         for t2, df2 in self._tables.items():
             bare2 = t2.split(".")[-1]
             sch2 = t2.split(".")[0] if "." in t2 else "public"
-            nn2 = getattr(self, "_not_null", {}).get(t2, set())
-            pk2 = getattr(self, "_pks", {}).get(t2)
+            nn2 = self._not_null.get(t2, set())
+            pk2 = self._pks.get(t2)
             pkc2 = set(pk2) if isinstance(pk2, tuple) else {pk2}
-            dfl2 = getattr(self, "_col_defaults", {}).get(t2, {})
+            dfl2 = self._col_defaults.get(t2, {})
             for i2, (c2, typ2) in enumerate(df2.dtypes, start=1):
                 pg_t2 = format_type(typ2)
                 udt, np_, ns_, dp_ = _udt.get(
@@ -2183,16 +2236,16 @@ class SereneSession:
         spark = self.spark
 
         cons, kcu = [], []
-        for t, col in getattr(self, "_pks", {}).items():
+        for t, col in self._pks.items():
             rid = self.relid(t)
             names = [c for c, _ in self._tables[t].dtypes]
             cols = list(col) if isinstance(col, tuple) else [col]
-            pkn = getattr(self, "_pk_names", {}).get(t) or f"{t}_pkey"
+            pkn = self._pk_names.get(t) or f"{t}_pkey"
             cons.append((pkn, rid, "p",
                          [names.index(c) + 1 for c in cols], None))
             for i, c in enumerate(cols, start=1):
                 kcu.append((pkn, "public", t, c, i))
-        for t, checks in getattr(self, "_checks", {}).items():
+        for t, checks in self._checks.items():
             rid = self.relid(t)
             for name, pred in checks.items():
                 cons.append((name, rid, "c", [], str(pred)))
@@ -2200,22 +2253,21 @@ class SereneSession:
         # auto-named one too), UNIQUE constraints as 'u' (unique INDEXES
         # are absent by design), FKs as 'f'
         # (constraint_index_catalog.test)
-        for t in set(getattr(self, "_not_null", {})) | set(
-                getattr(self, "_pks", {})):
+        for t in set(self._not_null) | set(self._pks):
             if t not in self._tables:
                 continue
             rid = self.relid(t)
             names = [c for c, _ in self._tables[t].dtypes]
-            pk = getattr(self, "_pks", {}).get(t)
+            pk = self._pks.get(t)
             pkc = set(pk) if isinstance(pk, tuple) else (
                 {pk} if pk else set())
-            nn_cols = set(getattr(self, "_not_null", {}).get(t, ())) | pkc
+            nn_cols = set(self._not_null.get(t, ())) | pkc
             for c in sorted(nn_cols):
-                nname = getattr(self, "_nn_names", {}).get(t, {}).get(
+                nname = self._nn_names.get(t, {}).get(
                     c) or f"{t}_{c}_not_null"
                 num = names.index(c) + 1 if c in names else 0
                 cons.append((nname, rid, "n", [num], None))
-        for t, ucols in getattr(self, "_uq_names", {}).items():
+        for t, ucols in self._uq_names.items():
             if t not in self._tables:
                 continue
             rid = self.relid(t)
@@ -2223,7 +2275,7 @@ class SereneSession:
             for c, uname in sorted(ucols.items()):
                 num = names.index(c) + 1 if c in names else 0
                 cons.append((uname, rid, "u", [num], None))
-        for cname, (t, c, rt, rc) in getattr(self, "_fks", {}).items():
+        for cname, (t, c, rt, rc) in self._fks.items():
             if t not in self._tables:
                 continue
             rid = self.relid(t)
@@ -2247,7 +2299,7 @@ class SereneSession:
             "information_schema_key_column_usage")
 
         descr = [(self.relid(obj), obj, c)
-                 for obj, c in getattr(self, "_comments", {}).items()
+                 for obj, c in self._comments.items()
                  if c is not None]
         spark.createDataFrame(
             descr or [(0, "", "")],
@@ -2255,7 +2307,7 @@ class SereneSession:
         ).where(F.col("objname") != "").createOrReplaceTempView(
             "pg_description")
 
-        roles = sorted({"postgres", *getattr(self, "_grants", {})}
+        roles = sorted({"postgres", *self._grants}
                        | ({self.current_user} if self.current_user else
                           set()))
         spark.createDataFrame(
@@ -2266,10 +2318,9 @@ class SereneSession:
 
         from serenedb_spark.pg_catalog_columns import (
             PG_SETTINGS_ROWS, PG_SETTINGS_LIVE_DESC)
-        from serenedb_spark.plans.statements import _pg_vars
 
         live_vars = [(k, str(v), PG_SETTINGS_LIVE_DESC.get(k, ""))
-                     for k, v in sorted(_pg_vars(self).items())]
+                     for k, v in sorted(self._pg_vars_store.items())]
         settings_df = spark.createDataFrame(
             list(PG_SETTINGS_ROWS) + live_vars,
             "name string, setting string, short_desc string")
@@ -2293,7 +2344,7 @@ class SereneSession:
         # the static/one-row relations psql's \l, \dv, \ds, \dx hit.
         # `postgres` is the shared-catalog bootstrap database GRANT ON
         # DATABASE lands on (cat_acl_columns_db_func.test)
-        db0 = getattr(self, "_current_db", "serene")
+        db0 = self._current_db
         spark.createDataFrame(
             [(1, db0, 1000000, "UTF8",
               _oaf(self, "database", db0)),
@@ -2310,7 +2361,7 @@ class SereneSession:
         seqs = [
             (name, st["current"], st["increment"], st["min"], st["max"],
              st["cycle"])
-            for name, st in getattr(self.sequences, "_seqs", {}).items()
+            for name, st in self.sequences._seqs.items()
         ]
         spark.createDataFrame(
             seqs or [("", 0, 0, 0, 0, False)],
@@ -2321,7 +2372,7 @@ class SereneSession:
             "'postgres' AS sequenceowner", "last_value", "increment_by",
             "min_value", "max_value", "cycle",
         ).createOrReplaceTempView("pg_sequences")
-        views = [(n,) for n in sorted(getattr(self, "_view_defs", {}))]
+        views = [(n,) for n in sorted(self._view_defs)]
         spark.createDataFrame(
             views or [("",)], "viewname string",
         ).where(F.col("viewname") != "").selectExpr(
@@ -2339,7 +2390,7 @@ class SereneSession:
         # n_live_tup stays -1 (unknown) until ANALYZE records it — no
         # count job at catalog-install time; PG's own numbers are also
         # estimates, refreshed by ANALYZE, not reads
-        counts = getattr(self, "_analyze_stats", {})
+        counts = self._analyze_stats
         stat = [(self.relid(t), t, counts.get(t, -1.0))
                 for t in self._tables]
         spark.createDataFrame(
@@ -2364,7 +2415,7 @@ class SereneSession:
         spark = self.spark
 
         defaults = []
-        for t, cols in getattr(self, "_col_defaults", {}).items():
+        for t, cols in self._col_defaults.items():
             rid = self.relid(t)
             names = [c for c, _ in self._tables[t].dtypes]
             for c, v in cols.items():
@@ -2377,16 +2428,16 @@ class SereneSession:
 
         dep = []
         for name in self._indexes:
-            src = getattr(self, "_index_sources", {}).get(name)
+            src = self._index_sources.get(name)
             if src and src in self._tables:
                 dep.append((self.relid(name), self.relid(src), "a",
                             "index"))
-        for t in getattr(self, "_pks", {}):
+        for t in self._pks:
             dep.append((self.relid(t), self.relid(t), "i", "pkey"))
-        for t, checks in getattr(self, "_checks", {}).items():
+        for t, checks in self._checks.items():
             for _ in checks:
                 dep.append((self.relid(t), self.relid(t), "n", "check"))
-        for cname, (t, _c, rt, _rc) in getattr(self, "_fks", {}).items():
+        for cname, (t, _c, rt, _rc) in self._fks.items():
             dep.append((self.relid(t), self.relid(rt), "n", "fkey"))
         # deptype carries the dependency KIND word — PG's single-char
         # codes are never value-pinned by the reference suites, and the
@@ -2396,7 +2447,7 @@ class SereneSession:
             "objid int, refobjid int, deptype string",
         ).where(F.col("objid") != 0).createOrReplaceTempView("pg_depend")
 
-        in_txn = getattr(self, "_txn_backup", None) is not None
+        in_txn = self._txn_backup is not None
         locks = ([(self.relid(t), t, "AccessShareLock", True)
                   for t in sorted(self._tables)] if in_txn else [])
         spark.createDataFrame(
@@ -2406,29 +2457,28 @@ class SereneSession:
 
         spark.createDataFrame(
             [(_os.getpid(), self.current_user or "postgres", "active",
-              getattr(self, "_last_query", None))],
+              self._last_query)],
             "pid int, usename string, state string, query string",
         ).createOrReplaceTempView("pg_stat_activity")
 
         tcons = []
-        for t in getattr(self, "_pks", {}):
+        for t in self._pks:
             tcons.append((f"{t}_pkey", "public", t, "PRIMARY KEY"))
-        for t, checks in getattr(self, "_checks", {}).items():
+        for t, checks in self._checks.items():
             for name in checks:
                 tcons.append((name, "public", t, "CHECK"))
         # NOT NULL renders as a CHECK constraint in the SQL-standard
         # view (pg_catalog_data.test:557)
         for t in self._tables:
-            pk0 = getattr(self, "_pks", {}).get(t)
+            pk0 = self._pks.get(t)
             pkc0 = set(pk0) if isinstance(pk0, tuple) else (
                 {pk0} if pk0 else set())
-            for c in sorted(set(getattr(self, "_not_null",
-                                        {}).get(t, ())) | pkc0):
-                nname = getattr(self, "_nn_names", {}).get(
+            for c in sorted(set(self._not_null.get(t, ())) | pkc0):
+                nname = self._nn_names.get(
                     t, {}).get(c) or f"{t}_{c}_not_null"
                 tcons.append((nname, "public", t, "CHECK"))
         refcons = []
-        for cname, (t, c, rt, rc) in getattr(self, "_fks", {}).items():
+        for cname, (t, c, rt, rc) in self._fks.items():
             tcons.append((cname, "public", t, "FOREIGN KEY"))
             refcons.append((cname, "public", f"{rt}_pkey", "NONE",
                             "NO ACTION", "NO ACTION"))
@@ -2446,10 +2496,10 @@ class SereneSession:
         ).where(F.col("constraint_name") != "").createOrReplaceTempView(
             "information_schema_referential_constraints")
 
-        db0 = getattr(self, "_current_db", "serene")
+        db0 = self._current_db
         schemata = [(db0, "pg_catalog", "postgres"),
                     (db0, "information_schema", "postgres")]
-        for s0 in sorted(self._set_store("_schemas", ("public",))):
+        for s0 in sorted(self._schemas):
             if s0 != "main":
                 schemata.append((db0, s0, "postgres"))
         spark.createDataFrame(
@@ -2458,7 +2508,7 @@ class SereneSession:
         ).createOrReplaceTempView("information_schema_schemata")
         idx_stat = []
         for name, idx in self._indexes.items():
-            src = getattr(self, "_index_sources", {}).get(name)
+            src = self._index_sources.get(name)
             idx_stat.append((self.relid(src) if src else 0,
                              self.relid(name), src or "", name))
         spark.createDataFrame(
@@ -2480,7 +2530,7 @@ class SereneSession:
         state."""
         spark = self.spark
 
-        roles = sorted({"postgres", *getattr(self, "_grants", {})}
+        roles = sorted({"postgres", *self._grants}
                        | ({self.current_user} if self.current_user else
                           set()))
         spark.createDataFrame(
@@ -2522,8 +2572,7 @@ class SereneSession:
         ).createOrReplaceTempView("pg_aggregate")
 
         views = [("serene", "public", n, d or "")
-                 for n, d in sorted(getattr(self, "_view_defs",
-                                            {}).items())]
+                 for n, d in sorted(self._view_defs.items())]
         spark.createDataFrame(
             views or [("", "", "", "")],
             "table_catalog string, table_schema string, table_name string,"
@@ -2563,8 +2612,8 @@ class SereneSession:
         ).where(F.col("oid") != 0).createOrReplaceTempView("pg_policy")
 
         tprivs, cprivs = [], []
-        _grantors = getattr(self, "_grantors", {})
-        for principal, tables in getattr(self, "_grants", {}).items():
+        _grantors = self._grantors
+        for principal, tables in self._grants.items():
             for t, privs in tables.items():
                 for p in sorted(privs):
                     if p.endswith("*"):
@@ -2574,8 +2623,7 @@ class SereneSession:
                     tprivs.append((gor, principal, "public", t, p,
                                    gr8))
                     if t in self._tables:
-                        masked = set(getattr(self, "_col_masks",
-                                             {}).get(t, {}))
+                        masked = set(self._col_masks.get(t, {}))
                         for c in self._tables[t].columns:
                             if c not in masked:
                                 cprivs.append((gor, principal,
@@ -2583,8 +2631,7 @@ class SereneSession:
                                                gr8))
         # column-scoped grants surface per column only
         # (go_aclexplode.test information_schema cross-check)
-        for principal, tables in (getattr(self, "_col_grants", {})
-                                  or {}).items():
+        for principal, tables in self._col_grants.items():
             for t, pm in tables.items():
                 gor = _grantors.get((principal, t), "postgres")
                 for p, cols in pm.items():
@@ -2681,10 +2728,10 @@ class SereneSession:
         from serenedb_spark.functions.acl import objacl_for as _oaf2
         ns = [(11, "pg_catalog", 1000000, None),
               (1000003, "information_schema", 1000000, None)]
-        if "public" in self._set_store("_schemas", ("public",)):
+        if "public" in self._schemas:
             ns.append((2200, "public", 1000000, None))
         user_schemas = sorted(
-            s for s in getattr(self, "_schemas", ())
+            s for s in self._schemas
             if s not in ("public", "main"))
         for i, s in enumerate(user_schemas):
             ns.append((16000 + i, s, 1000000,
@@ -2718,7 +2765,7 @@ class SereneSession:
 
         # text-search catalog family over the live dictionary registry
         from serenedb_spark.analysis import analyzers as _an
-        dicts = sorted(getattr(_an, "_REGISTRY", {}) or {})
+        dicts = sorted(_an._REGISTRY)
         spark.createDataFrame(
             [(17000 + i, d, 11, 1000000) for i, d in enumerate(dicts)]
             or [(0, "", 0, 0)],
@@ -2742,8 +2789,7 @@ class SereneSession:
         # pg_sequence — the catalog relation behind the pg_sequences view
         seqs = [(self.relid(n) or 0, st["start"], st["increment"],
                  st["min"], st["max"], st["cycle"])
-                for n, st in sorted(getattr(self.sequences, "_seqs",
-                                            {}).items())]
+                for n, st in sorted(self.sequences._seqs.items())]
         spark.createDataFrame(
             seqs or [(0, 0, 0, None, None, False)],
             "seqrelid int, seqstart long, seqincrement long,"
@@ -2844,8 +2890,7 @@ class SereneSession:
             " comments string")).createOrReplaceTempView(
             "information_schema_sql_sizing")
         # pg_prepared_statements reflects the LIVE prepared cache
-        prepped = [(n,) for n in sorted(getattr(self, "_prepared",
-                                                {}) or ())]
+        prepped = [(n,) for n in sorted(self._prepared)]
         spark.createDataFrame(
             prepped or [("",)], "name string",
         ).where(F.col("name") != "").createOrReplaceTempView(
@@ -2859,8 +2904,7 @@ class SereneSession:
         eng = [("io_threads", nthreads, "integer", "0", "0")] + [
             (k, str(v), "integer" if str(v).lstrip("-").isdigit()
              else "string", str(v), str(v))
-            for k, v in sorted(getattr(self, "_variables",
-                                       {}).items())]
+            for k, v in sorted(self._variables.items())]
         spark.createDataFrame(
             [(n, v, None, None, vt, "postmaster", bv, rv, None, None,
               False) for n, v, vt, bv, rv in eng],
@@ -2946,7 +2990,7 @@ class SereneSession:
             F.col("rolvaliduntil").alias("valuntil"),
             F.col("rolconfig").alias("useconfig"),
         ).createOrReplaceTempView("pg_shadow")
-        rm = self.role_members()
+        rm = self._role_members
         edges = [(e.get("oid", 0), ra.get(r, {}).get("oid", 0),
                   ra.get(m, {}).get("oid", 0),
                   ra.get(e.get("grantor", "postgres"),
@@ -2983,8 +3027,7 @@ class SereneSession:
                       "n": OWNER_LETTERS["schema"]}
         dacl = []
         for i, ((owner, sch, objtype), ent) in enumerate(
-                sorted((getattr(self, "_default_acls", {})
-                        or {}).items()), start=1):
+                sorted(self._default_acls.items()), start=1):
             items = [aclitem(owner, _OBJ_OWNER.get(objtype, ""),
                              owner)]
             for g, pm in sorted(ent.items()):
@@ -3025,26 +3068,15 @@ class SereneSession:
     }
 
     def role_attrs(self) -> dict:
-        ra = getattr(self, "_role_attrs", None)
-        if not isinstance(ra, dict):
-            ra = self._role_attrs = {}
-        if "postgres" not in ra:
-            # the bootstrap superuser — oid matches the repo's existing
-            # pg_class.relowner/pg_get_userbyid convention
-            ra["postgres"] = dict(self._ROLE_DEFAULTS, super=True,
-                                  inherit=True, createrole=True,
-                                  createdb=True, canlogin=True,
-                                  replication=True, bypassrls=True,
-                                  oid=1000000)
-        # roles created before the attrs store existed (legacy _roles
-        # set) and principals granted through the API (the pre-v2
-        # pg_roles listed granted principals) surface with default
-        # attributes. The public/PUBLIC pseudo-role is never a pg_roles
-        # row (Postgres keeps it implicit), and a principal whose grant
-        # sets have all been revoked (empty dict entries linger after
-        # revoke()) is not a role either.
-        grants = getattr(self, "_grants", {})
-        col_grants = getattr(self, "_col_grants", {})
+        ra = self._role_attrs
+        # roles in the legacy _roles set and principals granted through
+        # the API (the pre-v2 pg_roles listed granted principals)
+        # surface with default attributes. The public/PUBLIC pseudo-role
+        # is never a pg_roles row (Postgres keeps it implicit), and a
+        # principal whose grant sets have all been revoked (empty dict
+        # entries linger after revoke()) is not a role either.
+        grants = self._grants
+        col_grants = self._col_grants
         # {principal: {table: set(privs)}} / {principal: {table: {priv:
         # set(cols)}}} — revoke() leaves empty leaves behind, so walk to
         # a non-empty leaf before counting a principal as granted
@@ -3053,22 +3085,16 @@ class SereneSession:
         granted |= {r for r, g in col_grants.items()
                     if any(cols for tbl in g.values()
                            for cols in tbl.values())}
-        for r in (*self._set_store("_roles"), *sorted(granted)):
+        for r in (*self._roles, *sorted(granted)):
             if r not in ra and r.lower() != "public":
                 ra[r] = dict(self._ROLE_DEFAULTS, oid=self._next_oid())
         return ra
-
-    def role_members(self) -> dict:
-        rm = getattr(self, "_role_members", None)
-        if not isinstance(rm, dict):
-            rm = self._role_members = {}
-        return rm
 
     def _next_oid(self) -> int:
         """Monotonic oid allocator shared across attached sessions —
         pg_auth_members.oid must be UNIQUE across membership edges
         (catm_authmembers_oid_unique.test)."""
-        store = getattr(self, "_shared_store", None)
+        store = self._shared_store
         holder = store if store is not None else self.__dict__
         nxt = holder.get("_oid_seq", 16384)
         holder["_oid_seq"] = nxt + 1
@@ -3111,7 +3137,7 @@ class SereneSession:
         attribute is set (privilege inheritance, PG's roles_is_member_of
         vs has_privs_of_role split)."""
         ra = self.role_attrs()
-        rm = self.role_members()
+        rm = self._role_members
         out: set = set()
         frontier = [role]
         while frontier:
@@ -3138,14 +3164,8 @@ class SereneSession:
         return {user, "public", "PUBLIC"} | self._member_of(
             user, inherit_only=True)
 
-    def _col_grant_store(self) -> dict:
-        cg = getattr(self, "_col_grants", None)
-        if not isinstance(cg, dict):
-            cg = self._col_grants = {}
-        return cg
-
     def _table_owner(self, table: str) -> str:
-        return getattr(self, "_owners", {}).get(table, "postgres")
+        return self._owners.get(table, "postgres")
 
     def has_table_privilege(self, principal: str, table: str,
                             privilege: str = "SELECT") -> bool:
@@ -3154,7 +3174,7 @@ class SereneSession:
         if self._is_superuser(principal) or \
                 self._table_owner(table) == principal:
             return True
-        grants = getattr(self, "_grants", {})
+        grants = self._grants
         return any(
             privilege.upper() in grants.get(p, {}).get(table, set())
             for p in self._privilege_principals(principal))
@@ -3165,12 +3185,12 @@ class SereneSession:
         """PG has_column_privilege: table-level privilege satisfies all
         columns, else the per-column grant; a masked column is one the
         role cannot read in the clear (reference rbac.cpp)."""
-        if column in getattr(self, "_col_masks", {}).get(table, {}) \
+        if column in self._col_masks.get(table, {}) \
                 and not self._is_superuser(principal):
             return False
         if self.has_table_privilege(principal, table, privilege):
             return True
-        cg = self._col_grant_store()
+        cg = self._col_grants
         return any(
             column in cg.get(p, {}).get(table, {}).get(
                 privilege.upper(), set())
@@ -3183,15 +3203,13 @@ class SereneSession:
     # different users see different slices of the same relation.
     def grant(self, principal: str, table: str,
               privilege: str = "SELECT") -> None:
-        g = getattr(self, "_grants", None)
-        if g is None:
-            g = self._grants = {}
+        g = self._grants
         g.setdefault(principal, {}).setdefault(table, set()).add(
             privilege.upper())
 
     def revoke(self, principal: str, table: str,
                privilege: str = "SELECT") -> None:
-        getattr(self, "_grants", {}).get(principal, {}).get(
+        self._grants.get(principal, {}).get(
             table, set()).discard(privilege.upper())
 
     def set_user(self, principal: str | None) -> None:
@@ -3201,7 +3219,7 @@ class SereneSession:
 
     @property
     def current_user(self) -> str | None:
-        return getattr(self, "_current_user", None)
+        return self._current_user
 
     def _check_privilege(self, table: str, privilege: str,
                          columns=None) -> None:
@@ -3210,8 +3228,7 @@ class SereneSession:
         grant. `columns` is the set the statement touches (None = the
         caller couldn't resolve columns — any relation- or column-level
         grant of the privilege passes)."""
-        if privilege.upper() != "SELECT" and \
-                getattr(self, "_txn_read_only", False):
+        if privilege.upper() != "SELECT" and self._txn_read_only:
             # BEGIN READ ONLY (transaction_control.test) — the
             # reference's exact store wording
             raise ValueError(
@@ -3222,12 +3239,12 @@ class SereneSession:
                 self._table_owner(table) == u:
             return
         priv = privilege.upper()
-        grants = getattr(self, "_grants", {})
+        grants = self._grants
         principals = self._privilege_principals(u)
         if any(priv in grants.get(p, {}).get(table, set())
                for p in principals):
             return
-        cg = self._col_grant_store()
+        cg = self._col_grants
         granted_cols: set = set()
         for p in principals:
             granted_cols |= cg.get(p, {}).get(table, {}).get(priv,
@@ -3331,9 +3348,7 @@ class SereneSession:
         ddl/alter_set_default.test): recorded in the catalog
         (pg_attrdef) and applied by insert() when the column is absent
         from the incoming rows."""
-        d = getattr(self, "_col_defaults", None)
-        if d is None:
-            d = self._col_defaults = {}
+        d = self._col_defaults
         d.setdefault(table, {})[column] = value
 
     # ---- foreign keys (reference dml/foreign_key.test): declarative
@@ -3346,9 +3361,7 @@ class SereneSession:
                         validate: bool = True) -> None:
         """ADD FOREIGN KEY; with validate=True (PG default) the existing
         rows are checked immediately and a violation raises."""
-        fks = getattr(self, "_fks", None)
-        if fks is None:
-            fks = self._fks = {}
+        fks = self._fks
         cname = name or f"{table}_{column}_fkey"
         fks[cname] = (table, column, ref_table, ref_column)
         if validate:
@@ -3371,16 +3384,14 @@ class SereneSession:
 
     def comment_on(self, obj: str, comment: str | None) -> None:
         """COMMENT ON (reference ddl/comment.test); None removes it."""
-        c = getattr(self, "_comments", None)
-        if c is None:
-            c = self._comments = {}
+        c = self._comments
         if comment is None:
             c.pop(obj, None)
         else:
             c[obj] = comment
 
     def get_comment(self, obj: str) -> str | None:
-        return getattr(self, "_comments", {}).get(obj)
+        return self._comments.get(obj)
 
     def alter_rename_column(self, table: str, old: str, new: str) -> None:
         """RENAME COLUMN migrates every column-scoped catalog store, as
@@ -3396,7 +3407,7 @@ class SereneSession:
         def rewrite(expr: str) -> str:
             return word.sub(new, expr)
 
-        checks = getattr(self, "_checks", {}).get(table, {})
+        checks = self._checks.get(table, {})
         for cname, pred in checks.items():
             if not isinstance(pred, str) and word.search(str(pred)):
                 raise ValueError(
@@ -3404,7 +3415,7 @@ class SereneSession:
                     f'"{cname}" references it and was registered as a '
                     "Column object; drop the constraint first")
         self._tables[table] = self._tables[table].withColumnRenamed(old, new)
-        pks = getattr(self, "_pks", {})
+        pks = self._pks
         if pks.get(table) == old:
             pks[table] = new
         elif isinstance(pks.get(table), tuple):
@@ -3414,7 +3425,7 @@ class SereneSession:
             if s and old in s:
                 s.discard(old)
                 s.add(new)
-        d = getattr(self, "_col_defaults", {}).get(table)
+        d = self._col_defaults.get(table)
         if d and old in d:
             d[new] = d.pop(old)
         for store in ("_nn_names", "_uq_names", "_enum_cols",
@@ -3422,7 +3433,7 @@ class SereneSession:
             dd = getattr(self, store, {}).get(table)
             if dd and old in dd:
                 dd[new] = dd.pop(old)
-        gen = getattr(self, "_generated", {}).get(table)
+        gen = self._generated.get(table)
         if gen:
             self._generated[table] = {
                 (new if c == old else c): rewrite(e)
@@ -3430,20 +3441,20 @@ class SereneSession:
         for cname, pred in list(checks.items()):
             if isinstance(pred, str):
                 checks[cname] = rewrite(pred)
-        fks = getattr(self, "_fks", {})
+        fks = self._fks
         for cname, (t, col, rt, rc) in list(fks.items()):
             if t == table and col == old:
                 col = new
             if rt == table and rc == old:
                 rc = new
             fks[cname] = (t, col, rt, rc)
-        masks = getattr(self, "_col_masks", {}).get(table)
+        masks = self._col_masks.get(table)
         if masks and old in masks:
             masks[new] = masks.pop(old)
-        comments = getattr(self, "_comments", {})
+        comments = self._comments
         if f"{table}.{old}" in comments:
             comments[f"{table}.{new}"] = comments.pop(f"{table}.{old}")
-        ui = getattr(self, "_unique_indexes", {})
+        ui = self._unique_indexes
         for iname, (t, col) in list(ui.items()):
             if t == table and col == old:
                 ui[iname] = (t, new)
@@ -3464,13 +3475,11 @@ class SereneSession:
                 f"column {name!r} of {table!r} contains NULLs; "
                 "SET NOT NULL rejected"
             )
-        meta = getattr(self, "_not_null", {})
+        meta = self._not_null
         meta.setdefault(table, set()).add(name)
         self._not_null = meta
         if constraint_name is not None:
-            nn = getattr(self, "_nn_names", None)
-            if not isinstance(nn, dict):
-                nn = self._nn_names = {}
+            nn = self._nn_names
             nn.setdefault(table, {})[name] = constraint_name
 
     def alter_struct_field(self, table: str, column: str, field: str,
@@ -3505,7 +3514,7 @@ class SereneSession:
         (update_pk.test multi_pk: PRIMARY KEY(a, b))."""
         if isinstance(column, (list, tuple)):
             column = column[0] if len(column) == 1 else tuple(column)
-        cur = getattr(self, "_pks", {}).get(table)
+        cur = self._pks.get(table)
         if cur is not None and cur != column:
             raise ValueError(
                 f'multiple primary keys for table "{table}" are not '
@@ -3520,14 +3529,10 @@ class SereneSession:
                 f"cannot add primary key: duplicate {cols}="
                 f"{tuple(dup[0][:len(cols)])!r} in {table}"
             )
-        pk = getattr(self, "_pks", None)
-        if pk is None:
-            pk = self._pks = {}
+        pk = self._pks
         pk[table] = column
         if constraint_name is not None:
-            pn = getattr(self, "_pk_names", None)
-            if not isinstance(pn, dict):
-                pn = self._pk_names = {}
+            pn = self._pk_names
             pn[table] = constraint_name
 
     def add_check(self, table: str, name: str, predicate) -> None:
@@ -3542,9 +3547,7 @@ class SereneSession:
             raise ValueError(
                 f"check constraint {name!r} violated by existing rows"
             )
-        checks = getattr(self, "_checks", None)
-        if checks is None:
-            checks = self._checks = {}
+        checks = self._checks
         # SQL-text predicates are stored as TEXT so RENAME COLUMN can
         # rewrite them; Column predicates keep the object
         checks.setdefault(table, {})[name] = predicate
@@ -3556,41 +3559,40 @@ class SereneSession:
         drops life_uq2/life_fk2 after renames)."""
         import re as _re
 
-        checks = getattr(self, "_checks", {}).get(table, {})
+        checks = self._checks.get(table, {})
         if name in checks:
             checks.pop(name)
             return
-        uq = getattr(self, "_uq_names", {}).get(table, {})
+        uq = self._uq_names.get(table, {})
         for c, n in list(uq.items()):
             if n == name:
                 uq.pop(c)
-                getattr(self, "_uniques", {}).get(table, set()).discard(c)
-                ui = getattr(self, "_unique_indexes", {})
+                self._uniques.get(table, set()).discard(c)
+                ui = self._unique_indexes
                 for iname, (t, cc) in list(ui.items()):
                     if t == table and cc == c:
                         ui.pop(iname, None)
                 return
-        fks = getattr(self, "_fks", {})
+        fks = self._fks
         if name in fks and fks[name][0] == table:
             del fks[name]
             return
-        nn = getattr(self, "_nn_names", {}).get(table, {})
+        nn = self._nn_names.get(table, {})
         for c, n in list(nn.items()):
             if n == name:
                 nn.pop(c)
-                getattr(self, "_not_null", {}).get(
+                self._not_null.get(
                     table, set()).discard(c)
                 return
         m = _re.match(rf"^{_re.escape(table)}_(\w+)_not_null$", name)
-        if m and m.group(1) in getattr(self, "_not_null",
-                                       {}).get(table, set()):
+        if m and m.group(1) in self._not_null.get(table, set()):
             self._not_null[table].discard(m.group(1))
             return
-        if getattr(self, "_pk_names", {}).get(table) == name \
+        if self._pk_names.get(table) == name \
                 or (name == f"{table}_pkey"
-                    and table in getattr(self, "_pks", {})):
-            getattr(self, "_pks", {}).pop(table, None)
-            getattr(self, "_pk_names", {}).pop(table, None)
+                    and table in self._pks):
+            self._pks.pop(table, None)
+            self._pk_names.pop(table, None)
             return
         if not if_exists:
             raise ValueError(
@@ -3612,19 +3614,13 @@ class SereneSession:
             raise ValueError(
                 f"cannot create UNIQUE index: duplicate "
                 f"{column}={dup[0][0]!r} in {table}")
-        u = getattr(self, "_uniques", None)
-        if u is None:
-            u = self._uniques = {}
+        u = self._uniques
         u.setdefault(table, set()).add(column)
         if name is not None:
-            ui = getattr(self, "_unique_indexes", None)
-            if ui is None:
-                ui = self._unique_indexes = {}
+            ui = self._unique_indexes
             ui[name] = (table, column)
         if constraint:
-            uc = getattr(self, "_uq_names", None)
-            if not isinstance(uc, dict):
-                uc = self._uq_names = {}
+            uc = self._uq_names
             uc.setdefault(table, {})[column] = (
                 name or f"{table}_{column}_key")
 
@@ -3638,12 +3634,12 @@ class SereneSession:
         so clash-checking `rows` against it would be unsound in both
         directions (false positives on unchanged keys, false negatives on
         collisions with non-updated rows)."""
-        for col in getattr(self, "_not_null", {}).get(table, ()):
+        for col in self._not_null.get(table, ()):
             if rows.where(F.col(col).isNull()).limit(1).collect():
                 raise ValueError(
                     f"NULL in NOT NULL column {col!r} of {table!r}")
-        uniq_cols = list(getattr(self, "_uniques", {}).get(table, ()))
-        pk = getattr(self, "_pks", {}).get(table)
+        uniq_cols = list(self._uniques.get(table, ()))
+        pk = self._pks.get(table)
         if mode == "update" and pk is not None:
             # UPDATE may rewrite the PK column; re-check it like PG does
             pk_cols = list(pk) if isinstance(pk, tuple) else [pk]
@@ -3681,7 +3677,7 @@ class SereneSession:
                 raise ValueError(
                     f'UNIQUE constraint failed on table "{table}": '
                     f"duplicate {col}={v!r}")
-        for name, pred in getattr(self, "_checks", {}).get(
+        for name, pred in self._checks.get(
                 table, {}).items():
             pred = F.expr(pred) if isinstance(pred, str) else pred
             # CHECK fails only when the predicate is FALSE — a NULL
@@ -3694,7 +3690,7 @@ class SereneSession:
                     f"new rows violate {name!r}")
         # foreign keys enforce on every write (dml/foreign_key.test):
         # NULLs pass (MATCH SIMPLE), one anti-join per declared FK
-        for cname, (t, col, rt, rc) in getattr(self, "_fks", {}).items():
+        for cname, (t, col, rt, rc) in self._fks.items():
             if t != table or rt not in self._tables:
                 continue
             ref = self._tables[rt].select(F.col(rc).alias(col)).distinct()
@@ -3711,7 +3707,7 @@ class SereneSession:
         """GENERATED ALWAYS AS columns in dependency order (chains
         allowed like the reference's serenedb-only default_values.test
         blocks; a cycle raises)."""
-        gen = dict(getattr(self, "_generated", {}).get(table, {}))
+        gen = dict(self._generated.get(table, {}))
         cols = set(self._tables[table].columns)
         resolved = cols - set(gen)
         out: list[tuple[str, str]] = []
@@ -3743,13 +3739,13 @@ class SereneSession:
         bind to the unique constraint's index, not only to the PK)."""
         if target is None:
             return None
-        pk = getattr(self, "_pks", {}).get(table)
-        uniques = set(getattr(self, "_uniques", {}).get(table, ()))
+        pk = self._pks.get(table)
+        uniques = set(self._uniques.get(table, ()))
         if isinstance(target, tuple) and target[0] == "constraint":
             name = target[1]
             if name == f"{table}_pkey" and pk is not None:
                 return pk
-            ui = getattr(self, "_unique_indexes", {}).get(name)
+            ui = self._unique_indexes.get(name)
             if ui is not None and ui[0] == table:
                 return ui[1]
             raise ValueError(
@@ -3804,8 +3800,8 @@ class SereneSession:
 
         self._check_privilege(table, "INSERT")
         rows = self._apply_generated(table, rows)
-        pk = getattr(self, "_pks", {}).get(table)
-        uniques = set(getattr(self, "_uniques", {}).get(table, ()))
+        pk = self._pks.get(table)
+        uniques = set(self._uniques.get(table, ()))
         spec = on_conflict if isinstance(on_conflict, dict) else None
         if spec is not None:
             key = self._bind_conflict_target(table, spec.get("target"))
@@ -3882,7 +3878,7 @@ class SereneSession:
         self._validate_rows(
             table, new_marked.where(F.col("__upd")).drop("__upd"),
             mode="update", full_state=new_marked.drop("__upd"))
-        pk = getattr(self, "_pks", {}).get(table)
+        pk = self._pks.get(table)
         if pk in marked.columns:
             # track rewritten row ids: a refresh counts an updated
             # row's reinserted copy in the RAW term stats just like the
@@ -3894,7 +3890,7 @@ class SereneSession:
 
     #: attrs freshened per-statement inside a READ COMMITTED block
     _RC_SYNC_STATE = ("_tables", "_indexes", "_index_sources", "_pks",
-                      "_storage", "_schemas", "_sequences")
+                      "_storage")
 
     def _rc_sync(self) -> None:
         """READ COMMITTED visibility inside a shared-session block:
@@ -3904,12 +3900,11 @@ class SereneSession:
         is how a concurrent DROP TABLE surfaces as a conflict
         (sdb/pg/index/basic.test:595)."""
         store = self._shared_store
-        pre = getattr(self, "_txn_prebegin", None) or {}
+        pre = self._txn_prebegin
         for a in self._RC_SYNC_STATE:
-            shared = store.get(a)
-            local = getattr(self, a, None)
-            if not isinstance(shared, dict) or not isinstance(
-                    local, dict) or local is shared:
+            shared = store[a]
+            local = getattr(self, a)
+            if local is shared:
                 continue
             snap = pre.get(a, {})
             for k, v in shared.items():
@@ -3929,7 +3924,7 @@ class SereneSession:
         the table's PK — concurrent inserts from two blocks both
         survive (txn/basic.test:157). Without a PK the block's version
         wins whole."""
-        pk = getattr(self, "_pks", {}).get(table)
+        pk = self._pks.get(table)
         if pk is None or pk not in local.columns:
             return local
         added = local.join(snap.select(pk), pk, "left_anti")
@@ -3946,7 +3941,7 @@ class SereneSession:
                 .unionByName(added))
 
     def _mark_dirty(self, table: str, keys: DataFrame) -> None:
-        dr = self.__dict__.setdefault("_dirty_rows", {})
+        dr = self._dirty_rows
         prev = dr.get(table)
         dr[table] = keys if prev is None else prev.unionByName(keys)
 
@@ -3954,7 +3949,7 @@ class SereneSession:
         """Default RESTRICT (dml/foreign_key.test): deleting parent rows
         still referenced by a child FK is rejected — one semi-join per
         inbound FK against the removed keys."""
-        for cname, (t, col, rt, rc) in getattr(self, "_fks", {}).items():
+        for cname, (t, col, rt, rc) in self._fks.items():
             if rt != table or t not in self._tables:
                 continue
             still = (self._tables[t].where(F.col(col).isNotNull())
@@ -3971,7 +3966,7 @@ class SereneSession:
 
         self._check_privilege(table, "DELETE")
         c = F.expr(cond) if isinstance(cond, str) else cond
-        if getattr(self, "_fks", None):
+        if self._fks:
             self._check_fk_restrict(
                 table, self._tables[table].where(
                     F.coalesce(c, F.lit(False))))
@@ -3994,7 +3989,7 @@ class SereneSession:
             keys.select(*kc).distinct(), kc, "left_semi")
         self._validate_rows(table, new_state.join(hit, kc, "left_semi"),
                             mode="update", full_state=new_state)
-        pk = getattr(self, "_pks", {}).get(table)
+        pk = self._pks.get(table)
         if pk in self._tables[table].columns:
             self._mark_dirty(table, hit.select(F.col(kc[0]).alias(pk))
                              if kc != [pk] else hit.select(pk))
@@ -4009,7 +4004,7 @@ class SereneSession:
 
         self._check_privilege(table, "DELETE")
         kc = list(key) if isinstance(key, (list, tuple)) else [key]
-        if getattr(self, "_fks", None):
+        if self._fks:
             self._check_fk_restrict(
                 table, self._tables[table].join(
                     keys.select(*kc).distinct(), kc, "left_semi"))
@@ -4022,10 +4017,10 @@ class SereneSession:
         index over `table` from its current state, so DML since CREATE
         INDEX becomes visible to `@@` (reference search_table.test:70 —
         its WAL tick analogue for the catalog-DML path)."""
-        for iname, ddl in list(getattr(self, "_index_ddl", {}).items()):
-            if getattr(self, "_index_sources", {}).get(iname) == table:
+        for iname, ddl in list(self._index_ddl.items()):
+            if self._index_sources.get(iname) == table:
                 self._create_inverted_index_sql(ddl, internal=True)
-        getattr(self, "_dirty_rows", {}).pop(table, None)
+        self._dirty_rows.pop(table, None)
 
     # ---- macros (reference CREATE MACRO, catalog/function.h:30-33:
     # DuckDB scalar AND table macros; Spark 4 SQL UDFs map them directly)
@@ -4074,7 +4069,7 @@ class SereneSession:
         import re as _re
 
         pat = _re.compile(rf"\b{_re.escape(name)}\b", _re.IGNORECASE)
-        views = [v for v, d in getattr(self, "_view_defs", {}).items()
+        views = [v for v, d in self._view_defs.items()
                  if v != name and isinstance(d, str) and pat.search(d)]
         macros = [m for m, meta in self._macros_meta.items()
                   if m != name and len(meta) > 2
@@ -4089,7 +4084,7 @@ class SereneSession:
         pat = _re.compile(rf"\b{_re.escape(name)}\b", _re.IGNORECASE)
         idxs = []
         if kind != "table":  # expression indexes calling a function
-            for i, ddl in getattr(self, "_index_ddl", {}).items():
+            for i, ddl in self._index_ddl.items():
                 exprs = getattr(ddl, "exprs", None) or {}
                 if any(pat.search(e) for e in exprs.values()):
                     idxs.append(i)
@@ -4104,8 +4099,8 @@ class SereneSession:
             self.drop_macro(m, cascade=True)
         for i in idxs:  # expression indexes over a dropped function
             self._indexes.pop(i, None)
-            getattr(self, "_index_sources", {}).pop(i, None)
-            getattr(self, "_index_ddl", {}).pop(i, None)
+            self._index_sources.pop(i, None)
+            self._index_ddl.pop(i, None)
 
     def drop_macro(self, name: str, cascade: bool = False) -> None:
         if name in self._macros_meta:
@@ -4114,14 +4109,7 @@ class SereneSession:
         self._macros_meta.pop(name, None)
         # the function's acl drops with it (DROP ROLE dependency gate,
         # cat_acl_columns_db_func.test)
-        getattr(self, "_obj_grants", {}).pop(("function", name), None)
-
-    @property
-    def _macros_meta(self) -> dict:
-        m = getattr(self, "_macros_meta_store", None)
-        if m is None:
-            m = self._macros_meta_store = {}
-        return m
+        self._obj_grants.pop(("function", name), None)
 
     # ---- SET/SHOW engine variables (reference
     # server/query/config_variables.cpp — the sdb_* set). Each name is
@@ -4157,7 +4145,7 @@ class SereneSession:
             # the reference's fault GUC is ADDITIVE: each SET adds one
             # fault, '-name' removes one, duplicates error
             # (recovery/faults.test)
-            cur = [p for p in str(getattr(self, "_variables", {}).get(
+            cur = [p for p in str(self._variables.get(
                 "sdb_faults", "")).split(",") if p]
             v = str(value)
             if v == "":
@@ -4181,10 +4169,7 @@ class SereneSession:
             value = int(value)
         else:
             value = str(value)
-        store = getattr(self, "_variables", None)
-        if store is None:
-            store = self._variables = {}
-        store[name] = value
+        self._variables[name] = value
         if name == "sdb_faults":
             _M.FAULTS.clear()
             _M.FAULTS.update(p for p in value.split(",") if p)
@@ -4200,7 +4185,7 @@ class SereneSession:
     def show_variable(self, name: str):
         if name not in self._VARIABLE_DEFAULTS:
             raise ValueError(f"unknown variable {name!r}")
-        return getattr(self, "_variables", {}).get(
+        return self._variables.get(
             name, self._VARIABLE_DEFAULTS[name])
 
     def show_variables(self) -> DataFrame:
@@ -4216,102 +4201,60 @@ class SereneSession:
     # the session's state dicts, so BEGIN snapshots the dict layer and
     # ROLLBACK restores it — genuine all-or-nothing over any number of
     # statements, zero data copying.
-    _TXN_STATE = ("_tables", "_pks", "_row_policies", "_col_masks",
-                  "_grants", "_comments", "_checks", "_not_null",
-                  "_indexes", "_index_sources", "_variables",
-                  "_fks", "_col_defaults", "_generated", "_uniques",
-                  "_storage", "_index_ddl", "_view_defs",
-                  "_analyze_stats", "_pg_vars_store", "_schemas",
-                  "_roles", "_role_attrs", "_role_members",
-                  "_col_grants", "_obj_grants", "_owners",
-                  "_default_acls",
-                  "_enum_types", "_enum_cols",
-                  "_composite_types", "_composite_cols",
-                  "_secondary_indexes", "_pk_names", "_nn_names",
-                  "_uq_names")
-    # _prepared is deliberately absent: PG prepared statements are
-    # session-scoped, not transactional — ROLLBACK keeps them
-
-    #: attrs shared between attached sessions (multi-connection mode)
-    _SHARED_STATE = _TXN_STATE + (
-        "_sequences", "_vector_indexes", "_internal_indexes",
-        "_defined_dictionaries", "_macros_meta_store")
-
     # ---- databases: a namespace level ABOVE schemas. Each database
     # owns an independent catalog store; USE swaps the session's live
     # dicts (site_docs/sql/statements/create_database/index.test).
-    def _db_registry(self) -> dict:
-        dbs = self.__dict__.get("_databases")
-        if dbs is None:
-            dbs = self._databases = {"serene": None}
-            self._current_db = "serene"
-        return dbs
-
+    # _databases maps name → parked store (None: never left).
     @classmethod
     def _fresh_store(cls) -> dict:
-        """A brand-new catalog store with every shared attr in its
-        proper empty form (_sequences must be a SequenceCatalog, not a
-        dict — the `sequences` property returns the attr as-is)."""
-        from serenedb_spark.operators.sequences import SequenceCatalog
-
-        def blank(a):
-            if a == "_internal_indexes":
-                return set()
-            if a == "_sequences":
-                return SequenceCatalog()
-            return {}
-        return {a: blank(a) for a in cls._SHARED_STATE}
+        """A brand-new catalog store: every shared attr in its declared
+        empty form."""
+        return {a: cls._STATE[a][0]() for a in cls._SHARED_STATE}
 
     def create_database(self, name: str,
                         if_not_exists: bool = False) -> None:
-        dbs = self._db_registry()
-        if name in dbs:
+        if name in self._databases:
             if if_not_exists:
                 return
             raise ValueError(f'database "{name}" already exists')
-        dbs[name] = self._fresh_store()
+        self._databases[name] = self._fresh_store()
         self._refresh_pg_database()
 
     def drop_database(self, name: str, if_exists: bool = False) -> None:
-        dbs = self._db_registry()
-        if name not in dbs:
+        if name not in self._databases:
             if if_exists:
                 return
             raise ValueError(f'database "{name}" does not exist')
-        if name == getattr(self, "_current_db", "serene"):
+        if name == self._current_db:
             raise ValueError(
                 f'cannot drop the currently open database "{name}"')
-        dbs.pop(name)
+        self._databases.pop(name)
         self._refresh_pg_database()
 
     def use_database(self, name: str) -> None:
-        dbs = self._db_registry()
-        cur = getattr(self, "_current_db", "serene")
+        dbs = self._databases
+        cur = self._current_db
         if name == cur:
             return
         if name not in dbs:
             raise ValueError(f'database "{name}" does not exist')
         # park the current store, unregister its table views
-        dbs[cur] = {a: getattr(self, a, None) for a in self._SHARED_STATE}
-        for t in list(getattr(self, "_tables", {}) or {}):
+        dbs[cur] = {a: getattr(self, a) for a in self._SHARED_STATE}
+        for t in list(self._tables):
             try:
                 self.spark.catalog.dropTempView(self._view_name(t))
             except Exception:
                 pass
         store = dbs[name] or self._fresh_store()
-        fresh = self._fresh_store()
         for a in self._SHARED_STATE:
-            setattr(self, a, store.get(a)
-                    if store.get(a) is not None
-                    else fresh[a])
+            setattr(self, a, store[a])
         self._current_db = name
-        for t in list(self._tables or {}):
+        for t in list(self._tables):
             self._reregister(t)
 
     def _refresh_pg_database(self) -> None:
         from serenedb_spark.functions.acl import objacl_for
-        dbs = self._db_registry()
-        names = sorted(set(dbs) | {"postgres"})
+        names = sorted(set(self._databases) | {"postgres"})
         rows = [(i + 1, n, 1000000, "UTF8",
                  objacl_for(self, "database", n))
                 for i, n in enumerate(names)]
@@ -4335,11 +4278,9 @@ class SereneSession:
         self._crash_seen = store.get("_crash_count", 0)
         # the connection lands in the same database/schema context
         # (recovery/catalog_schema.test reconnects mid-file)
-        self._current_db = getattr(base, "_current_db", "serene")
-        self._current_schema = getattr(base, "_current_schema",
-                                       "public")
-        if getattr(base, "_databases", None) is not None:
-            self._databases = base._databases
+        self._current_db = base._current_db
+        self._current_schema = base._current_schema
+        self._databases = base._databases
         for a in self._SHARED_STATE:
             setattr(self, a, store[a])
 
@@ -4348,22 +4289,10 @@ class SereneSession:
         called eagerly by the sqllogic runner when a file uses
         `connection`, so a BEGIN that precedes the first attach still
         detaches properly."""
-        store = getattr(self, "_shared_store", None)
-        if store is None:
-            from serenedb_spark.operators.sequences import (
-                SequenceCatalog)
-
-            store = self._shared_store = {}
-            for a in self._SHARED_STATE:
-                if getattr(self, a, None) is None:
-                    if a == "_internal_indexes":
-                        setattr(self, a, set())
-                    elif a == "_sequences":
-                        setattr(self, a, SequenceCatalog())
-                    else:
-                        setattr(self, a, {})
-                store[a] = getattr(self, a)
-        return store
+        if self._shared_store is None:
+            self._shared_store = {a: getattr(self, a)
+                                  for a in self._SHARED_STATE}
+        return self._shared_store
 
     @classmethod
     def _txn_copy(cls, v):
@@ -4397,15 +4326,14 @@ class SereneSession:
         snapshot copy: other sessions' commits stay invisible until
         this block ends (inverted_index_isolation.test — the
         reference's pinned index snapshot)."""
-        if getattr(self, "_txn_backup", None) is not None:
+        if self._txn_backup is not None:
             raise ValueError("already inside a transaction block")
         self._txn_backup = {
-            a: self._txn_copy(getattr(self, a, {}) or {})
-            for a in self._TXN_STATE}
+            a: self._txn_copy(getattr(self, a)) for a in self._TXN_STATE}
         self._txn_detached = False
         self._txn_rc = False
         self._txn_snapshot_pending = False
-        store = getattr(self, "_shared_store", None)
+        store = self._shared_store
         if store is not None:
             # shared mode: EVERY block detaches onto a snapshot — a
             # peer must never see this block's uncommitted writes
@@ -4431,21 +4359,21 @@ class SereneSession:
         self._txn_snapshot_pending = False
 
     def commit(self) -> None:
-        if getattr(self, "_txn_backup", None) is None:
+        if self._txn_backup is None:
             raise ValueError("no transaction in progress")
-        if getattr(self, "_txn_aborted", False):
+        if self._txn_aborted:
             # PG converts COMMIT of an aborted block into a rollback
             # (txn/aborted_block.test:58-66)
             self.rollback()
             return
-        if getattr(self, "_txn_detached", False):
+        if self._txn_detached:
             # merge this block's own changes into the shared store
             # (last-writer-wins per key) and re-attach
             store = self._shared_store
-            pre = getattr(self, "_txn_prebegin", {})
+            pre = self._txn_prebegin
             changed_tables = set()
             for a in self._SHARED_STATE:
-                local = getattr(self, a, {})
+                local = getattr(self, a)
                 shared = store[a]
                 snap = pre.get(a, {})
                 if isinstance(shared, dict) and isinstance(local, dict):
@@ -4488,7 +4416,7 @@ class SereneSession:
     def rollback(self) -> None:
         """ROLLBACK: restore every snapshotted dict and re-register the
         views whose relations changed."""
-        bak = getattr(self, "_txn_backup", None)
+        bak = self._txn_backup
         if bak is None:
             raise ValueError("no transaction in progress")
         changed = {
@@ -4502,21 +4430,21 @@ class SereneSession:
         _DDL_DIMS = ("_pks", "_checks", "_not_null", "_col_defaults",
                      "_fks", "_uniques", "_generated", "_pk_names",
                      "_storage")
-        created = {t: df for t, df in (self._tables or {}).items()
+        created = {t: df for t, df in self._tables.items()
                    if t not in bak["_tables"]}
         created_dims = {
-            a: {t: v for t, v in (getattr(self, a, {}) or {}).items()
+            a: {t: v for t, v in getattr(self, a).items()
                 if t in created}
             for a in _DDL_DIMS}
         # SET inside an aborted block reverts (PG semantics); variables
         # with module-level consumers must have their side effects
         # re-applied, not just the dict restored.
-        cur_vars = dict(getattr(self, "_variables", {}) or {})
-        if getattr(self, "_txn_detached", False):
+        cur_vars = dict(self._variables)
+        if self._txn_detached:
             # shared mode: the block's writes never reached the store —
             # discard the local snapshot and re-attach
             store = self._shared_store
-            local_tables = dict(getattr(self, "_tables", {}) or {})
+            local_tables = dict(self._tables)
             for a in self._SHARED_STATE:
                 setattr(self, a, store[a])
             self._apply_ddl_survivors(created, created_dims)
@@ -4536,14 +4464,14 @@ class SereneSession:
                         except Exception:
                             pass
             return
-        if (getattr(self, "_shared_base", None) is not None
-                and not getattr(self, "_txn_detached", False)):
+        if (self._shared_base is not None
+                and not self._txn_detached):
             # shared READ COMMITTED mode: restore IN PLACE so the other
             # sessions keep seeing the same dict objects — and never
             # resurrect a key another session deleted meanwhile
             # (basic.test:578 conn2 DROP during conn1's block)
             for a, snap in bak.items():
-                cur = getattr(self, a, None)
+                cur = getattr(self, a)
                 if isinstance(cur, dict) and isinstance(snap, dict):
                     for k, v in snap.items():
                         if k in cur and cur[k] is not v:
@@ -4581,11 +4509,7 @@ class SereneSession:
             self._tables[t] = df.limit(0)
             for a, slc in created_dims.items():
                 if t in slc:
-                    d = getattr(self, a, None)
-                    if not isinstance(d, dict):
-                        d = {}
-                        setattr(self, a, d)
-                    d[t] = slc[t]
+                    getattr(self, a)[t] = slc[t]
             self._reregister(t)
 
     def transaction(self):
@@ -4631,25 +4555,22 @@ class SereneSession:
             raise ValueError(f"table {name!r} already exists "
                              "(use or_replace=True)")
         if name in self._tables and or_replace:
-            for iname, src in list(getattr(self, "_index_sources",
-                                           {}).items()):
+            for iname, src in list(self._index_sources.items()):
                 if src == name:
                     self._indexes.pop(iname, None)
                     self._index_sources.pop(iname, None)
-            getattr(self, "_pks", {}).pop(name, None)
-            getattr(self, "_checks", {}).pop(name, None)
-            getattr(self, "_comments", {}).pop(name, None)
-            getattr(self, "_analyze_stats", {}).pop(name, None)
-            getattr(self, "_col_masks", {}).pop(name, None)
+            self._pks.pop(name, None)
+            self._checks.pop(name, None)
+            self._comments.pop(name, None)
+            self._analyze_stats.pop(name, None)
+            self._col_masks.pop(name, None)
             self._row_policies.pop(name, None)
         self._tables[name] = df
         u = self.current_user
         if u is not None:
             # owner = the creating role (PG relowner; owner bypasses
             # grants in _check_privilege)
-            owners = getattr(self, "_owners", None)
-            if owners is None:
-                owners = self._owners = {}
+            owners = self._owners
             owners[name] = u
         self._reregister(name)
 
@@ -4658,25 +4579,23 @@ class SereneSession:
         the reference both treat an index as part of its table, never a
         CASCADE-requiring dependent (dml/foreign_key.test drops an
         indexed table bare; CASCADE remains accepted for parity)."""
-        getattr(self, "_reltuples_cache", {}).pop(name, None)
+        self._reltuples_cache.pop(name, None)
         # the table's ACL drops with it (PG: grants live in relacl) —
         # otherwise a ghost grant would pin DROP ROLE forever
         # (dr_drop_role_dependency.test)
-        for tm in getattr(self, "_grants", {}).values():
+        for tm in self._grants.values():
             tm.pop(name, None)
-        for tm in getattr(self, "_col_grants", {}).values():
+        for tm in self._col_grants.values():
             tm.pop(name, None)
-        getattr(self, "_owners", {}).pop(name, None)
-        gr = getattr(self, "_grantors", {})
+        self._owners.pop(name, None)
+        gr = self._grantors
         for key in [k for k in gr if k[1] == name]:
             gr.pop(key)
         self._drop_dependents(name, "table", cascade)
-        for iname, (t, _c) in list(getattr(
-                self, "_secondary_indexes", {}).items()):
+        for iname, (t, _c) in list(self._secondary_indexes.items()):
             if t == name:
                 del self._secondary_indexes[iname]
-        for seq in list(getattr(self, "_owned_seqs_store",
-                                {}).get(name, [])):
+        for seq in list(self._owned_seqs_store.get(name, [])):
             # dropping the table takes its owned sequences; refused
             # while other tables' defaults still use them
             # (drop_cascade_edge.test)
@@ -4698,25 +4617,23 @@ class SereneSession:
             for v in vdeps:
                 self.drop_view(v, cascade=True)
             for t, c in sdeps:
-                getattr(self, "_col_defaults", {}).get(t, {}).pop(c, None)
+                self._col_defaults.get(t, {}).pop(c, None)
             if seq in self.sequences._seqs:
                 self.sequences.drop(seq)
-        getattr(self, "_owned_seqs_store", {}).pop(name, None)
-        deps = [i for i, src in getattr(self, "_index_sources",
-                                        {}).items() if src == name]
-        internal = getattr(self, "_internal_indexes", set())
+        self._owned_seqs_store.pop(name, None)
+        deps = [i for i, src in self._index_sources.items() if src == name]
         for i in deps:
             self._indexes.pop(i, None)
             self._index_sources.pop(i, None)
-            getattr(self, "_index_ddl", {}).pop(i, None)
-            internal.discard(i)
+            self._index_ddl.pop(i, None)
+            self._internal_indexes.discard(i)
         self._tables.pop(name, None)
         for store in ("_pks", "_checks", "_comments", "_analyze_stats",
                       "_col_defaults", "_not_null", "_generated",
                       "_uniques", "_storage", "_pk_names", "_nn_names",
                       "_uq_names", "_enum_cols", "_composite_cols"):
-            getattr(self, store, {}).pop(name, None)
-        getattr(self, "_col_masks", {}).pop(name, None)
+            getattr(self, store).pop(name, None)
+        self._col_masks.pop(name, None)
         self._row_policies.pop(name, None)
         self.spark.catalog.dropTempView(self._view_name(name))
 
@@ -4725,9 +4642,7 @@ class SereneSession:
         per analyzed table, by explicit request only) — surfaces in
         pg_stat_user_tables.n_live_tup and pg_class.reltuples on the
         next install_pg_catalog (reference ddl/analyze_vacuum.test)."""
-        stats = getattr(self, "_analyze_stats", None)
-        if stats is None:
-            stats = self._analyze_stats = {}
+        stats = self._analyze_stats
         names = [table] if table is not None else list(self._tables)
         for t in names:
             stats[t] = float(self._tables[t].count())
@@ -4744,18 +4659,13 @@ class SereneSession:
         if isinstance(query_or_df, str) and _re.search(
                 r"\b(nextval|currval|setval|lastval)\s*\(",
                 query_or_df, _re.IGNORECASE):
-            vd = getattr(self, "_view_defs", None)
-            if vd is None:
-                vd = self._view_defs = {}
-            vd[name] = query_or_df
-            self._set_store("_lazy_views").add(name)
+            self._view_defs[name] = query_or_df
+            self._lazy_views.add(name)
             return None
         df = (self.sql(query_or_df) if isinstance(query_or_df, str)
               else query_or_df)
         df.createOrReplaceTempView(self._view_name(name))
-        vd = getattr(self, "_view_defs", None)
-        if vd is None:
-            vd = self._view_defs = {}
+        vd = self._view_defs
         replacing = name in vd
         vd[name] = (query_or_df if isinstance(query_or_df, str)
                     else "<dataframe>")
@@ -4768,7 +4678,7 @@ class SereneSession:
     def _refresh_dependent_views(self, name: str,
                                  _seen: set | None = None) -> None:
         if _seen is None:
-            if getattr(self, "_refreshing_views", False):
+            if self._refreshing_views:
                 # running a view BODY re-registers its base tables,
                 # which would restart this traversal from scratch
                 # (recovery/catalog_view.test shared-session recursion)
@@ -4782,7 +4692,7 @@ class SereneSession:
                 if v in seen:
                     continue
                 seen.add(v)
-                d = getattr(self, "_view_defs", {}).get(v)
+                d = self._view_defs.get(v)
                 if isinstance(d, str):
                     import re as _re
                     if _re.search(r"\b(nextval|currval|setval|lastval)"
@@ -4799,9 +4709,9 @@ class SereneSession:
                 self._refreshing_views = False
 
     def drop_view(self, name: str, cascade: bool = False) -> None:
-        if name in getattr(self, "_view_defs", {}):
+        if name in self._view_defs:
             self._drop_dependents(name, "view", cascade)
-        getattr(self, "_view_defs", {}).pop(name, None)
+        self._view_defs.pop(name, None)
         self.spark.catalog.dropTempView(self._view_name(name))
 
     def query_table(self, name: str | list) -> DataFrame:
@@ -4816,11 +4726,7 @@ class SereneSession:
 
     # ---- sequences (reference sequence.cpp; see operators/sequences) ----
     @property
-    def sequences(self):
-        from serenedb_spark.operators.sequences import SequenceCatalog
-
-        if not hasattr(self, "_sequences"):
-            self._sequences = SequenceCatalog()
+    def sequences(self) -> SequenceCatalog:
         return self._sequences
 
     def create_sequence(self, name: str, **kw) -> None:
@@ -4831,10 +4737,7 @@ class SereneSession:
         BY): dropping the table takes its owned sequences, and a drop is
         refused while OTHER tables' defaults still reference them
         (drop_cascade_edge.test)."""
-        o = getattr(self, "_owned_seqs_store", None)
-        if o is None:
-            o = self._owned_seqs_store = {}
-        o.setdefault(table, []).append(seq)
+        self._owned_seqs_store.setdefault(table, []).append(seq)
 
     def _seq_dependents(self, seq: str, exclude: str | None = None
                         ) -> list[tuple[str, str]]:
@@ -4844,7 +4747,7 @@ class SereneSession:
         pat = _re.compile(rf"nextval\s*\(\s*'(?:\w+\.)?{_re.escape(seq)}'",
                           _re.IGNORECASE)
         out = []
-        for t, cols in getattr(self, "_col_defaults", {}).items():
+        for t, cols in self._col_defaults.items():
             if t == exclude:
                 continue
             for c, d in cols.items():
@@ -4862,13 +4765,13 @@ class SereneSession:
                 f'cannot drop sequence "{seq}" because other objects '
                 f'depend on it (e.g. {dep!r}) — use CASCADE')
         for t, c in deps:  # CASCADE drops the referencing DEFAULTs (PG)
-            getattr(self, "_col_defaults", {}).get(t, {}).pop(c, None)
+            self._col_defaults.get(t, {}).pop(c, None)
         for v in views:
             self.drop_view(v, cascade=True)
         for m_ in macros:
             self.drop_macro(m_, cascade=True)
         self.sequences.drop(seq)
-        for t, seqs in getattr(self, "_owned_seqs_store", {}).items():
+        for t, seqs in self._owned_seqs_store.items():
             if seq in seqs:
                 seqs.remove(seq)
 

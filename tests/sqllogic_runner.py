@@ -282,11 +282,11 @@ def run_file(ss, path: str, stop_info: dict | None = None) -> tuple[int, int]:
     # file — functions-info.test pins the fragment via
     # <slt:ignore>info_test<slt:ignore>; mirror that naming
     dbname = "serene"
-    if hasattr(ss, "_db_registry"):
+    if hasattr(ss, "_databases"):
         dbname = re.sub(r"[^A-Za-z0-9]+", "_",
                         os.path.basename(path)).strip("_")
-        dbs = ss._db_registry()
-        cur = getattr(ss, "_current_db", "serene")
+        dbs = ss._databases
+        cur = ss._current_db
         if dbname not in dbs:
             dbs[dbname] = dbs.pop(cur, None)
             ss._current_db = dbname

@@ -69,3 +69,30 @@ def test_keep_canonical_partitions_members(spark):
     }
     dropped = {2, 3, 11, 21, 22}
     assert kept == set(range(30)) - dropped
+
+
+def test_minhash_pairs_follow_a_redefined_shingle_dictionary(spark):
+    """The memoized shingle+MinHash tree belongs to the analyzer
+    definition, not its name: redefining the dictionary changes the
+    candidate pairs."""
+    from serenedb_spark.analysis.analyzers import (create_dictionary,
+                                                   drop_dictionary)
+
+    # same 2-gram set {ab, ba}; disjoint 6-gram sets {ababab}/{bababa}
+    docs = spark.createDataFrame([(1, "ababab"), (2, "bababa")],
+                                 "doc_id long, text string")
+
+    def pairs():
+        return [(r[0], r[1]) for r in DD.minhash_lsh_pairs(
+            docs, shingle="dd_redef_shingle").collect()]
+
+    try:
+        create_dictionary("dd_redef_shingle", "ngram", mingram=2,
+                          maxgram=2)
+        assert pairs() == [(1, 2)]
+        drop_dictionary("dd_redef_shingle")
+        create_dictionary("dd_redef_shingle", "ngram", mingram=6,
+                          maxgram=6)
+        assert pairs() == []
+    finally:
+        drop_dictionary("dd_redef_shingle")

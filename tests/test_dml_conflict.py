@@ -49,38 +49,57 @@ def test_or_replace_upserts(spark, base):
     assert out == {1: 100, 2: 20, 3: 30, 7: 700}
 
 
-# ---- merge_into broadcast decomposition (source_rows hint) -----------------
+# ---- merge_into: literal rows for every arm ------------------------------
 
 def _rows(df):
-    return sorted(tuple((x is None, x) for x in r) for r in df.collect())
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: tuple((x is None, x) for x in r))
 
 
-def test_merge_broadcast_decomposition_matches_full_outer(spark, base):
-    """The source_rows-hinted path (target LEFT JOIN broadcast(source) +
-    broadcast anti-join inserts — no wide exchange of the target) must be
-    row-identical to the classic full_outer path for every arm: update,
-    delete, insert, duplicate source keys, NULL source keys."""
+@pytest.fixture()
+def merge_source(spark):
+    # duplicate key 9 (unmatched), NULL key (never matches)
+    return spark.createDataFrame(
+        [(2, 200), (3, 333), (9, 900), (9, 901), (None, 999)],
+        "a long, b long")
+
+
+def test_merge_upsert_inserts_duplicates_and_null_keys(base, merge_source):
+    from serenedb_spark.operators.dml import merge_into
+
+    assert _rows(merge_into(base, merge_source, "a")) == [
+        (1, 10), (2, 200), (3, 333), (9, 900), (9, 901), (None, 999)]
+
+
+def test_merge_matched_delete(base, merge_source):
     from pyspark.sql import functions as F
 
     from serenedb_spark.operators.dml import merge_into
 
-    source = spark.createDataFrame(
-        [(2, 200), (3, 333), (9, 900), (9, 901), (None, 999)],
-        "a long, b long")
-    # NB the no-insert arm uses a NULL-free source: the classic
-    # full_outer leaks an all-NULL ghost row for an unmatched NULL-key
-    # source when inserts are disabled (the otherwise-branch nulls every
-    # column but the keep-filter's ~has_s retains the row); the hinted
-    # path simply never unions it — PG MERGE emits nothing there either.
-    no_null = source.where(F.col("a").isNotNull())
-    for kwargs, src in (
-        ({}, source),                                    # default upsert
-        ({"when_matched_delete": F.col("s.b") == 333}, source),
-        ({"when_matched_update":
-          {"b": F.col("t.b") + F.col("s.b")}}, source),
-        ({"when_not_matched_insert": False}, no_null),   # no insert arm
-    ):
-        classic = merge_into(base, src, "a", **kwargs)
-        hinted = merge_into(base, src, "a", source_rows=5, **kwargs)
-        assert classic.schema == hinted.schema
-        assert _rows(classic) == _rows(hinted), kwargs
+    out = merge_into(base, merge_source, "a",
+                     when_matched_delete=F.col("s.b") == 333)
+    assert _rows(out) == [
+        (1, 10), (2, 200), (9, 900), (9, 901), (None, 999)]
+
+
+def test_merge_matched_update_expression(base, merge_source):
+    from pyspark.sql import functions as F
+
+    from serenedb_spark.operators.dml import merge_into
+
+    out = merge_into(base, merge_source, "a",
+                     when_matched_update={"b": F.col("t.b") + F.col("s.b")})
+    assert _rows(out) == [
+        (1, 10), (2, 220), (3, 363), (9, 900), (9, 901), (None, 999)]
+
+
+def test_merge_without_inserts_emits_no_row_for_unmatched_source(
+        base, merge_source):
+    """PG MERGE with no NOT MATCHED arm leaves unmatched source rows out
+    entirely — a NULL-key source row included (no all-NULL row)."""
+    from serenedb_spark.operators.dml import merge_into
+
+    out = merge_into(base, merge_source, "a",
+                     when_not_matched_insert=False)
+    assert out.columns == base.columns
+    assert _rows(out) == [(1, 10), (2, 200), (3, 333)]
