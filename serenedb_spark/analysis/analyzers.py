@@ -721,6 +721,10 @@ def geopoint_cover_terms(lat: float, lon: float, radius_m: float,
 
 _REGISTRY: dict[str, Analyzer] = {}
 
+#: analyzers every session shares; CREATE/DROP TEXT SEARCH DICTIONARY
+#: refuse these names
+BUILTIN_ANALYZERS = ("keyword", "simple", "text")
+
 
 def register(a: Analyzer) -> Analyzer:
     _REGISTRY[a.name] = a
@@ -1804,6 +1808,8 @@ def create_dictionary(name: str, template: str, **opts) -> Analyzer:
     `preserveoriginal` map to the Analyzer feature flags. Unknown
     templates or unsupported option combinations raise — never a silent
     fallback analyzer."""
+    if name in BUILTIN_ANALYZERS:
+        raise ValueError(f"cannot replace built-in analyzer {name!r}")
     opts = {k.lower(): v for k, v in opts.items()}
     tpl = template.lower()
     feats = tuple(
@@ -2008,6 +2014,6 @@ def create_dictionary(name: str, template: str, **opts) -> Analyzer:
 
 def drop_dictionary(name: str) -> None:
     """DROP TEXT SEARCH DICTIONARY — built-ins are protected."""
-    if name in ("keyword", "simple", "text"):
+    if name in BUILTIN_ANALYZERS:
         raise ValueError(f"cannot drop built-in analyzer {name!r}")
     _REGISTRY.pop(name, None)

@@ -1,1218 +1,1110 @@
-"""PostgreSQL's standard catalog column sets (public, documented in
-PG's own docs; mirrored by the reference's server/pg/pg_catalog/*.h).
-`FULL_COLUMNS` holds the exact SELECT * column order per relation;
-`pad_catalog_views` upgrades this session's live introspection views to
-the full shape by appending typed defaults for columns the engine does
-not yet materialize (any/pg/system/check_columns.test pins all 144
-headers)."""
+"""PostgreSQL's standard catalog relations, declared once: each
+relation's columns in PG's SELECT * order with a Spark type for each
+(public, documented in PG's own docs; mirrored by the reference's
+server/pg/pg_catalog/*.h — any/pg/system/check_columns.test pins all 144
+headers). `pg_catalog.py` builds every relation at exactly this shape;
+a column its builder does not fill takes its `DEFAULTS` value, else
+NULL."""
 
 from __future__ import annotations
 
-FULL_COLUMNS: dict[str, list[str]] = {
-    'pg_aggregate': [
-        'aggfnoid', 'aggkind', 'aggnumdirectargs', 'aggtransfn',
-        'aggfinalfn', 'aggcombinefn', 'aggserialfn', 'aggdeserialfn',
-        'aggmtransfn', 'aggminvtransfn', 'aggmfinalfn', 'aggfinalextra',
-        'aggmfinalextra', 'aggfinalmodify', 'aggmfinalmodify', 'aggsortop',
-        'aggtranstype', 'aggtransspace', 'aggmtranstype', 'aggmtransspace',
-        'agginitval', 'aggminitval',
-    ],
-    'pg_aios': [
-        'pid', 'io_id', 'io_generation', 'state', 'operation', 'off',
-        'length', 'target', 'handle_data_len', 'raw_result', 'result',
-        'target_desc', 'f_sync', 'f_localmem', 'f_buffered',
-    ],
-    'pg_am': [
-        'oid', 'amname', 'amhandler', 'amtype',
-    ],
-    'pg_amop': [
-        'oid', 'amopfamily', 'amoplefttype', 'amoprighttype',
-        'amopstrategy', 'amoppurpose', 'amopopr', 'amopmethod',
-        'amopsortfamily',
-    ],
-    'pg_amproc': [
-        'oid', 'amprocfamily', 'amproclefttype', 'amprocrighttype',
-        'amprocnum', 'amproc',
-    ],
-    'pg_attrdef': [
-        'oid', 'adrelid', 'adnum', 'adbin',
-    ],
-    'pg_attribute': [
-        'attrelid', 'attname', 'atttypid', 'attlen', 'attnum', 'atttypmod',
-        'attndims', 'attbyval', 'attalign', 'attstorage', 'attcompression',
-        'attnotnull', 'atthasdef', 'atthasmissing', 'attidentity',
-        'attgenerated', 'attisdropped', 'attislocal', 'attinhcount',
-        'attcollation', 'attstattarget', 'attacl', 'attoptions',
-        'attfdwoptions', 'attmissingval',
-    ],
-    'pg_auth_members': [
-        'oid', 'roleid', 'member', 'grantor', 'admin_option',
-        'inherit_option', 'set_option',
-    ],
-    'pg_authid': [
-        'oid', 'rolname', 'rolsuper', 'rolinherit', 'rolcreaterole',
-        'rolcreatedb', 'rolcanlogin', 'rolreplication', 'rolbypassrls',
-        'rolconnlimit', 'rolpassword', 'rolvaliduntil',
-    ],
-    'pg_available_extension_versions': [
-        'name', 'version', 'installed', 'superuser', 'trusted',
-        'relocatable', 'schema', 'requires', 'comment',
-    ],
-    'pg_available_extensions': [
-        'name', 'default_version', 'installed_version', 'comment',
-    ],
-    'pg_backend_memory_contexts': [
-        'name', 'ident', 'type', 'level', 'path', 'total_bytes',
-        'total_nblocks', 'free_bytes', 'free_chunks', 'used_bytes',
-    ],
-    'pg_cast': [
-        'oid', 'castsource', 'casttarget', 'castfunc', 'castcontext',
-        'castmethod',
-    ],
-    'pg_class': [
-        'oid', 'relname', 'relnamespace', 'reltype', 'reloftype',
-        'relowner', 'relam', 'relfilenode', 'reltablespace', 'relpages',
-        'reltuples', 'relallvisible', 'relallfrozen', 'reltoastrelid',
-        'relhasindex', 'relisshared', 'relpersistence', 'relkind',
-        'relnatts', 'relchecks', 'relhasrules', 'relhastriggers',
-        'relhassubclass', 'relrowsecurity', 'relforcerowsecurity',
-        'relispopulated', 'relreplident', 'relispartition', 'relrewrite',
-        'relfrozenxid', 'relminmxid', 'relacl', 'reloptions',
-        'relpartbound',
-    ],
-    'pg_collation': [
-        'oid', 'collname', 'collnamespace', 'collowner', 'collprovider',
-        'collisdeterministic', 'collencoding', 'collcollate', 'collctype',
-        'colllocale', 'collicurules', 'collversion',
-    ],
-    'pg_config': [
-        'name', 'setting',
-    ],
-    'pg_constraint': [
-        'oid', 'conname', 'connamespace', 'contype', 'condeferrable',
-        'condeferred', 'conenforced', 'convalidated', 'conrelid',
-        'contypid', 'conindid', 'conparentid', 'confrelid', 'confupdtype',
-        'confdeltype', 'confmatchtype', 'conislocal', 'coninhcount',
-        'connoinherit', 'conperiod', 'conkey', 'confkey', 'conpfeqop',
-        'conppeqop', 'conffeqop', 'confdelsetcols', 'conexclop', 'conbin',
-    ],
-    'pg_conversion': [
-        'oid', 'conname', 'connamespace', 'conowner', 'conforencoding',
-        'contoencoding', 'conproc', 'condefault',
-    ],
-    'pg_cursors': [
-        'name', 'statement', 'is_holdable', 'is_binary', 'is_scrollable',
-        'creation_time',
-    ],
-    'pg_database': [
-        'oid', 'datname', 'datdba', 'encoding', 'datlocprovider',
-        'datistemplate', 'datallowconn', 'dathasloginevt', 'datconnlimit',
-        'datfrozenxid', 'datminmxid', 'dattablespace', 'datcollate',
-        'datctype', 'datlocale', 'daticurules', 'datcollversion', 'datacl',
-    ],
-    'pg_db_role_setting': [
-        'setdatabase', 'setrole', 'setconfig',
-    ],
-    'pg_default_acl': [
-        'oid', 'defaclrole', 'defaclnamespace', 'defaclobjtype',
-        'defaclacl',
-    ],
-    'pg_depend': [
-        'classid', 'objid', 'objsubid', 'refclassid', 'refobjid',
-        'refobjsubid', 'deptype',
-    ],
-    'pg_description': [
-        'objoid', 'classoid', 'objsubid', 'description',
-    ],
-    'pg_enum': [
-        'oid', 'enumtypid', 'enumsortorder', 'enumlabel',
-    ],
-    'pg_event_trigger': [
-        'oid', 'evtname', 'evtevent', 'evtowner', 'evtfoid', 'evtenabled',
-        'evttags',
-    ],
-    'pg_extension': [
-        'oid', 'extname', 'extowner', 'extnamespace', 'extrelocatable',
-        'extversion', 'extconfig', 'extcondition',
-    ],
-    'pg_file_settings': [
-        'sourcefile', 'sourceline', 'seqno', 'name', 'setting', 'applied',
-        'error',
-    ],
-    'pg_foreign_data_wrapper': [
-        'oid', 'fdwname', 'fdwowner', 'fdwhandler', 'fdwvalidator',
-        'fdwacl', 'fdwoptions',
-    ],
-    'pg_foreign_server': [
-        'oid', 'srvname', 'srvowner', 'srvfdw', 'srvtype', 'srvversion',
-        'srvacl', 'srvoptions',
-    ],
-    'pg_foreign_table': [
-        'ftrelid', 'ftserver', 'ftoptions',
-    ],
-    'pg_group': [
-        'groname', 'grosysid', 'grolist',
-    ],
-    'pg_hba_file_rules': [
-        'rule_number', 'file_name', 'line_number', 'type', 'database',
-        'user_name', 'address', 'netmask', 'auth_method', 'options',
-        'error',
-    ],
-    'pg_ident_file_mappings': [
-        'map_number', 'file_name', 'line_number', 'map_name', 'sys_name',
-        'pg_username', 'error',
-    ],
-    'pg_index': [
-        'indexrelid', 'indrelid', 'indnatts', 'indnkeyatts', 'indisunique',
-        'indnullsnotdistinct', 'indisprimary', 'indisexclusion',
-        'indimmediate', 'indisclustered', 'indisvalid', 'indcheckxmin',
-        'indisready', 'indislive', 'indisreplident', 'indkey',
-        'indcollation', 'indclass', 'indoption', 'indexprs', 'indpred',
-    ],
-    'pg_indexes': [
-        'schemaname', 'tablename', 'indexname', 'tablespace', 'indexdef',
-    ],
-    'pg_inherits': [
-        'inhrelid', 'inhparent', 'inhseqno', 'inhdetachpending',
-    ],
-    'pg_init_privs': [
-        'objoid', 'classoid', 'objsubid', 'privtype', 'initprivs',
-    ],
-    'pg_language': [
-        'oid', 'lanname', 'lanowner', 'lanispl', 'lanpltrusted',
-        'lanplcallfoid', 'laninline', 'lanvalidator', 'lanacl',
-    ],
-    'pg_largeobject': [
-        'loid', 'pageno', 'data',
-    ],
-    'pg_largeobject_metadata': [
-        'oid', 'lomowner', 'lomacl',
-    ],
-    'pg_locks': [
-        'locktype', 'database', 'relation', 'page', 'tuple', 'virtualxid',
-        'transactionid', 'classid', 'objid', 'objsubid',
-        'virtualtransaction', 'pid', 'mode', 'granted', 'fastpath',
-        'waitstart',
-    ],
-    'pg_matviews': [
-        'schemaname', 'matviewname', 'matviewowner', 'tablespace',
-        'hasindexes', 'ispopulated', 'definition',
-    ],
-    'pg_namespace': [
-        'oid', 'nspname', 'nspowner', 'nspacl',
-    ],
-    'pg_opclass': [
-        'oid', 'opcmethod', 'opcname', 'opcnamespace', 'opcowner',
-        'opcfamily', 'opcintype', 'opcdefault', 'opckeytype',
-    ],
-    'pg_operator': [
-        'oid', 'oprname', 'oprnamespace', 'oprowner', 'oprkind',
-        'oprcanmerge', 'oprcanhash', 'oprleft', 'oprright', 'oprresult',
-        'oprcom', 'oprnegate', 'oprcode', 'oprrest', 'oprjoin',
-    ],
-    'pg_opfamily': [
-        'oid', 'opfmethod', 'opfname', 'opfnamespace', 'opfowner',
-    ],
-    'pg_parameter_acl': [
-        'oid', 'parname', 'paracl',
-    ],
-    'pg_partitioned_table': [
-        'partrelid', 'partstrat', 'partnatts', 'partdefid', 'partattrs',
-        'partclass', 'partcollation', 'partexprs',
-    ],
-    'pg_policies': [
-        'schemaname', 'tablename', 'policyname', 'permissive', 'roles',
-        'cmd', 'qual', 'with_check',
-    ],
-    'pg_policy': [
-        'oid', 'polname', 'polrelid', 'polcmd', 'polpermissive',
-        'polroles', 'polqual', 'polwithcheck',
-    ],
-    'pg_prepared_statements': [
-        'name', 'statement', 'prepare_time', 'parameter_types',
-        'result_types', 'from_sql', 'generic_plans', 'custom_plans',
-    ],
-    'pg_prepared_xacts': [
-        'transaction', 'gid', 'prepared', 'owner', 'database',
-    ],
-    'pg_proc': [
-        'oid', 'proname', 'pronamespace', 'proowner', 'prolang', 'procost',
-        'prorows', 'provariadic', 'prosupport', 'prokind', 'prosecdef',
-        'proleakproof', 'proisstrict', 'proretset', 'provolatile',
-        'proparallel', 'pronargs', 'pronargdefaults', 'prorettype',
-        'proargtypes', 'proallargtypes', 'proargmodes', 'proargnames',
-        'proargdefaults', 'protrftypes', 'prosrc', 'probin', 'prosqlbody',
-        'proconfig', 'proacl',
-    ],
-    'pg_publication': [
-        'oid', 'pubname', 'pubowner', 'puballtables', 'pubinsert',
-        'pubupdate', 'pubdelete', 'pubtruncate', 'pubviaroot',
-        'pubgencols',
-    ],
-    'pg_publication_namespace': [
-        'oid', 'pnpubid', 'pnnspid',
-    ],
-    'pg_publication_rel': [
-        'oid', 'prpubid', 'prrelid', 'prqual', 'prattrs',
-    ],
-    'pg_publication_tables': [
-        'pubname', 'schemaname', 'tablename', 'attnames', 'rowfilter',
-    ],
-    'pg_range': [
-        'rngtypid', 'rngsubtype', 'rngmultitypid', 'rngcollation',
-        'rngsubopc', 'rngcanonical', 'rngsubdiff',
-    ],
-    'pg_replication_origin': [
-        'roident', 'roname',
-    ],
-    'pg_replication_origin_status': [
-        'local_id', 'external_id', 'remote_lsn', 'local_lsn',
-    ],
-    'pg_replication_slots': [
-        'slot_name', 'plugin', 'slot_type', 'datoid', 'database',
-        'temporary', 'active', 'active_pid', 'xmin', 'catalog_xmin',
-        'restart_lsn', 'confirmed_flush_lsn', 'wal_status',
-        'safe_wal_size', 'two_phase', 'two_phase_at', 'inactive_since',
-        'conflicting', 'invalidation_reason', 'failover', 'synced',
-    ],
-    'pg_rewrite': [
-        'oid', 'rulename', 'ev_class', 'ev_type', 'ev_enabled',
-        'is_instead', 'ev_qual', 'ev_action',
-    ],
-    'pg_roles': [
-        'rolname', 'rolsuper', 'rolinherit', 'rolcreaterole',
-        'rolcreatedb', 'rolcanlogin', 'rolreplication', 'rolconnlimit',
-        'rolpassword', 'rolvaliduntil', 'rolbypassrls', 'rolconfig', 'oid',
-    ],
-    'pg_rules': [
-        'schemaname', 'tablename', 'rulename', 'definition',
-    ],
-    'pg_seclabel': [
-        'objoid', 'classoid', 'objsubid', 'provider', 'label',
-    ],
-    'pg_seclabels': [
-        'objoid', 'classoid', 'objsubid', 'objtype', 'objnamespace',
-        'objname', 'provider', 'label',
-    ],
-    'pg_sequence': [
-        'seqrelid', 'seqtypid', 'seqstart', 'seqincrement', 'seqmax',
-        'seqmin', 'seqcache', 'seqcycle',
-    ],
-    'pg_sequences': [
-        'schemaname', 'sequencename', 'sequenceowner', 'data_type',
-        'start_value', 'min_value', 'max_value', 'increment_by', 'cycle',
-        'cache_size', 'last_value',
-    ],
-    'pg_settings': [
-        'name', 'setting', 'unit', 'category', 'short_desc', 'extra_desc',
-        'context', 'vartype', 'source', 'min_val', 'max_val', 'enumvals',
-        'boot_val', 'reset_val', 'sourcefile', 'sourceline',
-        'pending_restart',
-    ],
-    'pg_shadow': [
-        'usename', 'usesysid', 'usecreatedb', 'usesuper', 'userepl',
-        'usebypassrls', 'passwd', 'valuntil', 'useconfig',
-    ],
-    'pg_shdepend': [
-        'dbid', 'classid', 'objid', 'objsubid', 'refclassid', 'refobjid',
-        'deptype',
-    ],
-    'pg_shdescription': [
-        'objoid', 'classoid', 'description',
-    ],
-    'pg_shmem_allocations': [
-        'name', 'off', 'size', 'allocated_size',
-    ],
-    'pg_shmem_allocations_numa': [
-        'name', 'numa_node', 'size',
-    ],
-    'pg_shseclabel': [
-        'objoid', 'classoid', 'provider', 'label',
-    ],
-    'pg_stat_activity': [
-        'datid', 'datname', 'pid', 'leader_pid', 'usesysid', 'usename',
-        'application_name', 'client_addr', 'client_hostname',
-        'client_port', 'backend_start', 'xact_start', 'query_start',
-        'state_change', 'wait_event_type', 'wait_event', 'state',
-        'backend_xid', 'backend_xmin', 'query_id', 'query', 'backend_type',
-    ],
-    'pg_stat_all_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_scan', 'last_idx_scan', 'idx_tup_read', 'idx_tup_fetch',
-    ],
-    'pg_stat_all_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'last_seq_scan',
-        'seq_tup_read', 'idx_scan', 'last_idx_scan', 'idx_tup_fetch',
-        'n_tup_ins', 'n_tup_upd', 'n_tup_del', 'n_tup_hot_upd',
-        'n_tup_newpage_upd', 'n_live_tup', 'n_dead_tup',
-        'n_mod_since_analyze', 'n_ins_since_vacuum', 'last_vacuum',
-        'last_autovacuum', 'last_analyze', 'last_autoanalyze',
-        'vacuum_count', 'autovacuum_count', 'analyze_count',
-        'autoanalyze_count', 'total_vacuum_time', 'total_autovacuum_time',
-        'total_analyze_time', 'total_autoanalyze_time',
-    ],
-    'pg_stat_archiver': [
-        'archived_count', 'last_archived_wal', 'last_archived_time',
-        'failed_count', 'last_failed_wal', 'last_failed_time',
-        'stats_reset',
-    ],
-    'pg_stat_bgwriter': [
-        'buffers_clean', 'maxwritten_clean', 'buffers_alloc',
-        'stats_reset',
-    ],
-    'pg_stat_checkpointer': [
-        'num_timed', 'num_requested', 'num_done', 'restartpoints_timed',
-        'restartpoints_req', 'restartpoints_done', 'write_time',
-        'sync_time', 'buffers_written', 'slru_written', 'stats_reset',
-    ],
-    'pg_stat_database': [
-        'datid', 'datname', 'numbackends', 'xact_commit', 'xact_rollback',
-        'blks_read', 'blks_hit', 'tup_returned', 'tup_fetched',
-        'tup_inserted', 'tup_updated', 'tup_deleted', 'conflicts',
-        'temp_files', 'temp_bytes', 'deadlocks', 'checksum_failures',
-        'checksum_last_failure', 'blk_read_time', 'blk_write_time',
-        'session_time', 'active_time', 'idle_in_transaction_time',
-        'sessions', 'sessions_abandoned', 'sessions_fatal',
-        'sessions_killed', 'parallel_workers_to_launch',
-        'parallel_workers_launched', 'stats_reset',
-    ],
-    'pg_stat_database_conflicts': [
-        'datid', 'datname', 'confl_tablespace', 'confl_lock',
-        'confl_snapshot', 'confl_bufferpin', 'confl_deadlock',
-        'confl_active_logicalslot',
-    ],
-    'pg_stat_gssapi': [
-        'pid', 'gss_authenticated', 'principal', 'encrypted',
-        'credentials_delegated',
-    ],
-    'pg_stat_io': [
-        'backend_type', 'object', 'context', 'reads', 'read_bytes',
-        'read_time', 'writes', 'write_bytes', 'write_time', 'writebacks',
-        'writeback_time', 'extends', 'extend_bytes', 'extend_time', 'hits',
-        'evictions', 'reuses', 'fsyncs', 'fsync_time', 'stats_reset',
-    ],
-    'pg_stat_progress_analyze': [
-        'pid', 'datid', 'datname', 'relid', 'phase', 'sample_blks_total',
-        'sample_blks_scanned', 'ext_stats_total', 'ext_stats_computed',
-        'child_tables_total', 'child_tables_done',
-        'current_child_table_relid', 'delay_time',
-    ],
-    'pg_stat_progress_basebackup': [
-        'pid', 'phase', 'backup_total', 'backup_streamed',
-        'tablespaces_total', 'tablespaces_streamed',
-    ],
-    'pg_stat_progress_cluster': [
-        'pid', 'datid', 'datname', 'relid', 'command', 'phase',
-        'cluster_index_relid', 'heap_tuples_scanned',
-        'heap_tuples_written', 'heap_blks_total', 'heap_blks_scanned',
-        'index_rebuild_count',
-    ],
-    'pg_stat_progress_copy': [
-        'pid', 'datid', 'datname', 'relid', 'command', 'type',
-        'bytes_processed', 'bytes_total', 'tuples_processed',
-        'tuples_excluded', 'tuples_skipped',
-    ],
-    'pg_stat_progress_create_index': [
-        'pid', 'datid', 'datname', 'relid', 'index_relid', 'command',
-        'phase', 'lockers_total', 'lockers_done', 'current_locker_pid',
-        'blocks_total', 'blocks_done', 'tuples_total', 'tuples_done',
-        'partitions_total', 'partitions_done',
-    ],
-    'pg_stat_progress_vacuum': [
-        'pid', 'datid', 'datname', 'relid', 'phase', 'heap_blks_total',
-        'heap_blks_scanned', 'heap_blks_vacuumed', 'index_vacuum_count',
-        'max_dead_tuple_bytes', 'dead_tuple_bytes', 'num_dead_item_ids',
-        'indexes_total', 'indexes_processed', 'delay_time',
-    ],
-    'pg_stat_recovery_prefetch': [
-        'stats_reset', 'prefetch', 'hit', 'skip_init', 'skip_new',
-        'skip_fpw', 'skip_rep', 'wal_distance', 'block_distance',
-        'io_depth',
-    ],
-    'pg_stat_replication': [
-        'pid', 'usesysid', 'usename', 'application_name', 'client_addr',
-        'client_hostname', 'client_port', 'backend_start', 'backend_xmin',
-        'state', 'sent_lsn', 'write_lsn', 'flush_lsn', 'replay_lsn',
-        'write_lag', 'flush_lag', 'replay_lag', 'sync_priority',
-        'sync_state', 'reply_time',
-    ],
-    'pg_stat_replication_slots': [
-        'slot_name', 'spill_txns', 'spill_count', 'spill_bytes',
-        'stream_txns', 'stream_count', 'stream_bytes', 'total_txns',
-        'total_bytes', 'stats_reset',
-    ],
-    'pg_stat_slru': [
-        'name', 'blks_zeroed', 'blks_hit', 'blks_read', 'blks_written',
-        'blks_exists', 'flushes', 'truncates', 'stats_reset',
-    ],
-    'pg_stat_ssl': [
-        'pid', 'ssl', 'version', 'cipher', 'bits', 'client_dn',
-        'client_serial', 'issuer_dn',
-    ],
-    'pg_stat_subscription': [
-        'subid', 'subname', 'worker_type', 'pid', 'leader_pid', 'relid',
-        'received_lsn', 'last_msg_send_time', 'last_msg_receipt_time',
-        'latest_end_lsn', 'latest_end_time',
-    ],
-    'pg_stat_subscription_stats': [
-        'subid', 'subname', 'apply_error_count', 'sync_error_count',
-        'confl_insert_exists', 'confl_update_origin_differs',
-        'confl_update_exists', 'confl_update_missing',
-        'confl_delete_origin_differs', 'confl_delete_missing',
-        'confl_multiple_unique_conflicts', 'stats_reset',
-    ],
-    'pg_stat_sys_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_scan', 'last_idx_scan', 'idx_tup_read', 'idx_tup_fetch',
-    ],
-    'pg_stat_sys_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'last_seq_scan',
-        'seq_tup_read', 'idx_scan', 'last_idx_scan', 'idx_tup_fetch',
-        'n_tup_ins', 'n_tup_upd', 'n_tup_del', 'n_tup_hot_upd',
-        'n_tup_newpage_upd', 'n_live_tup', 'n_dead_tup',
-        'n_mod_since_analyze', 'n_ins_since_vacuum', 'last_vacuum',
-        'last_autovacuum', 'last_analyze', 'last_autoanalyze',
-        'vacuum_count', 'autovacuum_count', 'analyze_count',
-        'autoanalyze_count', 'total_vacuum_time', 'total_autovacuum_time',
-        'total_analyze_time', 'total_autoanalyze_time',
-    ],
-    'pg_stat_user_functions': [
-        'funcid', 'schemaname', 'funcname', 'calls', 'total_time',
-        'self_time',
-    ],
-    'pg_stat_user_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_scan', 'last_idx_scan', 'idx_tup_read', 'idx_tup_fetch',
-    ],
-    'pg_stat_user_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'last_seq_scan',
-        'seq_tup_read', 'idx_scan', 'last_idx_scan', 'idx_tup_fetch',
-        'n_tup_ins', 'n_tup_upd', 'n_tup_del', 'n_tup_hot_upd',
-        'n_tup_newpage_upd', 'n_live_tup', 'n_dead_tup',
-        'n_mod_since_analyze', 'n_ins_since_vacuum', 'last_vacuum',
-        'last_autovacuum', 'last_analyze', 'last_autoanalyze',
-        'vacuum_count', 'autovacuum_count', 'analyze_count',
-        'autoanalyze_count', 'total_vacuum_time', 'total_autovacuum_time',
-        'total_analyze_time', 'total_autoanalyze_time',
-    ],
-    'pg_stat_wal': [
-        'wal_records', 'wal_fpi', 'wal_bytes', 'wal_buffers_full',
-        'stats_reset',
-    ],
-    'pg_stat_wal_receiver': [
-        'pid', 'status', 'receive_start_lsn', 'receive_start_tli',
-        'written_lsn', 'flushed_lsn', 'received_tli', 'last_msg_send_time',
-        'last_msg_receipt_time', 'latest_end_lsn', 'latest_end_time',
-        'slot_name', 'sender_host', 'sender_port', 'conninfo',
-    ],
-    'pg_stat_xact_all_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'seq_tup_read',
-        'idx_scan', 'idx_tup_fetch', 'n_tup_ins', 'n_tup_upd', 'n_tup_del',
-        'n_tup_hot_upd', 'n_tup_newpage_upd',
-    ],
-    'pg_stat_xact_sys_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'seq_tup_read',
-        'idx_scan', 'idx_tup_fetch', 'n_tup_ins', 'n_tup_upd', 'n_tup_del',
-        'n_tup_hot_upd', 'n_tup_newpage_upd',
-    ],
-    'pg_stat_xact_user_functions': [
-        'funcid', 'schemaname', 'funcname', 'calls', 'total_time',
-        'self_time',
-    ],
-    'pg_stat_xact_user_tables': [
-        'relid', 'schemaname', 'relname', 'seq_scan', 'seq_tup_read',
-        'idx_scan', 'idx_tup_fetch', 'n_tup_ins', 'n_tup_upd', 'n_tup_del',
-        'n_tup_hot_upd', 'n_tup_newpage_upd',
-    ],
-    'pg_statio_all_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_blks_read', 'idx_blks_hit',
-    ],
-    'pg_statio_all_sequences': [
-        'relid', 'schemaname', 'relname', 'blks_read', 'blks_hit',
-    ],
-    'pg_statio_all_tables': [
-        'relid', 'schemaname', 'relname', 'heap_blks_read',
-        'heap_blks_hit', 'idx_blks_read', 'idx_blks_hit',
-        'toast_blks_read', 'toast_blks_hit', 'tidx_blks_read',
-        'tidx_blks_hit',
-    ],
-    'pg_statio_sys_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_blks_read', 'idx_blks_hit',
-    ],
-    'pg_statio_sys_sequences': [
-        'relid', 'schemaname', 'relname', 'blks_read', 'blks_hit',
-    ],
-    'pg_statio_sys_tables': [
-        'relid', 'schemaname', 'relname', 'heap_blks_read',
-        'heap_blks_hit', 'idx_blks_read', 'idx_blks_hit',
-        'toast_blks_read', 'toast_blks_hit', 'tidx_blks_read',
-        'tidx_blks_hit',
-    ],
-    'pg_statio_user_indexes': [
-        'relid', 'indexrelid', 'schemaname', 'relname', 'indexrelname',
-        'idx_blks_read', 'idx_blks_hit',
-    ],
-    'pg_statio_user_sequences': [
-        'relid', 'schemaname', 'relname', 'blks_read', 'blks_hit',
-    ],
-    'pg_statio_user_tables': [
-        'relid', 'schemaname', 'relname', 'heap_blks_read',
-        'heap_blks_hit', 'idx_blks_read', 'idx_blks_hit',
-        'toast_blks_read', 'toast_blks_hit', 'tidx_blks_read',
-        'tidx_blks_hit',
-    ],
-    'pg_statistic': [
-        'starelid', 'staattnum', 'stainherit', 'stanullfrac', 'stawidth',
-        'stadistinct', 'stakind1', 'stakind2', 'stakind3', 'stakind4',
-        'stakind5', 'staop1', 'staop2', 'staop3', 'staop4', 'staop5',
-        'stacoll1', 'stacoll2', 'stacoll3', 'stacoll4', 'stacoll5',
-        'stanumbers1', 'stanumbers2', 'stanumbers3', 'stanumbers4',
-        'stanumbers5', 'stavalues1', 'stavalues2', 'stavalues3',
-        'stavalues4', 'stavalues5',
-    ],
-    'pg_statistic_ext': [
-        'oid', 'stxrelid', 'stxname', 'stxnamespace', 'stxowner',
-        'stxkeys', 'stxstattarget', 'stxkind', 'stxexprs',
-    ],
-    'pg_statistic_ext_data': [
-        'stxoid', 'stxdinherit', 'stxdndistinct', 'stxddependencies',
-        'stxdmcv', 'stxdexpr',
-    ],
-    'pg_stats': [
-        'schemaname', 'tablename', 'attname', 'inherited', 'null_frac',
-        'avg_width', 'n_distinct', 'most_common_vals', 'most_common_freqs',
-        'histogram_bounds', 'correlation', 'most_common_elems',
-        'most_common_elem_freqs', 'elem_count_histogram',
-        'range_length_histogram', 'range_empty_frac',
-        'range_bounds_histogram',
-    ],
-    'pg_stats_ext': [
-        'schemaname', 'tablename', 'statistics_schemaname',
-        'statistics_name', 'statistics_owner', 'attnames', 'exprs',
-        'kinds', 'inherited', 'n_distinct', 'dependencies',
-        'most_common_vals', 'most_common_val_nulls', 'most_common_freqs',
-        'most_common_base_freqs',
-    ],
-    'pg_stats_ext_exprs': [
-        'schemaname', 'tablename', 'statistics_schemaname',
-        'statistics_name', 'statistics_owner', 'expr', 'inherited',
-        'null_frac', 'avg_width', 'n_distinct', 'most_common_vals',
-        'most_common_freqs', 'histogram_bounds', 'correlation',
-        'most_common_elems', 'most_common_elem_freqs',
-        'elem_count_histogram',
-    ],
-    'pg_subscription': [
-        'oid', 'subdbid', 'subskiplsn', 'subname', 'subowner',
-        'subenabled', 'subbinary', 'substream', 'subtwophasestate',
-        'subdisableonerr', 'subpasswordrequired', 'subrunasowner',
-        'subfailover', 'subconninfo', 'subslotname', 'subsynccommit',
-        'subpublications', 'suborigin',
-    ],
-    'pg_subscription_rel': [
-        'srsubid', 'srrelid', 'srsubstate', 'srsublsn',
-    ],
-    'pg_tables': [
-        'schemaname', 'tablename', 'tableowner', 'tablespace',
-        'hasindexes', 'hasrules', 'hastriggers', 'rowsecurity',
-    ],
-    'pg_tablespace': [
-        'oid', 'spcname', 'spcowner', 'spcacl', 'spcoptions',
-    ],
-    'pg_timezone_abbrevs': [
-        'abbrev', 'utc_offset', 'is_dst',
-    ],
-    'pg_timezone_names': [
-        'name', 'abbrev', 'utc_offset', 'is_dst',
-    ],
-    'pg_transform': [
-        'oid', 'trftype', 'trflang', 'trffromsql', 'trftosql',
-    ],
-    'pg_trigger': [
-        'oid', 'tgrelid', 'tgparentid', 'tgname', 'tgfoid', 'tgtype',
-        'tgenabled', 'tgisinternal', 'tgconstrrelid', 'tgconstrindid',
-        'tgconstraint', 'tgdeferrable', 'tginitdeferred', 'tgnargs',
-        'tgattr', 'tgargs', 'tgqual', 'tgoldtable', 'tgnewtable',
-    ],
-    'pg_ts_config': [
-        'oid', 'cfgname', 'cfgnamespace', 'cfgowner', 'cfgparser',
-    ],
-    'pg_ts_config_map': [
-        'mapcfg', 'maptokentype', 'mapseqno', 'mapdict',
-    ],
-    'pg_ts_dict': [
-        'oid', 'dictname', 'dictnamespace', 'dictowner', 'dicttemplate',
-        'dictinitoption',
-    ],
-    'pg_ts_parser': [
-        'oid', 'prsname', 'prsnamespace', 'prsstart', 'prstoken', 'prsend',
-        'prsheadline', 'prslextype',
-    ],
-    'pg_ts_template': [
-        'oid', 'tmplname', 'tmplnamespace', 'tmplinit', 'tmpllexize',
-    ],
-    'pg_type': [
-        'oid', 'typname', 'typnamespace', 'typowner', 'typlen', 'typbyval',
-        'typtype', 'typcategory', 'typispreferred', 'typisdefined',
-        'typdelim', 'typrelid', 'typsubscript', 'typelem', 'typarray',
-        'typinput', 'typoutput', 'typreceive', 'typsend', 'typmodin',
-        'typmodout', 'typanalyze', 'typalign', 'typstorage', 'typnotnull',
-        'typbasetype', 'typtypmod', 'typndims', 'typcollation',
-        'typdefaultbin', 'typdefault', 'typacl',
-    ],
-    'pg_user': [
-        'usename', 'usesysid', 'usecreatedb', 'usesuper', 'userepl',
-        'usebypassrls', 'passwd', 'valuntil', 'useconfig',
-    ],
-    'pg_user_mapping': [
-        'oid', 'umuser', 'umserver', 'umoptions',
-    ],
-    'pg_user_mappings': [
-        'umid', 'srvid', 'srvname', 'umuser', 'usename', 'umoptions',
-    ],
-    'pg_views': [
-        'schemaname', 'viewname', 'viewowner', 'definition',
-    ],
-    'pg_wait_events': [
-        'type', 'name', 'description',
-    ],
+COLUMNS: dict[str, str] = {
+    "pg_aggregate": (
+        "aggfnoid int, aggkind string, aggnumdirectargs string,"
+        " aggtransfn string, aggfinalfn string, aggcombinefn string,"
+        " aggserialfn string, aggdeserialfn string, aggmtransfn string,"
+        " aggminvtransfn string, aggmfinalfn string, aggfinalextra string,"
+        " aggmfinalextra string, aggfinalmodify string,"
+        " aggmfinalmodify string, aggsortop string, aggtranstype string,"
+        " aggtransspace string, aggmtranstype string, aggmtransspace string,"
+        " agginitval string, aggminitval string"),
+    "pg_aios": (
+        "pid string, io_id string, io_generation string, state string,"
+        " operation string, off string, length string, target string,"
+        " handle_data_len string, raw_result string, result string,"
+        " target_desc string, f_sync string, f_localmem string,"
+        " f_buffered string"),
+    "pg_am": "oid int, amname string, amhandler string, amtype string",
+    "pg_amop": (
+        "oid int, amopfamily int, amoplefttype string, amoprighttype string,"
+        " amopstrategy string, amoppurpose string, amopopr int,"
+        " amopmethod string, amopsortfamily string"),
+    "pg_amproc": (
+        "oid int, amprocfamily int, amproclefttype string,"
+        " amprocrighttype string, amprocnum string, amproc int"),
+    "pg_attrdef": "oid string, adrelid int, adnum int, adbin string",
+    "pg_attribute": (
+        "attrelid int, attname string, atttypid int, attlen int, attnum int,"
+        " atttypmod string, attndims int, attbyval boolean, attalign string,"
+        " attstorage string, attcompression string, attnotnull boolean,"
+        " atthasdef boolean, atthasmissing boolean, attidentity string,"
+        " attgenerated string, attisdropped boolean, attislocal boolean,"
+        " attinhcount int, attcollation int, attstattarget int,"
+        " attacl array<string>, attoptions string, attfdwoptions string,"
+        " attmissingval string"),
+    "pg_auth_members": (
+        "oid int, roleid int, member int, grantor int, admin_option boolean,"
+        " inherit_option boolean, set_option boolean"),
+    "pg_authid": (
+        "oid int, rolname string, rolsuper boolean, rolinherit boolean,"
+        " rolcreaterole boolean, rolcreatedb boolean, rolcanlogin boolean,"
+        " rolreplication boolean, rolbypassrls boolean, rolconnlimit int,"
+        " rolpassword string, rolvaliduntil string"),
+    "pg_available_extension_versions": (
+        "name string, version string, installed string, superuser string,"
+        " trusted string, relocatable string, schema string, requires string,"
+        " comment string"),
+    "pg_available_extensions": (
+        "name string, default_version string, installed_version string,"
+        " comment string"),
+    "pg_backend_memory_contexts": (
+        "name string, ident string, type string, level string, path string,"
+        " total_bytes string, total_nblocks string, free_bytes string,"
+        " free_chunks string, used_bytes string"),
+    "pg_cast": (
+        "oid int, castsource int, casttarget int, castfunc int,"
+        " castcontext string, castmethod string"),
+    "pg_class": (
+        "oid int, relname string, relnamespace int, reltype int,"
+        " reloftype int, relowner int, relam int, relfilenode int,"
+        " reltablespace int, relpages int, reltuples double,"
+        " relallvisible int, relallfrozen int, reltoastrelid int,"
+        " relhasindex boolean, relisshared boolean, relpersistence string,"
+        " relkind string, relnatts int, relchecks int, relhasrules boolean,"
+        " relhastriggers boolean, relhassubclass boolean,"
+        " relrowsecurity boolean, relforcerowsecurity boolean,"
+        " relispopulated boolean, relreplident string,"
+        " relispartition boolean, relrewrite int, relfrozenxid int,"
+        " relminmxid int, relacl array<string>, reloptions array<string>,"
+        " relpartbound string"),
+    "pg_collation": (
+        "oid int, collname string, collnamespace string, collowner string,"
+        " collprovider string, collisdeterministic string,"
+        " collencoding string, collcollate string, collctype string,"
+        " colllocale string, collicurules string, collversion string"),
+    "pg_config": "name string, setting string",
+    "pg_constraint": (
+        "oid int, conname string, connamespace int, contype string,"
+        " condeferrable boolean, condeferred boolean, conenforced boolean,"
+        " convalidated boolean, conrelid int, contypid string,"
+        " conindid string, conparentid string, confrelid string,"
+        " confupdtype string, confdeltype string, confmatchtype string,"
+        " conislocal boolean, coninhcount int, connoinherit boolean,"
+        " conperiod string, conkey array<int>, confkey string,"
+        " conpfeqop string, conppeqop string, conffeqop string,"
+        " confdelsetcols string, conexclop string, conbin string"),
+    "pg_conversion": (
+        "oid int, conname string, connamespace int, conowner string,"
+        " conforencoding string, contoencoding string, conproc string,"
+        " condefault string"),
+    "pg_cursors": (
+        "name string, statement string, is_holdable string,"
+        " is_binary string, is_scrollable string, creation_time string"),
+    "pg_database": (
+        "oid int, datname string, datdba int, encoding string,"
+        " datlocprovider string, datistemplate boolean, datallowconn boolean,"
+        " dathasloginevt boolean, datconnlimit int, datfrozenxid int,"
+        " datminmxid int, dattablespace int, datcollate string,"
+        " datctype string, datlocale string, daticurules string,"
+        " datcollversion string, datacl array<string>"),
+    "pg_db_role_setting": (
+        "setdatabase int, setrole int, setconfig array<string>"),
+    "pg_default_acl": (
+        "oid int, defaclrole int, defaclnamespace int, defaclobjtype string,"
+        " defaclacl array<string>"),
+    "pg_depend": (
+        "classid string, objid int, objsubid string, refclassid string,"
+        " refobjid int, refobjsubid string, deptype string"),
+    "pg_description": (
+        "objoid int, classoid string, objsubid string, description string"),
+    "pg_enum": (
+        "oid string, enumtypid string, enumsortorder double,"
+        " enumlabel string"),
+    "pg_event_trigger": (
+        "oid int, evtname string, evtevent string, evtowner string,"
+        " evtfoid string, evtenabled string, evttags string"),
+    "pg_extension": (
+        "oid int, extname string, extowner string, extnamespace string,"
+        " extrelocatable string, extversion string, extconfig string,"
+        " extcondition string"),
+    "pg_file_settings": (
+        "sourcefile string, sourceline string, seqno string, name string,"
+        " setting string, applied string, error string"),
+    "pg_foreign_data_wrapper": (
+        "oid int, fdwname string, fdwowner int, fdwhandler string,"
+        " fdwvalidator string, fdwacl string, fdwoptions string"),
+    "pg_foreign_server": (
+        "oid int, srvname string, srvowner string, srvfdw int,"
+        " srvtype string, srvversion string, srvacl string,"
+        " srvoptions string"),
+    "pg_foreign_table": "ftrelid int, ftserver int, ftoptions string",
+    "pg_group": "groname string, grosysid int, grolist array<int>",
+    "pg_hba_file_rules": (
+        "rule_number string, file_name string, line_number string,"
+        " type string, database string, user_name string, address string,"
+        " netmask string, auth_method string, options string, error string"),
+    "pg_ident_file_mappings": (
+        "map_number string, file_name string, line_number string,"
+        " map_name string, sys_name string, pg_username string, error string"),
+    "pg_index": (
+        "indexrelid int, indrelid int, indnatts int, indnkeyatts int,"
+        " indisunique boolean, indnullsnotdistinct string,"
+        " indisprimary boolean, indisexclusion string, indimmediate string,"
+        " indisclustered string, indisvalid boolean, indcheckxmin string,"
+        " indisready boolean, indislive boolean, indisreplident string,"
+        " indkey array<int>, indcollation string, indclass string,"
+        " indoption string, indexprs string, indpred string"),
+    "pg_indexes": (
+        "schemaname string, tablename string, indexname string,"
+        " tablespace string, indexdef string"),
+    "pg_inherits": (
+        "inhrelid int, inhparent int, inhseqno int, inhdetachpending string"),
+    "pg_init_privs": (
+        "objoid int, classoid int, objsubid string, privtype string,"
+        " initprivs string"),
+    "pg_language": (
+        "oid int, lanname string, lanowner string, lanispl boolean,"
+        " lanpltrusted boolean, lanplcallfoid string, laninline string,"
+        " lanvalidator string, lanacl string"),
+    "pg_largeobject": "loid int, pageno int, data binary",
+    "pg_largeobject_metadata": "oid int, lomowner int, lomacl string",
+    "pg_locks": (
+        "locktype string, database string, relation int, page string,"
+        " tuple string, virtualxid string, transactionid string,"
+        " classid string, objid string, objsubid string,"
+        " virtualtransaction string, pid string, mode string,"
+        " granted boolean, fastpath string, waitstart string"),
+    "pg_matviews": (
+        "schemaname string, matviewname string, matviewowner string,"
+        " tablespace string, hasindexes string, ispopulated string,"
+        " definition string"),
+    "pg_namespace": (
+        "oid int, nspname string, nspowner int, nspacl array<string>"),
+    "pg_opclass": (
+        "oid int, opcmethod string, opcname string, opcnamespace string,"
+        " opcowner string, opcfamily int, opcintype string,"
+        " opcdefault string, opckeytype string"),
+    "pg_operator": (
+        "oid int, oprname string, oprnamespace string, oprowner string,"
+        " oprkind string, oprcanmerge string, oprcanhash string,"
+        " oprleft string, oprright string, oprresult string, oprcom string,"
+        " oprnegate string, oprcode string, oprrest string, oprjoin string"),
+    "pg_opfamily": (
+        "oid int, opfmethod int, opfname string, opfnamespace string,"
+        " opfowner string"),
+    "pg_parameter_acl": "oid int, parname string, paracl string",
+    "pg_partitioned_table": (
+        "partrelid int, partstrat string, partnatts int, partdefid string,"
+        " partattrs string, partclass string, partcollation string,"
+        " partexprs string"),
+    "pg_policies": (
+        "schemaname string, tablename string, policyname string,"
+        " permissive string, roles string, cmd string, qual string,"
+        " with_check string"),
+    "pg_policy": (
+        "oid int, polname string, polrelid int, polcmd string,"
+        " polpermissive string, polroles string, polqual string,"
+        " polwithcheck string"),
+    "pg_prepared_statements": (
+        "name string, statement string, prepare_time string,"
+        " parameter_types string, result_types string, from_sql string,"
+        " generic_plans string, custom_plans string"),
+    "pg_prepared_xacts": (
+        "transaction string, gid string, prepared string, owner string,"
+        " database string"),
+    "pg_proc": (
+        "oid int, proname string, pronamespace int, proowner int,"
+        " prolang int, procost string, prorows string, provariadic string,"
+        " prosupport string, prokind string, prosecdef boolean,"
+        " proleakproof boolean, proisstrict boolean, proretset boolean,"
+        " provolatile string, proparallel string, pronargs int,"
+        " pronargdefaults int, prorettype int, proargtypes string,"
+        " proallargtypes string, proargmodes string, proargnames string,"
+        " proargdefaults string, protrftypes string, prosrc string,"
+        " probin string, prosqlbody string, proconfig string,"
+        " proacl array<string>"),
+    "pg_publication": (
+        "oid int, pubname string, pubowner int, puballtables string,"
+        " pubinsert string, pubupdate string, pubdelete string,"
+        " pubtruncate string, pubviaroot string, pubgencols string"),
+    "pg_publication_namespace": "oid int, pnpubid int, pnnspid int",
+    "pg_publication_rel": (
+        "oid int, prpubid int, prrelid int, prqual string, prattrs string"),
+    "pg_publication_tables": (
+        "pubname string, schemaname string, tablename string,"
+        " attnames string, rowfilter string"),
+    "pg_range": (
+        "rngtypid int, rngsubtype int, rngmultitypid string,"
+        " rngcollation int, rngsubopc string, rngcanonical string,"
+        " rngsubdiff string"),
+    "pg_replication_origin": "roident int, roname string",
+    "pg_replication_origin_status": (
+        "local_id string, external_id string, remote_lsn string,"
+        " local_lsn string"),
+    "pg_replication_slots": (
+        "slot_name string, plugin string, slot_type string, datoid string,"
+        " database string, temporary string, active string,"
+        " active_pid string, xmin string, catalog_xmin string,"
+        " restart_lsn string, confirmed_flush_lsn string, wal_status string,"
+        " safe_wal_size string, two_phase string, two_phase_at string,"
+        " inactive_since string, conflicting string,"
+        " invalidation_reason string, failover string, synced string"),
+    "pg_rewrite": (
+        "oid int, rulename string, ev_class int, ev_type string,"
+        " ev_enabled string, is_instead string, ev_qual string,"
+        " ev_action string"),
+    "pg_roles": (
+        "rolname string, rolsuper boolean, rolinherit boolean,"
+        " rolcreaterole boolean, rolcreatedb boolean, rolcanlogin boolean,"
+        " rolreplication boolean, rolconnlimit int, rolpassword string,"
+        " rolvaliduntil string, rolbypassrls boolean,"
+        " rolconfig array<string>, oid int"),
+    "pg_rules": (
+        "schemaname string, tablename string, rulename string,"
+        " definition string"),
+    "pg_seclabel": (
+        "objoid int, classoid int, objsubid string, provider string,"
+        " label string"),
+    "pg_seclabels": (
+        "objoid string, classoid string, objsubid string, objtype string,"
+        " objnamespace string, objname string, provider string, label string"),
+    "pg_sequence": (
+        "seqrelid int, seqtypid string, seqstart bigint,"
+        " seqincrement bigint, seqmax bigint, seqmin bigint, seqcache string,"
+        " seqcycle boolean"),
+    "pg_sequences": (
+        "schemaname string, sequencename string, sequenceowner string,"
+        " data_type string, start_value string, min_value bigint,"
+        " max_value bigint, increment_by bigint, cycle boolean,"
+        " cache_size string, last_value bigint"),
+    "pg_settings": (
+        "name string, setting string, unit string, category string,"
+        " short_desc string, extra_desc string, context string,"
+        " vartype string, source string, min_val string, max_val string,"
+        " enumvals string, boot_val string, reset_val string,"
+        " sourcefile string, sourceline string, pending_restart boolean"),
+    "pg_shadow": (
+        "usename string, usesysid int, usecreatedb boolean,"
+        " usesuper boolean, userepl boolean, usebypassrls boolean,"
+        " passwd string, valuntil string, useconfig array<string>"),
+    "pg_shdepend": (
+        "dbid int, classid int, objid int, objsubid string, refclassid int,"
+        " refobjid int, deptype string"),
+    "pg_shdescription": "objoid int, classoid int, description string",
+    "pg_shmem_allocations": (
+        "name string, off string, size string, allocated_size string"),
+    "pg_shmem_allocations_numa": "name string, numa_node string, size string",
+    "pg_shseclabel": "objoid int, classoid int, provider string, label string",
+    "pg_stat_activity": (
+        "datid string, datname string, pid int, leader_pid string,"
+        " usesysid string, usename string, application_name string,"
+        " client_addr string, client_hostname string, client_port string,"
+        " backend_start string, xact_start string, query_start string,"
+        " state_change string, wait_event_type string, wait_event string,"
+        " state string, backend_xid string, backend_xmin string,"
+        " query_id string, query string, backend_type string"),
+    "pg_stat_all_indexes": (
+        "relid string, indexrelid string, schemaname string, relname string,"
+        " indexrelname string, idx_scan string, last_idx_scan string,"
+        " idx_tup_read string, idx_tup_fetch string"),
+    "pg_stat_all_tables": (
+        "relid string, schemaname string, relname string, seq_scan string,"
+        " last_seq_scan string, seq_tup_read string, idx_scan string,"
+        " last_idx_scan string, idx_tup_fetch string, n_tup_ins string,"
+        " n_tup_upd string, n_tup_del string, n_tup_hot_upd string,"
+        " n_tup_newpage_upd string, n_live_tup string, n_dead_tup string,"
+        " n_mod_since_analyze string, n_ins_since_vacuum string,"
+        " last_vacuum string, last_autovacuum string, last_analyze string,"
+        " last_autoanalyze string, vacuum_count string,"
+        " autovacuum_count string, analyze_count string,"
+        " autoanalyze_count string, total_vacuum_time string,"
+        " total_autovacuum_time string, total_analyze_time string,"
+        " total_autoanalyze_time string"),
+    "pg_stat_archiver": (
+        "archived_count string, last_archived_wal string,"
+        " last_archived_time string, failed_count string,"
+        " last_failed_wal string, last_failed_time string,"
+        " stats_reset string"),
+    "pg_stat_bgwriter": (
+        "buffers_clean string, maxwritten_clean string,"
+        " buffers_alloc string, stats_reset string"),
+    "pg_stat_checkpointer": (
+        "num_timed string, num_requested string, num_done string,"
+        " restartpoints_timed string, restartpoints_req string,"
+        " restartpoints_done string, write_time string, sync_time string,"
+        " buffers_written string, slru_written string, stats_reset string"),
+    "pg_stat_database": (
+        "datid string, datname string, numbackends string,"
+        " xact_commit string, xact_rollback string, blks_read string,"
+        " blks_hit string, tup_returned string, tup_fetched string,"
+        " tup_inserted string, tup_updated string, tup_deleted string,"
+        " conflicts string, temp_files string, temp_bytes string,"
+        " deadlocks string, checksum_failures string,"
+        " checksum_last_failure string, blk_read_time string,"
+        " blk_write_time string, session_time string, active_time string,"
+        " idle_in_transaction_time string, sessions string,"
+        " sessions_abandoned string, sessions_fatal string,"
+        " sessions_killed string, parallel_workers_to_launch string,"
+        " parallel_workers_launched string, stats_reset string"),
+    "pg_stat_database_conflicts": (
+        "datid string, datname string, confl_tablespace string,"
+        " confl_lock string, confl_snapshot string, confl_bufferpin string,"
+        " confl_deadlock string, confl_active_logicalslot string"),
+    "pg_stat_gssapi": (
+        "pid string, gss_authenticated string, principal string,"
+        " encrypted string, credentials_delegated string"),
+    "pg_stat_io": (
+        "backend_type string, object string, context string, reads string,"
+        " read_bytes string, read_time string, writes string,"
+        " write_bytes string, write_time string, writebacks string,"
+        " writeback_time string, extends string, extend_bytes string,"
+        " extend_time string, hits string, evictions string, reuses string,"
+        " fsyncs string, fsync_time string, stats_reset string"),
+    "pg_stat_progress_analyze": (
+        "pid string, datid string, datname string, relid string,"
+        " phase string, sample_blks_total string, sample_blks_scanned string,"
+        " ext_stats_total string, ext_stats_computed string,"
+        " child_tables_total string, child_tables_done string,"
+        " current_child_table_relid string, delay_time string"),
+    "pg_stat_progress_basebackup": (
+        "pid string, phase string, backup_total string,"
+        " backup_streamed string, tablespaces_total string,"
+        " tablespaces_streamed string"),
+    "pg_stat_progress_cluster": (
+        "pid string, datid string, datname string, relid string,"
+        " command string, phase string, cluster_index_relid string,"
+        " heap_tuples_scanned string, heap_tuples_written string,"
+        " heap_blks_total string, heap_blks_scanned string,"
+        " index_rebuild_count string"),
+    "pg_stat_progress_copy": (
+        "pid string, datid string, datname string, relid string,"
+        " command string, type string, bytes_processed string,"
+        " bytes_total string, tuples_processed string,"
+        " tuples_excluded string, tuples_skipped string"),
+    "pg_stat_progress_create_index": (
+        "pid string, datid string, datname string, relid string,"
+        " index_relid string, command string, phase string,"
+        " lockers_total string, lockers_done string,"
+        " current_locker_pid string, blocks_total string, blocks_done string,"
+        " tuples_total string, tuples_done string, partitions_total string,"
+        " partitions_done string"),
+    "pg_stat_progress_vacuum": (
+        "pid string, datid string, datname string, relid string,"
+        " phase string, heap_blks_total string, heap_blks_scanned string,"
+        " heap_blks_vacuumed string, index_vacuum_count string,"
+        " max_dead_tuple_bytes string, dead_tuple_bytes string,"
+        " num_dead_item_ids string, indexes_total string,"
+        " indexes_processed string, delay_time string"),
+    "pg_stat_recovery_prefetch": (
+        "stats_reset string, prefetch string, hit string, skip_init string,"
+        " skip_new string, skip_fpw string, skip_rep string,"
+        " wal_distance string, block_distance string, io_depth string"),
+    "pg_stat_replication": (
+        "pid string, usesysid string, usename string,"
+        " application_name string, client_addr string,"
+        " client_hostname string, client_port string, backend_start string,"
+        " backend_xmin string, state string, sent_lsn string,"
+        " write_lsn string, flush_lsn string, replay_lsn string,"
+        " write_lag string, flush_lag string, replay_lag string,"
+        " sync_priority string, sync_state string, reply_time string"),
+    "pg_stat_replication_slots": (
+        "slot_name string, spill_txns string, spill_count string,"
+        " spill_bytes string, stream_txns string, stream_count string,"
+        " stream_bytes string, total_txns string, total_bytes string,"
+        " stats_reset string"),
+    "pg_stat_slru": (
+        "name string, blks_zeroed string, blks_hit string, blks_read string,"
+        " blks_written string, blks_exists string, flushes string,"
+        " truncates string, stats_reset string"),
+    "pg_stat_ssl": (
+        "pid string, ssl string, version string, cipher string, bits string,"
+        " client_dn string, client_serial string, issuer_dn string"),
+    "pg_stat_subscription": (
+        "subid string, subname string, worker_type string, pid string,"
+        " leader_pid string, relid string, received_lsn string,"
+        " last_msg_send_time string, last_msg_receipt_time string,"
+        " latest_end_lsn string, latest_end_time string"),
+    "pg_stat_subscription_stats": (
+        "subid string, subname string, apply_error_count string,"
+        " sync_error_count string, confl_insert_exists string,"
+        " confl_update_origin_differs string, confl_update_exists string,"
+        " confl_update_missing string, confl_delete_origin_differs string,"
+        " confl_delete_missing string,"
+        " confl_multiple_unique_conflicts string, stats_reset string"),
+    "pg_stat_sys_indexes": (
+        "relid string, indexrelid string, schemaname string, relname string,"
+        " indexrelname string, idx_scan string, last_idx_scan string,"
+        " idx_tup_read string, idx_tup_fetch string"),
+    "pg_stat_sys_tables": (
+        "relid string, schemaname string, relname string, seq_scan string,"
+        " last_seq_scan string, seq_tup_read string, idx_scan string,"
+        " last_idx_scan string, idx_tup_fetch string, n_tup_ins string,"
+        " n_tup_upd string, n_tup_del string, n_tup_hot_upd string,"
+        " n_tup_newpage_upd string, n_live_tup string, n_dead_tup string,"
+        " n_mod_since_analyze string, n_ins_since_vacuum string,"
+        " last_vacuum string, last_autovacuum string, last_analyze string,"
+        " last_autoanalyze string, vacuum_count string,"
+        " autovacuum_count string, analyze_count string,"
+        " autoanalyze_count string, total_vacuum_time string,"
+        " total_autovacuum_time string, total_analyze_time string,"
+        " total_autoanalyze_time string"),
+    "pg_stat_user_functions": (
+        "funcid string, schemaname string, funcname string, calls string,"
+        " total_time string, self_time string"),
+    "pg_stat_user_indexes": (
+        "relid int, indexrelid int, schemaname string, relname string,"
+        " indexrelname string, idx_scan string, last_idx_scan string,"
+        " idx_tup_read string, idx_tup_fetch string"),
+    "pg_stat_user_tables": (
+        "relid int, schemaname string, relname string, seq_scan string,"
+        " last_seq_scan string, seq_tup_read string, idx_scan string,"
+        " last_idx_scan string, idx_tup_fetch string, n_tup_ins string,"
+        " n_tup_upd string, n_tup_del string, n_tup_hot_upd string,"
+        " n_tup_newpage_upd string, n_live_tup double, n_dead_tup string,"
+        " n_mod_since_analyze string, n_ins_since_vacuum string,"
+        " last_vacuum string, last_autovacuum string, last_analyze string,"
+        " last_autoanalyze string, vacuum_count string,"
+        " autovacuum_count string, analyze_count string,"
+        " autoanalyze_count string, total_vacuum_time string,"
+        " total_autovacuum_time string, total_analyze_time string,"
+        " total_autoanalyze_time string"),
+    "pg_stat_wal": (
+        "wal_records string, wal_fpi string, wal_bytes string,"
+        " wal_buffers_full string, stats_reset string"),
+    "pg_stat_wal_receiver": (
+        "pid string, status string, receive_start_lsn string,"
+        " receive_start_tli string, written_lsn string, flushed_lsn string,"
+        " received_tli string, last_msg_send_time string,"
+        " last_msg_receipt_time string, latest_end_lsn string,"
+        " latest_end_time string, slot_name string, sender_host string,"
+        " sender_port string, conninfo string"),
+    "pg_stat_xact_all_tables": (
+        "relid string, schemaname string, relname string, seq_scan string,"
+        " seq_tup_read string, idx_scan string, idx_tup_fetch string,"
+        " n_tup_ins string, n_tup_upd string, n_tup_del string,"
+        " n_tup_hot_upd string, n_tup_newpage_upd string"),
+    "pg_stat_xact_sys_tables": (
+        "relid string, schemaname string, relname string, seq_scan string,"
+        " seq_tup_read string, idx_scan string, idx_tup_fetch string,"
+        " n_tup_ins string, n_tup_upd string, n_tup_del string,"
+        " n_tup_hot_upd string, n_tup_newpage_upd string"),
+    "pg_stat_xact_user_functions": (
+        "funcid string, schemaname string, funcname string, calls string,"
+        " total_time string, self_time string"),
+    "pg_stat_xact_user_tables": (
+        "relid string, schemaname string, relname string, seq_scan string,"
+        " seq_tup_read string, idx_scan string, idx_tup_fetch string,"
+        " n_tup_ins string, n_tup_upd string, n_tup_del string,"
+        " n_tup_hot_upd string, n_tup_newpage_upd string"),
+    "pg_statio_all_indexes": (
+        "relid string, indexrelid string, schemaname string, relname string,"
+        " indexrelname string, idx_blks_read string, idx_blks_hit string"),
+    "pg_statio_all_sequences": (
+        "relid string, schemaname string, relname string, blks_read string,"
+        " blks_hit string"),
+    "pg_statio_all_tables": (
+        "relid string, schemaname string, relname string,"
+        " heap_blks_read string, heap_blks_hit string, idx_blks_read string,"
+        " idx_blks_hit string, toast_blks_read string, toast_blks_hit string,"
+        " tidx_blks_read string, tidx_blks_hit string"),
+    "pg_statio_sys_indexes": (
+        "relid string, indexrelid string, schemaname string, relname string,"
+        " indexrelname string, idx_blks_read string, idx_blks_hit string"),
+    "pg_statio_sys_sequences": (
+        "relid string, schemaname string, relname string, blks_read string,"
+        " blks_hit string"),
+    "pg_statio_sys_tables": (
+        "relid string, schemaname string, relname string,"
+        " heap_blks_read string, heap_blks_hit string, idx_blks_read string,"
+        " idx_blks_hit string, toast_blks_read string, toast_blks_hit string,"
+        " tidx_blks_read string, tidx_blks_hit string"),
+    "pg_statio_user_indexes": (
+        "relid string, indexrelid string, schemaname string, relname string,"
+        " indexrelname string, idx_blks_read string, idx_blks_hit string"),
+    "pg_statio_user_sequences": (
+        "relid string, schemaname string, relname string, blks_read string,"
+        " blks_hit string"),
+    "pg_statio_user_tables": (
+        "relid string, schemaname string, relname string,"
+        " heap_blks_read string, heap_blks_hit string, idx_blks_read string,"
+        " idx_blks_hit string, toast_blks_read string, toast_blks_hit string,"
+        " tidx_blks_read string, tidx_blks_hit string"),
+    "pg_statistic": (
+        "starelid int, staattnum int, stainherit boolean,"
+        " stanullfrac string, stawidth string, stadistinct string,"
+        " stakind1 string, stakind2 string, stakind3 string, stakind4 string,"
+        " stakind5 string, staop1 string, staop2 string, staop3 string,"
+        " staop4 string, staop5 string, stacoll1 string, stacoll2 string,"
+        " stacoll3 string, stacoll4 string, stacoll5 string,"
+        " stanumbers1 string, stanumbers2 string, stanumbers3 string,"
+        " stanumbers4 string, stanumbers5 string, stavalues1 string,"
+        " stavalues2 string, stavalues3 string, stavalues4 string,"
+        " stavalues5 string"),
+    "pg_statistic_ext": (
+        "oid int, stxrelid int, stxname string, stxnamespace string,"
+        " stxowner string, stxkeys string, stxstattarget string,"
+        " stxkind string, stxexprs string"),
+    "pg_statistic_ext_data": (
+        "stxoid int, stxdinherit string, stxdndistinct string,"
+        " stxddependencies string, stxdmcv string, stxdexpr string"),
+    "pg_stats": (
+        "schemaname string, tablename string, attname string,"
+        " inherited string, null_frac string, avg_width string,"
+        " n_distinct string, most_common_vals string,"
+        " most_common_freqs string, histogram_bounds string,"
+        " correlation string, most_common_elems string,"
+        " most_common_elem_freqs string, elem_count_histogram string,"
+        " range_length_histogram string, range_empty_frac string,"
+        " range_bounds_histogram string"),
+    "pg_stats_ext": (
+        "schemaname string, tablename string, statistics_schemaname string,"
+        " statistics_name string, statistics_owner string, attnames string,"
+        " exprs string, kinds string, inherited string, n_distinct string,"
+        " dependencies string, most_common_vals string,"
+        " most_common_val_nulls string, most_common_freqs string,"
+        " most_common_base_freqs string"),
+    "pg_stats_ext_exprs": (
+        "schemaname string, tablename string, statistics_schemaname string,"
+        " statistics_name string, statistics_owner string, expr string,"
+        " inherited string, null_frac string, avg_width string,"
+        " n_distinct string, most_common_vals string,"
+        " most_common_freqs string, histogram_bounds string,"
+        " correlation string, most_common_elems string,"
+        " most_common_elem_freqs string, elem_count_histogram string"),
+    "pg_subscription": (
+        "oid int, subdbid string, subskiplsn string, subname string,"
+        " subowner int, subenabled string, subbinary string,"
+        " substream string, subtwophasestate string, subdisableonerr string,"
+        " subpasswordrequired string, subrunasowner string,"
+        " subfailover string, subconninfo string, subslotname string,"
+        " subsynccommit string, subpublications string, suborigin string"),
+    "pg_subscription_rel": (
+        "srsubid int, srrelid int, srsubstate string, srsublsn string"),
+    "pg_tables": (
+        "schemaname string, tablename string, tableowner string,"
+        " tablespace string, hasindexes string, hasrules string,"
+        " hastriggers string, rowsecurity string"),
+    "pg_tablespace": (
+        "oid int, spcname string, spcowner int, spcacl string,"
+        " spcoptions string"),
+    "pg_timezone_abbrevs": "abbrev string, utc_offset string, is_dst string",
+    "pg_timezone_names": (
+        "name string, abbrev string, utc_offset string, is_dst string"),
+    "pg_transform": (
+        "oid int, trftype int, trflang int, trffromsql string,"
+        " trftosql string"),
+    "pg_trigger": (
+        "oid int, tgrelid int, tgparentid string, tgname string, tgfoid int,"
+        " tgtype string, tgenabled string, tgisinternal string,"
+        " tgconstrrelid string, tgconstrindid string, tgconstraint string,"
+        " tgdeferrable string, tginitdeferred string, tgnargs string,"
+        " tgattr string, tgargs string, tgqual string, tgoldtable string,"
+        " tgnewtable string"),
+    "pg_ts_config": (
+        "oid int, cfgname string, cfgnamespace int, cfgowner string,"
+        " cfgparser string"),
+    "pg_ts_config_map": (
+        "mapcfg int, maptokentype int, mapseqno int, mapdict int"),
+    "pg_ts_dict": (
+        "oid int, dictname string, dictnamespace int, dictowner int,"
+        " dicttemplate string, dictinitoption string"),
+    "pg_ts_parser": (
+        "oid int, prsname string, prsnamespace int, prsstart string,"
+        " prstoken string, prsend string, prsheadline string,"
+        " prslextype string"),
+    "pg_ts_template": (
+        "oid int, tmplname string, tmplnamespace int, tmplinit string,"
+        " tmpllexize string"),
+    "pg_type": (
+        "oid int, typname string, typnamespace string, typowner string,"
+        " typlen int, typbyval boolean, typtype string, typcategory string,"
+        " typispreferred boolean, typisdefined boolean, typdelim string,"
+        " typrelid int, typsubscript string, typelem int, typarray int,"
+        " typinput string, typoutput string, typreceive string,"
+        " typsend string, typmodin string, typmodout string,"
+        " typanalyze string, typalign string, typstorage string,"
+        " typnotnull string, typbasetype string, typtypmod string,"
+        " typndims string, typcollation string, typdefaultbin string,"
+        " typdefault string, typacl string"),
+    "pg_user": (
+        "usename string, usesysid int, usecreatedb boolean,"
+        " usesuper boolean, userepl boolean, usebypassrls boolean,"
+        " passwd string, valuntil string, useconfig array<string>"),
+    "pg_user_mapping": "oid int, umuser int, umserver int, umoptions string",
+    "pg_user_mappings": (
+        "umid string, srvid string, srvname string, umuser string,"
+        " usename string, umoptions string"),
+    "pg_views": (
+        "schemaname string, viewname string, viewowner string,"
+        " definition string"),
+    "pg_wait_events": "type string, name string, description string",
+    "information_schema__pg_foreign_data_wrappers": (
+        "oid string, fdwowner string, fdwoptions string,"
+        " foreign_data_wrapper_catalog string,"
+        " foreign_data_wrapper_name string, authorization_identifier string,"
+        " foreign_data_wrapper_language string"),
+    "information_schema__pg_foreign_servers": (
+        "oid string, srvoptions string, foreign_server_catalog string,"
+        " foreign_server_name string, foreign_data_wrapper_catalog string,"
+        " foreign_data_wrapper_name string, foreign_server_type string,"
+        " foreign_server_version string, authorization_identifier string"),
+    "information_schema__pg_foreign_table_columns": (
+        "nspname string, relname string, attname string,"
+        " attfdwoptions string"),
+    "information_schema__pg_foreign_tables": (
+        "foreign_table_catalog string, foreign_table_schema string,"
+        " foreign_table_name string, ftoptions string,"
+        " foreign_server_catalog string, foreign_server_name string,"
+        " authorization_identifier string"),
+    "information_schema__pg_user_mappings": (
+        "oid string, umoptions string, umuser string,"
+        " authorization_identifier string, foreign_server_catalog string,"
+        " foreign_server_name string, srvowner string"),
+    "information_schema_administrable_role_authorizations": (
+        "grantee string, role_name string, is_grantable string"),
+    "information_schema_applicable_roles": (
+        "grantee string, role_name string, is_grantable string"),
+    "information_schema_attributes": (
+        "udt_catalog string, udt_schema string, udt_name string,"
+        " attribute_name string, ordinal_position string,"
+        " attribute_default string, is_nullable string, data_type string,"
+        " character_maximum_length string, character_octet_length string,"
+        " character_set_catalog string, character_set_schema string,"
+        " character_set_name string, collation_catalog string,"
+        " collation_schema string, collation_name string,"
+        " numeric_precision string, numeric_precision_radix string,"
+        " numeric_scale string, datetime_precision string,"
+        " interval_type string, interval_precision string,"
+        " attribute_udt_catalog string, attribute_udt_schema string,"
+        " attribute_udt_name string, scope_catalog string,"
+        " scope_schema string, scope_name string, maximum_cardinality string,"
+        " dtd_identifier string, is_derived_reference_attribute string"),
+    "information_schema_character_sets": (
+        "character_set_catalog string, character_set_schema string,"
+        " character_set_name string, character_repertoire string,"
+        " form_of_use string, default_collate_catalog string,"
+        " default_collate_schema string, default_collate_name string"),
+    "information_schema_check_constraint_routine_usage": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, specific_catalog string,"
+        " specific_schema string, specific_name string"),
+    "information_schema_check_constraints": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, check_clause string"),
+    "information_schema_collation_character_set_applicability": (
+        "collation_catalog string, collation_schema string,"
+        " collation_name string, character_set_catalog string,"
+        " character_set_schema string, character_set_name string"),
+    "information_schema_collations": (
+        "collation_catalog string, collation_schema string,"
+        " collation_name string, pad_attribute string"),
+    "information_schema_column_column_usage": (
+        "table_catalog string, table_schema string, table_name string,"
+        " column_name string, dependent_column string"),
+    "information_schema_column_domain_usage": (
+        "domain_catalog string, domain_schema string, domain_name string,"
+        " table_catalog string, table_schema string, table_name string,"
+        " column_name string"),
+    "information_schema_column_options": (
+        "table_catalog string, table_schema string, table_name string,"
+        " column_name string, option_name string, option_value string"),
+    "information_schema_column_privileges": (
+        "grantor string, grantee string, table_catalog string,"
+        " table_schema string, table_name string, column_name string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_column_udt_usage": (
+        "udt_catalog string, udt_schema string, udt_name string,"
+        " table_catalog string, table_schema string, table_name string,"
+        " column_name string"),
+    "information_schema_columns": (
+        "table_catalog string, table_schema string, table_name string,"
+        " column_name string, ordinal_position int, column_default string,"
+        " is_nullable string, data_type string, character_maximum_length int,"
+        " character_octet_length string, numeric_precision int,"
+        " numeric_precision_radix string, numeric_scale int,"
+        " datetime_precision int, interval_type string,"
+        " interval_precision string, character_set_catalog string,"
+        " character_set_schema string, character_set_name string,"
+        " collation_catalog string, collation_schema string,"
+        " collation_name string, domain_catalog string, domain_schema string,"
+        " domain_name string, udt_catalog string, udt_schema string,"
+        " udt_name string, scope_catalog string, scope_schema string,"
+        " scope_name string, maximum_cardinality string,"
+        " dtd_identifier string, is_self_referencing string,"
+        " is_identity string, identity_generation string,"
+        " identity_start string, identity_increment string,"
+        " identity_maximum string, identity_minimum string,"
+        " identity_cycle string, is_generated string,"
+        " generation_expression string, is_updatable string"),
+    "information_schema_constraint_column_usage": (
+        "table_catalog string, table_schema string, table_name string,"
+        " column_name string, constraint_catalog string,"
+        " constraint_schema string, constraint_name string"),
+    "information_schema_constraint_table_usage": (
+        "table_catalog string, table_schema string, table_name string,"
+        " constraint_catalog string, constraint_schema string,"
+        " constraint_name string"),
+    "information_schema_data_type_privileges": (
+        "object_catalog string, object_schema string, object_name string,"
+        " object_type string, dtd_identifier string"),
+    "information_schema_domain_constraints": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, domain_catalog string,"
+        " domain_schema string, domain_name string, is_deferrable string,"
+        " initially_deferred string"),
+    "information_schema_domain_udt_usage": (
+        "udt_catalog string, udt_schema string, udt_name string,"
+        " domain_catalog string, domain_schema string, domain_name string"),
+    "information_schema_domains": (
+        "domain_catalog string, domain_schema string, domain_name string,"
+        " data_type string, character_maximum_length string,"
+        " character_octet_length string, character_set_catalog string,"
+        " character_set_schema string, character_set_name string,"
+        " collation_catalog string, collation_schema string,"
+        " collation_name string, numeric_precision string,"
+        " numeric_precision_radix string, numeric_scale string,"
+        " datetime_precision string, interval_type string,"
+        " interval_precision string, domain_default string,"
+        " udt_catalog string, udt_schema string, udt_name string,"
+        " scope_catalog string, scope_schema string, scope_name string,"
+        " maximum_cardinality string, dtd_identifier string"),
+    "information_schema_element_types": (
+        "object_catalog string, object_schema string, object_name string,"
+        " object_type string, collection_type_identifier string,"
+        " data_type string, character_maximum_length string,"
+        " character_octet_length string, character_set_catalog string,"
+        " character_set_schema string, character_set_name string,"
+        " collation_catalog string, collation_schema string,"
+        " collation_name string, numeric_precision string,"
+        " numeric_precision_radix string, numeric_scale string,"
+        " datetime_precision string, interval_type string,"
+        " interval_precision string, udt_catalog string, udt_schema string,"
+        " udt_name string, scope_catalog string, scope_schema string,"
+        " scope_name string, maximum_cardinality string,"
+        " dtd_identifier string"),
+    "information_schema_enabled_roles": "role_name string",
+    "information_schema_foreign_data_wrapper_options": (
+        "foreign_data_wrapper_catalog string,"
+        " foreign_data_wrapper_name string, option_name string,"
+        " option_value string"),
+    "information_schema_foreign_data_wrappers": (
+        "foreign_data_wrapper_catalog string,"
+        " foreign_data_wrapper_name string, authorization_identifier string,"
+        " library_name string, foreign_data_wrapper_language string"),
+    "information_schema_foreign_server_options": (
+        "foreign_server_catalog string, foreign_server_name string,"
+        " option_name string, option_value string"),
+    "information_schema_foreign_servers": (
+        "foreign_server_catalog string, foreign_server_name string,"
+        " foreign_data_wrapper_catalog string,"
+        " foreign_data_wrapper_name string, foreign_server_type string,"
+        " foreign_server_version string, authorization_identifier string"),
+    "information_schema_foreign_table_options": (
+        "foreign_table_catalog string, foreign_table_schema string,"
+        " foreign_table_name string, option_name string, option_value string"),
+    "information_schema_foreign_tables": (
+        "foreign_table_catalog string, foreign_table_schema string,"
+        " foreign_table_name string, foreign_server_catalog string,"
+        " foreign_server_name string"),
+    "information_schema_information_schema_catalog_name": (
+        "catalog_name string"),
+    "information_schema_key_column_usage": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, table_catalog string, table_schema string,"
+        " table_name string, column_name string, ordinal_position int,"
+        " position_in_unique_constraint string"),
+    "information_schema_parameters": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, ordinal_position string,"
+        " parameter_mode string, is_result string, as_locator string,"
+        " parameter_name string, data_type string,"
+        " character_maximum_length string, character_octet_length string,"
+        " character_set_catalog string, character_set_schema string,"
+        " character_set_name string, collation_catalog string,"
+        " collation_schema string, collation_name string,"
+        " numeric_precision string, numeric_precision_radix string,"
+        " numeric_scale string, datetime_precision string,"
+        " interval_type string, interval_precision string,"
+        " udt_catalog string, udt_schema string, udt_name string,"
+        " scope_catalog string, scope_schema string, scope_name string,"
+        " maximum_cardinality string, dtd_identifier string,"
+        " parameter_default string"),
+    "information_schema_referential_constraints": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, unique_constraint_catalog string,"
+        " unique_constraint_schema string, unique_constraint_name string,"
+        " match_option string, update_rule string, delete_rule string"),
+    "information_schema_role_column_grants": (
+        "grantor string, grantee string, table_catalog string,"
+        " table_schema string, table_name string, column_name string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_role_routine_grants": (
+        "grantor string, grantee string, specific_catalog string,"
+        " specific_schema string, specific_name string,"
+        " routine_catalog string, routine_schema string, routine_name string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_role_table_grants": (
+        "grantor string, grantee string, table_catalog string,"
+        " table_schema string, table_name string, privilege_type string,"
+        " is_grantable string, with_hierarchy string"),
+    "information_schema_role_udt_grants": (
+        "grantor string, grantee string, udt_catalog string,"
+        " udt_schema string, udt_name string, privilege_type string,"
+        " is_grantable string"),
+    "information_schema_role_usage_grants": (
+        "grantor string, grantee string, object_catalog string,"
+        " object_schema string, object_name string, object_type string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_routine_column_usage": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, routine_catalog string,"
+        " routine_schema string, routine_name string, table_catalog string,"
+        " table_schema string, table_name string, column_name string"),
+    "information_schema_routine_privileges": (
+        "grantor string, grantee string, specific_catalog string,"
+        " specific_schema string, specific_name string,"
+        " routine_catalog string, routine_schema string, routine_name string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_routine_routine_usage": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, routine_catalog string,"
+        " routine_schema string, routine_name string"),
+    "information_schema_routine_sequence_usage": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, routine_catalog string,"
+        " routine_schema string, routine_name string,"
+        " sequence_catalog string, sequence_schema string,"
+        " sequence_name string"),
+    "information_schema_routine_table_usage": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, routine_catalog string,"
+        " routine_schema string, routine_name string, table_catalog string,"
+        " table_schema string, table_name string"),
+    "information_schema_routines": (
+        "specific_catalog string, specific_schema string,"
+        " specific_name string, routine_catalog string,"
+        " routine_schema string, routine_name string, routine_type string,"
+        " module_catalog string, module_schema string, module_name string,"
+        " udt_catalog string, udt_schema string, udt_name string,"
+        " data_type string, character_maximum_length string,"
+        " character_octet_length string, character_set_catalog string,"
+        " character_set_schema string, character_set_name string,"
+        " collation_catalog string, collation_schema string,"
+        " collation_name string, numeric_precision string,"
+        " numeric_precision_radix string, numeric_scale string,"
+        " datetime_precision string, interval_type string,"
+        " interval_precision string, type_udt_catalog string,"
+        " type_udt_schema string, type_udt_name string, scope_catalog string,"
+        " scope_schema string, scope_name string, maximum_cardinality string,"
+        " dtd_identifier string, routine_body string,"
+        " routine_definition string, external_name string,"
+        " external_language string, parameter_style string,"
+        " is_deterministic string, sql_data_access string,"
+        " is_null_call string, sql_path string, schema_level_routine string,"
+        " max_dynamic_result_sets string, is_user_defined_cast string,"
+        " is_implicitly_invocable string, security_type string,"
+        " to_sql_specific_catalog string, to_sql_specific_schema string,"
+        " to_sql_specific_name string, as_locator string, created string,"
+        " last_altered string, new_savepoint_level string,"
+        " is_udt_dependent string, result_cast_from_data_type string,"
+        " result_cast_as_locator string, result_cast_char_max_length string,"
+        " result_cast_char_octet_length string,"
+        " result_cast_char_set_catalog string,"
+        " result_cast_char_set_schema string,"
+        " result_cast_char_set_name string,"
+        " result_cast_collation_catalog string,"
+        " result_cast_collation_schema string,"
+        " result_cast_collation_name string,"
+        " result_cast_numeric_precision string,"
+        " result_cast_numeric_precision_radix string,"
+        " result_cast_numeric_scale string,"
+        " result_cast_datetime_precision string,"
+        " result_cast_interval_type string,"
+        " result_cast_interval_precision string,"
+        " result_cast_type_udt_catalog string,"
+        " result_cast_type_udt_schema string,"
+        " result_cast_type_udt_name string, result_cast_scope_catalog string,"
+        " result_cast_scope_schema string, result_cast_scope_name string,"
+        " result_cast_maximum_cardinality string,"
+        " result_cast_dtd_identifier string"),
+    "information_schema_schemata": (
+        "catalog_name string, schema_name string, schema_owner string,"
+        " default_character_set_catalog string,"
+        " default_character_set_schema string,"
+        " default_character_set_name string, sql_path string"),
+    "information_schema_sequences": (
+        "sequence_catalog string, sequence_schema string,"
+        " sequence_name string, data_type string, numeric_precision string,"
+        " numeric_precision_radix string, numeric_scale string,"
+        " start_value string, minimum_value string, maximum_value string,"
+        " increment string, cycle_option string"),
+    "information_schema_sql_features": (
+        "feature_id string, feature_name string, sub_feature_id string,"
+        " sub_feature_name string, is_supported string,"
+        " is_verified_by string, comments string"),
+    "information_schema_sql_implementation_info": (
+        "implementation_info_id string, implementation_info_name string,"
+        " integer_value int, character_value string, comments string"),
+    "information_schema_sql_parts": (
+        "feature_id string, feature_name string, is_supported string,"
+        " is_verified_by string, comments string"),
+    "information_schema_sql_sizing": (
+        "sizing_id int, sizing_name string, supported_value int,"
+        " comments string"),
+    "information_schema_table_constraints": (
+        "constraint_catalog string, constraint_schema string,"
+        " constraint_name string, table_catalog string, table_schema string,"
+        " table_name string, constraint_type string, is_deferrable string,"
+        " initially_deferred string, enforced string, nulls_distinct string"),
+    "information_schema_table_privileges": (
+        "grantor string, grantee string, table_catalog string,"
+        " table_schema string, table_name string, privilege_type string,"
+        " is_grantable string, with_hierarchy string"),
+    "information_schema_tables": (
+        "table_catalog string, table_schema string, table_name string,"
+        " table_type string, self_referencing_column_name string,"
+        " reference_generation string, user_defined_type_catalog string,"
+        " user_defined_type_schema string, user_defined_type_name string,"
+        " is_insertable_into string, is_typed string, commit_action string"),
+    "information_schema_transforms": (
+        "udt_catalog string, udt_schema string, udt_name string,"
+        " specific_catalog string, specific_schema string,"
+        " specific_name string, group_name string, transform_type string"),
+    "information_schema_triggered_update_columns": (
+        "trigger_catalog string, trigger_schema string, trigger_name string,"
+        " event_object_catalog string, event_object_schema string,"
+        " event_object_table string, event_object_column string"),
+    "information_schema_triggers": (
+        "trigger_catalog string, trigger_schema string, trigger_name string,"
+        " event_manipulation string, event_object_catalog string,"
+        " event_object_schema string, event_object_table string,"
+        " action_order string, action_condition string,"
+        " action_statement string, action_orientation string,"
+        " action_timing string, action_reference_old_table string,"
+        " action_reference_new_table string, action_reference_old_row string,"
+        " action_reference_new_row string, created string"),
+    "information_schema_udt_privileges": (
+        "grantor string, grantee string, udt_catalog string,"
+        " udt_schema string, udt_name string, privilege_type string,"
+        " is_grantable string"),
+    "information_schema_usage_privileges": (
+        "grantor string, grantee string, object_catalog string,"
+        " object_schema string, object_name string, object_type string,"
+        " privilege_type string, is_grantable string"),
+    "information_schema_user_defined_types": (
+        "user_defined_type_catalog string, user_defined_type_schema string,"
+        " user_defined_type_name string, user_defined_type_category string,"
+        " is_instantiable string, is_final string, ordering_form string,"
+        " ordering_category string, ordering_routine_catalog string,"
+        " ordering_routine_schema string, ordering_routine_name string,"
+        " reference_type string, data_type string,"
+        " character_maximum_length string, character_octet_length string,"
+        " character_set_catalog string, character_set_schema string,"
+        " character_set_name string, collation_catalog string,"
+        " collation_schema string, collation_name string,"
+        " numeric_precision string, numeric_precision_radix string,"
+        " numeric_scale string, datetime_precision string,"
+        " interval_type string, interval_precision string,"
+        " source_dtd_identifier string, ref_dtd_identifier string"),
+    "information_schema_user_mapping_options": (
+        "authorization_identifier string, foreign_server_catalog string,"
+        " foreign_server_name string, option_name string,"
+        " option_value string"),
+    "information_schema_user_mappings": (
+        "authorization_identifier string, foreign_server_catalog string,"
+        " foreign_server_name string"),
+    "information_schema_view_column_usage": (
+        "view_catalog string, view_schema string, view_name string,"
+        " table_catalog string, table_schema string, table_name string,"
+        " column_name string"),
+    "information_schema_view_routine_usage": (
+        "table_catalog string, table_schema string, table_name string,"
+        " specific_catalog string, specific_schema string,"
+        " specific_name string"),
+    "information_schema_view_table_usage": (
+        "view_catalog string, view_schema string, view_name string,"
+        " table_catalog string, table_schema string, table_name string"),
+    "information_schema_views": (
+        "table_catalog string, table_schema string, table_name string,"
+        " view_definition string, check_option string, is_updatable string,"
+        " is_insertable_into string, is_trigger_updatable string,"
+        " is_trigger_deletable string, is_trigger_insertable_into string"),
+    # engine relations: the type-joined column core and the sdb_*
+    # system tables (reference pg_catalog/sdb_*.h)
+    "pg_attribute_core": (
+        "attrelid int, attname string, attnum int, atttypid int,"
+        " atttype string, attnotnull boolean, attisdropped boolean"),
+    "sdb_settings": (
+        "name string, setting string, unit string, category string,"
+        " vartype string, context string, boot_val string, reset_val string,"
+        " min_val string, max_val string, pending_restart boolean"),
+    "sdb_metrics": "name string, value double",
+    "sdb_progress": (
+        "pid int, datid int, usename string, datname string, state string,"
+        " query string, backend_start_us bigint, query_start_us bigint,"
+        " percent double, rows_processed bigint, rows_total bigint,"
+        " command string, io_type string, relid int, current_relid int,"
+        " phase string, bytes_processed bigint, bytes_total bigint,"
+        " tuples_processed bigint, tuples_total bigint, stage bigint,"
+        " stages_total bigint, step bigint, steps_total bigint,"
+        " items_processed bigint, items_total bigint"),
 }
 
-#: padded columns that value-level tests actually read get real typed
-#: defaults; everything else pads as CAST(NULL AS STRING)
-PAD_OVERRIDES: dict[str, dict[str, tuple[str, str]]] = {
+#: values of the columns no builder fills that value-level tests read;
+#: every other unfilled column is NULL
+DEFAULTS: dict[str, dict[str, object]] = {
     "pg_database": {
-        "datistemplate": ("boolean", "false"),
-        "datallowconn": ("boolean", "true"),
-        "dathasloginevt": ("boolean", "false"),
-        "datconnlimit": ("int", "-1"),
-        "datlocprovider": ("string", "'c'"),
-        "datcollate": ("string", "'C.UTF-8'"),
-        "datctype": ("string", "'C.UTF-8'"),
-        "datfrozenxid": ("int", "0"),
-        "datminmxid": ("int", "0"),
-        "dattablespace": ("int", "1663"),
+        "datistemplate": False, "datallowconn": True, "dathasloginevt": False,
+        "datconnlimit": -1, "datlocprovider": "c", "datcollate": "C.UTF-8",
+        "datctype": "C.UTF-8", "datfrozenxid": 0, "datminmxid": 0,
+        "dattablespace": 1663,
     },
     "pg_attribute": {
-        "attgenerated": ("string", "''"),
-        "attidentity": ("string", "''"),
-        "attisdropped": ("boolean", "false"),
-        "attislocal": ("boolean", "true"),
-        "attnotnull": ("boolean", "false"),
-        "atthasdef": ("boolean", "false"),
-        "atthasmissing": ("boolean", "false"),
-        "attbyval": ("boolean", "true"),
-        "attndims": ("int", "0"),
-        "attinhcount": ("int", "0"),
-        "attcollation": ("int", "0"),
-        "attstattarget": ("int", "-1"),
-        "attstorage": ("string", "'p'"),
-        "attalign": ("string", "'i'"),
-        "attcompression": ("string", "''"),
+        "attgenerated": "", "attidentity": "", "attislocal": True,
+        "atthasmissing": False, "attndims": 0, "attinhcount": 0,
+        "attcollation": 0, "attstattarget": -1, "attstorage": "p",
+        "attalign": "i", "attcompression": "",
     },
     "pg_class": {
-        "relpages": ("int", "0"),
-        "reltuples": ("float", "-1.0"),
-        "relallvisible": ("int", "0"),
-        "relallfrozen": ("int", "0"),
-        "reltoastrelid": ("int", "0"),
-        "relhasindex": ("boolean", "false"),
-        "relisshared": ("boolean", "false"),
-        "relpersistence": ("string", "'p'"),
-        "relnatts": ("int", "0"),
-        "relchecks": ("int", "0"),
-        "relhasrules": ("boolean", "false"),
-        "relhastriggers": ("boolean", "false"),
-        "relhassubclass": ("boolean", "false"),
-        "relrowsecurity": ("boolean", "false"),
-        "relforcerowsecurity": ("boolean", "false"),
-        "relispopulated": ("boolean", "true"),
-        "relreplident": ("string", "'d'"),
-        "relispartition": ("boolean", "false"),
-        "relrewrite": ("int", "0"),
-        "relfrozenxid": ("int", "0"),
-        "relminmxid": ("int", "0"),
-        "relam": ("int", "2"),
-        "relfilenode": ("int", "0"),
-        "reltablespace": ("int", "0"),
-        "reltype": ("int", "0"),
-        "reloftype": ("int", "0"),
-    },
-    "pg_roles": {
-        "rolinherit": ("boolean", "true"),
-        "rolcreaterole": ("boolean", "false"),
-        "rolcreatedb": ("boolean", "false"),
-        "rolcanlogin": ("boolean", "true"),
-        "rolreplication": ("boolean", "false"),
-        "rolbypassrls": ("boolean", "false"),
-        "rolconnlimit": ("int", "-1"),
-    },
-    "pg_authid": {
-        "rolinherit": ("boolean", "true"),
-        "rolcreaterole": ("boolean", "false"),
-        "rolcreatedb": ("boolean", "false"),
-        "rolreplication": ("boolean", "false"),
-        "rolbypassrls": ("boolean", "false"),
-        "rolconnlimit": ("int", "-1"),
+        "relpages": 0, "relallvisible": 0, "relallfrozen": 0,
+        "reltoastrelid": 0, "relisshared": False, "relpersistence": "p",
+        "relchecks": 0, "relhasrules": False, "relhastriggers": False,
+        "relhassubclass": False, "relrowsecurity": False,
+        "relforcerowsecurity": False, "relispopulated": True,
+        "relreplident": "d", "relispartition": False, "relrewrite": 0,
+        "relfrozenxid": 0, "relminmxid": 0, "relam": 2, "relfilenode": 0,
+        "reltype": 0, "reloftype": 0,
     },
     "pg_settings": {
-        "short_desc": ("string", "''"),
-        "extra_desc": ("string", "''"),
-        "context": ("string", "'user'"),
-        "vartype": ("string", "'string'"),
-        "source": ("string", "'default'"),
-        "boot_val": ("string", "''"),
-        "reset_val": ("string", "''"),
-        "pending_restart": ("boolean", "false"),
+        "extra_desc": "", "context": "user", "vartype": "string",
+        "source": "default", "boot_val": "", "reset_val": "",
+        "pending_restart": False,
     },
     "pg_proc": {
-        "pronamespace": ("int", "11"),
-        "proowner": ("int", "1000000"),
-        "prolang": ("int", "14"),
-        "prokind": ("string", "'f'"),
-        "prosecdef": ("boolean", "false"),
-        "proleakproof": ("boolean", "false"),
-        "proisstrict": ("boolean", "false"),
-        "provolatile": ("string", "'i'"),
-        "proparallel": ("string", "'s'"),
-        "pronargdefaults": ("int", "0"),
-        "prorettype": ("int", "25"),
-    },
-    "pg_namespace": {
-        "nspowner": ("int", "1000000"),
+        "pronamespace": 11, "proowner": 1000000, "prolang": 14,
+        "prokind": "f", "prosecdef": False, "proleakproof": False,
+        "proisstrict": False, "provolatile": "i", "proparallel": "s",
+        "pronargdefaults": 0, "prorettype": 25,
     },
     "information_schema_table_constraints": {
-        "enforced": ("string", "'YES'"),
-        "is_deferrable": ("string", "'NO'"),
-        "initially_deferred": ("string", "'NO'"),
-        "constraint_schema": ("string", "'public'"),
-        "constraint_catalog": ("string", "'serene'"),
-        "table_catalog": ("string", "'serene'"),
+        "enforced": "YES", "is_deferrable": "NO", "initially_deferred": "NO",
+        "constraint_schema": "public", "constraint_catalog": "serene",
+        "table_catalog": "serene",
     },
     "information_schema_routines": {
-        "routine_type": ("string", "'FUNCTION'"),
-        "external_language": ("string", "'SQL'"),
+        "external_language": "SQL",
     },
     "information_schema_tables": {
-        "is_insertable_into": ("string", "'YES'"),
-        "is_typed": ("string", "'NO'"),
+        "is_insertable_into": "YES", "is_typed": "NO",
     },
     "pg_constraint": {
-        "convalidated": ("boolean", "true"),
-        "condeferrable": ("boolean", "false"),
-        "condeferred": ("boolean", "false"),
-        "conenforced": ("boolean", "true"),
-        "conislocal": ("boolean", "true"),
-        "coninhcount": ("int", "0"),
-        "connoinherit": ("boolean", "true"),
-        "connamespace": ("int", "2200"),
+        "convalidated": True, "condeferrable": False, "condeferred": False,
+        "conenforced": True, "conislocal": True, "coninhcount": 0,
+        "connoinherit": True, "connamespace": 2200,
     },
     "pg_index": {
-        "indisunique": ("boolean", "false"),
-        "indisprimary": ("boolean", "false"),
-        "indisvalid": ("boolean", "true"),
-        "indisready": ("boolean", "true"),
-        "indislive": ("boolean", "true"),
+        "indisvalid": True, "indisready": True, "indislive": True,
     },
-}
-
-
-
-
-#: information_schema relations (same instrument, prefixed views)
-IS_FULL_COLUMNS: dict[str, list[str]] = {
-    'information_schema__pg_foreign_data_wrappers': [
-        'oid', 'fdwowner', 'fdwoptions', 'foreign_data_wrapper_catalog',
-        'foreign_data_wrapper_name', 'authorization_identifier',
-        'foreign_data_wrapper_language',
-    ],
-    'information_schema__pg_foreign_servers': [
-        'oid', 'srvoptions', 'foreign_server_catalog',
-        'foreign_server_name', 'foreign_data_wrapper_catalog',
-        'foreign_data_wrapper_name', 'foreign_server_type',
-        'foreign_server_version', 'authorization_identifier',
-    ],
-    'information_schema__pg_foreign_table_columns': [
-        'nspname', 'relname', 'attname', 'attfdwoptions',
-    ],
-    'information_schema__pg_foreign_tables': [
-        'foreign_table_catalog', 'foreign_table_schema',
-        'foreign_table_name', 'ftoptions', 'foreign_server_catalog',
-        'foreign_server_name', 'authorization_identifier',
-    ],
-    'information_schema__pg_user_mappings': [
-        'oid', 'umoptions', 'umuser', 'authorization_identifier',
-        'foreign_server_catalog', 'foreign_server_name', 'srvowner',
-    ],
-    'information_schema_administrable_role_authorizations': [
-        'grantee', 'role_name', 'is_grantable',
-    ],
-    'information_schema_applicable_roles': [
-        'grantee', 'role_name', 'is_grantable',
-    ],
-    'information_schema_attributes': [
-        'udt_catalog', 'udt_schema', 'udt_name', 'attribute_name',
-        'ordinal_position', 'attribute_default', 'is_nullable',
-        'data_type', 'character_maximum_length', 'character_octet_length',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'collation_catalog', 'collation_schema',
-        'collation_name', 'numeric_precision', 'numeric_precision_radix',
-        'numeric_scale', 'datetime_precision', 'interval_type',
-        'interval_precision', 'attribute_udt_catalog',
-        'attribute_udt_schema', 'attribute_udt_name', 'scope_catalog',
-        'scope_schema', 'scope_name', 'maximum_cardinality',
-        'dtd_identifier', 'is_derived_reference_attribute',
-    ],
-    'information_schema_character_sets': [
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'character_repertoire', 'form_of_use',
-        'default_collate_catalog', 'default_collate_schema',
-        'default_collate_name',
-    ],
-    'information_schema_check_constraint_routine_usage': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'specific_catalog', 'specific_schema', 'specific_name',
-    ],
-    'information_schema_check_constraints': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'check_clause',
-    ],
-    'information_schema_collation_character_set_applicability': [
-        'collation_catalog', 'collation_schema', 'collation_name',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name',
-    ],
-    'information_schema_collations': [
-        'collation_catalog', 'collation_schema', 'collation_name',
-        'pad_attribute',
-    ],
-    'information_schema_column_column_usage': [
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-        'dependent_column',
-    ],
-    'information_schema_column_domain_usage': [
-        'domain_catalog', 'domain_schema', 'domain_name', 'table_catalog',
-        'table_schema', 'table_name', 'column_name',
-    ],
-    'information_schema_column_options': [
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-        'option_name', 'option_value',
-    ],
-    'information_schema_column_privileges': [
-        'grantor', 'grantee', 'table_catalog', 'table_schema',
-        'table_name', 'column_name', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_column_udt_usage': [
-        'udt_catalog', 'udt_schema', 'udt_name', 'table_catalog',
-        'table_schema', 'table_name', 'column_name',
-    ],
-    'information_schema_columns': [
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-        'ordinal_position', 'column_default', 'is_nullable', 'data_type',
-        'character_maximum_length', 'character_octet_length',
-        'numeric_precision', 'numeric_precision_radix', 'numeric_scale',
-        'datetime_precision', 'interval_type', 'interval_precision',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'collation_catalog', 'collation_schema',
-        'collation_name', 'domain_catalog', 'domain_schema', 'domain_name',
-        'udt_catalog', 'udt_schema', 'udt_name', 'scope_catalog',
-        'scope_schema', 'scope_name', 'maximum_cardinality',
-        'dtd_identifier', 'is_self_referencing', 'is_identity',
-        'identity_generation', 'identity_start', 'identity_increment',
-        'identity_maximum', 'identity_minimum', 'identity_cycle',
-        'is_generated', 'generation_expression', 'is_updatable',
-    ],
-    'information_schema_constraint_column_usage': [
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-    ],
-    'information_schema_constraint_table_usage': [
-        'table_catalog', 'table_schema', 'table_name',
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-    ],
-    'information_schema_data_type_privileges': [
-        'object_catalog', 'object_schema', 'object_name', 'object_type',
-        'dtd_identifier',
-    ],
-    'information_schema_domain_constraints': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'domain_catalog', 'domain_schema', 'domain_name', 'is_deferrable',
-        'initially_deferred',
-    ],
-    'information_schema_domain_udt_usage': [
-        'udt_catalog', 'udt_schema', 'udt_name', 'domain_catalog',
-        'domain_schema', 'domain_name',
-    ],
-    'information_schema_domains': [
-        'domain_catalog', 'domain_schema', 'domain_name', 'data_type',
-        'character_maximum_length', 'character_octet_length',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'collation_catalog', 'collation_schema',
-        'collation_name', 'numeric_precision', 'numeric_precision_radix',
-        'numeric_scale', 'datetime_precision', 'interval_type',
-        'interval_precision', 'domain_default', 'udt_catalog',
-        'udt_schema', 'udt_name', 'scope_catalog', 'scope_schema',
-        'scope_name', 'maximum_cardinality', 'dtd_identifier',
-    ],
-    'information_schema_element_types': [
-        'object_catalog', 'object_schema', 'object_name', 'object_type',
-        'collection_type_identifier', 'data_type',
-        'character_maximum_length', 'character_octet_length',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'collation_catalog', 'collation_schema',
-        'collation_name', 'numeric_precision', 'numeric_precision_radix',
-        'numeric_scale', 'datetime_precision', 'interval_type',
-        'interval_precision', 'udt_catalog', 'udt_schema', 'udt_name',
-        'scope_catalog', 'scope_schema', 'scope_name',
-        'maximum_cardinality', 'dtd_identifier',
-    ],
-    'information_schema_enabled_roles': [
-        'role_name',
-    ],
-    'information_schema_foreign_data_wrapper_options': [
-        'foreign_data_wrapper_catalog', 'foreign_data_wrapper_name',
-        'option_name', 'option_value',
-    ],
-    'information_schema_foreign_data_wrappers': [
-        'foreign_data_wrapper_catalog', 'foreign_data_wrapper_name',
-        'authorization_identifier', 'library_name',
-        'foreign_data_wrapper_language',
-    ],
-    'information_schema_foreign_server_options': [
-        'foreign_server_catalog', 'foreign_server_name', 'option_name',
-        'option_value',
-    ],
-    'information_schema_foreign_servers': [
-        'foreign_server_catalog', 'foreign_server_name',
-        'foreign_data_wrapper_catalog', 'foreign_data_wrapper_name',
-        'foreign_server_type', 'foreign_server_version',
-        'authorization_identifier',
-    ],
-    'information_schema_foreign_table_options': [
-        'foreign_table_catalog', 'foreign_table_schema',
-        'foreign_table_name', 'option_name', 'option_value',
-    ],
-    'information_schema_foreign_tables': [
-        'foreign_table_catalog', 'foreign_table_schema',
-        'foreign_table_name', 'foreign_server_catalog',
-        'foreign_server_name',
-    ],
-    'information_schema_information_schema_catalog_name': [
-        'catalog_name',
-    ],
-    'information_schema_key_column_usage': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-        'ordinal_position', 'position_in_unique_constraint',
-    ],
-    'information_schema_parameters': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'ordinal_position', 'parameter_mode', 'is_result', 'as_locator',
-        'parameter_name', 'data_type', 'character_maximum_length',
-        'character_octet_length', 'character_set_catalog',
-        'character_set_schema', 'character_set_name', 'collation_catalog',
-        'collation_schema', 'collation_name', 'numeric_precision',
-        'numeric_precision_radix', 'numeric_scale', 'datetime_precision',
-        'interval_type', 'interval_precision', 'udt_catalog', 'udt_schema',
-        'udt_name', 'scope_catalog', 'scope_schema', 'scope_name',
-        'maximum_cardinality', 'dtd_identifier', 'parameter_default',
-    ],
-    'information_schema_referential_constraints': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'unique_constraint_catalog', 'unique_constraint_schema',
-        'unique_constraint_name', 'match_option', 'update_rule',
-        'delete_rule',
-    ],
-    'information_schema_role_column_grants': [
-        'grantor', 'grantee', 'table_catalog', 'table_schema',
-        'table_name', 'column_name', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_role_routine_grants': [
-        'grantor', 'grantee', 'specific_catalog', 'specific_schema',
-        'specific_name', 'routine_catalog', 'routine_schema',
-        'routine_name', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_role_table_grants': [
-        'grantor', 'grantee', 'table_catalog', 'table_schema',
-        'table_name', 'privilege_type', 'is_grantable', 'with_hierarchy',
-    ],
-    'information_schema_role_udt_grants': [
-        'grantor', 'grantee', 'udt_catalog', 'udt_schema', 'udt_name',
-        'privilege_type', 'is_grantable',
-    ],
-    'information_schema_role_usage_grants': [
-        'grantor', 'grantee', 'object_catalog', 'object_schema',
-        'object_name', 'object_type', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_routine_column_usage': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'routine_catalog', 'routine_schema', 'routine_name',
-        'table_catalog', 'table_schema', 'table_name', 'column_name',
-    ],
-    'information_schema_routine_privileges': [
-        'grantor', 'grantee', 'specific_catalog', 'specific_schema',
-        'specific_name', 'routine_catalog', 'routine_schema',
-        'routine_name', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_routine_routine_usage': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'routine_catalog', 'routine_schema', 'routine_name',
-    ],
-    'information_schema_routine_sequence_usage': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'routine_catalog', 'routine_schema', 'routine_name',
-        'sequence_catalog', 'sequence_schema', 'sequence_name',
-    ],
-    'information_schema_routine_table_usage': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'routine_catalog', 'routine_schema', 'routine_name',
-        'table_catalog', 'table_schema', 'table_name',
-    ],
-    'information_schema_routines': [
-        'specific_catalog', 'specific_schema', 'specific_name',
-        'routine_catalog', 'routine_schema', 'routine_name',
-        'routine_type', 'module_catalog', 'module_schema', 'module_name',
-        'udt_catalog', 'udt_schema', 'udt_name', 'data_type',
-        'character_maximum_length', 'character_octet_length',
-        'character_set_catalog', 'character_set_schema',
-        'character_set_name', 'collation_catalog', 'collation_schema',
-        'collation_name', 'numeric_precision', 'numeric_precision_radix',
-        'numeric_scale', 'datetime_precision', 'interval_type',
-        'interval_precision', 'type_udt_catalog', 'type_udt_schema',
-        'type_udt_name', 'scope_catalog', 'scope_schema', 'scope_name',
-        'maximum_cardinality', 'dtd_identifier', 'routine_body',
-        'routine_definition', 'external_name', 'external_language',
-        'parameter_style', 'is_deterministic', 'sql_data_access',
-        'is_null_call', 'sql_path', 'schema_level_routine',
-        'max_dynamic_result_sets', 'is_user_defined_cast',
-        'is_implicitly_invocable', 'security_type',
-        'to_sql_specific_catalog', 'to_sql_specific_schema',
-        'to_sql_specific_name', 'as_locator', 'created', 'last_altered',
-        'new_savepoint_level', 'is_udt_dependent',
-        'result_cast_from_data_type', 'result_cast_as_locator',
-        'result_cast_char_max_length', 'result_cast_char_octet_length',
-        'result_cast_char_set_catalog', 'result_cast_char_set_schema',
-        'result_cast_char_set_name', 'result_cast_collation_catalog',
-        'result_cast_collation_schema', 'result_cast_collation_name',
-        'result_cast_numeric_precision',
-        'result_cast_numeric_precision_radix', 'result_cast_numeric_scale',
-        'result_cast_datetime_precision', 'result_cast_interval_type',
-        'result_cast_interval_precision', 'result_cast_type_udt_catalog',
-        'result_cast_type_udt_schema', 'result_cast_type_udt_name',
-        'result_cast_scope_catalog', 'result_cast_scope_schema',
-        'result_cast_scope_name', 'result_cast_maximum_cardinality',
-        'result_cast_dtd_identifier',
-    ],
-    'information_schema_schemata': [
-        'catalog_name', 'schema_name', 'schema_owner',
-        'default_character_set_catalog', 'default_character_set_schema',
-        'default_character_set_name', 'sql_path',
-    ],
-    'information_schema_sequences': [
-        'sequence_catalog', 'sequence_schema', 'sequence_name',
-        'data_type', 'numeric_precision', 'numeric_precision_radix',
-        'numeric_scale', 'start_value', 'minimum_value', 'maximum_value',
-        'increment', 'cycle_option',
-    ],
-    'information_schema_sql_features': [
-        'feature_id', 'feature_name', 'sub_feature_id', 'sub_feature_name',
-        'is_supported', 'is_verified_by', 'comments',
-    ],
-    'information_schema_sql_implementation_info': [
-        'implementation_info_id', 'implementation_info_name',
-        'integer_value', 'character_value', 'comments',
-    ],
-    'information_schema_sql_parts': [
-        'feature_id', 'feature_name', 'is_supported', 'is_verified_by',
-        'comments',
-    ],
-    'information_schema_sql_sizing': [
-        'sizing_id', 'sizing_name', 'supported_value', 'comments',
-    ],
-    'information_schema_table_constraints': [
-        'constraint_catalog', 'constraint_schema', 'constraint_name',
-        'table_catalog', 'table_schema', 'table_name', 'constraint_type',
-        'is_deferrable', 'initially_deferred', 'enforced',
-        'nulls_distinct',
-    ],
-    'information_schema_table_privileges': [
-        'grantor', 'grantee', 'table_catalog', 'table_schema',
-        'table_name', 'privilege_type', 'is_grantable', 'with_hierarchy',
-    ],
-    'information_schema_tables': [
-        'table_catalog', 'table_schema', 'table_name', 'table_type',
-        'self_referencing_column_name', 'reference_generation',
-        'user_defined_type_catalog', 'user_defined_type_schema',
-        'user_defined_type_name', 'is_insertable_into', 'is_typed',
-        'commit_action',
-    ],
-    'information_schema_transforms': [
-        'udt_catalog', 'udt_schema', 'udt_name', 'specific_catalog',
-        'specific_schema', 'specific_name', 'group_name', 'transform_type',
-    ],
-    'information_schema_triggered_update_columns': [
-        'trigger_catalog', 'trigger_schema', 'trigger_name',
-        'event_object_catalog', 'event_object_schema',
-        'event_object_table', 'event_object_column',
-    ],
-    'information_schema_triggers': [
-        'trigger_catalog', 'trigger_schema', 'trigger_name',
-        'event_manipulation', 'event_object_catalog',
-        'event_object_schema', 'event_object_table', 'action_order',
-        'action_condition', 'action_statement', 'action_orientation',
-        'action_timing', 'action_reference_old_table',
-        'action_reference_new_table', 'action_reference_old_row',
-        'action_reference_new_row', 'created',
-    ],
-    'information_schema_udt_privileges': [
-        'grantor', 'grantee', 'udt_catalog', 'udt_schema', 'udt_name',
-        'privilege_type', 'is_grantable',
-    ],
-    'information_schema_usage_privileges': [
-        'grantor', 'grantee', 'object_catalog', 'object_schema',
-        'object_name', 'object_type', 'privilege_type', 'is_grantable',
-    ],
-    'information_schema_user_defined_types': [
-        'user_defined_type_catalog', 'user_defined_type_schema',
-        'user_defined_type_name', 'user_defined_type_category',
-        'is_instantiable', 'is_final', 'ordering_form',
-        'ordering_category', 'ordering_routine_catalog',
-        'ordering_routine_schema', 'ordering_routine_name',
-        'reference_type', 'data_type', 'character_maximum_length',
-        'character_octet_length', 'character_set_catalog',
-        'character_set_schema', 'character_set_name', 'collation_catalog',
-        'collation_schema', 'collation_name', 'numeric_precision',
-        'numeric_precision_radix', 'numeric_scale', 'datetime_precision',
-        'interval_type', 'interval_precision', 'source_dtd_identifier',
-        'ref_dtd_identifier',
-    ],
-    'information_schema_user_mapping_options': [
-        'authorization_identifier', 'foreign_server_catalog',
-        'foreign_server_name', 'option_name', 'option_value',
-    ],
-    'information_schema_user_mappings': [
-        'authorization_identifier', 'foreign_server_catalog',
-        'foreign_server_name',
-    ],
-    'information_schema_view_column_usage': [
-        'view_catalog', 'view_schema', 'view_name', 'table_catalog',
-        'table_schema', 'table_name', 'column_name',
-    ],
-    'information_schema_view_routine_usage': [
-        'table_catalog', 'table_schema', 'table_name', 'specific_catalog',
-        'specific_schema', 'specific_name',
-    ],
-    'information_schema_view_table_usage': [
-        'view_catalog', 'view_schema', 'view_name', 'table_catalog',
-        'table_schema', 'table_name',
-    ],
-    'information_schema_views': [
-        'table_catalog', 'table_schema', 'table_name', 'view_definition',
-        'check_option', 'is_updatable', 'is_insertable_into',
-        'is_trigger_updatable', 'is_trigger_deletable',
-        'is_trigger_insertable_into',
-    ],
 }
 
 
@@ -1288,40 +1180,6 @@ def pg_type_rows() -> list[tuple]:
     rows.append((705, "unknown", -2, False, "p", "X", False, True,
                  ",", 0, 0, 0))
     return sorted(rows)
-
-
-def pad_catalog_views(spark) -> None:
-    """Re-register every known catalog temp view with PG's full column
-    set: existing columns keep their live values; missing ones append as
-    typed defaults, then the projection reorders to PG's order."""
-    from pyspark.sql import functions as F
-
-    for rel, want in {**FULL_COLUMNS, **IS_FULL_COLUMNS}.items():
-        try:
-            df = spark.table(rel)
-        except Exception:
-            # relation not yet materialized by any live builder: an
-            # EMPTY relation with PG's full shape (pg_stat_progress_*)
-            over = PAD_OVERRIDES.get(rel, {})
-            ddl = ", ".join(
-                f"{c} {over.get(c, ('string', None))[0]}"
-                for c in want)
-            spark.createDataFrame([], ddl).createOrReplaceTempView(rel)
-            continue
-        have = set(df.columns)
-        if have == set(want) and df.columns == want:
-            continue
-        over = PAD_OVERRIDES.get(rel, {})
-        cols = []
-        for c in want:
-            if c in have:
-                cols.append(F.col(c))
-            else:
-                typ, lit = over.get(c, ("string", "NULL"))
-                cols.append(F.expr(lit).cast(typ).alias(c))
-        # strict projection: SELECT * must yield exactly PG's header
-        # (check_columns.test compares LIMIT 0 headers verbatim)
-        df.select(*cols).createOrReplaceTempView(rel)
 
 
 #: the reference's fixed system-relation oid assignment

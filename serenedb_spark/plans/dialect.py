@@ -261,7 +261,7 @@ _PUBLIC_SCHEMA_RE = re.compile(
 def rewrite_public_schema(sql: str) -> str:
     """Schema qualifiers → the session's temp-view names: `public.t` →
     `t`, `pg_catalog.pg_x` → `pg_x`, `information_schema.columns` →
-    `information_schema_columns` (install_pg_catalog's view names)."""
+    `information_schema_columns` (the catalog's view names)."""
     low = sql.lower()
     if ("public." not in low and "pg_catalog." not in low
             and "information_schema." not in low):

@@ -6102,7 +6102,7 @@ def _pg_catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine introspection differential (names + positions; types
     are engine-spelled and excluded)."""
     ss = _session_over(spark, sf_dir)
-    ss.install_pg_catalog()
+    ss.install_pg_catalog("information_schema_columns")
     tabs = ", ".join(f"'{t}'" for t in TABLES)
     return spark.sql(f"""
         SELECT table_name, column_name, ordinal_position

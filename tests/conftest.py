@@ -98,3 +98,20 @@ def assert_frames_match(spark_df, duck_rel, float_tol: float = 1e-9) -> None:
                 f"value mismatch in {c!r}: "
                 f"{[(x, y) for x, y, ok in zip(a, b, eq) if not ok][:5]}"
             )
+
+
+@pytest.fixture()
+def catalog_views(spark, monkeypatch):
+    """Names of the catalog views (pg_* / information_schema_* / sdb_*)
+    registered during the test, in registration order."""
+    frame_cls = type(spark.range(0))
+    seen = []
+    register = frame_cls.createOrReplaceTempView
+
+    def recording(df, name):
+        if name.startswith(("pg_", "information_schema_", "sdb_")):
+            seen.append(name)
+        return register(df, name)
+
+    monkeypatch.setattr(frame_cls, "createOrReplaceTempView", recording)
+    return seen

@@ -290,11 +290,6 @@ def run_file(ss, path: str, stop_info: dict | None = None) -> tuple[int, int]:
         if dbname not in dbs:
             dbs[dbname] = dbs.pop(cur, None)
             ss._current_db = dbname
-            if hasattr(ss, "_refresh_pg_database"):
-                try:
-                    ss._refresh_pg_database()
-                except Exception:
-                    pass
     passed = 0
     sessions = {None: ss}
     base_ss = ss

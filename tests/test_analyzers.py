@@ -84,3 +84,17 @@ def test_array_analyzer_three_way(spark):
     dk = con.sql("SELECT " + an.duckdb("['q', NULL, 'r']")
                  + " AS t").fetchone()[0]
     assert list(dk) == ["q", "r"]
+
+
+def test_create_dictionary_refuses_builtin_names():
+    """Built-in analyzers are shared by every session in the process:
+    CREATE TEXT SEARCH DICTIONARY refuses their names like DROP does."""
+    from serenedb_spark.analysis.analyzers import (create_dictionary,
+                                                   get_analyzer)
+
+    simple = get_analyzer("simple")
+    for name in ("keyword", "simple", "text"):
+        with pytest.raises(ValueError, match="built-in"):
+            create_dictionary(name, "ngram", mingram=2, maxgram=2)
+    assert get_analyzer("simple") is simple
+    assert simple.tokens("Hello World") == ["hello", "world"]

@@ -436,3 +436,72 @@ def test_pg_catalog_tranche5_rbac_tail(ss):
     rels = {t.name for t in ss.spark.catalog.listTables()
             if t.name.startswith(("pg_", "information_schema"))}
     assert len(rels) >= 41, sorted(rels)
+
+
+def test_pg_typeof_builds_no_catalog_relation(spark, catalog_views):
+    """pg_typeof names no catalog relation, so nothing is built."""
+    ss = SereneSession(spark)
+    assert ss.sql("SELECT pg_typeof(1) AS t").first().t == "integer"
+    assert catalog_views == []
+
+
+def test_pg_tables_after_create_builds_only_pg_tables(spark, catalog_views):
+    ss = SereneSession(spark)
+    ss.sql("CREATE TABLE sc_only_t (id INT)")
+    assert [r.tablename for r in ss.sql(
+        "SELECT tablename FROM pg_tables").collect()] == ["sc_only_t"]
+    assert catalog_views == ["pg_tables"]
+
+
+def test_pg_roles_reads_after_grant_api_agree(spark, catalog_views):
+    """The grant() API's principal gets its role row (and oid) on the
+    first read; a second read sees the same rows and builds only
+    pg_roles again."""
+    ss = SereneSession(spark)
+    ss.sql("CREATE TABLE gr_api_t (id INT)")
+    ss.grant("gr_api_bob", "gr_api_t")
+    q = "SELECT rolname, oid FROM pg_roles ORDER BY rolname"
+    first = ss.sql(q).collect()
+    assert "gr_api_bob" in {r.rolname for r in first}
+    assert ss.sql(q).collect() == first
+    assert catalog_views == ["pg_roles", "pg_roles"]
+
+
+def test_role_and_privilege_functions_fold(spark):
+    """pg_get_userbyid / has_table_privilege fold at rewrite time over
+    the session's roles and grants: an oid literal, a column operand,
+    and a granted/ungranted pair."""
+    ss = SereneSession(spark)
+    ss.sql("CREATE TABLE pf_t (id INT)")
+    ss.sql("CREATE ROLE pf_alice")
+    ss.sql("CREATE ROLE pf_bob")
+    ss.sql("GRANT SELECT ON pf_t TO pf_alice")
+    alice = ss.role_oid("pf_alice")
+    assert ss.sql(
+        "SELECT pg_get_userbyid(1000000) AS u").first().u == "postgres"
+    assert ss.sql(
+        f"SELECT pg_get_userbyid({alice}) AS u").first().u == "pf_alice"
+    rows = ss.sql(
+        "SELECT rolname, pg_get_userbyid(oid) AS u FROM pg_roles").collect()
+    assert {r.rolname for r in rows} >= {"postgres", "pf_alice", "pf_bob"}
+    assert all(r.rolname == r.u for r in rows)
+    got = ss.sql(
+        "SELECT has_table_privilege('pf_alice', 'pf_t', 'SELECT') AS a,"
+        " has_table_privilege('pf_bob', 'pf_t', 'SELECT') AS b").first()
+    assert (got.a, got.b) == (True, False)
+
+
+def test_pg_database_lists_every_database(spark):
+    """pg_database follows CREATE / DROP DATABASE: the current database,
+    then postgres, then the others."""
+    ss = SereneSession(spark)
+    ss.sql("CREATE DATABASE pgdb_two")
+    try:
+        assert [r.datname for r in ss.sql(
+            "SELECT datname FROM pg_database ORDER BY oid").collect()] == [
+            "serene", "postgres", "pgdb_two"]
+    finally:
+        ss.sql("DROP DATABASE pgdb_two")
+    assert [r.datname for r in ss.sql(
+        "SELECT datname FROM pg_database ORDER BY oid").collect()] == [
+        "serene", "postgres"]

@@ -122,22 +122,44 @@ def test_every_declared_name_is_set_with_its_declared_type(spark):
     assert set(SereneSession._TXN_STATE) <= set(store)
 
 
-def test_catalog_installs_once_without_a_change(spark, monkeypatch):
-    """The catalog fingerprint is taken over seeded state, so a second
-    pg_* reference with no change in between does not reinstall."""
-    calls = []
-    core = SereneSession._install_pg_catalog_core
-
-    def counting(self):
-        calls.append(1)
-        return core(self)
-
-    monkeypatch.setattr(SereneSession, "_install_pg_catalog_core",
-                        counting)
+def test_catalog_installs_once_without_a_change(spark, catalog_views):
+    """Each pg_* reference builds the relations it names and nothing
+    else: two pg_tables reads build pg_tables twice, no other view."""
     ss = SereneSession(spark)
     ss.sql("SELECT * FROM pg_tables").collect()
     ss.sql("SELECT * FROM pg_tables").collect()
-    assert len(calls) == 1
+    assert catalog_views == ["pg_tables", "pg_tables"]
+
+
+def _tablenames(ss) -> list:
+    return [r.tablename for r in ss.sql(
+        "SELECT tablename FROM pg_tables ORDER BY tablename").collect()]
+
+
+def test_two_sessions_on_one_spark_keep_their_own_catalog(spark):
+    """Temp views belong to the SparkSession: a session's pg_tables
+    must come from its own catalog even after a second session on the
+    same SparkSession read its own."""
+    a = SereneSession(spark)
+    b = SereneSession(spark)
+    a.sql("CREATE TABLE st_xs_a (id INT)")
+    assert _tablenames(a) == ["st_xs_a"]
+    b.sql("CREATE TABLE st_xs_b (id INT)")
+    assert _tablenames(b) == ["st_xs_b"]
+    assert _tablenames(a) == ["st_xs_a"]
+
+
+def test_shared_commit_keeps_set_valued_changes(pair):
+    """A detached block's CREATE SCHEMA (set-valued state) reaches the
+    shared store at COMMIT, so the peer's pg_namespace lists it."""
+    a, b = pair
+    a.sql("BEGIN")
+    a.sql("CREATE SCHEMA dtx_s")
+    a.sql("COMMIT")
+    assert "dtx_s" in a._schemas
+    names = {r.nspname for r in b.sql(
+        "SELECT nspname FROM pg_namespace").collect()}
+    assert "dtx_s" in names
 
 
 _LAZY = re.compile(
