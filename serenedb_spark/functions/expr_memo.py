@@ -16,30 +16,32 @@ tree; nothing execution-related is shared between runs).
 
 from __future__ import annotations
 
+import weakref
 from typing import Callable, TypeVar
 
 T = TypeVar("T")
 
 _CACHE: dict = {}
 
-
-def _gateway_token() -> int:
-    """Invalidate memoized JavaObject-backed Columns if the py4j gateway
-    is ever re-created (a fresh JVM makes old object handles dangling)."""
-    try:
-        from pyspark import SparkContext
-
-        return id(SparkContext._gateway)
-    except Exception:
-        return 0
+#: the py4j gateway _CACHE's Columns belong to. A fresh JVM makes old
+#: object handles dangling, so a new gateway empties the memo. Held
+#: weakly and compared with `is`: a dead gateway reads as None, even
+#: when its successor reuses its address.
+_owner: weakref.ref | None = None
 
 
 def memo_exprs(key: tuple, build: Callable[[], T]) -> T:
     """Return ``build()`` memoized on ``key`` (hashable values:
     primitives, or a frozen definition such as an ``Analyzer``) for the
     lifetime of the backing JVM gateway."""
-    full = (_gateway_token(), *key)
-    out = _CACHE.get(full)
+    from pyspark import SparkContext
+
+    global _owner
+    gateway = SparkContext._gateway
+    if _owner is None or _owner() is not gateway:
+        _CACHE.clear()
+        _owner = weakref.ref(gateway)
+    out = _CACHE.get(key)
     if out is None:
-        out = _CACHE[full] = build()
+        out = _CACHE[key] = build()
     return out

@@ -56,17 +56,26 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def local_frame(spark, schema: str, rows):
+    """`rows` (dicts by column name) as a relation of `schema` (a DDL
+    column list, every column nullable): JSON text in one `VALUES` list
+    parsed by `from_json`, so reading it runs no Spark job, where a
+    `createDataFrame` reply plans over a parallelized RDD and runs one."""
+    docs = [_sql_str(json.dumps(r)) for r in rows]
+    values = ", ".join(f"({d})" for d in docs) or "('{}')"
+    return spark.sql(
+        f"SELECT r.* FROM (SELECT from_json(j, {_sql_str(schema)})"
+        f" AS r FROM VALUES {values} AS t(j)"
+        f"{'' if docs else ' WHERE false'})")
+
+
 def frame(ss, rel: str):
     """`rel` built from `ss`'s current state, at its declared shape."""
     cols, build = BUILDERS.get(rel, ((), None))
     base = DEFAULTS.get(rel, {})
-    docs = [_sql_str(json.dumps({**base, **dict(zip(cols, row))}))
-            for row in (build(ss) if build else ())]
-    values = ", ".join(f"({d})" for d in docs) or "('{}')"
-    return ss.spark.sql(
-        f"SELECT r.* FROM (SELECT from_json(j, {_sql_str(COLUMNS[rel])})"
-        f" AS r FROM VALUES {values} AS t(j)"
-        f"{'' if docs else ' WHERE false'})")
+    return local_frame(ss.spark, COLUMNS[rel],
+                       [{**base, **dict(zip(cols, row))}
+                        for row in (build(ss) if build else ())])
 
 
 def register(ss, names) -> None:

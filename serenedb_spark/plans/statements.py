@@ -27,8 +27,8 @@ import re
 import time
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
+from serenedb_spark.pg_catalog import local_frame
 from serenedb_spark.plans.search_sql import (
     Tok,
     _find_clause,
@@ -166,13 +166,13 @@ def _expr_sql(toks: list[Tok], session=None) -> str:
 
 def _plan_df(session, lines: list[str]) -> DataFrame:
     """Rows of plan text under PG's ``QUERY PLAN`` column name."""
-    schema = StructType([StructField("QUERY PLAN", StringType())])
-    return session.spark.createDataFrame([(ln,) for ln in lines], schema)
+    return local_frame(session.spark, "`QUERY PLAN` string",
+                       [{"QUERY PLAN": ln} for ln in lines])
 
 
 def _status_df(session, tag: str, detail: str = "") -> DataFrame:
-    return session.spark.createDataFrame(
-        [(tag, detail)], "status string, detail string")
+    return local_frame(session.spark, "status string, detail string",
+                       [{"status": tag, "detail": detail}])
 
 
 def _ident(ts: _Stream) -> str:

@@ -1043,10 +1043,7 @@ class SereneSession:
             if (ddl.name in self._indexes
                     or ddl.name in self._vector_indexes):
                 if getattr(ddl, "if_not_exists", False):
-                    return self.spark.createDataFrame(
-                        [(ddl.name, ddl.table, "exists")],
-                        "index_name string, table_name string, "
-                        "fields string")
+                    return self._index_reply(ddl, "exists")
                 raise ValueError(
                     f'Index with name "{ddl.name}" already exists!')
             if ddl.table in self._indexes:
@@ -1109,10 +1106,8 @@ class SereneSession:
             # queryable relation over the table, and pgvector operators
             # compute exact distances against it
             self._vector_indexes[ddl.name] = (ddl.table, dict(ddl.vectors))
-            return self.spark.createDataFrame(
-                [(ddl.name, ddl.table, ",".join(
-                    f"{c} {o}" for c, o in ddl.vectors.items()))],
-                "index_name string, table_name string, fields string")
+            return self._index_reply(ddl, ",".join(
+                f"{c} {o}" for c, o in ddl.vectors.items()))
         try:
             df = self.table(ddl.table)
         except KeyError:
@@ -1195,10 +1190,16 @@ class SereneSession:
         idx.persist()
         self._index_sources[ddl.name] = ddl.table
         self._index_ddl[ddl.name] = ddl  # kept for VACUUM (REFRESH_TABLE)
-        return self.spark.createDataFrame(
-            [(ddl.name, ddl.table, ",".join(
-                f"{c} {a}" for c, a in ddl.fields.items()))],
-            "index_name string, table_name string, fields string")
+        return self._index_reply(ddl, ",".join(
+            f"{c} {a}" for c, a in ddl.fields.items()))
+
+    def _index_reply(self, ddl, fields: str) -> DataFrame:
+        from serenedb_spark.pg_catalog import local_frame
+
+        return local_frame(
+            self.spark, "index_name string, table_name string, fields string",
+            [{"index_name": ddl.name, "table_name": ddl.table,
+              "fields": fields}])
 
     def _tsdict_doc_ids(self, from_name: str, where_sql: str):
         """Evaluate a ts_dict doc-level WHERE to the matched doc-id set

@@ -207,6 +207,30 @@ def test_explain_select_query_plan_column(ss):
     assert "residual" in text
 
 
+def test_status_and_plan_replies_run_no_job(ss):
+    """A statement's reply is a local relation: collecting it runs no
+    Spark job (a createDataFrame reply runs one per collect)."""
+    sc = ss.spark.sparkContext
+    for i, (sql, schema, first) in enumerate([
+            ("INSERT INTO t VALUES (4, 'four', 40.0)",
+             "struct<status:string,detail:string>",
+             ("INSERT", "t")),
+            ("EXPLAIN SELECT a FROM t WHERE a = 1",
+             "struct<QUERY PLAN:string>",
+             ("== Parsed Logical Plan ==",))]):
+        df = ss.sql(sql)
+        group = f"reply-{i}"
+        sc.setJobGroup(group, sql)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setJobGroup("", "")
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], sql
+        assert df.schema.simpleString() == schema
+        assert all(f.nullable for f in df.schema)
+        assert tuple(rows[0]) == first
+
+
 def test_explain_dml_does_not_execute(ss):
     df = ss.sql("EXPLAIN DELETE FROM t WHERE a = 1")
     text = "\n".join(r[0] for r in df.collect())
