@@ -9,14 +9,17 @@ _delete.cpp, _truncate.cpp; server/search/search_db_wal.cpp,
 server/search/task.h:32-43, tick_domain.h:29-45).
 
 Spark-first translation:
-  * each insert batch becomes a NEW SEGMENT (its own postings/docstore
-    DataFrames built with the same build_index pipeline);
+  * each insert batch is a NEW SEGMENT in a tick-ordered op log: the
+    batch's rows as a DataFrame, nothing indexed yet;
   * deletes are TOMBSTONES (a doc_id set) — anti-joined at read time;
   * update = delete + insert (same as the reference's search update);
-  * ``refresh()`` produces the visible snapshot: union of segment postings
-    minus tombstones. Unlike Lucene/IResearch, term statistics are
-    recomputed over the merged postings, so deleted docs never pollute
-    df/avgdl (exactness the reference only regains after compaction);
+  * ``index()`` produces the visible snapshot: it folds the log into one
+    base relation (segment rows minus later tombstones and same-key
+    replacements) and runs build_index over ALL of it. Nothing is built
+    per segment: every refresh re-tokenizes every live row, so its cost
+    grows with the table and with the fold depth. Term statistics come
+    from that one build, so deleted docs never pollute df/avgdl
+    (exactness the reference only regains after compaction);
   * ``compact()`` materializes the merged state into a single segment —
     the reference's compaction coordinator collapsed to one Spark job.
     At 100 TB this is a partitioned parquet rewrite of only the term
@@ -96,9 +99,9 @@ class SearchTable:
         return out if out is not None else self._empty
 
     def index(self) -> InvertedIndex:
-        """Refresh: build the visible snapshot's index. Segment postings are
-        built per batch and unioned (incremental at scale); stats are exact
-        over the merged state."""
+        """Refresh: build the visible snapshot's index from scratch over
+        `current()`, the folded base relation; stats are exact over the
+        merged state. No postings are kept per segment between calls."""
         return build_index(self.current(), self.fields, key=self.key,
                            name=self.name)
 

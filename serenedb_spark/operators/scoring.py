@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from serenedb_spark.operators.indexing import InvertedIndex
+from serenedb_spark.sources.local import local_frame
 
 
 def _scored_base(idx: InvertedIndex, field: str, score_terms: DataFrame) -> DataFrame:
@@ -241,8 +242,9 @@ def scored_contributions_multi(
         parts = []
         spark = idx.postings.sparkSession
         for f in fields:
-            ft = [(t, b) for ff, t, b in field_terms if ff == f]
-            st = spark.createDataFrame(ft, "term string, boost double")
+            st = local_frame(spark, "term string, boost double", [
+                {"term": t, "boost": b} for ff, t, b in field_terms
+                if ff == f])
             contrib = scored_contributions(idx, f, st, scorer, **params)
             parts.append(contrib.select(
                 "doc_id", F.lit(f).alias("field"), "contrib"))

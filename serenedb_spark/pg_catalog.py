@@ -8,19 +8,18 @@ is computed from the one live catalog, never stored). A builder returns
 the rows of the columns it fills; the rest take their `DEFAULTS` value
 or NULL, and a declared relation without a builder is empty.
 
-Rows travel as JSON text inside one `VALUES` list parsed by
-`from_json`, so a built relation is a local relation: reading it runs
-no Spark job."""
+A built relation is a local relation (`sources.local.local_frame`):
+reading it runs no Spark job."""
 
 from __future__ import annotations
 
-import json
 import os
 import re
 
 from serenedb_spark.pg_catalog_columns import (
     COLUMNS, DEFAULTS, PG_SETTINGS_LIVE_DESC, PG_SETTINGS_ROWS,
     SYSTEM_RELATIONS, SYSTEM_RELATIONS_DYN, pg_type_rows)
+from serenedb_spark.sources.local import local_frame
 
 #: relation → (the columns its builder fills, builder(session) → rows)
 BUILDERS: dict[str, tuple[tuple[str, ...], object]] = {}
@@ -50,23 +49,6 @@ def named_relations(q: str) -> list[str]:
     """The declared relations a statement's text names."""
     found = {m.replace(".", "_", 1) for m in _NAME_RE.findall(q)}
     return sorted(found & COLUMNS.keys())
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def local_frame(spark, schema: str, rows):
-    """`rows` (dicts by column name) as a relation of `schema` (a DDL
-    column list, every column nullable): JSON text in one `VALUES` list
-    parsed by `from_json`, so reading it runs no Spark job, where a
-    `createDataFrame` reply plans over a parallelized RDD and runs one."""
-    docs = [_sql_str(json.dumps(r)) for r in rows]
-    values = ", ".join(f"({d})" for d in docs) or "('{}')"
-    return spark.sql(
-        f"SELECT r.* FROM (SELECT from_json(j, {_sql_str(schema)})"
-        f" AS r FROM VALUES {values} AS t(j)"
-        f"{'' if docs else ' WHERE false'})")
 
 
 def frame(ss, rel: str):

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from serenedb_spark.analysis.analyzers import Analyzer
 from serenedb_spark.operators.indexing import InvertedIndex
 from serenedb_spark.plans import tsquery as q
+from serenedb_spark.sources.local import local_frame
 
 #: ES `index.max_result_window` default — from/size paging past this
 #: collects offset+size rows driver-side, so it is refused exactly as
@@ -475,9 +476,11 @@ def es_search(
                 f"({MAX_RESULT_WINDOW}); use the scroll cursor for deep "
                 "paging"
             )
-        w = out.limit(offset + size)
-        rows = w.collect()[offset:]
-        return out.sparkSession.createDataFrame(rows, out.schema)
+        rows = out.limit(offset + size).collect()[offset:]
+        return local_frame(
+            out.sparkSession,
+            ", ".join(f"`{c}` {t}" for c, t in out.dtypes),
+            [r.asDict() for r in rows])
     return out.limit(size)
 
 

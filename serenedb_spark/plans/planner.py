@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from serenedb_spark.operators.indexing import InvertedIndex
 from serenedb_spark.plans import tsquery as q
+from serenedb_spark.sources.local import local_frame
 
 #: SET sdb_levenshtein_max_terms analogue (config_variables.cpp): a
 #: session-wide cap on fuzzy dictionary expansion, tightening any
@@ -81,13 +82,19 @@ def _postings_for_terms(idx: InvertedIndex, field: str, terms: list[str]) -> Dat
 
 
 def _terms_df(idx: InvertedIndex, terms: list[str]) -> DataFrame:
-    spark = idx.postings.sparkSession
-    return spark.createDataFrame([(t,) for t in terms], "term string")
+    return local_frame(idx.postings.sparkSession, "term string",
+                       [{"term": t} for t in terms])
 
 
 def _empty_terms(idx: InvertedIndex) -> DataFrame:
-    spark = idx.postings.sparkSession
-    return spark.createDataFrame([], "term string, boost double")
+    return _boosted_terms(idx, {})
+
+
+def _boosted_terms(idx: InvertedIndex, boosts: dict[str, float]) -> DataFrame:
+    """The (term, boost) relation of a driver-held term list."""
+    return local_frame(idx.postings.sparkSession, "term string, boost double",
+                       [{"term": t, "boost": float(b)}
+                        for t, b in boosts.items()])
 
 
 _POSIX_CLASSES = {
@@ -573,11 +580,8 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
     merged: dict[str, float] = {}
     for t, b in tl:
         merged[t] = max(merged.get(t, b), b)
-    spark = idx.postings.sparkSession
-    tdf = spark.createDataFrame(
-        [(t, float(b)) for t, b in merged.items()] or [],
-        "term string, boost double")
-    return CompiledQuery(docs, tdf, list(merged.items()))
+    return CompiledQuery(docs, _boosted_terms(idx, merged),
+                         list(merged.items()))
 
 
 def _union_terms_local(parts: list["CompiledQuery"]) -> list | None:

@@ -28,7 +28,6 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from serenedb_spark.pg_catalog import local_frame
 from serenedb_spark.plans.search_sql import (
     Tok,
     _find_clause,
@@ -40,6 +39,7 @@ from serenedb_spark.plans.search_sql import (
     has_search_construct,
     tokenize,
 )
+from serenedb_spark.sources.local import local_frame
 
 # --------------------------------------------------------------------------
 # shared helpers
@@ -173,6 +173,11 @@ def _plan_df(session, lines: list[str]) -> DataFrame:
 def _status_df(session, tag: str, detail: str = "") -> DataFrame:
     return local_frame(session.spark, "status string, detail string",
                        [{"status": tag, "detail": detail}])
+
+
+def _text_reply(session, name: str, val: str | None) -> DataFrame:
+    """One string value under column `name` (a scalar fold, SHOW)."""
+    return local_frame(session.spark, f"{name} string", [{name: val}])
 
 
 def _ident(ts: _Stream) -> str:
@@ -486,18 +491,17 @@ def _scalar_highlight(session, s: str):
         s, re.IGNORECASE | re.DOTALL)
     if m is None:
         return None
-    col = f"{m.group(5) or 'ts_highlight'} string"
+    col = m.group(5) or "ts_highlight"
     text = _hl_fold_text(m.group(1))
     if text is None or m.group(3) is not None:
         # NULL document or NULL offsets → NULL output
-        return session.spark.createDataFrame([(None,)], col)
+        return _text_reply(session, col, None)
     # elements may carry ::INTEGER casts and parenthesized negatives
     # (headline.test ARRAY form)
     nums = [int(x) for x in re.findall(r"(?<![\w])-?\d+(?!\w)",
                                        m.group(2))
             ] if m.group(2).strip() else []
-    return session.spark.createDataFrame(
-        [(py_highlight(text, nums, m.group(4)),)], col)
+    return _text_reply(session, col, py_highlight(text, nums, m.group(4)))
 
 
 def py_highlight(text: str | None, nums, opts: str | None) -> str | None:
@@ -718,17 +722,15 @@ def _scalar_highlight_dict(session, s: str):
 
     an = get_analyzer(args[0][1:-1])
     text = _hl_fold_text(args[1])
-    col = f"{alias} string"
     if text is None:
-        return session.spark.createDataFrame([(None,)], col)
+        return _text_reply(session, alias, None)
     node = parse_tsquery_text(args[2], an)
     groups = _match_groups(node)
     offs = py_match_offsets(text, groups)
     opts = None
     if len(args) > 3 and re.fullmatch(r"'(?:[^']|'')*'", args[3]):
         opts = args[3][1:-1].replace("''", "'")
-    return session.spark.createDataFrame(
-        [(py_highlight(text, offs, opts),)], col)
+    return _text_reply(session, alias, py_highlight(text, offs, opts))
 
 
 def _scalar_ts_offsets(session, s: str):
@@ -770,8 +772,9 @@ def _scalar_ts_offsets(session, s: str):
                 break
             spans.extend([i, i + len(t)])
             start = i + 1
-    return session.spark.createDataFrame(
-        [(spans,)], f"{m.group(4) or 'ts_offsets'} array<int>")
+    name = m.group(4) or "ts_offsets"
+    return local_frame(session.spark, f"{name} array<int>",
+                       [{name: spans}])
 
 
 _SEQFN_RE = re.compile(
@@ -846,8 +849,10 @@ def _scalar_seq_select(session, s: str) -> DataFrame | None:
                 f'sequence "{seq}" does not exist') from None
         cols.append(alias or fn)
         vals.append(val)
-    return session.spark.createDataFrame(
-        [tuple(vals)], ", ".join(f"{c} long" for c in cols))
+    # positional names inside, PG's (possibly repeated) names outside
+    return local_frame(
+        session.spark, ", ".join(f"c{i} long" for i in range(len(vals))),
+        [{f"c{i}": v for i, v in enumerate(vals)}]).toDF(*cols)
 
 
 #: COPY WITH options the engine honors (copy.test rejects unknown ones)
@@ -1392,13 +1397,10 @@ def _show(session, s: str) -> DataFrame | None:
                     e = tail
                 parts.append(e)
             val = ", ".join(parts)
-        return session.spark.createDataFrame(
-            [(val,)], f"{name} string")
+        return _text_reply(session, name, val)
     if not name.startswith("sdb_"):
         return None  # SHOW TABLES etc. stay Spark's
-    val = session.show_variable(name)
-    return session.spark.createDataFrame(
-        [(str(val),)], f"{name} string")
+    return _text_reply(session, name, str(session.show_variable(name)))
 
 
 # --------------------------------------------------------------------------
@@ -2717,7 +2719,7 @@ def _create_table(session, s, toks, ts: _Stream,
         if not or_replace:
             raise ValueError(f"table {name!r} already exists")
     schema_parts, after = _parse_coldefs(session, coldefs)
-    df = session.spark.createDataFrame([], ", ".join(schema_parts))
+    df = local_frame(session.spark, ", ".join(schema_parts), [])
     session.create_table(name, df, or_replace=or_replace)
     session._generated.pop(name, None)  # replaced table
     if storage is not None:

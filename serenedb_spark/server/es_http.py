@@ -41,6 +41,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import functions as F
 
+from serenedb_spark.sources.local import local_frame
+
 
 class EsShim:
     """Holds the engine objects the handlers need; one shim = one 'node'."""
@@ -120,32 +122,47 @@ class EsShim:
         return {"count": n}
 
     def bulk(self, payload: str, default_index: str | None = None) -> dict:
-        from serenedb_spark.sources.es_bulk import es_bulk, project_source
+        """POST /_bulk: the actions in payload order, each run of one
+        index and one kind (index/create or delete) one SearchTable
+        write. The rows are held on the driver, so grouping and counting
+        them runs no Spark job, and each write is a local relation."""
+        from itertools import groupby
 
-        df = es_bulk(self.spark, payload, default_index)
-        n = 0
-        # NB: r.index would resolve to Row's list-method, not the column
-        for index in [r["index"] for r in df.select("index").distinct().collect()]:
+        from serenedb_spark.sources.es_bulk import bulk_frame, parse_bulk
+
+        rows = parse_bulk(payload, default_index)
+        for (index, delete), run in groupby(
+                rows, key=lambda r: (r[0], r[2] is None)):
             st = self.tables[index]
-            sub = df.where((F.col("index") == index) & F.col("_source").isNotNull())
-            if getattr(st, "es_types", None) is not None:
-                # mapping-created index: shred _source into the full typed
-                # schema (every non-key column)
-                ddl = ", ".join(
-                    f"{c} {t}" for c, t in st._empty.dtypes if c != st.key
-                )
-                typed = project_source(sub, ddl).select(
-                    F.col("_id").alias(st.key),
-                    *[c for c, _t in st._empty.dtypes if c != st.key],
-                )
+            if delete:
+                st.delete(self._keys(st, [_id for _i, _id, _s in run]))
             else:
-                typed = project_source(sub, "text string").select(
-                    F.col("_id").alias(st.key), "text"
-                )
-            st.insert(typed)
+                # a later action on one _id replaces an earlier one
+                last = {r[1]: r for r in run}
+                st.insert(self._typed(st, bulk_frame(
+                    self.spark, list(last.values()))))
             self._drop_snapshot(index)
-            n += sub.count()
-        return {"errors": False, "items": n}
+        return {"errors": False, "items": len(rows)}
+
+    def _typed(self, st, docs):
+        """Bulk rows (index, _id, _source) → the table's columns: a
+        mapping-created index shreds _source into its full typed schema
+        (every non-key column), any other takes its `text` field."""
+        from serenedb_spark.sources.es_bulk import project_source
+
+        if getattr(st, "es_types", None) is not None:
+            typed = [(c, t) for c, t in st._empty.dtypes if c != st.key]
+        else:
+            typed = [("text", "string")]
+        return project_source(
+            docs, ", ".join(f"{c} {t}" for c, t in typed)).select(
+                F.col("_id").alias(st.key), *[c for c, _t in typed])
+
+    def _keys(self, st, ids: list[str]):
+        """ES `_id`s as a relation of the table's key column."""
+        key_t = dict(st._empty.dtypes).get(st.key, "string")
+        return local_frame(self.spark, f"{st.key} {key_t}", [
+            {st.key: i if key_t == "string" else int(i)} for i in ids])
 
     #: ES mapping type → (spark ddl type, analyzer | None)
     _ES_TYPES = {
@@ -181,7 +198,7 @@ class EsShim:
             es_types[col] = es_t
             if an is not None:
                 fields[col] = an
-        empty = self.spark.createDataFrame([], ", ".join(cols))
+        empty = local_frame(self.spark, ", ".join(cols), [])
         st = SearchTable(empty, fields or {"_id": "keyword"}, key="_id",
                          name=name)
         st.es_types = es_types
@@ -206,6 +223,8 @@ class EsShim:
         content hash so tests are reproducible)."""
         import hashlib
 
+        from serenedb_spark.sources.es_bulk import es_doc
+
         st = self.tables[index]
         if doc_id is None:
             doc_id = hashlib.md5(
@@ -215,18 +234,11 @@ class EsShim:
             st.current().where(F.col(st.key) == doc_id).limit(1).collect()
         ) if getattr(st, "es_types", None) is not None else False
         if getattr(st, "es_types", None) is not None:
-            ddl = ", ".join(
-                f"{c} {t}" for c, t in st._empty.dtypes if c != st.key)
-            src = self.spark.createDataFrame(
-                [(doc_id, json.dumps(body))], "_id string, _source string")
-            row = src.select(
-                F.col("_id").alias(st.key),
-                F.from_json("_source", ddl).alias("j"),
-            ).select(st.key, "j.*")
+            row = self._typed(st, es_doc(self.spark, index, body, doc_id))
         else:
-            row = self.spark.createDataFrame(
-                [(int(doc_id), str(body.get("text", "")))],
-                f"{st.key} long, text string")
+            row = local_frame(
+                self.spark, f"{st.key} long, text string",
+                [{st.key: int(doc_id), "text": str(body.get("text", ""))}])
         st.update(row)
         self._drop_snapshot(index)
         return {"_index": index, "_id": doc_id,
@@ -234,9 +246,7 @@ class EsShim:
 
     def delete_doc(self, index: str, doc_id: str) -> dict:
         st = self.tables[index]
-        key_t = dict(st._empty.dtypes).get(st.key, "string")
-        val = doc_id if key_t == "string" else int(doc_id)
-        st.delete(self.spark.createDataFrame([(val,)], f"{st.key} {key_t}"))
+        st.delete(self._keys(st, [doc_id]))
         self._drop_snapshot(index)
         return {"_index": index, "_id": doc_id, "result": "deleted"}
 

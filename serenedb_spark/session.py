@@ -21,6 +21,7 @@ from serenedb_spark.operators.scoring import score as _score
 from serenedb_spark.operators.sequences import SequenceCatalog
 from serenedb_spark.plans import tsquery as tsq
 from serenedb_spark.plans.planner import compile_query
+from serenedb_spark.sources.local import local_frame
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -590,9 +591,11 @@ class SereneSession:
                 raise ValueError(
                     "CREATE TEXT SEARCH DICTIONARY requires template=")
             a = create_dictionary(dic.name, str(template), **opts)
-            return self.spark.createDataFrame(
-                [(a.name, str(template), ",".join(a.features))],
-                "dictionary string, template string, features string")
+            return local_frame(
+                self.spark,
+                "dictionary string, template string, features string",
+                [{"dictionary": a.name, "template": str(template),
+                  "features": ",".join(a.features)}])
         drop = SS.parse_drop(q)
         if drop is not None:
             kind, name = drop
@@ -622,8 +625,8 @@ class SereneSession:
                         f"dictionary {name}\nHINT: Use DROP ... CASCADE "
                         "to drop the dependent objects too.")
                 drop_dictionary(name)
-            return self.spark.createDataFrame(
-                [(kind, name)], "dropped string, name string")
+            return local_frame(self.spark, "dropped string, name string",
+                               [{"dropped": kind, "name": name}])
         from serenedb_spark.plans.search_join import split_set_ops
 
         parts = split_set_ops(SS.tokenize(q.strip().rstrip(";")))
@@ -983,17 +986,13 @@ class SereneSession:
             alias = rest[1].text
         elif rest:
             return None
-        from pyspark.sql.types import (ArrayType, StringType, StructField,
-                                       StructType)
-
         from serenedb_spark.analysis.analyzers import get_analyzer
 
-        fn = toks[1].text.lower()
+        name = alias or toks[1].text.lower()
         an = get_analyzer(toks[3].text[1:-1].replace("''", "'"))
         tokens = an.tokens(toks[5].text[1:-1].replace("''", "'"))
-        schema = StructType([StructField(alias or fn,
-                                         ArrayType(StringType()))])
-        return self.spark.createDataFrame([(list(tokens),)], schema)
+        return local_frame(self.spark, f"`{name}` array<string>",
+                           [{name: list(tokens)}])
 
     def _inline_macros(self, expr_sql: str) -> str:
         """Substitute single-level scalar-macro calls with their bodies
@@ -1194,8 +1193,6 @@ class SereneSession:
             f"{c} {a}" for c, a in ddl.fields.items()))
 
     def _index_reply(self, ddl, fields: str) -> DataFrame:
-        from serenedb_spark.pg_catalog import local_frame
-
         return local_frame(
             self.spark, "index_name string, table_name string, fields string",
             [{"index_name": ddl.name, "table_name": ddl.table,
@@ -3013,9 +3010,9 @@ class SereneSession:
     def show_variables(self) -> DataFrame:
         """SHOW ALL over the sdb_* set (pg_settings carries the Spark
         conf separately)."""
-        rows = [(n, str(self.show_variable(n)))
-                for n in sorted(self._VARIABLE_DEFAULTS)]
-        return self.spark.createDataFrame(rows, "name string, value string")
+        return local_frame(self.spark, "name string, value string", [
+            {"name": n, "value": str(self.show_variable(n))}
+            for n in sorted(self._VARIABLE_DEFAULTS)])
 
     # ---- transactions (reference: multi-statement strings form an
     # implicit block mirroring postgres.c, pg_wire_session.cpp:1369-1398;

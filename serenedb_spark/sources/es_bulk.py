@@ -7,10 +7,12 @@ es_bulk(...)`` with auto-created ``(_id, _source)`` tables
 server/network/http/es/handlers.cpp:123-196).
 
 Spark-first: the bulk payload becomes a DataFrame of (index, _id,
-_source); `_source` stays a JSON string (the reference stores _source
-verbatim too) and typed columns are projected on demand with
-``from_json`` / ``get_json_object``. Ingest into an indexed table =
-SearchTable.insert (one tick per bulk request)."""
+_source), a local relation built on the driver, so no Spark job runs
+until the index is read; `_source` stays a JSON string (the reference
+stores _source verbatim too) and typed columns are projected on demand
+with ``from_json`` / ``get_json_object``. The `_bulk` route applies the
+actions in payload order: each run of one index and one kind is one
+SearchTable.insert or SearchTable.delete (one tick each)."""
 
 from __future__ import annotations
 
@@ -19,6 +21,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from serenedb_spark.sources.local import local_frame
 
 BULK_SCHEMA = "index string, _id string, _source string"
 
@@ -48,21 +52,24 @@ def parse_bulk(payload: str, default_index: str | None = None) -> list[tuple]:
     return rows
 
 
+def bulk_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """(index, _id, _source) rows held on the driver → a local relation
+    of BULK_SCHEMA (reading it runs no Spark job)."""
+    return local_frame(spark, BULK_SCHEMA, [
+        {"index": i, "_id": _id, "_source": src} for i, _id, src in rows])
+
+
 def es_bulk(spark: SparkSession, payload: str,
             default_index: str | None = None) -> DataFrame:
     """The es_bulk() table function: bulk body → DataFrame."""
-    return spark.createDataFrame(
-        parse_bulk(payload, default_index), BULK_SCHEMA
-    )
+    return bulk_frame(spark, parse_bulk(payload, default_index))
 
 
 def es_doc(spark: SparkSession, index: str, doc: dict,
            _id: str | None = None) -> DataFrame:
     """The _doc route: one document → one-row DataFrame."""
     _id = _id or uuid.uuid5(uuid.NAMESPACE_URL, json.dumps(doc, sort_keys=True)).hex
-    return spark.createDataFrame(
-        [(index, str(_id), json.dumps(doc))], BULK_SCHEMA
-    )
+    return bulk_frame(spark, [(index, str(_id), json.dumps(doc))])
 
 
 def project_source(df: DataFrame, schema: str) -> DataFrame:

@@ -462,3 +462,28 @@ def test_roles_and_set_role(ss):
         ss.sql("DROP ROLE alice")
     ss.sql("REVOKE SELECT ON t FROM alice")
     ss.sql("DROP ROLE alice")
+
+
+def test_show_and_dictionary_replies_run_no_job(ss):
+    """SHOW and the TEXT SEARCH DICTIONARY replies are local relations
+    too: collecting one runs no Spark job, rows and schema as before."""
+    sc = ss.spark.sparkContext
+    nprobe = str(ss.show_variable("sdb_nprobe"))
+    for i, (sql, schema, first) in enumerate([
+            ("SHOW sdb_nprobe", "struct<sdb_nprobe:string>", (nprobe,)),
+            ("CREATE TEXT SEARCH DICTIONARY reply_dict (template = 'simple')",
+             "struct<dictionary:string,template:string,features:string>",
+             ("reply_dict", "simple", "frequency,position")),
+            ("DROP TEXT SEARCH DICTIONARY reply_dict",
+             "struct<dropped:string,name:string>",
+             ("dictionary", "reply_dict"))]):
+        df = ss.sql(sql)
+        group = f"show-reply-{i}"
+        sc.setJobGroup(group, sql)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setJobGroup("", "")
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], sql
+        assert df.schema.simpleString() == schema
+        assert [tuple(r) for r in rows] == [first]
