@@ -98,11 +98,6 @@ class InvertedIndex:
     globals_: DataFrame = _Part()  # (field, n_docs, avgdl, total_dl)
     #: (field, doc_id) where the source column IS NOT NULL
     universe: DataFrame = _Part()
-    #: raw per-term total frequency carried across refreshes: deleted
-    #: docs stay counted until compaction — the reference's "freq keeps
-    #: the raw index value" (ts_dict_deletes.test:125). None = same as
-    #: term_stats (freshly built/compacted index).
-    term_stats_raw: DataFrame | None = None
 
     def analyzer(self, field: str) -> Analyzer:
         # resolved once and cached ON the index: the index embeds its

@@ -1,22 +1,31 @@
-"""Similarity search: exact top-k / radius, and IVF ANN for the scale path.
+"""Similarity search: exact top-k / radius, quantized kNN and IVF ANN.
 
 Reference surface: ANN scan claims (`ORDER BY emb <=> $v LIMIT k` →
 IRESEARCH_ANN_SCAN, radius → ANN_RANGE_SCAN;
 server/connector/optimizer/iresearch_plan.cpp:927-1014) over an `ivf(...)`
-opclass index (server/catalog/index.h:39-40, faiss-backed posting lists).
+opclass index (server/catalog/index.h:39-40, faiss-backed posting lists)
+whose `quant=sq8|pq|rabitq` option changes only how vectors are coded
+(server/catalog/index.cpp:300-460).
 
-Spark-first design:
-  * exact top-k: distance expression (JVM-side, functions/vector.py) +
-    ORDER BY/LIMIT — Catalyst executes it as TakeOrderedAndProject, i.e.
-    per-partition top-k then merge: no global sort, no shuffle of the corpus.
-  * radius: plain filter on the distance expression (predicate evaluated
-    in-scan, full pushdown).
-  * IVF: KMeans centroids (tiny, broadcast); vectors stored with a
-    centroid_id column (partition/bucket by centroid_id at scale). Query =
-    rank nprobe nearest centroids driver-side (centroids are small by
-    construction), scan only those partitions, exact re-rank. This is the
-    same probe shape as the reference's IVF posting lists — centroid_id
-    plays the posting-list key.
+A quantizer (SQ8, PQ, binary, RaBitQ) supplies three things and nothing
+else: its trained stats (driver-side constants, shipped into the plan as
+literals), the code columns it writes at build time (`code_cols`) and its
+distance from those codes to a query (`code_distance`). Written once here
+and shared by every quantizer:
+  * `encode` — the build step, (id, code columns);
+  * `_top_k` — select (id, distance), optional round, ORDER BY distance,
+    id LIMIT k; Catalyst runs it as TakeOrderedAndProject (per-partition
+    top-k then merge: no global sort, no shuffle of the corpus).
+    `knn_exact`, `knn_codes`, the rerank and `rrf_fuse` all end in it;
+  * `rerank_knn` — the quantized top-k shortlists, `knn_exact`'s distance
+    re-ranks just those rows (the reference's `SET sdb_rerank_factor`);
+  * `_dim_ranges` — the per-dimension min/max trainer;
+  * the IVF probe — KMeans centroids (tiny, driver-side), vectors stored
+    with a centroid_id column (partitioned by it at scale). A query ranks
+    the nprobe nearest centroids on the driver and scans only those
+    partitions — centroid_id plays the posting-list key. An `IVFIndex`
+    carries its quantizer (None or SQ8), so one `ivf_search` serves both.
+Radius search is a plain filter on the distance expression (in-scan).
 """
 
 from __future__ import annotations
@@ -29,6 +38,22 @@ from pyspark.sql import functions as F
 from serenedb_spark.functions import vector as V
 
 
+def _top_k(df: DataFrame, id_col: str, dist: Column, k: int | None,
+           round_to: int | None = None, name: str = "distance",
+           descending: bool = False) -> DataFrame:
+    """(id, dist AS name) ordered by (dist, id), first k rows. Spark's
+    round never yields -0.0, so rounded output renders canonically."""
+    if round_to is not None:
+        dist = F.round(dist, round_to)
+    order = F.col(name).desc() if descending else F.col(name)
+    out = df.select(id_col, dist.alias(name)).orderBy(order, F.col(id_col))
+    return out if k is None else out.limit(k)
+
+
+def _exact_distance(vec_col: str, query_vec, metric: str) -> Column:
+    return V.DISTANCES[metric](F.col(vec_col), V.lit_vector(query_vec))
+
+
 def knn_exact(
     df: DataFrame,
     vec_col: str,
@@ -39,14 +64,8 @@ def knn_exact(
     round_to: int | None = 6,
 ) -> DataFrame:
     """Brute-force top-k: TakeOrderedAndProject over a distance expression."""
-    dist = V.DISTANCES[metric](F.col(vec_col), V.lit_vector(query_vec))
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    return (
-        df.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance"), F.col(id_col))
-        .limit(k)
-    )
+    return _top_k(df, id_col, _exact_distance(vec_col, query_vec, metric),
+                  k, round_to)
 
 
 def radius_search(
@@ -59,7 +78,7 @@ def radius_search(
     round_to: int | None = 6,
 ) -> DataFrame:
     """`WHERE dist < r` — the ANN range scan, exact."""
-    dist = V.DISTANCES[metric](F.col(vec_col), V.lit_vector(query_vec))
+    dist = _exact_distance(vec_col, query_vec, metric)
     if round_to is not None:
         dist = F.round(dist, round_to)
     return df.select(id_col, dist.alias("distance")).where(
@@ -67,215 +86,59 @@ def radius_search(
     )
 
 
-# ---- IVF ------------------------------------------------------------------
+# ---- quantizers ------------------------------------------------------------
 
-class IVFIndex:
-    """IVF 'index': assigned vectors + a small centroid table.
-
-    At 100 TB the `assigned` table is written partitioned by centroid_id so
-    a query touches only nprobe partitions (partition pruning on the IN
-    filter); centroids stay a driver-side list (nlist ≤ a few thousand).
-    """
-
-    def __init__(self, assigned: DataFrame, centroids: list[list[float]],
-                 vec_col: str, id_col: str, metric: str):
-        self.assigned = assigned  # (id_col, vec_col, centroid_id)
-        self.centroids = centroids
-        self.vec_col = vec_col
-        self.id_col = id_col
-        self.metric = metric
-
-
-def ivf_build(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    nlist: int = 16,
-    metric: str = "cosine",
-    seed: int = 42,
-    max_iter: int = 20,
-    train_sample_factor: int | None = None,
-) -> IVFIndex:
-    """KMeans (MLlib, fixed seed) → centroid assignment column.
-
-    ``train_sample_factor`` (the reference's SET sdb_ivf_sample_factor):
-    fit the centroids on a deterministic sample of ~nlist × factor rows
-    instead of the full corpus — at 100 TB the KMeans fit must sample
-    (assignment still covers every row). None keeps full-corpus training
-    (the oracle-gated small-SF behavior)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feat = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__features"),
+def _dim_ranges(df: DataFrame,
+                vec_col: str) -> tuple[list[float], list[float]]:
+    """Per-dimension (mins, maxs). posexplode → one small aggregation plan
+    (a per-dim expression list would be 2×dim aggregates and blow up
+    codegen compile time). Order-independent, hence identical in every
+    engine."""
+    rows = (
+        df.select(F.posexplode(F.col(vec_col)).alias("i", "v"))
+        .groupBy("i")
+        .agg(F.min(F.col("v").cast("double")).alias("mn"),
+             F.max(F.col("v").cast("double")).alias("mx"))
+        .orderBy("i")
+        .collect()
     )
-    train = feat
-    if train_sample_factor is not None:
-        target = nlist * train_sample_factor
-        n = df.count()
-        if n > target:
-            train = feat.sample(fraction=min(1.0, target / n * 1.2),
-                                seed=seed).limit(target)
-    km = KMeans(k=nlist, seed=seed, maxIter=max_iter, featuresCol="__features")
-    model = km.fit(train)
-    assigned = model.transform(feat).select(
-        id_col, vec_col, F.col(model.getPredictionCol()).alias("centroid_id")
-    )
-    centroids = [c.tolist() for c in model.clusterCenters()]
-    return IVFIndex(assigned, centroids, vec_col, id_col, metric)
+    return [r.mn for r in rows], [r.mx for r in rows]
 
 
-def ivf_search(
-    idx: IVFIndex,
-    query_vec,
-    k: int = 10,
-    nprobe: int = 4,
-    round_to: int | None = 6,
-) -> DataFrame:
-    """nprobe nearest centroids (driver-side argsort of a tiny list) →
-    partition-pruned scan → exact re-rank top-k."""
-    import math
-
-    def _dist(c):
-        if idx.metric == "cosine":
-            dot = sum(a * b for a, b in zip(c, query_vec))
-            na = math.sqrt(sum(a * a for a in c))
-            nb = math.sqrt(sum(b * b for b in query_vec))
-            return 1.0 - dot / (na * nb) if na and nb else 1.0
-        if idx.metric in ("l2", "l2_sqr"):
-            return sum((a - b) ** 2 for a, b in zip(c, query_vec))
-        if idx.metric == "ip":
-            return -sum(a * b for a, b in zip(c, query_vec))
-        raise ValueError(idx.metric)
-
-    order = sorted(range(len(idx.centroids)), key=lambda i: (_dist(idx.centroids[i]), i))
-    probes = order[:nprobe]
-
-    cand = idx.assigned.where(F.col("centroid_id").isin(probes))
-    return knn_exact(
-        cand, idx.vec_col, query_vec, k=k, metric=idx.metric,
-        id_col=idx.id_col, round_to=round_to,
-    )
+def _midranges(df: DataFrame, vec_col: str) -> list[float]:
+    mins, maxs = _dim_ranges(df, vec_col)
+    return [(mn + mx) / 2.0 for mn, mx in zip(mins, maxs)]
 
 
-def ivf_save(idx: IVFIndex, path: str) -> None:
-    """Persist the IVF layout partitioned by centroid_id — a probe query
-    reads exactly nprobe of nlist partition directories (partition pruning,
-    the vector twin of the term-bucket postings layout). Centroids go to
-    the manifest (tiny, driver-side)."""
-    import json
-    import os
-
-    (
-        idx.assigned.repartition("centroid_id")
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(f"{path}/assigned")
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(f"{path}/manifest.json", "w") as f:
-        json.dump({
-            "centroids": idx.centroids,
-            "vec_col": idx.vec_col,
-            "id_col": idx.id_col,
-            "metric": idx.metric,
-        }, f)
+def _fold(arr: Column, zero=0.0) -> Column:
+    """Left-fold sum in element order (the oracles' list_reduce order)."""
+    return F.aggregate(arr, F.lit(zero), lambda acc, x: acc + x)
 
 
-def ivf_load(spark, path: str) -> IVFIndex:
-    import json
+class Quantizer:
+    """Trained stats plus two column builders: `code_cols(vec)`, the code
+    columns written at build time, and `code_distance(query_vec, metric)`,
+    the distance from those columns to a query."""
 
-    with open(f"{path}/manifest.json") as f:
-        m = json.load(f)
-    return IVFIndex(
-        spark.read.parquet(f"{path}/assigned"),
-        m["centroids"], m["vec_col"], m["id_col"], m["metric"],
-    )
+    #: the column the quantized top-k reports
+    dist_name = "distance"
+    #: the column the exact rerank reports
+    exact_name = "distance"
+    #: `encode`'s physical path under method="auto"
+    encode_method = "expr"
 
+    def code_cols(self, vec: Column) -> list[Column]:
+        raise NotImplementedError
 
-def ivf_sq8_build(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    nlist: int = 16,
-    metric: str = "cosine",
-    seed: int = 42,
-) -> tuple["IVFIndex", "SQ8"]:
-    """The reference's `ivf(quant=sq8)` opclass composed: KMeans centroid
-    assignment + per-dim SQ8 codes stored TOGETHER, so a probe reads
-    nprobe partitions of uint8 codes (dim bytes/row) and never the raw
-    vectors. Returns (ivf index whose `assigned` carries a codes column,
-    the SQ8 train stats)."""
-    sq = SQ8.train(df, vec_col)
-    ivf = ivf_build(df, vec_col, id_col, nlist=nlist, metric=metric, seed=seed)
-    assigned = ivf.assigned.withColumn("codes", sq.encode_col(F.col(vec_col)))
-    ivf.assigned = assigned
-    return ivf, sq
+    def code_distance(self, query_vec, metric: str) -> Column:
+        raise NotImplementedError
 
 
-def ivf_sq8_search(
-    idx: "IVFIndex",
-    sq: "SQ8",
-    query_vec,
-    k: int = 10,
-    nprobe: int = 4,
-    rerank_factor: int | None = None,
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Probe nprobe centroid partitions, rank by distance over DECODED SQ8
-    codes; with rerank_factor, the quantized pass selects k·factor
-    candidates and exact distances on raw vectors produce the final top-k
-    (`SET sdb_rerank_factor`)."""
-    import math
-
-    def _dist(c):
-        if idx.metric == "cosine":
-            dot = sum(a * b for a, b in zip(c, query_vec))
-            na = math.sqrt(sum(a * a for a in c))
-            nb = math.sqrt(sum(b * b for b in query_vec))
-            return 1.0 - dot / (na * nb) if na and nb else 1.0
-        if idx.metric in ("l2", "l2_sqr"):
-            return sum((a - b) ** 2 for a, b in zip(c, query_vec))
-        if idx.metric == "ip":
-            return -sum(a * b for a, b in zip(c, query_vec))
-        raise ValueError(idx.metric)
-
-    order = sorted(range(len(idx.centroids)),
-                   key=lambda i: (_dist(idx.centroids[i]), i))
-    cand = idx.assigned.where(F.col("centroid_id").isin(order[:nprobe]))
-
-    decoded = sq.decode_codes_col(F.col("codes"))
-    qdist = V.DISTANCES[idx.metric](decoded, V.lit_vector(query_vec))
-    if rerank_factor is None:
-        d = F.round(qdist, round_to) if round_to is not None else qdist
-        return (
-            cand.select(idx.id_col, d.alias("distance"))
-            .orderBy(F.col("distance"), F.col(idx.id_col))
-            .limit(k)
-        )
-    short = (
-        cand.select(idx.id_col, qdist.alias("qd"))
-        .orderBy(F.col("qd"), F.col(idx.id_col))
-        .limit(k * rerank_factor)
-        .select(idx.id_col)
-    )
-    return knn_exact(
-        idx.assigned.join(short, idx.id_col, "left_semi"),
-        idx.vec_col, query_vec, k=k, metric=idx.metric,
-        id_col=idx.id_col, round_to=round_to,
-    )
-
-
-# ---- SQ8 scalar quantization ---------------------------------------------
-
-class SQ8:
+class SQ8(Quantizer):
     """Per-dimension min/max scalar quantization to uint8 codes — the
-    reference's `quant=sq8` IVF option (server/catalog/index.cpp:300-460,
-    faiss SQ8). Train stats are tiny (2×dim floats) and live driver-side;
-    encode/decode are pure column arithmetic (portable to the oracle).
+    reference's `quant=sq8` (faiss SQ8). Train stats are 2×dim floats;
+    encode/decode are constant-size zip_with arithmetic (portable to the
+    oracle, and compile time does not grow with dim).
 
     code_i  = floor(255 * (v_i - min_i) / (max_i - min_i) + 0.5), clamped
     v̂_i     = min_i + code_i * (max_i - min_i) / 255
@@ -287,158 +150,46 @@ class SQ8:
 
     @classmethod
     def train(cls, df: DataFrame, vec_col: str = "embedding") -> "SQ8":
-        # posexplode → per-dimension min/max: one small aggregation plan
-        # (a per-dim expression list would be 2×dim aggregates and blow up
-        # codegen compile time)
-        rows = (
-            df.select(F.posexplode(F.col(vec_col)).alias("i", "v"))
-            .groupBy("i")
-            .agg(F.min(F.col("v").cast("double")).alias("mn"),
-                 F.max(F.col("v").cast("double")).alias("mx"))
-            .orderBy("i")
-            .collect()
-        )
-        return cls([r.mn for r in rows], [r.mx for r in rows])
+        return cls(*_dim_ranges(df, vec_col))
 
-    def _scale(self, i: int) -> float:
-        span = self.maxs[i] - self.mins[i]
-        return span if span != 0 else 1.0
+    def _scales(self) -> Column:
+        return V.lit_vector([mx - mn if mx - mn != 0 else 1.0
+                             for mn, mx in zip(self.mins, self.maxs)])
 
     def encode_col(self, vec: Column) -> Column:
-        codes = [
-            F.greatest(F.least(F.floor(
-                F.lit(255.0) * (F.element_at(vec, i + 1).cast("double")
-                                - F.lit(self.mins[i])) / F.lit(self._scale(i))
-                + F.lit(0.5)
-            ), F.lit(255.0)), F.lit(0.0)).cast("int")
-            for i in range(len(self.mins))
-        ]
-        return F.array(*codes)
-
-    def decode_col(self, codes: Column) -> Column:
-        vals = [
-            (F.lit(self.mins[i])
-             + F.element_at(codes, i + 1).cast("double")
-             * F.lit(self._scale(i)) / F.lit(255.0))
-            for i in range(len(self.mins))
-        ]
-        return F.array(*vals)
-
-    def decode_codes_col(self, codes: Column) -> Column:
-        """Reconstruct v̂ from stored codes with two zip_with HOFs — the
-        query-time path over a persisted codes column (constant-size
-        expression tree regardless of dim)."""
-        mins = F.array(*[F.lit(float(m)) for m in self.mins])
-        scales = F.array(*[F.lit(float(self._scale(i)))
-                           for i in range(len(self.mins))])
-        scaled = F.zip_with(
-            codes, scales, lambda c, sc: c.cast("double") * sc / F.lit(255.0)
-        )
-        return F.zip_with(scaled, mins, lambda s, mn: mn + s)
-
-    def requantize_col(self, vec: Column) -> Column:
-        """encode+decode fused as three zip_with HOFs — a constant-size
-        expression tree regardless of dim (the per-element form compiles
-        2×dim codegen branches and dominates query time)."""
-        mins = F.array(*[F.lit(float(m)) for m in self.mins])
-        scales = F.array(*[F.lit(float(self._scale(i)))
-                           for i in range(len(self.mins))])
-        shifted = F.zip_with(vec, mins, lambda v, mn: v.cast("double") - mn)
-        coded_scaled = F.zip_with(
-            shifted, scales,
+        shifted = F.zip_with(vec, V.lit_vector(self.mins),
+                             lambda v, mn: v.cast("double") - mn)
+        return F.zip_with(
+            shifted, self._scales(),
             lambda d, sc: F.greatest(
                 F.least(F.floor(F.lit(255.0) * d / sc + F.lit(0.5)),
                         F.lit(255.0)),
-                F.lit(0.0),
-            ) * sc / F.lit(255.0),
-        )
-        return F.zip_with(coded_scaled, mins, lambda c, mn: mn + c)
+                F.lit(0.0)).cast("int"))
 
-    def duckdb_decode(self, vec_sql: str) -> str:
-        """Encode+decode in one SQL expression (mirrors encode_col →
-        decode_col symbol-for-symbol)."""
-        parts = []
-        for i in range(len(self.mins)):
-            mn, sc = repr(self.mins[i]), repr(self._scale(i))
-            code = (
-                f"greatest(least(floor(255.0 * ({vec_sql}[{i + 1}]::DOUBLE"
-                f" - {mn}) / {sc} + 0.5), 255.0), 0.0)"
-            )
-            parts.append(f"{mn} + {code} * {sc} / 255.0")
-        return "[" + ", ".join(parts) + "]"
+    def decode_col(self, codes: Column) -> Column:
+        scaled = F.zip_with(
+            codes, self._scales(),
+            lambda c, sc: c.cast("double") * sc / F.lit(255.0))
+        return F.zip_with(scaled, V.lit_vector(self.mins),
+                          lambda s, mn: mn + s)
+
+    def code_cols(self, vec: Column) -> list[Column]:
+        return [self.encode_col(vec).alias("codes")]
+
+    def code_distance(self, query_vec, metric: str) -> Column:
+        return V.DISTANCES[metric](self.decode_col(F.col("codes")),
+                                   V.lit_vector(query_vec))
 
 
-def sq8_encode(
-    df: DataFrame, sq: SQ8, vec_col: str, id_col: str = "vec_id"
-) -> DataFrame:
-    """Index-build step: persistable (id, codes uint8-as-int) relation.
-    At scale this is written once next to the IVF layout; queries read the
-    codes column (dim bytes/row), never the raw vectors."""
-    return df.select(F.col(id_col), sq.encode_col(F.col(vec_col)).alias("codes"))
-
-
-def sq8_codes_knn(
-    codes_df: DataFrame,
-    sq: SQ8,
-    query_vec,
-    k: int = 10,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Quantized kNN over PRE-ENCODED codes: decode is constant-size column
-    arithmetic (3 zip_with HOFs); the corpus-wide encode happened once at
-    index build, not per query."""
-    decoded = sq.decode_codes_col(F.col("codes"))
-    dist = V.DISTANCES[metric](decoded, V.lit_vector(query_vec))
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    return (
-        codes_df.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def sq8_knn(
-    df: DataFrame,
-    sq: SQ8,
-    vec_col: str,
-    query_vec,
-    k: int = 10,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """Quantized kNN straight off raw vectors (one-shot / no prebuilt codes:
-    encodes the corpus in-query — prefer sq8_encode + sq8_codes_knn)."""
-    decoded = sq.requantize_col(F.col(vec_col))
-    dist = V.DISTANCES[metric](decoded, V.lit_vector(query_vec))
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    return (
-        df.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance"), F.col(id_col))
-        .limit(k)
-    )
-
-
-# ---- PQ product quantization ---------------------------------------------
-
-class PQ:
-    """Product quantization — the reference's `quant=pq` IVF option
-    (server/catalog/index.cpp:300-460, faiss PQ).
+class PQ(Quantizer):
+    """Product quantization — the reference's `quant=pq` (faiss PQ).
 
     The vector is split into ``m`` subspaces of ``dim/m`` dims; each
-    subvector is coded as the id of its nearest sub-centroid.  Query-time
-    distance is ADC (asymmetric distance computation): a tiny
-    ``m × ksub`` lookup table of query→centroid distances, summed by code.
-
-    Scale shape: codebooks are ``m·ksub·(dim/m)`` doubles — driver-side /
-    broadcast.  ``encode_col`` is pure column arithmetic executed once at
-    index-build time (codes stored alongside doc ids, 8 bits per
-    subspace); a query touches only the codes column + the LUT, never the
-    raw vectors (reads shrink dim·4 bytes → m bytes per row).
+    subvector is coded as the id of its nearest sub-centroid. The code
+    distance is ADC (asymmetric distance computation, squared L2 whatever
+    the metric): a tiny ``m × ksub`` lookup table of query→centroid
+    distances, summed by code. Codebooks are ``m·ksub·(dim/m)`` doubles,
+    driver-side; a query reads m codes per row, never the raw vectors.
     """
 
     def __init__(self, codebooks: list[list[list[float]]]):
@@ -487,12 +238,8 @@ class PQ:
         sub = F.transform(
             F.slice(vec, s * self.ds + 1, self.ds), lambda x: x.cast("double")
         )
-        return F.aggregate(
-            F.zip_with(sub, F.array(*[F.lit(c) for c in centroid]),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        return _fold(F.zip_with(sub, V.lit_vector(centroid),
+                                lambda x, y: (x - y) * (x - y)))
 
     def encode_col(self, vec: Column) -> Column:
         """array<int> of m 1-based codes (first-minimum tie-break — matches
@@ -506,9 +253,12 @@ class PQ:
             codes.append(F.array_position(dists, F.array_min(dists)))
         return F.array(*[c.cast("int") for c in codes])
 
-    def adc_lut(self, query_vec) -> list[list[float]]:
-        """m × ksub squared-L2 from the query subvector to each centroid
-        (sequential fold, mirroring _sub_dist / the SQL oracle)."""
+    def code_cols(self, vec: Column) -> list[Column]:
+        return [self.encode_col(vec).alias("codes")]
+
+    def code_distance(self, query_vec, metric: str) -> Column:
+        # the LUT: squared L2 from each query subvector to each centroid,
+        # folded in dimension order like _sub_dist and the SQL oracle
         lut = []
         for s in range(self.m):
             row = []
@@ -518,256 +268,51 @@ class PQ:
                     d = float(query_vec[s * self.ds + i]) - self.codebooks[s][j][i]
                     acc = acc + d * d
                 row.append(acc)
-            lut.append(row)
-        return lut
-
-    def adc_dist_col(self, codes: Column, query_vec) -> Column:
-        lut = self.adc_lut(query_vec)
-        lut_col = F.array(*[
-            F.array(*[F.lit(v) for v in row]) for row in lut
-        ])
-        return F.aggregate(
-            F.zip_with(codes, lut_col, lambda c, row: F.element_at(row, c)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+            lut.append(V.lit_vector(row))
+        return _fold(F.zip_with(F.col("codes"), F.array(*lut),
+                                lambda c, row: F.element_at(row, c)))
 
 
-def pq_encode(
-    df: DataFrame, pq: PQ, vec_col: str, id_col: str = "vec_id"
-) -> DataFrame:
-    """Index-build step: (id, codes array<int>, m bytes/row). Persist once;
-    ADC queries read codes + a broadcast LUT, never the raw vectors."""
-    return df.select(F.col(id_col), pq.encode_col(F.col(vec_col)).alias("codes"))
+class BinaryQuant(Quantizer):
+    """1-bit-per-dimension sign quantization — the uncorrected core of the
+    reference's `quant=rabitq` family: bit_i = v_i > mid_i with mid the
+    per-dim midrange; the code distance is Hamming (an integer, exact in
+    every engine). Midrange (not mean) keeps training order-independent.
+    32× smaller than float32 at scale (int arrays here, for portable
+    exactness)."""
 
-
-def pq_codes_adc_knn(
-    codes_df: DataFrame,
-    pq: PQ,
-    query_vec,
-    k: int = 10,
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """ADC top-k over PRE-ENCODED codes: per-query work is an m-element LUT
-    lookup-sum per row — the reads shrink from dim·4 bytes to m bytes."""
-    dist = pq.adc_dist_col(F.col("codes"), query_vec)
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    return (
-        codes_df.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_adc_knn(
-    df: DataFrame,
-    pq: PQ,
-    vec_col: str,
-    query_vec,
-    k: int = 10,
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """PQ top-k off raw vectors (one-shot; prefer pq_encode +
-    pq_codes_adc_knn so the corpus-wide encode happens at build time)."""
-    codes = pq.encode_col(F.col(vec_col))
-    dist = pq.adc_dist_col(codes, query_vec)
-    if round_to is not None:
-        dist = F.round(dist, round_to)
-    return (
-        df.select(id_col, dist.alias("distance"))
-        .orderBy(F.col("distance"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_rerank_knn(
-    df: DataFrame,
-    pq: PQ,
-    vec_col: str,
-    query_vec,
-    k: int = 10,
-    rerank_factor: int = 10,
-    metric: str = "l2_sqr",
-    id_col: str = "vec_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """PQ with exact re-rank — the reference's `SET sdb_rerank_factor`
-    pattern (server/connector/duckdb_table_function.h:88-124): ADC selects
-    k·rerank_factor candidates from codes alone, then exact distances on
-    just those rows produce the final top-k.  At scale the expensive exact
-    pass reads `k·factor` raw vectors instead of the corpus."""
-    cand = pq_adc_knn(df, pq, vec_col, query_vec, k=k * rerank_factor,
-                      id_col=id_col, round_to=None).select(id_col)
-    return knn_exact(df.join(cand, id_col, "left_semi"), vec_col, query_vec,
-                     k=k, metric=metric, id_col=id_col, round_to=round_to)
-
-
-# ---- binary (sign) quantization ------------------------------------------
-
-class BinaryQuant:
-    """1-bit-per-dimension sign quantization — the binary-code family the
-    reference exposes as `quant=rabitq` (server/catalog/index.cpp:300-460).
-    This is the uncorrected core: bit_i = v_i > mid_i with mid the per-dim
-    midrange; query distance = Hamming.  (RaBitQ proper adds a random
-    rotation and a scalar correction factor — documented deviation; the
-    storage/bandwidth shape, 32× smaller than float32, is what matters at
-    scale.)  Midrange (not mean) keeps training order-independent, hence
-    bit-identical across engines."""
+    dist_name = "hamming"
 
     def __init__(self, mids: list[float]):
         self.mids = mids
 
     @classmethod
     def train(cls, df: DataFrame, vec_col: str = "embedding") -> "BinaryQuant":
-        rows = (
-            df.select(F.posexplode(F.col(vec_col)).alias("i", "v"))
-            .groupBy("i")
-            .agg(F.min(F.col("v").cast("double")).alias("mn"),
-                 F.max(F.col("v").cast("double")).alias("mx"))
-            .orderBy("i")
-            .collect()
-        )
-        return cls([(r.mn + r.mx) / 2.0 for r in rows])
+        return cls(_midranges(df, vec_col))
 
-    def bits_col(self, vec: Column) -> Column:
-        mids = F.array(*[F.lit(m) for m in self.mids])
-        return F.zip_with(
-            vec, mids,
-            lambda v, mid: F.when(v.cast("double") > mid, F.lit(1)).otherwise(F.lit(0)),
-        )
+    def code_cols(self, vec: Column) -> list[Column]:
+        return [F.zip_with(
+            vec, V.lit_vector(self.mids),
+            lambda v, mid: F.when(v.cast("double") > mid, F.lit(1))
+            .otherwise(F.lit(0)),
+        ).alias("bits")]
 
-    def query_bits(self, query_vec) -> list[int]:
-        return [1 if float(q) > m else 0 for q, m in zip(query_vec, self.mids)]
+    def code_distance(self, query_vec, metric: str) -> Column:
+        qb = F.array(*[F.lit(1 if float(q) > m else 0)
+                       for q, m in zip(query_vec, self.mids)])
+        return _fold(
+            F.zip_with(F.col("bits"), qb, lambda a, b: F.when(
+                a != b, F.lit(1)).otherwise(F.lit(0))),
+            zero=0)
 
 
-def binary_encode(
-    df: DataFrame, bq: BinaryQuant, vec_col: str, id_col: str = "vec_id"
-) -> DataFrame:
-    """Index-build step: (id, bits array<int>) — 32× smaller than float32
-    at scale (persisted as packed bits; kept as an int array here for
-    engine-portable exactness)."""
-    return df.select(F.col(id_col), bq.bits_col(F.col(vec_col)).alias("bits"))
-
-
-def binary_bits_knn(
-    bits_df: DataFrame,
-    bq: BinaryQuant,
-    query_vec,
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Hamming top-k over PRE-ENCODED bits — per-query cost is a bit
-    comparison fold, no corpus-wide quantization."""
-    qb = F.array(*[F.lit(b) for b in bq.query_bits(query_vec)])
-    hamming = F.aggregate(
-        F.zip_with(F.col("bits"), qb,
-                   lambda a, b: F.when(a != b, F.lit(1)).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        bits_df.select(id_col, hamming.alias("hamming"))
-        .orderBy(F.col("hamming"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def binary_hamming_knn(
-    df: DataFrame,
-    bq: BinaryQuant,
-    vec_col: str,
-    query_vec,
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Binary-quantized top-k by Hamming distance (integer — exact parity;
-    one-shot path, prefer binary_encode + binary_bits_knn)."""
-    qb = F.array(*[F.lit(b) for b in bq.query_bits(query_vec)])
-    hamming = F.aggregate(
-        F.zip_with(bq.bits_col(F.col(vec_col)), qb,
-                   lambda a, b: F.when(a != b, F.lit(1)).otherwise(F.lit(0))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        df.select(id_col, hamming.alias("hamming"))
-        .orderBy(F.col("hamming"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def rrf_fuse(
-    ranked_a: DataFrame,
-    ranked_b: DataFrame,
-    id_col: str = "doc_id",
-    k: int = 60,
-    limit: int | None = 10,
-) -> DataFrame:
-    """Reciprocal-rank fusion of two ranked lists (the standard hybrid
-    text+vector combiner): score = Σ 1/(k + rank_i); docs missing from a
-    list contribute 0. Inputs must carry a ``rank`` column (1-based).
-
-    Scale shape: both inputs are already top-N (small); the fusion is a
-    broadcast-sized full-outer join + sort."""
-    a = ranked_a.select(F.col(id_col), F.col("rank").alias("rank_a"))
-    b = ranked_b.select(F.col(id_col), F.col("rank").alias("rank_b"))
-    fused = (
-        a.join(b, id_col, "full_outer")
-        .select(
-            id_col,
-            F.round(
-                F.coalesce(1.0 / (F.lit(k) + F.col("rank_a")), F.lit(0.0))
-                + F.coalesce(1.0 / (F.lit(k) + F.col("rank_b")), F.lit(0.0)),
-                6,
-            ).alias("rrf_score"),
-        )
-        .orderBy(F.col("rrf_score").desc(), F.col(id_col))
-    )
-    return fused.limit(limit) if limit is not None else fused
-
-
-def ranked(df: DataFrame, order_col: str, id_col: str = "doc_id",
-           ascending: bool = True) -> DataFrame:
-    """Attach a deterministic 1-based ``rank`` ((order_col, id) ordering)."""
-    from pyspark.sql import Window
-
-    oc = F.col(order_col) if ascending else F.col(order_col).desc()
-    w = Window.orderBy(oc, F.col(id_col))
-    return df.withColumn("rank", F.row_number().over(w))
-
-
-def hybrid_search(
-    docs_with_vec: DataFrame,
-    match_ids: DataFrame,
-    vec_col: str,
-    query_vec,
-    k: int = 10,
-    metric: str = "cosine",
-    id_col: str = "doc_id",
-    round_to: int | None = 6,
-) -> DataFrame:
-    """FTS filter ∧ ANN order (reference demo4 Q3 hybrid shape): semi-join
-    the text-match doc ids, then exact top-k by vector distance."""
-    filtered = docs_with_vec.join(match_ids, id_col, "left_semi")
-    return knn_exact(
-        filtered, vec_col, query_vec, k=k, metric=metric,
-        id_col=id_col, round_to=round_to,
-    )
-
-
-# ---- RaBitQ binary quantization -------------------------------------------
-
-class RaBitQ:
+class RaBitQ(Quantizer):
     """RaBitQ-style 1-bit quantization (the reference's `quant=rabitq`
-    family, server/catalog/index.cpp:300-460; published algorithm: Gao &
-    Long, SIGMOD 2024): residuals against a fixed centroid are passed
-    through a SEEDED random orthogonal rotation, the sign bits of the
-    rotated residual are stored together with two per-vector correction
-    scalars (residual norm, <quantized-unit, unit>), and queries use the
-    unbiased inner-product estimator
+    family; published algorithm: Gao & Long, SIGMOD 2024): residuals
+    against a fixed centroid are passed through a SEEDED random orthogonal
+    rotation, the sign bits of the rotated residual are stored together
+    with two per-vector correction scalars (residual norm, <quantized-unit,
+    unit>), and the code distance is the unbiased estimator
 
         <o, q̂> ≈ <ō, q̂> / <ō, ô>
         dist²(x, q) ≈ ||o||² + ||q-c||² - 2 ||o|| ||q-c|| <o, q̂>
@@ -779,13 +324,28 @@ class RaBitQ:
     stays oracle-gated. The centroid is the per-dim midrange (order-
     independent, unlike a float mean); the rotation is Q from the QR of a
     seeded Gaussian matrix, shipped as literals into both engines.
+
+    Two encode paths: ``expr`` — column expressions with the rotation as
+    dim² literals, bit-identical to the oracle but impossible to compile
+    at real embedding dims (1536² ≈ 2.4M literal nodes); ``numpy`` —
+    Arrow-batched mapInPandas, the rotation broadcast once (float64,
+    ~18 MB at 1536 dims), one BLAS matmul per batch; its pairwise
+    summation may differ from the left-fold in the last ulp. ``auto``
+    picks expr at/below 64 dims (every gate query), numpy above.
     """
+
+    dist_name = "est_d2"
+    exact_name = "d2"
 
     def __init__(self, centroid: list[float], rotation: list[list[float]]):
         self.centroid = centroid
         self.rotation = rotation          # row-major: rot[j] = output dim j
         self.dim = len(centroid)
         self._inv_sqrt_d = 1.0 / math.sqrt(self.dim)
+
+    @property
+    def encode_method(self) -> str:
+        return "expr" if self.dim <= 64 else "numpy"
 
     @staticmethod
     def rotation_matrix(dim: int, seed: int = 7) -> list[list[float]]:
@@ -802,34 +362,17 @@ class RaBitQ:
     @classmethod
     def train(cls, df: DataFrame, vec_col: str = "embedding",
               seed: int = 7) -> "RaBitQ":
-        rows = (
-            df.select(F.posexplode(F.col(vec_col)).alias("i", "v"))
-            .groupBy("i")
-            .agg(F.min(F.col("v").cast("double")).alias("mn"),
-                 F.max(F.col("v").cast("double")).alias("mx"))
-            .orderBy("i")
-            .collect()
-        )
-        centroid = [(r.mn + r.mx) / 2.0 for r in rows]
+        centroid = _midranges(df, vec_col)
         return cls(centroid, cls.rotation_matrix(len(centroid), seed))
 
-    # -- shared arithmetic, in all three representations --------------------
-
-    def _rot_col(self, res: Column, j: int) -> Column:
-        row = F.array(*[F.lit(x) for x in self.rotation[j]])
-        return F.aggregate(
-            F.zip_with(res, row, lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x)
-
-    def encode_col(self, vec: Column) -> tuple[Column, Column, Column]:
-        """(bits array<int>, norm double, obar_dot_o double) for one data
-        vector column."""
-        cen = F.array(*[F.lit(c) for c in self.centroid])
-        res = F.zip_with(vec, cen, lambda v, c: v.cast("double") - c)
-        norm = F.sqrt(F.aggregate(
-            F.transform(res, lambda x: x * x),
-            F.lit(0.0), lambda acc, x: acc + x))
-        rots = [self._rot_col(res, j) for j in range(self.dim)]
+    def code_cols(self, vec: Column) -> list[Column]:
+        """bits array<int>, norm double, obar_o double."""
+        res = F.zip_with(vec, V.lit_vector(self.centroid),
+                         lambda v, c: v.cast("double") - c)
+        norm = F.sqrt(_fold(F.transform(res, lambda x: x * x)))
+        rots = [_fold(F.zip_with(res, V.lit_vector(self.rotation[j]),
+                                 lambda a, b: a * b))
+                for j in range(self.dim)]
         bits = F.array(*[
             F.when(r > 0, F.lit(1)).otherwise(F.lit(0)) for r in rots])
         # <ō, o> = Σ ±(1/√D)·rot_j / ||res|| — left fold in dim order
@@ -842,7 +385,45 @@ class RaBitQ:
         for t in signed[1:]:
             acc = acc + t
         obar_o = F.when(norm > 0, acc / norm).otherwise(F.lit(0.0))
-        return bits, norm, obar_o
+        return [bits.alias("bits"), norm.alias("norm"),
+                obar_o.alias("obar_o")]
+
+    def encode_numpy(self, df: DataFrame, vec_col: str,
+                     id_col: str) -> DataFrame:
+        """The code columns by mapInPandas + one matmul per Arrow batch."""
+        import numpy as np
+
+        b_rot = df.sparkSession.sparkContext.broadcast(
+            np.asarray(self.rotation, dtype=np.float64))
+        cen = np.asarray(self.centroid, dtype=np.float64)
+        s = self._inv_sqrt_d
+
+        def encode_batches(batches):
+            import pandas as pd
+
+            rot_t = b_rot.value.T  # res @ R.T: rot[:, j] = res · rotation[j]
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                vecs = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                res = vecs - cen
+                norm = np.sqrt((res * res).sum(axis=1))
+                rot = res @ rot_t
+                signed = np.where(rot > 0, s, -s) * rot
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    obar = np.where(norm > 0, signed.sum(axis=1) / norm, 0.0)
+                yield pd.DataFrame({
+                    id_col: pdf[id_col],
+                    "bits": list((rot > 0).astype(np.int32)),
+                    "norm": norm,
+                    "obar_o": obar,
+                })
+
+        out_schema = (f"{id_col} {df.schema[id_col].dataType.simpleString()},"
+                      " bits array<int>, norm double, obar_o double")
+        return df.select(id_col, vec_col).mapInPandas(
+            encode_batches, schema=out_schema)
 
     def query_transform(self, query_vec,
                         fast: bool | None = None) -> tuple[list[float], float]:
@@ -879,170 +460,269 @@ class RaBitQ:
             rot.append(acc / qnorm if qnorm > 0 else 0.0)
         return rot, qnorm
 
+    def code_distance(self, query_vec, metric: str) -> Column:
+        qrot, qnorm = self.query_transform(query_vec)
+        s = F.lit(self._inv_sqrt_d)
+        obar_q = _fold(F.zip_with(
+            F.col("bits"), V.lit_vector(qrot),
+            lambda b, qv: (F.when(b == 1, s).otherwise(-s)) * qv))
+        est_oq = F.when(F.col("obar_o") != 0.0,
+                        obar_q / F.col("obar_o")).otherwise(F.lit(0.0))
+        return (F.col("norm") * F.col("norm") + F.lit(qnorm * qnorm)
+                - F.lit(2.0) * F.col("norm") * F.lit(qnorm) * est_oq)
 
-def rabitq_encode(df: DataFrame, rq: RaBitQ, vec_col: str,
-                  id_col: str = "vec_id", method: str = "auto") -> DataFrame:
-    """Index-build step: (id, bits, norm, obar_o) — 1 bit/dim + two
-    correction doubles per vector.
 
-    Two physical paths behind one API:
-      * ``expr``  — pure column expressions; the rotation is dim² literals
-        in the plan, which whole-stage-codegens fine at oracle-gate dims
-        but CANNOT compile at real embedding dims (1536² ≈ 2.4M literal
-        nodes). Bit-identical to the DuckDB oracle — the gated path.
-      * ``numpy`` — Arrow-batched mapInPandas; the rotation matrix ships
-        ONCE as an sc.broadcast (float64, ~18 MB at 1536 dims), each
-        batch is one BLAS matmul. Build-time only; numpy's pairwise
-        summation may differ from the left-fold in the last ulp, so this
-        path is for scale, not for the hash-matching oracle.
-    ``auto`` picks expr at/below 64 dims (every gate query), numpy above.
-    """
+def encode(df: DataFrame, q: Quantizer, vec_col: str,
+           id_col: str = "vec_id", method: str = "auto") -> DataFrame:
+    """Index-build step: (id, the quantizer's code columns). Written once
+    and persisted; queries read the codes, never the raw vectors."""
     if method == "auto":
-        method = "expr" if rq.dim <= 64 else "numpy"
-    if method == "expr":
-        bits, norm, obar_o = rq.encode_col(F.col(vec_col))
-        return df.select(F.col(id_col), bits.alias("bits"),
-                         norm.alias("norm"), obar_o.alias("obar_o"))
-
-    import numpy as np
-
-    spark = df.sparkSession
-    b_rot = spark.sparkContext.broadcast(
-        np.asarray(rq.rotation, dtype=np.float64))
-    cen = np.asarray(rq.centroid, dtype=np.float64)
-    s = rq._inv_sqrt_d
-    id_field = df.schema[id_col]
-
-    def encode_batches(batches):
-        rot_t = b_rot.value.T  # res @ R.T: rot[:, j] = res · rotation[j]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            res = vecs - cen
-            norm = np.sqrt((res * res).sum(axis=1))
-            rot = res @ rot_t
-            bits = (rot > 0).astype(np.int32)
-            signed = np.where(rot > 0, s, -s) * rot
-            with np.errstate(divide="ignore", invalid="ignore"):
-                obar = np.where(norm > 0, signed.sum(axis=1) / norm, 0.0)
-            import pandas as pd
-
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "bits": list(bits),
-                "norm": norm,
-                "obar_o": obar,
-            })
-
-    out_schema = (f"{id_col} {id_field.dataType.simpleString()},"
-                  " bits array<int>, norm double, obar_o double")
-    return df.select(id_col, vec_col).mapInPandas(
-        encode_batches, schema=out_schema)
+        method = q.encode_method
+    if method == "numpy":
+        return q.encode_numpy(df, vec_col, id_col)
+    return df.select(F.col(id_col), *q.code_cols(F.col(vec_col)))
 
 
-def rabitq_codes_knn(codes: DataFrame, rq: RaBitQ, query_vec,
-                     k: int = 10, round_to: int = 6,
-                     id_col: str = "vec_id") -> DataFrame:
-    """Top-k by the RaBitQ estimated distance over PRE-ENCODED codes:
-    per-row work is one ±1/√D dot with the rotated query + scalar
-    algebra — no float vectors touched at query time."""
-    qrot, qnorm = rq.query_transform(query_vec)
-    qarr = F.array(*[F.lit(x) for x in qrot])
-    s = F.lit(rq._inv_sqrt_d)
-    obar_q = F.aggregate(
-        F.zip_with(F.col("bits"), qarr,
-                   lambda b, qv: (F.when(b == 1, s).otherwise(-s)) * qv),
-        F.lit(0.0), lambda acc, x: acc + x)
-    est_oq = F.when(F.col("obar_o") != 0.0,
-                    obar_q / F.col("obar_o")).otherwise(F.lit(0.0))
-    est_d2 = (F.col("norm") * F.col("norm") + F.lit(qnorm * qnorm)
-              - F.lit(2.0) * F.col("norm") * F.lit(qnorm) * est_oq)
-    # + 0.0 canonicalizes IEEE -0.0 (the gate hashes rendered strings)
-    return (
-        codes.select(id_col,
-                     (F.round(est_d2, round_to) + F.lit(0.0))
-                     .alias("est_d2"))
-        .orderBy("est_d2", id_col)
-        .limit(k)
+def knn_codes(
+    codes: DataFrame,
+    q: Quantizer,
+    query_vec,
+    k: int = 10,
+    metric: str = "cosine",
+    id_col: str = "vec_id",
+    round_to: int | None = 6,
+) -> DataFrame:
+    """Quantized top-k over PRE-ENCODED codes: per-query work is the code
+    distance per row; the corpus-wide encode happened once at build."""
+    return _top_k(codes, id_col, q.code_distance(query_vec, metric), k,
+                  round_to, q.dist_name)
+
+
+def rerank_knn(
+    codes: DataFrame,
+    vectors: DataFrame,
+    q: Quantizer,
+    query_vec,
+    k: int = 10,
+    shortlist: int = 100,
+    vec_col: str = "embedding",
+    metric: str = "l2_sqr",
+    id_col: str = "vec_id",
+    round_to: int | None = 6,
+) -> DataFrame:
+    """Quantized shortlist → exact re-rank (the reference's `SET
+    sdb_rerank_factor`, server/connector/duckdb_table_function.h:88-124):
+    the quantized top-`shortlist` from codes alone, then exact distances
+    on just those rows give the top-k — at scale the float columns are
+    read through a semi-join on the shortlist."""
+    short = knn_codes(codes, q, query_vec, shortlist, metric, id_col,
+                      round_to).select(id_col)
+    return _top_k(vectors.join(short, id_col, "left_semi"), id_col,
+                  _exact_distance(vec_col, query_vec, metric), k, round_to,
+                  q.exact_name)
+
+
+# ---- IVF ------------------------------------------------------------------
+
+class IVFIndex:
+    """IVF 'index': assigned vectors + a small centroid table, and the
+    quantizer whose codes `assigned` carries (None: raw vectors only).
+
+    At 100 TB the `assigned` table is written partitioned by centroid_id so
+    a query touches only nprobe partitions (partition pruning on the IN
+    filter); centroids stay a driver-side list (nlist ≤ a few thousand).
+    """
+
+    def __init__(self, assigned: DataFrame, centroids: list[list[float]],
+                 vec_col: str, id_col: str, metric: str,
+                 quant: SQ8 | None = None):
+        self.assigned = assigned  # (id_col, vec_col, centroid_id[, codes])
+        self.centroids = centroids
+        self.vec_col = vec_col
+        self.id_col = id_col
+        self.metric = metric
+        self.quant = quant
+
+
+def ivf_build(
+    df: DataFrame,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    nlist: int = 16,
+    metric: str = "cosine",
+    seed: int = 42,
+    max_iter: int = 20,
+    train_sample_factor: int | None = None,
+    quant: str | None = None,
+) -> IVFIndex:
+    """KMeans (MLlib, fixed seed) → centroid assignment column; with
+    ``quant="sq8"`` (the reference's `ivf(quant=sq8)`) the SQ8 codes are
+    stored beside it, so a probe reads nprobe partitions of uint8 codes.
+
+    ``train_sample_factor`` (the reference's SET sdb_ivf_sample_factor):
+    fit the centroids on ~nlist × factor rows instead of the full corpus —
+    at 100 TB the KMeans fit must sample (assignment still covers every
+    row). The sample is the rows of least id hash: deterministic whatever
+    the partitioning. None keeps full-corpus training."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    if quant not in (None, "sq8"):
+        raise ValueError(f"unknown quant {quant!r}")
+    sq = SQ8.train(df, vec_col) if quant == "sq8" else None
+    feat = df.select(
+        F.col(id_col),
+        F.col(vec_col),
+        array_to_vector(
+            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        ).alias("__features"),
+    )
+    train = feat
+    if train_sample_factor is not None:
+        target = nlist * train_sample_factor
+        if df.count() > target:
+            keep = _top_k(df, id_col, F.xxhash64(F.col(id_col), F.lit(seed)),
+                          target).select(id_col)
+            train = feat.join(keep, id_col, "left_semi")
+    km = KMeans(k=nlist, seed=seed, maxIter=max_iter, featuresCol="__features")
+    model = km.fit(train)
+    assigned = model.transform(feat).select(
+        id_col, vec_col, F.col(model.getPredictionCol()).alias("centroid_id"),
+        *(sq.code_cols(F.col(vec_col)) if sq else []),
+    )
+    centroids = [c.tolist() for c in model.clusterCenters()]
+    return IVFIndex(assigned, centroids, vec_col, id_col, metric, sq)
+
+
+def _probes(idx: IVFIndex, query_vec, nprobe: int) -> list[int]:
+    """The nprobe centroids nearest the query (a driver-side sort of a
+    tiny list), ties by centroid id."""
+    q = [float(x) for x in query_vec]
+
+    def dist(c):
+        if idx.metric == "cosine":
+            dot = sum(a * b for a, b in zip(c, q))
+            na = math.sqrt(sum(a * a for a in c))
+            nb = math.sqrt(sum(b * b for b in q))
+            return 1.0 - dot / (na * nb) if na and nb else 1.0
+        if idx.metric in ("l2", "l2_sqr"):
+            return sum((a - b) ** 2 for a, b in zip(c, q))
+        if idx.metric == "ip":
+            return -sum(a * b for a, b in zip(c, q))
+        raise ValueError(idx.metric)
+
+    order = sorted(range(len(idx.centroids)),
+                   key=lambda i: (dist(idx.centroids[i]), i))
+    return order[:nprobe]
+
+
+def ivf_search(
+    idx: IVFIndex,
+    query_vec,
+    k: int = 10,
+    nprobe: int = 4,
+    rerank_factor: int | None = None,
+    round_to: int | None = 6,
+) -> DataFrame:
+    """nprobe nearest centroids → partition-pruned scan → top-k: exact
+    over raw vectors, or over the index's SQ8 codes; with rerank_factor
+    the codes shortlist k·factor rows for an exact re-rank."""
+    cand = idx.assigned.where(
+        F.col("centroid_id").isin(_probes(idx, query_vec, nprobe)))
+    if idx.quant is None:
+        return knn_exact(cand, idx.vec_col, query_vec, k, idx.metric,
+                         idx.id_col, round_to)
+    if rerank_factor is None:
+        return knn_codes(cand, idx.quant, query_vec, k, idx.metric,
+                         idx.id_col, round_to)
+    return rerank_knn(cand, idx.assigned, idx.quant, query_vec, k,
+                      k * rerank_factor, idx.vec_col, idx.metric,
+                      idx.id_col, round_to)
+
+
+def ivf_save(idx: IVFIndex, path: str) -> None:
+    """Persist the IVF layout partitioned by centroid_id — a probe query
+    reads exactly nprobe of nlist partition directories (partition pruning,
+    the vector twin of the term-bucket postings layout). Centroids and
+    SQ8 stats go to the manifest (tiny, driver-side)."""
+    import json
+    import os
+
+    (
+        idx.assigned.repartition("centroid_id")
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(f"{path}/assigned")
+    )
+    os.makedirs(path, exist_ok=True)
+    with open(f"{path}/manifest.json", "w") as f:
+        json.dump({
+            "centroids": idx.centroids,
+            "vec_col": idx.vec_col,
+            "id_col": idx.id_col,
+            "metric": idx.metric,
+            "sq8": [idx.quant.mins, idx.quant.maxs] if idx.quant else None,
+        }, f)
+
+
+def ivf_load(spark, path: str) -> IVFIndex:
+    import json
+
+    with open(f"{path}/manifest.json") as f:
+        m = json.load(f)
+    return IVFIndex(
+        spark.read.parquet(f"{path}/assigned"),
+        m["centroids"], m["vec_col"], m["id_col"], m["metric"],
+        SQ8(*m["sq8"]) if m.get("sq8") else None,
     )
 
 
-def duckdb_rabitq_sql(rq: RaBitQ, query_vec, table: str = "embeddings",
-                      vec_col: str = "embedding", id_col: str = "vec_id",
-                      k: int = 10, round_to: int = 6) -> str:
-    """The FULL RaBitQ pipeline (encode + estimate) as DuckDB SQL with
-    the rotation/centroid as literals — the parity oracle."""
-    d = rq.dim
-    cen = "[" + ", ".join(repr(c) for c in rq.centroid) + "]"
-    s = repr(rq._inv_sqrt_d)
-    qrot, qnorm = rq.query_transform(query_vec)
-    qarr = "[" + ", ".join(repr(x) for x in qrot) + "]"
+# ---- hybrid ---------------------------------------------------------------
 
-    def dotrow(j: int) -> str:
-        row = "[" + ", ".join(repr(x) for x in rq.rotation[j]) + "]"
-        return (f"list_reduce(list_transform(range(1, {d} + 1),"
-                f" i -> res[i] * ({row})[i]), (a, b) -> a + b)")
+def rrf_fuse(
+    ranked_a: DataFrame,
+    ranked_b: DataFrame,
+    id_col: str = "doc_id",
+    k: int = 60,
+    limit: int | None = 10,
+) -> DataFrame:
+    """Reciprocal-rank fusion of two ranked lists (the standard hybrid
+    text+vector combiner): score = Σ 1/(k + rank_i); docs missing from a
+    list contribute 0. Inputs must carry a ``rank`` column (1-based).
 
-    rots = ", ".join(dotrow(j) + f" AS r{j}" for j in range(d))
-    signed_sum = " + ".join(
-        f"(CASE WHEN r{j} > 0 THEN {s} ELSE -{s} END) * r{j}"
-        for j in range(d))
-    bits_arr = ", ".join(
-        f"CASE WHEN r{j} > 0 THEN 1 ELSE 0 END" for j in range(d))
-    return f"""
-WITH res_t AS (
-  SELECT {id_col},
-    list_transform(range(1, {d} + 1),
-      i -> {vec_col}[i]::DOUBLE - ({cen})[i]) AS res
-  FROM {table}),
-rot_t AS (
-  SELECT {id_col}, res,
-    sqrt(list_reduce(list_transform(res, x -> x * x),
-         (a, b) -> a + b)) AS norm,
-    {rots}
-  FROM res_t),
-enc AS (
-  SELECT {id_col}, norm, [{bits_arr}] AS bits,
-    CASE WHEN norm > 0 THEN ({signed_sum}) / norm ELSE 0.0 END AS obar_o
-  FROM rot_t),
-est AS (
-  SELECT {id_col}, norm, obar_o,
-    list_reduce(list_transform(range(1, {d} + 1),
-      i -> (CASE WHEN bits[i] = 1 THEN {s} ELSE -{s} END)
-           * ({qarr})[i]), (a, b) -> a + b) AS obar_q
-  FROM enc)
-SELECT {id_col},
-  round(norm * norm + {repr(qnorm * qnorm)}
-        - 2.0 * norm * {repr(qnorm)}
-          * (CASE WHEN obar_o <> 0.0 THEN obar_q / obar_o ELSE 0.0 END),
-        {round_to}) + 0.0 AS est_d2
-FROM est ORDER BY est_d2, {id_col} LIMIT {k}
-"""
+    Scale shape: both inputs are already top-N (small); the fusion is a
+    broadcast-sized full-outer join + sort."""
+    a = ranked_a.select(F.col(id_col), F.col("rank").alias("rank_a"))
+    b = ranked_b.select(F.col(id_col), F.col("rank").alias("rank_b"))
+    score = (F.coalesce(1.0 / (F.lit(k) + F.col("rank_a")), F.lit(0.0))
+             + F.coalesce(1.0 / (F.lit(k) + F.col("rank_b")), F.lit(0.0)))
+    return _top_k(a.join(b, id_col, "full_outer"), id_col, score, limit,
+                  6, "rrf_score", descending=True)
 
 
-def rabitq_rerank_knn(codes: DataFrame, vectors: DataFrame, rq: RaBitQ,
-                      query_vec, k: int = 10, shortlist: int = 100,
-                      vec_col: str = "embedding",
-                      id_col: str = "vec_id",
-                      round_to: int = 6) -> DataFrame:
-    """RaBitQ as designed to be used: the 1-bit estimator shortlists
-    `shortlist` candidates (bit fold only), then the exact L2 re-rank
-    touches float vectors for just those rows — at 100 TB the float
-    columns are read via a semi-join on the shortlist, 32× less scan
-    bandwidth on the first pass."""
-    cand = rabitq_codes_knn(codes, rq, query_vec, k=shortlist,
-                            id_col=id_col).select(id_col)
-    qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-    d2 = F.aggregate(
-        F.zip_with(F.col(vec_col), qarr,
-                   lambda a, b: (a.cast("double") - b)
-                   * (a.cast("double") - b)),
-        F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        vectors.join(cand, id_col, "left_semi")
-        .select(id_col, (F.round(d2, round_to) + F.lit(0.0)).alias("d2"))
-        .orderBy("d2", id_col)
-        .limit(k)
+def ranked(df: DataFrame, order_col: str, id_col: str = "doc_id",
+           ascending: bool = True) -> DataFrame:
+    """Attach a deterministic 1-based ``rank`` ((order_col, id) ordering)."""
+    from pyspark.sql import Window
+
+    oc = F.col(order_col) if ascending else F.col(order_col).desc()
+    w = Window.orderBy(oc, F.col(id_col))
+    return df.withColumn("rank", F.row_number().over(w))
+
+
+def hybrid_search(
+    docs_with_vec: DataFrame,
+    match_ids: DataFrame,
+    vec_col: str,
+    query_vec,
+    k: int = 10,
+    metric: str = "cosine",
+    id_col: str = "doc_id",
+    round_to: int | None = 6,
+) -> DataFrame:
+    """FTS filter ∧ ANN order (reference demo4 Q3 hybrid shape): semi-join
+    the text-match doc ids, then exact top-k by vector distance."""
+    filtered = docs_with_vec.join(match_ids, id_col, "left_semi")
+    return knn_exact(
+        filtered, vec_col, query_vec, k=k, metric=metric,
+        id_col=id_col, round_to=round_to,
     )

@@ -74,23 +74,62 @@ def _register(name: str, fn, oracle: str | None) -> None:
 
 #: everything a query fn builds once and reuses (the loaded tables, the
 #: indexes, quantizer codes, the LSH/IVF layouts, the ordered-scan
-#: files), per session object and then per (sf_dir, kind). The key is
-#: the session object, never its id(), which Python recycles once the
-#: object is freed; held weakly, the table adds no reference of its own
-#: (the frames an entry holds do reference their session). The kinds
-#: are a fixed set and the sf_dirs the few a harness passes, so the
-#: table needs no bound.
-_BUILT: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+#: files) lives in a table per session object and then per (sf_dir,
+#: kind), carried by the session itself as this attribute. The frames an
+#: entry holds reference their session, so a table held anywhere else
+#: would keep its session alive for good; carried by the session, it
+#: dies with it. The kinds are a fixed set and the sf_dirs the few a
+#: harness passes, so the table needs no bound.
+_MEMO = "_serene_built"
+
+#: per live session with a memo, the Java handles of the frames its
+#: entries persisted. A handle does not reference the Python session.
+_HELD: "weakref.WeakKeyDictionary[SparkSession, list]" = (
     weakref.WeakKeyDictionary())
 
 
 def _built(spark: SparkSession, sf_dir: str, kind: Hashable,
            build: Callable[[], T]) -> T:
     """``build()``, run once per (session, sf_dir, kind)."""
-    table = _BUILT.setdefault(spark, {})
+    table = spark.__dict__.get(_MEMO)
+    if table is None:
+        table = spark.__dict__[_MEMO] = {}
+        held = _HELD[spark] = []
+        weakref.finalize(spark, _release, held).atexit = False
     if (sf_dir, kind) not in table:
-        table[sf_dir, kind] = build()
+        table[sf_dir, kind] = value = build()
+        _HELD[spark].extend(df._jdf for df in _persisted(value))
     return table[sf_dir, kind]
+
+
+def _persisted(value) -> list[DataFrame]:
+    """The persisted frames a built value holds, in a dict, a tuple or an
+    object's attributes. An InvertedIndex releases its own parts."""
+    if isinstance(value, DataFrame):
+        return [value] if value.is_cached else []
+    if isinstance(value, dict):
+        items = value.values()
+    elif isinstance(value, tuple):
+        items = value
+    elif hasattr(value, "__dict__") and not isinstance(value, InvertedIndex):
+        items = vars(value).values()
+    else:
+        return []
+    return [df for v in items for df in _persisted(v)]
+
+
+def _release(held: list) -> None:
+    """A dead session's frames leave Spark's cache, unless a live
+    session's memo holds the same plan: Spark keys its cache by plan, so
+    two sessions' equal plans share one entry (the rule
+    indexing._unpersist applies to index parts)."""
+    others = [j for hs in list(_HELD.values()) if hs is not held for j in hs]
+    for jdf in held:
+        try:
+            if not any(jdf.sameSemantics(o) for o in others):
+                jdf.unpersist(False)
+        except Exception:  # noqa: BLE001 — its Spark context was stopped
+            pass
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -4193,16 +4232,16 @@ FROM embeddings ORDER BY distance, vec_id LIMIT 10
 
 
 def _quantized(spark: SparkSession, sf_dir: str, kind: str, train,
-               encode) -> tuple:
-    """(quantizer, codes): the quantizer ``train()`` gives and the code
-    relation ``encode(quantizer)`` gives, built once per (session,
-    sf_dir) and the codes persisted — the registered queries scan codes
-    only, the way a real index would (codes written at CREATE INDEX time,
-    not per query). Trained stats are driver-side constants, so both
-    plans embed identical literals."""
+               vectors: DataFrame) -> tuple:
+    """(quantizer, codes): the quantizer ``train()`` gives and its codes
+    over ``vectors``, built once per (session, sf_dir) and the codes
+    persisted — the registered queries scan codes only, the way a real
+    index would (codes written at CREATE INDEX time, not per query).
+    Trained stats are driver-side constants, so both plans embed
+    identical literals."""
     def build() -> tuple:
         model = train()
-        return model, encode(model).persist()
+        return model, SIM.encode(vectors, model, "embedding").persist()
 
     return _built(spark, sf_dir, kind, build)
 
@@ -4210,9 +4249,8 @@ def _quantized(spark: SparkSession, sf_dir: str, kind: str, train,
 def _vec_sq8_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     sq, codes = _quantized(
-        spark, sf_dir, "sq8", lambda: SIM.SQ8.train(emb, "embedding"),
-        lambda sq: SIM.sq8_encode(emb, sq, "embedding"))
-    return SIM.sq8_codes_knn(codes, sq, QUERY_VEC, k=10, metric="cosine")
+        spark, sf_dir, "sq8", lambda: SIM.SQ8.train(emb, "embedding"), emb)
+    return SIM.knn_codes(codes, sq, QUERY_VEC, k=10, metric="cosine")
 
 
 # The SQ8 oracle computes the train stats (per-dim min/max) IN SQL so the
@@ -4250,14 +4288,14 @@ _register("vec_sq8_knn", _vec_sq8_knn, _SQ8_ORACLE)
 #: inside the centroid-partitioned layout; at nprobe=nlist the probe
 #: degenerates to exact SQ8 search, so the SQ8 oracle checks it exactly
 def _vec_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> tuple:
+    def build() -> SIM.IVFIndex:
         emb = load_tables(spark, sf_dir)["embeddings"]
-        ivf, sq = SIM.ivf_sq8_build(emb, "embedding", "vec_id", nlist=8)
+        ivf = SIM.ivf_build(emb, "embedding", "vec_id", nlist=8, quant="sq8")
         ivf.assigned.persist()
-        return ivf, sq
+        return ivf
 
-    ivf, sq = _built(spark, sf_dir, "ivf_sq8", build)
-    return SIM.ivf_sq8_search(ivf, sq, QUERY_VEC, k=10, nprobe=8)
+    ivf = _built(spark, sf_dir, "ivf_sq8", build)
+    return SIM.ivf_search(ivf, QUERY_VEC, k=10, nprobe=8)
 
 
 _register("vec_ivf_sq8_knn", _vec_ivf_sq8, _SQ8_ORACLE)
@@ -4277,8 +4315,8 @@ def _vec_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             [[float(x) for x in r.embedding]
              for r in emb.orderBy("vec_id").limit(_PQ_KSUB).collect()],
             _PQ_M),
-        lambda pq: SIM.pq_encode(emb, pq, "embedding"))
-    return SIM.pq_codes_adc_knn(codes, pq, QUERY_VEC, k=10)
+        emb)
+    return SIM.knn_codes(codes, pq, QUERY_VEC, k=10)
 
 
 # The oracle rebuilds the sampled codebook in SQL (seeds CTE), assigns each
@@ -4333,9 +4371,8 @@ def _vec_binary_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     bq, bits = _quantized(
         spark, sf_dir, "binary",
-        lambda: SIM.BinaryQuant.train(emb, "embedding"),
-        lambda bq: SIM.binary_encode(emb, bq, "embedding"))
-    return SIM.binary_bits_knn(bits, bq, QUERY_VEC, k=10)
+        lambda: SIM.BinaryQuant.train(emb, "embedding"), emb)
+    return SIM.knn_codes(bits, bq, QUERY_VEC, k=10)
 
 
 _BQ_ORACLE = f"""
@@ -4378,20 +4415,19 @@ _register("vec_binary_quant_knn", _vec_binary_quant, _BQ_ORACLE)
 def _rabitq(spark: SparkSession, sf_dir: str, emb: DataFrame) -> tuple:
     return _quantized(
         spark, sf_dir, "rabitq", lambda: SIM.RaBitQ.train(emb, "embedding"),
-        lambda rq: SIM.rabitq_encode(emb, rq, "embedding"))
+        emb)
 
 
 def _vec_rabitq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     rq, codes = _rabitq(spark, sf_dir, emb)
-    return SIM.rabitq_codes_knn(codes, rq, QUERY_VEC, k=10)
+    return SIM.knn_codes(codes, rq, QUERY_VEC, k=10)
 
 
 def _vec_rabitq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir)["embeddings"]
     rq, codes = _rabitq(spark, sf_dir, emb)
-    return SIM.rabitq_rerank_knn(codes, emb, rq, QUERY_VEC,
-                                 k=10, shortlist=60)
+    return SIM.rerank_knn(codes, emb, rq, QUERY_VEC, k=10, shortlist=60)
 
 
 def _rabitq_oracle(k: int, rerank: bool = False,
@@ -4493,9 +4529,9 @@ def _vec_rabitq_highdim(spark: SparkSession, sf_dir: str) -> DataFrame:
     rq, codes = _quantized(
         spark, sf_dir, "rabitq_hd",
         lambda: SIM.RaBitQ([0.0] * 1536, SIM.RaBitQ.rotation_matrix(1536)),
-        lambda rq: SIM.rabitq_encode(hd, rq, "embedding", method="numpy"))
+        hd)
     qv = [float(x) for x in QUERY_VEC] * 24
-    return SIM.rabitq_rerank_knn(codes, hd, rq, qv, k=10, shortlist=60)
+    return SIM.rerank_knn(codes, hd, rq, qv, k=10, shortlist=60)
 
 
 _register("vec_rabitq_highdim", _vec_rabitq_highdim, None)
@@ -4522,10 +4558,9 @@ def _vec_rabitq_middim(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = 64 * _MD_TILES
     rq, codes = _quantized(
         spark, sf_dir, "rabitq_md",
-        lambda: SIM.RaBitQ([0.0] * d, SIM.RaBitQ.rotation_matrix(d)),
-        lambda rq: SIM.rabitq_encode(md, rq, "embedding", method="numpy"))
+        lambda: SIM.RaBitQ([0.0] * d, SIM.RaBitQ.rotation_matrix(d)), md)
     qv = [float(x) for x in QUERY_VEC] * _MD_TILES
-    return SIM.rabitq_rerank_knn(codes, md, rq, qv, k=10, shortlist=60)
+    return SIM.rerank_knn(codes, md, rq, qv, k=10, shortlist=60)
 
 
 def _rabitq_middim_oracle(k: int = 10, shortlist: int = 60,

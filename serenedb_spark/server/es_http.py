@@ -158,11 +158,32 @@ class EsShim:
             docs, ", ".join(f"{c} {t}" for c, t in typed)).select(
                 F.col("_id").alias(st.key), *[c for c, _t in typed])
 
+    @staticmethod
+    def _key(st, _id):
+        """An ES `_id` as a value of the table's key column."""
+        return (str(_id) if dict(st._empty.dtypes)[st.key] == "string"
+                else int(_id))
+
     def _keys(self, st, ids: list[str]):
         """ES `_id`s as a relation of the table's key column."""
-        key_t = dict(st._empty.dtypes).get(st.key, "string")
-        return local_frame(self.spark, f"{st.key} {key_t}", [
-            {st.key: i if key_t == "string" else int(i)} for i in ids])
+        return local_frame(
+            self.spark, f"{st.key} {dict(st._empty.dtypes)[st.key]}",
+            [{st.key: self._key(st, i)} for i in ids])
+
+    def _docs(self, index: str, ids: list) -> dict:
+        """The snapshot's stored rows of ``ids`` by key value, as ES
+        `_source`: one semi-join on the id set, whatever its size. The
+        docstore names the key `doc_id`; `_source` gives it back its own
+        name, and leaves `_id` out (ES metadata, never source)."""
+        st = self.tables[index]
+        keys = self._keys(st, ids).select(F.col(st.key).alias("doc_id"))
+        found = {}
+        for r in self._index(index).docstore.join(
+                keys, "doc_id", "left_semi").collect():
+            src = r.asDict()
+            k = src.pop("doc_id")
+            found[k] = src if st.key == "_id" else {st.key: k, **src}
+        return found
 
     #: ES mapping type → (spark ddl type, analyzer | None)
     _ES_TYPES = {
@@ -252,32 +273,23 @@ class EsShim:
 
     def get_doc(self, index: str, doc_id: str) -> dict:
         """GET /{index}/_doc/{id} (reference handlers.cpp:165)."""
-        idx = self._index(index)
-        st = self.tables[index]
-        key = st.key
-        key_t = dict(st._empty.dtypes).get(key, "bigint")
-        val = doc_id if key_t == "string" else int(doc_id)
-        rows = idx.docstore.where(F.col(key) == val).limit(1).collect()
-        if not rows:
+        src = self._docs(index, [doc_id]).get(
+            self._key(self.tables[index], doc_id))
+        if src is None:
             return {"_index": index, "_id": doc_id, "found": False}
-        src = rows[0].asDict()
         return {"_index": index, "_id": doc_id, "found": True, "_source": src}
 
     def mget(self, index: str, body: dict) -> dict:
         """POST /{index}/_mget (reference handlers.cpp:1201): one semi-join
         on the id set — a single scan regardless of id count."""
         ids = body.get("ids") or [d["_id"] for d in body.get("docs", ())]
-        ids = [int(i) for i in ids]
-        idx = self._index(index)
-        key = self.tables[index].key
-        found = {
-            r[key]: r.asDict()
-            for r in idx.docstore.where(F.col(key).isin(ids)).collect()
-        }
+        st = self.tables[index]
+        found = self._docs(index, ids)
+        srcs = [found.get(self._key(st, i)) for i in ids]
         return {"docs": [
-            {"_index": index, "_id": str(i), "found": i in found,
-             **({"_source": found[i]} if i in found else {})}
-            for i in ids
+            {"_index": index, "_id": str(i), "found": src is not None,
+             **({"_source": src} if src is not None else {})}
+            for i, src in zip(ids, srcs)
         ]}
 
     def cat_indices(self) -> list[dict]:
@@ -347,10 +359,9 @@ class EsShim:
 
         st = self._scroll_state[sid]
         idx = self._index(st["index"])
-        key_col = self.tables[st["index"]].key
         query = st["body"].get("query", {"match_all": {}})
         if query == {"match_all": {}}:
-            ids = idx.docstore.select(F.col(key_col).alias("doc_id"))
+            ids = idx.docstore.select("doc_id")
         else:
             field, node = parse_query(query, idx.analyzer(idx.default_field()))
             ids = compile_query(
@@ -373,8 +384,7 @@ class EsShim:
         # sorted scroll: late-materialize the sort key from the docstore,
         # keyset-resume on (sort_value, doc_id)
         keyed = ids.join(
-            idx.docstore.select(F.col(key_col).alias("doc_id"),
-                                F.col(sort_field).alias("__k")),
+            idx.docstore.select("doc_id", F.col(sort_field).alias("__k")),
             "doc_id")
         k, d = F.col("__k"), F.col("doc_id")
         if st["last_id"] is not None:

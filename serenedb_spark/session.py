@@ -1670,7 +1670,7 @@ class SereneSession:
         from sdb_ivf_posting_size (target rows per posting list) when
         not given, and the KMeans fit samples ~nlist ×
         sdb_ivf_sample_factor rows — full-corpus training does not
-        survive 100 TB. Returns the index handle (ivf) or (ivf, sq8)."""
+        survive 100 TB. Returns the IVFIndex, which carries its quantizer."""
         from serenedb_spark.operators import similarity as SIM
 
         df = self.table(table) if isinstance(table, str) else table
@@ -1681,19 +1681,8 @@ class SereneSession:
             else:
                 nlist = 16
         factor = self.show_variable("sdb_ivf_sample_factor")
-        if quant == "sq8":
-            sq = SIM.SQ8.train(df, vec_col)
-            ivf = SIM.ivf_build(df, vec_col, id_col, nlist=nlist,
-                                metric=metric,
-                                train_sample_factor=factor or None)
-            ivf.assigned = ivf.assigned.withColumn(
-                "codes", sq.encode_col(F.col(vec_col)))
-            return ivf, sq
-        if quant is not None:
-            raise ValueError(f"unknown quant {quant!r}")
-        return SIM.ivf_build(df, vec_col, id_col, nlist=nlist,
-                             metric=metric,
-                             train_sample_factor=factor or None)
+        return SIM.ivf_build(df, vec_col, id_col, nlist=nlist, metric=metric,
+                             train_sample_factor=factor or None, quant=quant)
 
     def ann_search(self, index, query_vec, k: int = 10,
                    nprobe: int | None = None,
@@ -1702,13 +1691,11 @@ class SereneSession:
         SET sdb_nprobe, the SQ8 rerank width to SET sdb_rerank_factor."""
         from serenedb_spark.operators import similarity as SIM
 
-        nprobe = nprobe or self.show_variable("sdb_nprobe")
-        if isinstance(index, tuple):
-            ivf, sq = index
-            rf = rerank_factor or self.show_variable("sdb_rerank_factor")
-            return SIM.ivf_sq8_search(ivf, sq, query_vec, k=k,
-                                      nprobe=nprobe, rerank_factor=rf)
-        return SIM.ivf_search(index, query_vec, k=k, nprobe=nprobe)
+        return SIM.ivf_search(
+            index, query_vec, k=k,
+            nprobe=nprobe or self.show_variable("sdb_nprobe"),
+            rerank_factor=(rerank_factor
+                           or self.show_variable("sdb_rerank_factor")))
 
     def dedup(self, table: str | DataFrame, method: str = "exact",
               text_col: str = "text", id_col: str = "doc_id", **kw) -> DataFrame:

@@ -19,47 +19,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from serenedb_spark.operators.maintenance import SearchTable
-
 
 def stream_into_search_table(
-    stream_df: DataFrame,
-    table: SearchTable,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """Pipe a streaming DataFrame into a SearchTable: each micro-batch is
-    one insert (one tick). Returns the StreamingQuery; with
-    ``available_now`` the caller should ``awaitTermination()`` then read
-    ``table.index()`` for the refreshed snapshot."""
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.insert(batch)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_into_disk_table(
     stream_df: DataFrame,
     table,
     checkpoint: str,
     available_now: bool = True,
 ):
-    """Durable streaming ingest: each micro-batch lands as ONE committed
-    parquet segment of a DiskSearchTable (batch id ≈ tick; segment write
-    then atomic manifest flip — a crash mid-batch leaves the previous
-    snapshot, and foreachBatch replays the batch on restart, overwriting
-    the same segment idempotently would require batch-id naming, so the
-    caller should vacuum after recovery). The durable twin of
-    stream_into_search_table."""
+    """Pipe a streaming DataFrame into any table with ``insert`` (a
+    SearchTable, or a DiskSearchTable for durable ingest): each
+    micro-batch is one insert (one tick). Returns the StreamingQuery;
+    with ``available_now`` the caller should ``awaitTermination()`` then
+    read ``table.index()`` for the refreshed snapshot.
+
+    On a DiskSearchTable each batch lands as ONE committed parquet
+    segment (segment write, then an atomic manifest flip), so a crash
+    mid-batch leaves the previous snapshot; vacuum after recovery."""
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():

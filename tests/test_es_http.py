@@ -288,3 +288,51 @@ class _neg_str(str):
 
     def __lt__(self, other):
         return str.__gt__(self, other)
+
+
+@pytest.fixture(scope="module")
+def keyed(es):
+    """A mapping-created index: its key is the string `_id`."""
+    req = urllib.request.Request(
+        f"{es}/slt_keyed", method="PUT",
+        data=json.dumps({"mappings": {"properties": {
+            "text": {"type": "text"}}}}).encode(),
+        headers={"Content-Type": "application/json"})
+    urllib.request.urlopen(req, timeout=60).read()
+    payload = "".join(
+        json.dumps({"index": {"_index": "slt_keyed", "_id": i}}) + "\n"
+        + json.dumps({"text": f"alpha {i}"}) + "\n"
+        for i in ("1", "2", "abc"))
+    assert _post(f"{es}/_bulk", raw=payload)["errors"] is False
+    _post(f"{es}/slt_keyed/_refresh")
+    return f"{es}/slt_keyed"
+
+
+def test_doc_route_on_mapping_index(keyed):
+    with urllib.request.urlopen(f"{keyed}/_doc/abc", timeout=60) as r:
+        d = json.loads(r.read())
+    assert d["found"] is True and d["_id"] == "abc"
+    assert d["_source"] == {"text": "alpha abc"}  # the key is not source
+    with urllib.request.urlopen(f"{keyed}/_doc/zzz", timeout=60) as r:
+        assert json.loads(r.read())["found"] is False
+
+
+def test_mget_route_on_mapping_index(keyed):
+    out = _post(f"{keyed}/_mget", {"ids": ["1", "2", "zzz"]})
+    assert [(x["_id"], x["found"]) for x in out["docs"]] == [
+        ("1", True), ("2", True), ("zzz", False)]
+    assert out["docs"][1]["_source"] == {"text": "alpha 2"}
+    out = _post(f"{keyed}/_mget", {"docs": [{"_id": "abc"}]})
+    assert out["docs"][0]["_source"] == {"text": "alpha abc"}
+
+
+def test_scroll_route_on_mapping_index(keyed):
+    seen, page = [], _post(f"{keyed}/_search?scroll=1m", {"size": 2})
+    while page["hits"]["hits"]:
+        seen += [h["_id"] for h in page["hits"]["hits"]]
+        page = _post(f"{keyed.rsplit('/', 1)[0]}/_search/scroll",
+                     {"scroll_id": page["_scroll_id"]})
+    assert seen == ["1", "2", "abc"]
+    page = _post(f"{keyed}/_search?scroll=1m",
+                 {"size": 2, "sort": [{"text": "desc"}]})
+    assert [h["_id"] for h in page["hits"]["hits"]] == ["abc", "2"]

@@ -41,3 +41,19 @@ def test_probe_prunes_partitions(saved_ivf):
         plan.explain("formatted")
     txt = buf.getvalue()
     assert "PartitionFilters" in txt and "centroid_id" in txt, txt[:1500]
+
+
+def test_sq8_layout_roundtrip(spark, tmp_path):
+    """An SQ8 IVF index saves its quantizer with the layout: the loaded
+    index answers from the same codes."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    mem = SIM.ivf_build(emb, "embedding", "vec_id", nlist=8, quant="sq8")
+    SIM.ivf_save(mem, str(tmp_path))
+    disk = SIM.ivf_load(spark, str(tmp_path))
+    assert (disk.quant.mins, disk.quant.maxs) == (mem.quant.mins,
+                                                  mem.quant.maxs)
+    for rf in (None, 2):
+        a, b = ([tuple(r) for r in SIM.ivf_search(
+            ix, Q.QUERY_VEC, k=10, nprobe=4, rerank_factor=rf).collect()]
+            for ix in (mem, disk))
+        assert a == b and len(a) == 10

@@ -35,6 +35,43 @@ def test_registry_artifacts_belong_to_their_session(spark, name):
     assert sorted(df.collect()) == sorted(first.collect())
 
 
+def test_registry_memo_dies_with_its_session(spark, tmp_path):
+    """A dropped session's memo entry dies with it and releases the
+    frames it persisted, but never a plan a live session still holds."""
+    import gc
+    import shutil
+    import weakref
+
+    shutil.copy(f"{SF_DIR}/embeddings.parquet", tmp_path)
+    sf_dir = str(tmp_path)  # plans no other test's session has cached
+    fn = Q.REGISTRY["vec_sq8_knn"].fn
+    jsc = spark.sparkContext._jsc
+
+    def held() -> int:
+        gc.collect()
+        return jsc.getPersistentRDDs().size()
+
+    def run_and_drop() -> None:
+        other = spark.newSession()
+        assert fn(other, sf_dir).collect()
+        gone = weakref.ref(other)
+        del other
+        # PySpark's RDD.toDF holds the newest session object it built
+        spark.newSession()
+        # nothing holds the session, so nothing holds a memo entry of it
+        gc.collect()
+        assert gone() is None
+
+    base = held()
+    run_and_drop()
+    assert held() == base  # the table and the codes were released
+    fn(spark, sf_dir).collect()
+    shared = held()
+    assert shared > base
+    run_and_drop()
+    assert held() == shared  # the live session's equal plans stay cached
+
+
 def test_expr_memo_sees_a_new_gateway_at_a_reused_address(monkeypatch):
     """A gateway that replaces a dead one at the same address still
     empties the memo: the old gateway's Columns are dangling handles."""

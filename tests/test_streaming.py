@@ -166,7 +166,6 @@ def test_stream_into_disk_table_durable(spark, tmpdir):
     segments; a FRESH handle opened from the path (recovery) sees the
     full streamed corpus."""
     from serenedb_spark.operators.maintenance import DiskSearchTable
-    from serenedb_spark.streaming.refresh import stream_into_disk_table
 
     docs = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -183,7 +182,7 @@ def test_stream_into_disk_table_durable(spark, tmpdir):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    qy = stream_into_disk_table(stream, dst, f"{tmpdir}/dckpt")
+    qy = stream_into_search_table(stream, dst, f"{tmpdir}/dckpt")
     qy.awaitTermination(120)
 
     st2 = DiskSearchTable.open(spark, f"{tmpdir}/dtab")

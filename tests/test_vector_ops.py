@@ -4,6 +4,8 @@ round-trip into a searchable table."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,8 +107,8 @@ def test_pq_trained_recall(spark):
     # uniform-random 64-dim data concentrates pairwise distances, so raw
     # ADC ordering is noisy — the production shape is ADC candidates +
     # exact re-rank (the reference's sdb_rerank_factor)
-    approx = SIM.pq_rerank_knn(emb, pq, "embedding", [0.5] * 64, k=10,
-                               rerank_factor=10)
+    approx = SIM.rerank_knn(SIM.encode(emb, pq, "embedding"), emb, pq,
+                            [0.5] * 64, k=10, shortlist=100)
     exact = SIM.knn_exact(emb, "embedding", [0.5] * 64, k=10, metric="l2_sqr")
     a = {r.vec_id for r in approx.collect()}
     e = {r.vec_id for r in exact.collect()}
@@ -122,7 +124,8 @@ def test_binary_quant_bits_roundtrip(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     bq = SIM.BinaryQuant.train(emb, "embedding")
     assert len(bq.mids) == 64
-    top = SIM.binary_hamming_knn(emb, bq, "embedding", [0.5] * 64, k=5).collect()
+    top = SIM.knn_codes(SIM.encode(emb, bq, "embedding"), bq, [0.5] * 64,
+                        k=5).collect()
     assert len(top) == 5
     assert all(0 <= r.hamming <= 64 for r in top)
     assert top == sorted(top, key=lambda r: (r.hamming, r.vec_id))
@@ -137,17 +140,16 @@ def test_rabitq_estimator_and_rerank(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     rq = SIM.RaBitQ.train(emb, "embedding")
     q = list(emb.where(F.col("vec_id") == 11).first()["embedding"])
-    codes = SIM.rabitq_encode(emb, rq, "embedding").persist()
+    codes = SIM.encode(emb, rq, "embedding").persist()
 
     exact = [r.vec_id for r in SIM.knn_exact(
         emb, "embedding", q, k=10, metric="l2").collect()]
-    est = [r.vec_id for r in SIM.rabitq_codes_knn(
-        codes, rq, q, k=10).collect()]
+    est = [r.vec_id for r in SIM.knn_codes(codes, rq, q, k=10).collect()]
     # self-match always survives quantization; estimator recall is lossy
     assert est[0] == 11
     assert len(set(exact) & set(est)) >= 3
 
-    rerank = [r.vec_id for r in SIM.rabitq_rerank_knn(
+    rerank = [r.vec_id for r in SIM.rerank_knn(
         codes, emb, rq, q, k=10, shortlist=120).collect()]
     assert len(set(exact) & set(rerank)) >= 9
 
@@ -169,9 +171,9 @@ def test_rabitq_numpy_path_matches_expr_path(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet") \
         .limit(200)
     rq = SIM.RaBitQ.train(emb, "embedding")
-    by_expr = {r.vec_id: r for r in SIM.rabitq_encode(
+    by_expr = {r.vec_id: r for r in SIM.encode(
         emb, rq, "embedding", method="expr").collect()}
-    by_np = {r.vec_id: r for r in SIM.rabitq_encode(
+    by_np = {r.vec_id: r for r in SIM.encode(
         emb, rq, "embedding", method="numpy").collect()}
     assert set(by_expr) == set(by_np)
     for vid, e in by_expr.items():
@@ -199,15 +201,14 @@ def test_rabitq_at_1536_dims_bounded(spark):
     t0 = time.perf_counter()
     rot = SIM.RaBitQ.rotation_matrix(dim)
     rq = SIM.RaBitQ([0.0] * dim, rot)
-    codes = SIM.rabitq_encode(df, rq, "embedding").persist()
+    codes = SIM.encode(df, rq, "embedding").persist()
     assert codes.count() == n
     build = time.perf_counter() - t0
 
     q = rows[17][1]
     t0 = time.perf_counter()
-    est = SIM.rabitq_codes_knn(codes, rq, q, k=10).collect()
-    rerank = SIM.rabitq_rerank_knn(codes, df, rq, q, k=5,
-                                   shortlist=50).collect()
+    est = SIM.knn_codes(codes, rq, q, k=10).collect()
+    rerank = SIM.rerank_knn(codes, df, rq, q, k=5, shortlist=50).collect()
     query = time.perf_counter() - t0
 
     assert est[0].vec_id == 17       # self-match survives 1-bit codes
@@ -216,3 +217,90 @@ def test_rabitq_at_1536_dims_bounded(spark):
     assert build < 120, f"encode took {build:.1f}s"
     assert query < 120, f"query took {query:.1f}s"
     codes.unpersist()
+
+
+# ---- pins: exact rows of the quantized paths no DuckDB oracle gates -------
+# Generated on the sf0.001 embeddings (500 rows, one scan partition); each
+# row is (vec_id, the path's rounded distance).
+
+_PINNED = os.path.basename(SF_DIR) == "sf0.001"
+pinned = pytest.mark.skipif(not _PINNED, reason="pins are for sf0.001")
+
+
+@pinned
+def test_pin_ivf_sq8_rerank(emb):
+    ivf = SIM.ivf_build(emb, "embedding", "vec_id", nlist=8, quant="sq8")
+    got = SIM.ivf_search(ivf, QV, k=10, nprobe=3, rerank_factor=2)
+    assert got.columns == ["vec_id", "distance"]
+    assert [tuple(r) for r in got.collect()] == [
+        (179, 0.710169), (423, 0.718416), (307, 0.749039), (183, 0.759101),
+        (372, 0.762017), (320, 0.777968), (487, 0.787731), (229, 0.788319),
+        (247, 0.791498), (170, 0.805649)]
+
+
+@pinned
+def test_pin_pq_rerank(emb):
+    pq = SIM.PQ.from_seed_rows(
+        [list(r.embedding) for r in emb.orderBy("vec_id").limit(8).collect()],
+        8)
+    got = SIM.rerank_knn(SIM.encode(emb, pq, "embedding"), emb, pq, QV,
+                         k=10, shortlist=20)
+    assert got.columns == ["vec_id", "distance"]
+    assert [tuple(r) for r in got.collect()] == [
+        (287, 19.221171), (298, 19.645669), (461, 19.716637),
+        (271, 19.758573), (170, 19.854929), (448, 19.910474),
+        (336, 20.229503), (193, 20.258365), (109, 20.352551),
+        (32, 20.42395)]
+
+
+@pinned
+def test_pin_binary_top_k(emb):
+    bq = SIM.BinaryQuant.train(emb, "embedding")
+    got = SIM.knn_codes(SIM.encode(emb, bq, "embedding"), bq, QV, k=10)
+    assert got.columns == ["vec_id", "hamming"]
+    assert [tuple(r) for r in got.collect()] == [
+        (219, 21), (179, 22), (336, 22), (138, 23), (152, 23), (160, 23),
+        (237, 23), (339, 23), (155, 24), (284, 24)]
+
+
+@pinned
+def test_pin_ann_index_sq8(spark, emb):
+    from serenedb_spark.session import SereneSession
+
+    ss = SereneSession(spark)
+    # 32 lists × the default sample factor 16 ≥ 500 rows: full-corpus fit
+    idx = ss.create_ann_index(emb, quant="sq8", nlist=32)
+    got = ss.ann_search(idx, QV, k=10, rerank_factor=1)
+    assert got.columns == ["vec_id", "distance"]
+    assert [tuple(r) for r in got.collect()] == [
+        (365, 0.762052), (298, 0.782607), (461, 0.790421), (178, 0.795847),
+        (312, 0.80461), (5, 0.824861), (446, 0.838967), (284, 0.846231),
+        (397, 0.881499), (31, 0.881792)]
+
+
+@pinned
+def test_pin_rabitq_highdim(spark):
+    got = Q.REGISTRY["vec_rabitq_highdim"].fn(spark, SF_DIR)
+    assert got.columns == ["vec_id", "d2"]
+    assert [tuple(r) for r in got.collect()] == [
+        (219, 446.074352), (179, 455.707269), (423, 457.504743),
+        (152, 459.754432), (287, 461.308113), (307, 464.179357),
+        (339, 465.903832), (183, 466.372667), (372, 467.008167),
+        (365, 467.015845)]
+
+
+def test_one_top_k_tail():
+    """Every `.limit(` in similarity.py is the one top-k helper's: no
+    operator re-inlines ORDER BY distance, id LIMIT k."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(SIM))
+    offenders = [
+        f"{fn.name}:{node.lineno}"
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name != "_top_k"
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "limit"
+    ]
+    assert not offenders, offenders
