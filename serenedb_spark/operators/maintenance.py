@@ -37,7 +37,34 @@ from pyspark.sql import functions as F
 from serenedb_spark.operators.indexing import InvertedIndex, build_index
 
 
-class SearchTable:
+class _OpLog:
+    """The read side both search tables share: the tick-ordered op log
+    (``_op_frames``: ("seg", rows) | ("del", keys)) folded into the
+    visible base relation, and the index built over it."""
+
+    def current(self) -> DataFrame:
+        """The visible base relation: fold the op log in tick order — later
+        inserts replace same-key rows, deletes tombstone everything earlier.
+        Fold depth = batches since last compact(); compact to keep it flat."""
+        out = None
+        for kind, df in self._op_frames():
+            if kind == "seg":
+                out = df if out is None else out.join(
+                    df.select(self.key), self.key, "left_anti"
+                ).unionByName(df)
+            else:
+                out = out.join(df, self.key, "left_anti")
+        return out if out is not None else self._no_segment()
+
+    def index(self) -> InvertedIndex:
+        """Refresh: build the visible snapshot's index from scratch over
+        `current()`, the folded base relation; stats are exact over the
+        merged state. No postings are kept per segment between calls."""
+        return build_index(self.current(), self.fields, key=self.key,
+                           name=self.name)
+
+
+class SearchTable(_OpLog):
     """An indexed table supporting insert/update/delete/truncate with
     snapshot reads — ``index()`` returns a normal InvertedIndex, so every
     search/scoring/facet operator works on the maintained state unchanged.
@@ -81,29 +108,11 @@ class SearchTable:
         return self._tick
 
     # ---- reads -----------------------------------------------------------
-    def current(self) -> DataFrame:
-        """The visible base relation: fold the op log in tick order — later
-        inserts replace same-key rows, deletes tombstone everything earlier.
-        Fold depth = batches since last compact(); compact to keep it flat."""
-        out = None
-        for kind, df in self._ops:
-            if kind == "seg":
-                if out is None:
-                    out = df
-                else:
-                    out = out.join(
-                        df.select(self.key), self.key, "left_anti"
-                    ).unionByName(df)
-            else:
-                out = out.join(df, self.key, "left_anti")
-        return out if out is not None else self._empty
+    def _op_frames(self):
+        return self._ops
 
-    def index(self) -> InvertedIndex:
-        """Refresh: build the visible snapshot's index from scratch over
-        `current()`, the folded base relation; stats are exact over the
-        merged state. No postings are kept per segment between calls."""
-        return build_index(self.current(), self.fields, key=self.key,
-                           name=self.name)
+    def _no_segment(self) -> DataFrame:
+        return self._empty
 
     def compact(self) -> "SearchTable":
         """Collapse all segments + tombstones into one materialized segment
@@ -131,7 +140,7 @@ def _fault(name: str) -> None:
         raise InjectedFault(name)
 
 
-class DiskSearchTable:
+class DiskSearchTable(_OpLog):
     """Durable segmented search table — the on-disk twin of SearchTable.
 
     Each DML batch persists a parquet segment under ``path/segments/``;
@@ -273,23 +282,12 @@ class DiskSearchTable:
         return seg_tick
 
     # ---- reads -----------------------------------------------------------
-    def current(self) -> DataFrame:
-        out = None
+    def _op_frames(self):
         for _tick, kind, rel in self._ops:
-            df = self._spark.read.parquet(f"{self.path}/{rel}")
-            if kind == "seg":
-                out = df if out is None else out.join(
-                    df.select(self.key), self.key, "left_anti"
-                ).unionByName(df)
-            else:
-                out = out.join(df, self.key, "left_anti")
-        if out is None:
-            raise ValueError("empty table: no segments")
-        return out
+            yield kind, self._spark.read.parquet(f"{self.path}/{rel}")
 
-    def index(self) -> InvertedIndex:
-        return build_index(self.current(), self.fields, key=self.key,
-                           name=self.name)
+    def _no_segment(self) -> DataFrame:
+        raise ValueError("empty table: no segments")
 
     # ---- maintenance -----------------------------------------------------
     def compact(self) -> "DiskSearchTable":

@@ -22,46 +22,30 @@ symbol-for-symbol so scores hash-match):
   raw_tf:           contribution = boost * freq
   raw_dl:           dl
 
-Everything is computed with built-in column expressions: postings join
-(small, term-pruned) × broadcast stats. No Python per row.
+One function builds the scoring rows, scored_contributions_multi: it
+takes (field, term, boost) triples — a compiled query's driver-held
+score terms, tagged with their field — and returns one (doc_id, field,
+contrib) row per matched (doc × query term) pair, in one term-filtered
+postings scan (bucket-pruned on a saved layout) whatever the number of
+fields (SereneDB scores with one scorer over one iterator forest,
+server/network/http/es/dsl.cpp:394-407). Per-term stats arrive as
+literal CASE columns up to SCORED_TERMS_LIMIT pairs and through a
+broadcast stats join above it; a field without the `norm` feature reads
+dl as avgdl. score, scored_topk and every ES / SQL / session scorer
+aggregate those rows. Everything is built-in column expressions; no
+Python per row.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from serenedb_spark.operators.indexing import InvertedIndex
+from serenedb_spark.plans.planner import _postings_for_terms
 from serenedb_spark.sources.local import local_frame
-
-
-def _scored_base(idx: InvertedIndex, field: str, score_terms: DataFrame) -> DataFrame:
-    """(doc_id, term, freq, dl, df, ctf, n_docs, avgdl, total_dl, boost) for
-    each (matched doc × query term) pair."""
-    P = idx.postings.where(F.col("field") == field)
-    matched = P.join(F.broadcast(score_terms), "term")
-    ts = idx.term_stats.where(F.col("field") == field).select("term", "df", "ctf")
-    ds = idx.doc_stats.where(F.col("field") == field).select("doc_id", "dl")
-    g = idx.globals_.where(F.col("field") == field).select(
-        "n_docs", "avgdl", "total_dl"
-    )
-    out = (
-        matched.join(F.broadcast(ts), "term")
-        .join(ds, "doc_id")
-        .crossJoin(F.broadcast(g))
-    )
-    try:
-        features = idx.analyzer(field).features
-    except Exception:
-        features = ("norm",)
-    if "norm" not in features:
-        # the reference stores document lengths only when the field's
-        # dictionary declares the `norm` feature (tokenizer_options.h:63,
-        # default false); without norms the BM25 length term is the
-        # constant 1 (bm25.cpp:353-359 fills norm[i]=1) — headline.test
-        # ranks tf-3 docs of different lengths as TIES
-        out = out.withColumn("dl", F.col("avgdl"))
-    return out
 
 
 def _bm25_contrib(k1: float, b: float) -> Column:
@@ -117,100 +101,39 @@ def _dfi_contrib() -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def _scored_base_local(idx: InvertedIndex, field: str,
-                       qt: list) -> DataFrame | None:
-    """_scored_base with the per-term stats (df/ctf) and field globals
-    inlined as LITERAL CASE expressions from the _bound_stats cache —
-    for queries whose (term, boost) list is known driver-side. Drops
-    three broadcast builds per scoring run (the local score_terms
-    relation, the term_stats slice, the globals cross join); only the
-    doc_stats dl join remains, and even that disappears for norm-less
-    fields. Returns None when the globals row is unavailable (empty
-    index) — caller falls back to the relational base."""
-    terms = [t for t, _ in qt]
-    g, known = _bound_stats(idx, field, terms)
-    if g is None:
-        return None
-    live = [(t, b, known[t]) for t, b in qt if known.get(t) is not None]
-
-    def case_of(pairs, default=0.0):
-        c = None
-        for t, v in pairs:
-            c = (F.when(F.col("term") == t, F.lit(v)) if c is None
-                 else c.when(F.col("term") == t, F.lit(v)))
-        return c.otherwise(F.lit(default)) if c is not None \
-            else F.lit(default)
-
-    P = _postings_for_terms_sc(idx, field, [t for t, _, _ in live] or terms)
-    out = P.select(
-        "doc_id", "term", "freq",
-        case_of([(t, float(b)) for t, b, _ in live], 1.0).alias("boost"),
-        case_of([(t, float(d["df"])) for t, _, d in live]).alias("df"),
-        case_of([(t, float(d["ctf"])) for t, _, d in live]).alias("ctf"),
-        F.lit(float(g["n_docs"])).alias("n_docs"),
-        F.lit(float(g["avgdl"])).alias("avgdl"),
-        F.lit(float(g["total_dl"])).alias("total_dl"),
-    )
-    try:
-        features = idx.analyzer(field).features
-    except Exception:
-        features = ("norm",)
-    if "norm" not in features:
-        return out.withColumn("dl", F.lit(float(g["avgdl"])))
-    ds = idx.doc_stats.where(F.col("field") == field).select("doc_id", "dl")
-    return out.join(ds, "doc_id")
-
-
-def _postings_for_terms_sc(idx: InvertedIndex, field: str, terms: list[str]):
-    from serenedb_spark.plans.planner import _postings_for_terms
-
-    return _postings_for_terms(idx, field, terms)
-
-
 def score(
     idx: InvertedIndex,
     field: str,
-    score_terms: DataFrame,
+    score_terms: list[tuple[str, float]],
     scorer: str = "bm25",
     doc_filter: DataFrame | None = None,
-    terms_local: list | None = None,
     **params,
 ) -> DataFrame:
-    """Return (doc_id, score) for every doc containing ≥1 query term.
-    With doc_filter (a doc_id relation), scoring is restricted to those
-    docs — the max-score candidate path. ``terms_local`` carries the
-    literal (term, boost) pairs when known driver-side, switching to the
-    literal-stats base (fewer broadcast jobs)."""
-    base = (_scored_base_local(idx, field, terms_local)
-            if terms_local else None)
-    if base is None:
-        base = _scored_base(idx, field, score_terms)
-        contrib, agg_of = _contrib_expr(scorer, score_terms, params)
-    else:
-        n_q = float(len(terms_local)) if scorer == "lm_dirichlet" else 0.0
-        contrib = _contrib_expr_n(scorer, F.lit(n_q), params)
-        agg_of = F.max if scorer == "raw_dl" else F.sum
+    """Return (doc_id, score) for every doc containing ≥1 query term of
+    ``score_terms`` (CompiledQuery.score_terms). With doc_filter (a doc_id
+    relation), scoring is restricted to those docs — the max-score
+    candidate path."""
+    rows = scored_contributions_multi(
+        idx, [(field, t, b) for t, b in score_terms], scorer, **params)
     if doc_filter is not None:
-        base = base.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
-    agg = agg_of(contrib)
-    return base.groupBy("doc_id").agg(agg.alias("score"))
+        rows = rows.join(doc_filter.select("doc_id"), "doc_id", "left_semi")
+    return rows.groupBy("doc_id").agg(
+        scorer_aggregator(scorer)("contrib").alias("score"))
 
 
-def scored_contributions(
-    idx: InvertedIndex,
-    field: str,
-    score_terms: DataFrame,
-    scorer: str = "bm25",
-    **params,
-) -> DataFrame:
-    """(doc_id, contrib) per matched (doc × query term) pair, BEFORE the
-    per-doc aggregation — lets multi-field scorers union several fields'
-    contributions and aggregate ONCE (one shuffle keyed doc_id instead of
-    one per field plus an outer join). Per-field stats are resolved before
-    the union, so rows carry their own field's df/dl/globals."""
-    base = _scored_base(idx, field, score_terms)
-    contrib, _ = _contrib_expr(scorer, score_terms, params)
-    return base.select("doc_id", contrib.alias("contrib"))
+def score_fields(parts, scorer: str = "bm25", **params) -> DataFrame:
+    """(doc_id, score) of a statement with `@@` on several columns: each
+    (idx, field, score_terms) match is scored on its own and the scores
+    are summed per doc (demo3 §7 "ranked by BM25 across all matched
+    terms")."""
+    scores = [score(idx, f, terms, scorer, **params)
+              for idx, f, terms in parts]
+    if len(scores) == 1:
+        return scores[0]
+    u = scores[0]
+    for s in scores[1:]:
+        u = u.unionByName(s)
+    return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
 
 
 def scored_contributions_multi(
@@ -219,142 +142,151 @@ def scored_contributions_multi(
     scorer: str = "bm25",
     **params,
 ) -> DataFrame:
-    """(doc_id, field, contrib) for a MULTI-FIELD term query in ONE
-    postings scan: ``field_terms`` is the literal (field, term, boost)
-    query relation, broadcast and joined on (field, term), so N fields
-    stop multiplying postings scans (the per-field path re-read postings
-    once per field — reference dis_max/multi_match read one iterator
-    forest, server/network/http/es/dsl.cpp:394-407). Per-field stats
-    (df/ctf, dl, globals) arrive keyed by field in the same joins; the
-    lm_dirichlet |q| length penalty uses each field's own query-term
-    count, carried as a column of the literal relation."""
-    from collections import Counter
+    """(doc_id, field, contrib) per matched (doc × query term) pair of the
+    (field, term, boost) triples, BEFORE the per-doc aggregation, in ONE
+    postings scan: N fields do not multiply scans, and callers union or
+    aggregate the rows once (one shuffle keyed doc_id). Rows carry their
+    own field's df/ctf, dl and globals; the lm_dirichlet |q| length
+    penalty uses each field's own query-term count.
 
+    The expressions (the stat columns, the keep predicate on several
+    fields, the contribution) are memoized per (index, query shape) with
+    the stats cache; the plan is still built and executed fresh per call.
+    """
+    memo = idx.memo("multi_exprs")
+    mck = (tuple(field_terms), scorer, tuple(sorted(params.items())),
+           len(field_terms) > SCORED_TERMS_LIMIT)
+    if mck not in memo:
+        memo[mck] = _contributions_builder(idx, field_terms, scorer, params)
+    return memo[mck](idx)
+
+
+def _contributions_builder(idx: InvertedIndex, field_terms, scorer: str,
+                           params: dict):
+    """The driver-side half of scored_contributions_multi: resolves the
+    stats and builds the expressions once, and returns the function that
+    builds the rows' plan from them.
+
+    Literal stats come from the _bound_stats cache. A field with no
+    globals row (no postings) contributes nothing and is left out, as
+    is a term absent from its field's dictionary."""
     n_by_field = Counter(f for f, _, _ in field_terms)
-    fields = sorted(n_by_field)
-    terms = sorted({t for _, t, _ in field_terms})
-    if len(field_terms) > SCORED_TERMS_LIMIT:
-        # very wide multi_match: O(pairs × 7 stat columns) literal CASE
-        # branches would balloon analysis/codegen (the planner's
-        # _FLAG_MAX_TERMS guard, applied here) — fall back to the
-        # relational per-field base unioned, which scales in data not in
-        # plan size
-        parts = []
-        spark = idx.postings.sparkSession
-        for f in fields:
-            st = local_frame(spark, "term string, boost double", [
-                {"term": t, "boost": b} for ff, t, b in field_terms
-                if ff == f])
-            contrib = scored_contributions(idx, f, st, scorer, **params)
-            parts.append(contrib.select(
-                "doc_id", F.lit(f).alias("field"), "contrib"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    # literal per-(field, term) stats from the _bound_stats cache: the
-    # query relation, term_stats slice and globals were three broadcast
-    # builds per run; the (field, term) list is known driver-side, so
-    # they inline as CASE literals. A field with no globals row (no
-    # postings) contributed nothing through the inner join — skipping it
-    # here is identical. The whole CASE-column set (7 stat columns + the
-    # keep predicate + contribution, hundreds of py4j calls) is memoized
-    # per (index, query shape) alongside the stats cache — expressions
-    # only; the plan is still built and executed fresh per call.
-    multi_exprs = idx.memo("multi_exprs")
-    mck = (tuple(field_terms), scorer, tuple(sorted(params.items())))
-    cached = multi_exprs.get(mck)
-    if cached is None:
-        stats: dict = {}
-        gl: dict = {}
-        for f in fields:
-            g, known = _bound_stats(idx, f, [t for ff, t, _ in field_terms
-                                             if ff == f])
-            if g is None:
-                continue
-            gl[f] = g
-            for ff, t, b in field_terms:
-                if ff == f and known.get(t) is not None:
-                    stats[(f, t)] = (float(b), known[t])
+    wide = len(field_terms) > SCORED_TERMS_LIMIT
+    boosts = {(f, t): float(b) for f, t, b in field_terms}
+    gl, stats = {}, {}
+    for f in n_by_field:
+        g, known = _bound_stats(
+            idx, f, [] if wide else [t for ff, t in boosts if ff == f])
+        if g is None:
+            continue
+        gl[f] = g
+        for ff, t in boosts:
+            if ff == f and (wide or known.get(t) is not None):
+                stats[(f, t)] = known.get(t)
+    fields = list(dict.fromkeys(f for f, _ in stats))
+    terms = list(dict.fromkeys(t for _, t in stats))
+    if not fields:  # no query term has postings
+        return lambda ix: _postings_for_terms(ix, [], []).select(
+            "doc_id", "field", F.lit(0.0).alias("contrib"))
+    one = len(fields) == 1
 
-        def pair_case(val_of):
-            c = None
-            for (f, t), (b, d) in stats.items():
+    def by_field(val_of):
+        if one:
+            return val_of(fields[0])
+        c = None
+        for f in fields:
+            c = (F.when(F.col("field") == f, val_of(f)) if c is None
+                 else c.when(F.col("field") == f, val_of(f)))
+        return c
+
+    def by_pair(val_of):
+        c = None
+        for (f, t), d in stats.items():
+            cond = (F.col("term") == t if one
+                    else (F.col("field") == f) & (F.col("term") == t))
+            v = F.lit(val_of(f, t, d))
+            c = F.when(cond, v) if c is None else c.when(cond, v)
+        return c.otherwise(F.lit(0.0))
+
+    cols = [by_field(lambda f: F.lit(float(gl[f][c]))).alias(c)
+            for c in ("n_docs", "avgdl", "total_dl")]
+    cols.append(by_field(lambda f: F.lit(float(n_by_field[f])))
+                .alias("n_terms"))
+    keep = None
+    if wide:
+        cols += ["boost", "df", "ctf"]
+    else:
+        cols += [
+            by_pair(lambda f, t, d: boosts[(f, t)]).alias("boost"),
+            by_pair(lambda f, t, d: float(d["df"])).alias("df"),
+            by_pair(lambda f, t, d: float(d["ctf"])).alias("ctf"),
+        ]
+        if not one:
+            # rows for (field, term) pairs absent from the query must not
+            # score: the postings filter admits every field × term
+            for f, t in stats:
                 cond = (F.col("field") == f) & (F.col("term") == t)
-                c = (F.when(cond, F.lit(val_of(f, t, b, d))) if c is None
-                     else c.when(cond, F.lit(val_of(f, t, b, d))))
-            return c.otherwise(F.lit(0.0)) if c is not None else F.lit(0.0)
+                keep = cond if keep is None else (keep | cond)
 
-        def field_case(val_of):
-            c = None
-            for f, g in gl.items():
-                c = (F.when(F.col("field") == f, F.lit(val_of(f, g)))
-                     if c is None
-                     else c.when(F.col("field") == f, F.lit(val_of(f, g))))
-            return c.otherwise(F.lit(0.0)) if c is not None else F.lit(0.0)
+    # the reference stores document lengths only when the field's
+    # dictionary declares the `norm` feature (tokenizer_options.h:63,
+    # default false); without norms the BM25 length term is the
+    # constant 1 (bm25.cpp:353-359 fills norm[i]=1) — headline.test
+    # ranks tf-3 docs of different lengths as TIES
+    def has_norm(f):
+        try:
+            return "norm" in idx.analyzer(f).features
+        except Exception:
+            return True
 
-        # rows for (field, term) pairs absent from the query relation must
-        # not score: the broadcast join dropped them; filter keeps parity
-        live = list(stats)
-        keep = None
-        for f, t in live:
-            cond = (F.col("field") == f) & (F.col("term") == t)
-            keep = cond if keep is None else (keep | cond)
-        sel = None
-        if live:
-            sel = [
-                "doc_id", "field", "freq",
-                pair_case(lambda f, t, b, d: b).alias("boost"),
-                pair_case(lambda f, t, b, d: float(d["df"])).alias("df"),
-                pair_case(lambda f, t, b, d: float(d["ctf"])).alias("ctf"),
-                field_case(lambda f, g: float(g["n_docs"])).alias("n_docs"),
-                field_case(lambda f, g: float(g["avgdl"])).alias("avgdl"),
-                field_case(
-                    lambda f, g: float(g["total_dl"])).alias("total_dl"),
-                field_case(
-                    lambda f, g: float(n_by_field[f])).alias("n_terms"),
-            ]
-        contrib = _contrib_expr_n(scorer, F.col("n_terms"), params)
-        cached = multi_exprs[mck] = (keep, sel, contrib)
-    keep, sel, contrib = cached
+    normed = [f for f in fields if has_norm(f)]
+    dl = None if len(normed) == len(fields) else by_field(
+        lambda f: F.col("dl") if f in normed
+        else F.lit(float(gl[f]["avgdl"])))
+    keys = ["doc_id"] if one else ["field", "doc_id"]
+    contrib = _contrib_expr(scorer, F.col("n_terms"), params)
+    wide_rows = [{"field": f, "term": t, "boost": boosts[(f, t)]}
+                 for f, t in stats]
 
-    # the isin filters push into the scan: a parquet filter on a reopened
-    # save_index layout, the cached-scan predicate on a persisted index
-    # (no bucket predicate is added, so no partition pruning)
-    P = idx.postings.where(
-        F.col("field").isin(fields) & F.col("term").isin(terms))
-    if sel is None:
-        return P.select(
-            "doc_id", "field", F.lit(0.0).alias("contrib")).where(F.lit(False))
-    base = P.where(keep).select(*sel)
-    ds = idx.doc_stats.where(F.col("field").isin(fields)).select(
-        "field", "doc_id", "dl")
-    base = base.join(ds, ["field", "doc_id"])
-    return base.select("doc_id", "field", contrib.alias("contrib"))
+    def build(ix: InvertedIndex) -> DataFrame:
+        P = _postings_for_terms(ix, fields[0] if one else fields, terms)
+        if wide:
+            # relational per-(field, term) stats: O(pairs) literal CASE
+            # branches would balloon analysis and codegen (the planner's
+            # _FLAG_MAX_TERMS guard, applied here); the join scales in
+            # data, not in plan size
+            query = local_frame(ix.postings.sparkSession,
+                                "field string, term string, boost double",
+                                wide_rows)
+            ts = ix.term_stats.where(F.col("field").isin(fields)).select(
+                "field", "term", "df", "ctf")
+            P = (P.join(F.broadcast(query), ["field", "term"])
+                 .join(F.broadcast(ts), ["field", "term"]))
+        elif keep is not None:
+            P = P.where(keep)
+        base = P.select("doc_id", "field", "freq", *cols)
+        if normed:
+            base = base.join(
+                ix.doc_stats.where(F.col("field").isin(normed))
+                .select(*keys, "dl"), keys, "left" if dl is not None
+                else "inner")
+        if dl is not None:
+            base = base.withColumn("dl", dl)
+        return base.select("doc_id", "field", contrib.alias("contrib"))
+
+    return build
 
 
 def scorer_aggregator(scorer: str):
-    """How scored_contributions rows combine into one per-doc score:
-    raw_dl is a per-doc property (max == the value); every other scorer
-    sums per-term contributions."""
+    """How scored_contributions_multi rows combine into one per-doc
+    score: raw_dl is a per-doc property (max == the value); every other
+    scorer sums per-term contributions."""
     return F.max if scorer == "raw_dl" else F.sum
 
 
-def _contrib_expr(scorer, score_terms, params):
-    """(contribution Column, aggregator) for a scorer name; the per-doc
-    aggregator comes with it. lm_dirichlet needs |q| — counted from the
-    score_terms relation here; callers with a literal term list use
-    _contrib_expr_n directly."""
-    n_terms = (score_terms.count() if scorer == "lm_dirichlet" else 0)
-    contrib = _contrib_expr_n(scorer, F.lit(float(n_terms)), params)
-    agg_of = F.max if scorer == "raw_dl" else F.sum
-    return contrib, agg_of
-
-
-def _contrib_expr_n(scorer, n_terms_col, params):
+def _contrib_expr(scorer, n_terms_col, params):
     """Contribution Column for a scorer name; ``n_terms_col`` supplies the
-    lm_dirichlet |q| (a literal for single-field paths, a per-row column
-    for the multi-field shared scan)."""
+    lm_dirichlet |q| (a per-row column: each field's query-term count)."""
     if scorer == "bm25":
         contrib = _bm25_contrib(params.get("k1", 1.2), params.get("b", 0.75))
     elif scorer == "tfidf":
@@ -409,8 +341,10 @@ def _contrib_expr_n(scorer, n_terms_col, params):
 #: reference's escape hatch when bound math is suspected, ours too
 DISABLE_TOPK_PRUNING = False
 
-#: SET sdb_scored_terms_limit analogue: expansions wider than this skip
-#: bound computation (driver-side per-term stats stop paying off)
+#: SET sdb_scored_terms_limit analogue: a query wider than this many
+#: (field, term) pairs skips bound computation and reads its per-term
+#: stats through a join instead of literal columns (driver-side per-term
+#: stats stop paying off)
 SCORED_TERMS_LIMIT = 64
 
 # Three statistics of an index are memoized ON the index (idx.memo), so
@@ -423,9 +357,9 @@ SCORED_TERMS_LIMIT = 64
 #    the strongest term), NOT a result: it only decides which terms are
 #    non-essential, and the pruned plan is provably identical to the
 #    unpruned one;
-#  * "multi_exprs": per multi-field query shape, the literal-stats CASE
-#    columns scored_contributions_multi builds (expressions only — see
-#    the function body).
+#  * "multi_exprs": per query shape, the stat columns and contribution
+#    scored_contributions_multi builds (expressions only — see the
+#    function body).
 
 
 def _bound_stats(idx: InvertedIndex, field: str, terms: list[str]):
@@ -476,28 +410,21 @@ def _term_upper_bound(scorer: str, st: dict, g, n_terms: int,
 def scored_topk(
     idx: InvertedIndex,
     field: str,
-    score_terms: DataFrame,
+    score_terms: list[tuple[str, float]],
     k: int,
     scorer: str = "bm25",
     round_to: int = 4,
     info: dict | None = None,
-    terms_local: list | None = None,
     **params,
 ) -> DataFrame:
     """Exact (doc_id, score) top-k over a pure disjunction with max-score
     pruning. Falls back to full scoring when the scorer has no bound, the
     expansion is degenerate (1 term) or too wide to bound driver-side.
     `info`, when passed, receives {pruned_terms, total_terms, theta} — the
-    observability hook tests assert on (like ordered_scan.files_scanned).
-    ``terms_local`` (CompiledQuery.terms_local) carries the literal
-    (term, boost) pairs when the query needed no dictionary expansion, so
-    no job is spent collecting the tiny local relation."""
-    if terms_local is not None:
-        qt = list(terms_local)
-    else:
-        qt = [(r["term"], r["boost"]) for r in score_terms.collect()]
+    observability hook tests assert on (like ordered_scan.files_scanned)."""
+    qt = list(score_terms)
     full = lambda: (  # noqa: E731 — the unpruned plan, used by fallbacks
-        score(idx, field, score_terms, scorer, terms_local=qt, **params)
+        score(idx, field, qt, scorer, **params)
         .select("doc_id", F.round(F.col("score"), round_to).alias("score"))
         .orderBy(F.col("score").desc(), "doc_id").limit(k)
     )
@@ -546,10 +473,8 @@ def scored_topk(
         if theta is None:
             return full()  # cached "not enough floor docs" outcome
     else:
-        single = score_terms.where(F.col("term") == t_star)
         top_a = (
-            score(idx, field, single, scorer,
-                  terms_local=[(t_star, boosts[t_star])], **params)
+            score(idx, field, [(t_star, boosts[t_star])], scorer, **params)
             .orderBy(F.col("score").desc(), "doc_id").limit(k).collect()
         )
         if len(top_a) < k:
@@ -574,14 +499,10 @@ def scored_topk(
         info.update(pruned_terms=cut, total_terms=len(by_ub), theta=theta)
     if not essential or len(essential) == len(by_ub):
         return full()  # nothing pruned — skip the extra join
-    cand = (
-        idx.postings.where((F.col("field") == field)
-                           & F.col("term").isin(essential))
-        .select("doc_id").distinct()
-    )
+    cand = _postings_for_terms(idx, field, essential).select("doc_id") \
+        .distinct()
     return (
-        score(idx, field, score_terms, scorer, doc_filter=cand,
-              terms_local=qt, **params)
+        score(idx, field, qt, scorer, doc_filter=cand, **params)
         .select("doc_id", F.round(F.col("score"), round_to).alias("score"))
         .orderBy(F.col("score").desc(), "doc_id").limit(k)
     )

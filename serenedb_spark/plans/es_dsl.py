@@ -224,7 +224,7 @@ def _bool_multi_field(idx: InvertedIndex, body: dict[str, Any],
     # contributes twice, exactly as two independent clause scores would)
     scored = musts + shoulds
     from serenedb_spark.operators.scoring import (
-        scored_contributions, scorer_aggregator,
+        scored_contributions_multi, scorer_aggregator,
     )
 
     out = docs.select("doc_id")
@@ -241,8 +241,9 @@ def _bool_multi_field(idx: InvertedIndex, body: dict[str, Any],
     else:
         u = None
         for f, c in scored:
-            p = scored_contributions(idx, f, c.score_terms, scorer) \
-                .select("doc_id", "contrib")
+            p = scored_contributions_multi(
+                idx, [(f, t, b) for t, b in c.score_terms], scorer,
+            ).select("doc_id", "contrib")
             u = p if u is None else u.unionByName(p)
         if u is not None:
             s = u.groupBy("doc_id").agg(F.sum("contrib").alias("__s"))
@@ -452,8 +453,7 @@ def es_search(
         f, node = parse_query(query, idx.analyzer(field))
         field = f or field
         compiled = compile_query(idx, field, node)
-        s = _score(idx, field, compiled.score_terms, scorer,
-                   terms_local=compiled.terms_local)
+        s = _score(idx, field, compiled.score_terms, scorer)
         # scorer-reuse: a pure disjunction's score keys ARE the match set
         hits = (s if is_pure_disjunction(node)
                 else compiled.doc_ids.join(s, "doc_id", "left"))

@@ -15,13 +15,20 @@ the docstore:
     similarity, compounds, unanchored trees) falls back to one
     term-filtered postings scan per leaf and set algebra on doc_id.
 
+A compiled query carries its score terms as a driver-held list of
+(term, boost) pairs (CompiledQuery.score_terms), literal or collected
+from the term dictionary, which operators/scoring.py turns into scoring
+rows in one place.
+
 Scale discipline (100 TB):
   * every leaf starts from postings filtered by literal term predicates —
     pushed into the scan (a parquet filter that also prunes term buckets on
     a reopened save_index layout); the corpus is never scanned.
-  * term-dictionary expansions (prefix/wildcard/regexp/fuzzy/range) filter
-    the tiny term_stats table and BROADCAST the matched term list into the
-    postings join.
+  * term-dictionary expansions (prefix/wildcard/regexp/fuzzy/range, and
+    the expansion parts of a `##` sequence) filter the tiny term_stats
+    table and collect the matched terms at plan time (IResearch collects a
+    multi-term filter's terms when it prepares the query): the leaf then
+    matches like an AnyOf, through the same term-filtered postings scan.
   * the fallback's doc-id set algebra uses semi/anti joins on doc_id, which
     AQE converts to broadcast joins when one side is small (the common
     case: selective predicates).
@@ -42,7 +49,6 @@ from pyspark.sql import functions as F
 
 from serenedb_spark.operators.indexing import InvertedIndex
 from serenedb_spark.plans import tsquery as q
-from serenedb_spark.sources.local import local_frame
 
 #: SET sdb_levenshtein_max_terms analogue (config_variables.cpp): a
 #: session-wide cap on fuzzy dictionary expansion, tightening any
@@ -52,49 +58,29 @@ LEVENSHTEIN_MAX_TERMS: int | None = None
 
 @dataclass
 class CompiledQuery:
-    """doc_ids: distinct matching doc ids; score_terms: (term, boost) pairs —
-    literal or term-dict-expanded — feeding the scorer."""
+    """doc_ids: distinct matching doc ids; score_terms: the (term, boost)
+    pairs feeding the scorer, held on the driver (literal, or collected
+    from the term dictionary for an expansion)."""
 
     doc_ids: DataFrame
-    score_terms: DataFrame  # columns: term STRING, boost DOUBLE
-    #: literal (term, boost) pairs when the score-term set is known
-    #: driver-side (no dictionary expansion) — lets the scorer skip the
-    #: collect job it would otherwise run on the tiny local relation
-    terms_local: list | None = None
+    score_terms: list[tuple[str, float]]
 
 
-def _postings(idx: InvertedIndex, field: str) -> DataFrame:
-    return idx.postings.where(F.col("field") == field)
-
-
-def _postings_for_terms(idx: InvertedIndex, field: str, terms: list[str]) -> DataFrame:
-    """Term-filtered postings; when the index was saved with term buckets
-    (save_index partitionBy), add the bucket predicate so the scan touches
-    at most |terms| of N partition directories (partition pruning — the
-    100 TB path)."""
-    P = _postings(idx, field).where(F.col("term").isin(terms))
+def _postings_for_terms(idx: InvertedIndex, field: str | list[str],
+                        terms: list[str]) -> DataFrame:
+    """Term-filtered postings of one field (or a list of fields); when
+    the index was saved with term buckets (save_index partitionBy), add
+    the bucket predicate so the scan touches at most |terms| of N
+    partition directories (partition pruning — the 100 TB path)."""
+    on_field = (F.col("field") == field if isinstance(field, str)
+                else F.col("field").isin(field))
+    P = idx.postings.where(on_field).where(F.col("term").isin(terms))
     if "bucket" in idx.postings.columns:
         from serenedb_spark.operators.indexing import py_term_bucket
 
         buckets = sorted({py_term_bucket(t) for t in terms})
         P = P.where(F.col("bucket").isin(buckets))
     return P
-
-
-def _terms_df(idx: InvertedIndex, terms: list[str]) -> DataFrame:
-    return local_frame(idx.postings.sparkSession, "term string",
-                       [{"term": t} for t in terms])
-
-
-def _empty_terms(idx: InvertedIndex) -> DataFrame:
-    return _boosted_terms(idx, {})
-
-
-def _boosted_terms(idx: InvertedIndex, boosts: dict[str, float]) -> DataFrame:
-    """The (term, boost) relation of a driver-held term list."""
-    return local_frame(idx.postings.sparkSession, "term string, boost double",
-                       [{"term": t, "boost": float(b)}
-                        for t, b in boosts.items()])
 
 
 _POSIX_CLASSES = {
@@ -143,6 +129,10 @@ def _damerau_le(col, w: str, d: int):
         return s.map(lambda a: dist(a) <= d)
 
     return _ok(col)
+
+
+#: leaves whose term set is a term-dictionary expansion
+_EXPANSIONS = (q.Prefix, q.Wildcard, q.Regexp, q.Fuzzy, q.Between)
 
 
 def _expand(idx: InvertedIndex, field: str, node: q.TSQuery) -> DataFrame:
@@ -203,6 +193,31 @@ def _expand(idx: InvertedIndex, field: str, node: q.TSQuery) -> DataFrame:
             )
         return td.where(c).select("term")
     raise TypeError(f"not an expansion leaf: {node!r}")
+
+
+def expanded_terms(idx: InvertedIndex, field: str,
+                   node: q.TSQuery) -> list[str]:
+    """The terms an expansion leaf matches, collected on the driver."""
+    return [r.term for r in _expand(idx, field, node).collect()]
+
+
+def _leaf_terms(idx: InvertedIndex, field: str,
+                node: q.TSQuery) -> tuple[list[str], int] | None:
+    """(terms, need) of a term-set leaf: a doc matches when it holds at
+    least `need` of `terms`. None for any other node."""
+    if isinstance(node, q.Term):
+        return [node.term], 1
+    if isinstance(node, q.AnyOf):
+        return list(dict.fromkeys(node.terms)), node.min_match
+    if isinstance(node, q.AllOf):
+        terms = list(dict.fromkeys(node.terms))
+        return terms, len(terms)
+    if isinstance(node, q.NgramSim):
+        grams = list(dict.fromkeys(idx.analyzer(field).tokens(node.text)))
+        return grams, math.ceil(node.threshold * len(grams))
+    if isinstance(node, _EXPANSIONS):
+        return expanded_terms(idx, field, node), 1
+    return None
 
 
 def is_pure_disjunction(node: q.TSQuery) -> bool:
@@ -267,8 +282,7 @@ def _wildcard_gram_claim(idx: InvertedIndex, field: str, node: q.TSQuery,
         ok = F.exists(ia.expr(F.lower(F.col(field))),
                       lambda t: t.like(pat))
     docs = store.where(ok).select("doc_id")
-    tdf = _terms_df(idx, grams).withColumn("boost", F.lit(boost))
-    return CompiledQuery(docs, tdf)
+    return CompiledQuery(docs, [(g, boost) for g in grams])
 
 
 def compile_query(
@@ -281,93 +295,46 @@ def compile_query(
     from serenedb_spark.plans.optimizer import optimize
 
     node = optimize(node)
-    P = _postings(idx, field)
-
-    if isinstance(node, q.Term):
-        docs = _postings_for_terms(idx, field, [node.term]).select("doc_id")
-        terms = _terms_df(idx, [node.term]).withColumn("boost", F.lit(boost))
-        return CompiledQuery(docs, terms, [(node.term, boost)])
-
-    if isinstance(node, q.AnyOf):
-        terms = list(dict.fromkeys(node.terms))
-        if node.min_match <= 1:
-            # pure disjunction: distinct is one exchange; the
-            # count-distinct aggregate would be two
-            docs = (
-                _postings_for_terms(idx, field, terms)
-                .select("doc_id").distinct()
-            )
-        else:
-            # postings are unique per (term, doc_id), so every query
-            # term appears at most once per group: count ≡ count_distinct
-            # without the two-level distinct-aggregate rewrite
-            docs = (
-                _postings_for_terms(idx, field, terms)
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("m"))
-                .where(F.col("m") >= node.min_match)
-                .select("doc_id")
-            )
-        tdf = _terms_df(idx, terms).withColumn("boost", F.lit(boost))
-        return CompiledQuery(docs, tdf, [(t, boost) for t in terms])
-
-    if isinstance(node, q.AllOf):
-        terms = list(dict.fromkeys(node.terms))
-        # count ≡ count_distinct: postings unique per (term, doc_id)
-        docs = (
-            _postings_for_terms(idx, field, terms)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .where(F.col("m") >= len(terms))
-            .select("doc_id")
-        )
-        tdf = _terms_df(idx, terms).withColumn("boost", F.lit(boost))
-        return CompiledQuery(docs, tdf, [(t, boost) for t in terms])
-
-    if isinstance(node, q.Phrase):
-        docs = _compile_phrase(idx, field, node)
-        tdf = _terms_df(idx, list(dict.fromkeys(node.words))).withColumn(
-            "boost", F.lit(boost)
-        )
-        return CompiledQuery(
-            docs, tdf, [(t, boost) for t in dict.fromkeys(node.words)])
-
-    if isinstance(node, q.PhraseSeq):
-        docs = _compile_phrase_seq(idx, field, node)
-        tdf = _phrase_seq_terms(idx, field, node).withColumn(
-            "boost", F.lit(boost)
-        )
-        return CompiledQuery(docs, tdf)
+    boost = float(boost)
 
     if isinstance(node, (q.Prefix, q.Wildcard)):
         wc = _wildcard_gram_claim(idx, field, node, boost)
         if wc is not None:
             return wc
 
-    if isinstance(node, (q.Prefix, q.Wildcard, q.Regexp, q.Fuzzy, q.Between)):
-        terms = _expand(idx, field, node)
-        docs = (
-            P.join(F.broadcast(terms), "term", "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        tdf = terms.withColumn("boost", F.lit(boost))
-        return CompiledQuery(docs, tdf)
+    leaf = _leaf_terms(idx, field, node)
+    if leaf is not None:
+        terms, need = leaf
+        P = _postings_for_terms(idx, field, terms)
+        if need <= 1:
+            # postings are unique per (term, doc_id): one term needs no
+            # distinct; a disjunction's distinct is one exchange where
+            # the count-distinct aggregate would be two
+            docs = P.select("doc_id")
+            if len(terms) > 1:
+                docs = docs.distinct()
+        else:
+            # every query term appears at most once per doc_id group, so
+            # count ≡ count_distinct without the two-level rewrite
+            docs = (
+                P.groupBy("doc_id")
+                .agg(F.count(F.lit(1)).alias("m"))
+                .where(F.col("m") >= need)
+                .select("doc_id")
+            )
+        return CompiledQuery(docs, [(t, boost) for t in terms])
 
-    if isinstance(node, q.NgramSim):
-        an = idx.analyzer(field)
-        grams = list(dict.fromkeys(an.tokens(node.text)))
-        need = math.ceil(node.threshold * len(grams))
-        # count ≡ count_distinct: postings unique per (term, doc_id)
-        docs = (
-            _postings_for_terms(idx, field, grams)
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .where(F.col("m") >= need)
-            .select("doc_id")
-        )
-        tdf = _terms_df(idx, grams).withColumn("boost", F.lit(boost))
-        return CompiledQuery(docs, tdf, [(t, boost) for t in grams])
+    if isinstance(node, q.Phrase):
+        docs = _compile_phrase(idx, field, node)
+        return CompiledQuery(
+            docs, [(t, boost) for t in dict.fromkeys(node.words)])
+
+    if isinstance(node, q.PhraseSeq):
+        part_terms = [_seq_part_terms(idx, field, p) for p in node.parts]
+        docs = _compile_phrase_seq(idx, field, node, part_terms)
+        return CompiledQuery(docs, [
+            (t, boost) for t in dict.fromkeys(
+                t for terms in part_terms for t in terms)])
 
     if isinstance(node, (q.And, q.Or, q.Not)):
         fp = _flag_compile(idx, field, node, boost)
@@ -379,23 +346,23 @@ def compile_query(
         docs = parts[0].doc_ids
         for p in parts[1:]:
             docs = docs.join(p.doc_ids, "doc_id", "left_semi")
-        return CompiledQuery(docs.distinct(), _union_terms(idx, parts),
-                             _union_terms_local(parts))
+        return CompiledQuery(docs.distinct(), _union_terms(
+            tb for p in parts for tb in p.score_terms))
 
     if isinstance(node, q.Or):
         parts = [compile_query(idx, field, p, boost) for p in node.parts]
         docs = parts[0].doc_ids
         for p in parts[1:]:
             docs = docs.unionByName(p.doc_ids)
-        return CompiledQuery(docs.distinct(), _union_terms(idx, parts),
-                             _union_terms_local(parts))
+        return CompiledQuery(docs.distinct(), _union_terms(
+            tb for p in parts for tb in p.score_terms))
 
     if isinstance(node, q.Not):
         inner = compile_query(idx, field, node.part, boost)
         universe = idx.universe.where(F.col("field") == field).select("doc_id")
         docs = universe.join(inner.doc_ids, "doc_id", "left_anti")
         # negative clauses do not contribute to relevance (Lucene/reference)
-        return CompiledQuery(docs, _empty_terms(idx), [])
+        return CompiledQuery(docs, [])
 
     if isinstance(node, q.Boost):
         return compile_query(idx, field, node.part, boost * node.factor)
@@ -409,8 +376,7 @@ def compile_query(
             # ts_compound(NULL, NULL, NULL) compiles to the Empty filter —
             # no clauses match nothing (null_semantics.test:500)
             return CompiledQuery(
-                _postings_for_terms(idx, field, []).select("doc_id"),
-                _empty_terms(idx), [])
+                _postings_for_terms(idx, field, []).select("doc_id"), [])
         if must:
             docs = must[0].doc_ids
             for p in must[1:]:
@@ -447,10 +413,8 @@ def compile_query(
         for p in must_not:
             docs = docs.join(p.doc_ids, "doc_id", "left_anti")
 
-        return CompiledQuery(
-            docs.distinct(), _union_terms(idx, must + should),
-            _union_terms_local(must + should)
-        )
+        return CompiledQuery(docs.distinct(), _union_terms(
+            tb for p in must + should for tb in p.score_terms))
 
     raise TypeError(f"unsupported TSQuery node: {node!r}")
 
@@ -577,35 +541,16 @@ def _flag_compile(idx: InvertedIndex, field: str, node: q.TSQuery,
     pos = {i: F.coalesce(F.col(f"__p{i}"), F.array().cast("array<int>"))
            for i in positional}
     docs = g.where(pred(flags, pos)).select("doc_id")
-    merged: dict[str, float] = {}
-    for t, b in tl:
-        merged[t] = max(merged.get(t, b), b)
-    return CompiledQuery(docs, _boosted_terms(idx, merged),
-                         list(merged.items()))
+    return CompiledQuery(docs, _union_terms(tl))
 
 
-def _union_terms_local(parts: list["CompiledQuery"]) -> list | None:
-    """Driver-side mirror of _union_terms: max boost per term, or None as
-    soon as any part's term set required dictionary expansion."""
-    merged: dict[str, float] = {}
-    for p in parts:
-        if p.terms_local is None:
-            return None
-        for t, b in p.terms_local:
-            merged[t] = max(merged.get(t, b), b)
-    return list(merged.items())
-
-
-def _union_terms(idx: InvertedIndex, parts: list[CompiledQuery]) -> DataFrame:
-    """Merge score-term sets; duplicate terms keep their max boost (the
+def _union_terms(pairs) -> list[tuple[str, float]]:
+    """Merge (term, boost) pairs; a duplicate term keeps its max boost (the
     reference unifies duplicate scorer calls, iresearch_plan.cpp:819)."""
-    dfs = [p.score_terms for p in parts]
-    if not dfs:
-        return _empty_terms(idx)
-    u = dfs[0]
-    for d in dfs[1:]:
-        u = u.unionByName(d)
-    return u.groupBy("term").agg(F.max("boost").alias("boost"))
+    merged: dict[str, float] = {}
+    for t, b in pairs:
+        merged[t] = max(merged.get(t, b), b)
+    return list(merged.items())
 
 
 def _compile_phrase(idx: InvertedIndex, field: str, ph: q.Phrase) -> DataFrame:
@@ -628,15 +573,14 @@ def _compile_phrase(idx: InvertedIndex, field: str, ph: q.Phrase) -> DataFrame:
 
     # conjunction leads (reference §4.2: smallest posting list drives the
     # join): order the doc_id join chain by ascending document frequency,
-    # looked up from the tiny term_stats table; a word missing from the
-    # dictionary (df=0) leads and short-circuits to empty immediately.
-    # The positions-validation fold below still runs in phrase order.
-    dfs = {
-        r.term: r.df
-        for r in idx.term_dict(field)
-        .where(F.col("term").isin(list(set(words))))
-        .select("term", "df").collect()
-    }
+    # read from the index's memoized per-term stats (the scorer's); a
+    # word missing from the dictionary (df=0) leads and short-circuits
+    # to empty immediately. The positions-validation fold below still
+    # runs in phrase order.
+    from serenedb_spark.operators.scoring import _bound_stats
+
+    _, known = _bound_stats(idx, field, list(dict.fromkeys(words)))
+    dfs = {w: known[w]["df"] for w in words if known.get(w)}
     join_order = sorted(range(len(words)), key=lambda i: (dfs.get(words[i], 0), i))
 
     joined = None
@@ -671,28 +615,25 @@ def _slop_fold(positions: list, gaps) -> "F.Column":
 
 
 #: leaves allowed as phrase-sequence parts (reference search.h:37-39)
-_SEQ_PART_TYPES = (q.Term, q.AnyOf, q.Prefix, q.Wildcard, q.Regexp,
-                   q.Fuzzy, q.Between)
+_SEQ_PART_TYPES = (q.Term, q.AnyOf) + _EXPANSIONS
+
+
+def _seq_part_terms(idx: InvertedIndex, field: str,
+                    part: q.TSQuery) -> list[str]:
+    """The candidate term set of one phrase-sequence part (an any-of
+    part's min_match is meaningless at one position: enforced =1)."""
+    if not isinstance(part, _SEQ_PART_TYPES):
+        raise TypeError(f"unsupported phrase-sequence part: {part!r}")
+    return _leaf_terms(idx, field, part)[0]
 
 
 def _seq_part_positions(idx: InvertedIndex, field: str,
-                        part: q.TSQuery, i: int) -> DataFrame:
+                        terms: list[str], i: int) -> DataFrame:
     """(doc_id, pos{i}) — per-doc sorted union of positions over the part's
-    candidate term set. Literal parts stay a term-IN postings filter;
-    expansion parts broadcast the term-dict match into the postings join
-    (same shape as the non-positional expansion leaves)."""
-    if isinstance(part, q.Term):
-        P = _postings_for_terms(idx, field, [part.term])
+    candidate term set, read through the term-filtered postings scan."""
+    P = _postings_for_terms(idx, field, terms)
+    if len(terms) == 1:  # one posting row per doc, positions pre-sorted
         return P.select("doc_id", F.col("positions").alias(f"pos{i}"))
-    if isinstance(part, q.AnyOf):
-        # any-of as a phrase part: position set = union over its terms
-        # (min_match is meaningless inside a positional part; enforced =1)
-        P = _postings_for_terms(idx, field, list(dict.fromkeys(part.terms)))
-    elif isinstance(part, _SEQ_PART_TYPES):
-        terms = _expand(idx, field, part)
-        P = _postings(idx, field).join(F.broadcast(terms), "term", "left_semi")
-    else:
-        raise TypeError(f"unsupported phrase-sequence part: {part!r}")
     return (
         P.groupBy("doc_id")
         .agg(F.sort_array(F.flatten(F.collect_list("positions")))
@@ -700,40 +641,23 @@ def _seq_part_positions(idx: InvertedIndex, field: str,
     )
 
 
-def _compile_phrase_seq(idx: InvertedIndex, field: str,
-                        ph: q.PhraseSeq) -> DataFrame:
+def _compile_phrase_seq(idx: InvertedIndex, field: str, ph: q.PhraseSeq,
+                        part_terms: list[list[str]]) -> DataFrame:
     """Positions-correct heterogeneous phrase (`##` chains): identical slop
     fold to _compile_phrase, but each position's candidate set comes from a
     term-set leaf instead of one literal word (reference stitches
     term/prefix/fuzzy/any/between parts into one irs phrase filter,
-    search.h:87; demo3:181-205)."""
-    parts = ph.parts
-    if len(parts) == 1:
-        return _seq_part_positions(idx, field, parts[0], 0).select("doc_id")
+    search.h:87; demo3:181-205). ``part_terms`` holds each part's
+    candidate terms (_seq_part_terms)."""
+    rels = [_seq_part_positions(idx, field, terms, i)
+            for i, terms in enumerate(part_terms)]
+    if len(rels) == 1:
+        return rels[0].select("doc_id")
 
-    joined = None
-    for i, part in enumerate(parts):
-        rel = _seq_part_positions(idx, field, part, i)
-        joined = rel if joined is None else joined.join(rel, "doc_id")
+    joined = rels[0]
+    for rel in rels[1:]:
+        joined = joined.join(rel, "doc_id")
 
-    valid = _slop_fold([F.col(f"pos{i}") for i in range(len(parts))],
+    valid = _slop_fold([F.col(f"pos{i}") for i in range(len(rels))],
                        ph.gaps)
     return joined.where(F.size(valid) > 0).select("doc_id")
-
-
-def _phrase_seq_terms(idx: InvertedIndex, field: str,
-                      ph: q.PhraseSeq) -> DataFrame:
-    """Union of every part's candidate terms — the score-term relation."""
-    literal: list[str] = []
-    expanded: list[DataFrame] = []
-    for part in ph.parts:
-        if isinstance(part, q.Term):
-            literal.append(part.term)
-        elif isinstance(part, q.AnyOf):
-            literal.extend(part.terms)
-        else:
-            expanded.append(_expand(idx, field, part))
-    out = _terms_df(idx, list(dict.fromkeys(literal)))
-    for e in expanded:
-        out = out.unionByName(e)
-    return out.distinct()

@@ -348,7 +348,7 @@ def _plan(sql_text: str, get_index) -> _MRPlan:
 def execute_multirel(sql_text: str, get_index, get_relation,
                      spark: SparkSession) -> DataFrame:
     """Rewrite-and-run a multi-relation (or GROUP BY) search statement."""
-    from serenedb_spark.operators.scoring import score as _score
+    from serenedb_spark.operators.scoring import score_fields
     from serenedb_spark.plans.dialect import sql_compat
 
     p = _plan(sql_text, get_index)
@@ -368,12 +368,9 @@ def execute_multirel(sql_text: str, get_index, get_relation,
                 doc_ids = doc_ids.join(c.doc_ids, "doc_id", "left_semi")
             df = idx_of[k].docstore.join(doc_ids, "doc_id", "left_semi")
             if r.scored:
-                parts = [_score(idx, col, c.score_terms, scorer, **params)
-                         for idx, col, c in comp]
-                score_df = parts[0]
-                for p in parts[1:]:
-                    score_df = (score_df.unionByName(p).groupBy("doc_id")
-                                .agg(F.sum("score").alias("score")))
+                score_df = score_fields(
+                    [(idx, col, c.score_terms) for idx, col, c in comp],
+                    scorer, **params)
                 df = df.join(score_df, "doc_id", "left").withColumn(
                     "__score", F.coalesce(F.col("score"), F.lit(0.0))
                 ).drop("score")

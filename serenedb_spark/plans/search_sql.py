@@ -1829,7 +1829,7 @@ def execute_select(stmt: SearchSelect, get_index,
     evaluates post-join; scorer (if any) left-joins as __score; the
     vector distance (if any) computes as __vdist.
     """
-    from serenedb_spark.operators.scoring import score as _score
+    from serenedb_spark.operators.scoring import score_fields
     from serenedb_spark.plans.planner import compile_query, is_pure_disjunction
 
     group_has_match = any(_tree_match_cols(g) for g in stmt.or_groups)
@@ -1885,19 +1885,9 @@ def execute_select(stmt: SearchSelect, get_index,
                 "__score", F.col("score")).drop("score")
             return _finish_select(stmt, _restore_key_name(idx0, out),
                                   idx=idx0)
-        # sum contributions across all @@ fields (demo3 §7 "ranked by
-        # BM25 across all matched terms")
-        parts = []
-        for idx, col, node, c in compiled:
-            parts.append(_score(idx, col, c.score_terms, stmt.scorer,
-                                terms_local=c.terms_local,
-                                **stmt.scorer_params))
-        score_df = parts[0]
-        for p in parts[1:]:
-            score_df = (
-                score_df.unionByName(p)
-                .groupBy("doc_id").agg(F.sum("score").alias("score"))
-            )
+        score_df = score_fields(
+            [(idx, col, c.score_terms) for idx, col, _, c in compiled],
+            stmt.scorer, **stmt.scorer_params)
 
     if score_df is None:
         out = idx0.docstore.join(doc_ids, "doc_id", "left_semi")
@@ -2029,8 +2019,7 @@ def _try_wand_topk(stmt: SearchSelect, compiled) -> DataFrame | None:
            for item in stmt.select_items):
         return None
     return scored_topk(idx, col, c.score_terms, stmt.limit, stmt.scorer,
-                       round_to=round_to, terms_local=c.terms_local,
-                       **stmt.scorer_params)
+                       round_to=round_to, **stmt.scorer_params)
 
 
 def _vec_dist_col(col: str, metric: str, qvec) -> "F.Column":
@@ -2223,8 +2212,8 @@ def _proj_expr(func: str, col: str, args: list, matches: dict,
         # term-dict-expanded leaves (ts_like/ts_starts_with/…): the
         # highlight terms are the dictionary expansion — a tiny
         # driver-side collect over term_stats (headline.test ts_like)
-        from serenedb_spark.plans.planner import _expand
-        groups = [[r[0]] for r in _expand(idx, col, node).collect()]
+        from serenedb_spark.plans.planner import expanded_terms
+        groups = [[t] for t in expanded_terms(idx, col, node)]
     if not groups:
         raise ValueError(
             f"{func}({col}): no literal query terms — pass the term "

@@ -2223,10 +2223,8 @@ def _fts_scored(name: str, node: q.TSQuery, scorer: str = "bm25",
             # scorer-reuse (the score relation's keys ARE the match set)
             # + max-score/WAND pruning: only docs matching an essential
             # term are scored once the k-th-best floor is known
-            return scored_topk(idx, _DOC_COL, compiled.score_terms, _k, _s,
-                               terms_local=compiled.terms_local)
-        s = _score(idx, _DOC_COL, compiled.score_terms, _s,
-                   terms_local=compiled.terms_local)
+            return scored_topk(idx, _DOC_COL, compiled.score_terms, _k, _s)
+        s = _score(idx, _DOC_COL, compiled.score_terms, _s)
         matched = compiled.doc_ids.join(s, "doc_id", "left")
         out = (
             matched

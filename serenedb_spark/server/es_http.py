@@ -147,7 +147,9 @@ class EsShim:
     def _typed(self, st, docs):
         """Bulk rows (index, _id, _source) → the table's columns: a
         mapping-created index shreds _source into its full typed schema
-        (every non-key column), any other takes its `text` field."""
+        (every non-key column), any other takes its `text` field. The
+        `_id` takes the key's type (the `_key` rule): a string `_id`
+        would widen a numeric key to string in the snapshot's union."""
         from serenedb_spark.sources.es_bulk import project_source
 
         if getattr(st, "es_types", None) is not None:
@@ -156,18 +158,22 @@ class EsShim:
             typed = [("text", "string")]
         return project_source(
             docs, ", ".join(f"{c} {t}" for c, t in typed)).select(
-                F.col("_id").alias(st.key), *[c for c, _t in typed])
+                F.col("_id").cast(self._key_type(st)).alias(st.key),
+                *[c for c, _t in typed])
 
     @staticmethod
-    def _key(st, _id):
+    def _key_type(st) -> str:
+        return dict(st._empty.dtypes)[st.key]
+
+    @classmethod
+    def _key(cls, st, _id):
         """An ES `_id` as a value of the table's key column."""
-        return (str(_id) if dict(st._empty.dtypes)[st.key] == "string"
-                else int(_id))
+        return str(_id) if cls._key_type(st) == "string" else int(_id)
 
     def _keys(self, st, ids: list[str]):
         """ES `_id`s as a relation of the table's key column."""
         return local_frame(
-            self.spark, f"{st.key} {dict(st._empty.dtypes)[st.key]}",
+            self.spark, f"{st.key} {self._key_type(st)}",
             [{st.key: self._key(st, i)} for i in ids])
 
     def _docs(self, index: str, ids: list) -> dict:
@@ -258,8 +264,9 @@ class EsShim:
             row = self._typed(st, es_doc(self.spark, index, body, doc_id))
         else:
             row = local_frame(
-                self.spark, f"{st.key} long, text string",
-                [{st.key: int(doc_id), "text": str(body.get("text", ""))}])
+                self.spark, f"{st.key} {self._key_type(st)}, text string",
+                [{st.key: self._key(st, doc_id),
+                  "text": str(body.get("text", ""))}])
         st.update(row)
         self._drop_snapshot(index)
         return {"_index": index, "_id": doc_id,

@@ -5,7 +5,7 @@ Rows travel as JSON text inside one `VALUES` list parsed by
 runs no job, where `createDataFrame` plans over a parallelized RDD and
 runs one per action. Every row set the driver already holds on a
 request path is built here: catalog relations, statement replies, the
-ES door's writes and the search planner's term lists."""
+ES door's writes and the scorer's wide query-term relation."""
 
 from __future__ import annotations
 

@@ -255,3 +255,46 @@ def test_multi_match_phrase_type_lowers_to_dis_max(spark):
         "query": "table scan", "fields": ["text"]}},
         "size": 5000}).count()
     assert len(mm) < bag
+
+
+@pytest.fixture(scope="module")
+def norm_idx(spark):
+    """`text` (simple, with norms) and `ng` (ngram2, no norms) over the
+    same four docs of different lengths."""
+    from serenedb_spark.operators.indexing import build_index
+
+    docs = spark.createDataFrame(
+        [(1, "abc"), (2, "abc abc xyz xyz xyz xyz abc"), (3, "xyz"),
+         (4, "ab bc abc xyz")], "doc_id long, text string")
+    return build_index(docs.withColumn("ng", docs.text),
+                       {"text": "simple", "ng": "ngram2"})
+
+
+def _match(idx, field, text):
+    return {r.doc_id: r.score for r in es_search(
+        idx, {"query": {"match": {field: text}}, "size": 10},
+        default_field=field).collect()}
+
+
+@pytest.mark.parametrize("field,text", [("ng", "abc"), ("text", "abc xyz")])
+def test_multi_match_on_one_field_equals_match(norm_idx, field, text):
+    """multi_match over one field scores exactly like match on it. On a
+    field whose analyzer has no `norm` feature (ngram2) both read the
+    BM25 length term as 1 (dl = avgdl), as the reference does."""
+    match = es_search(norm_idx, {"query": {"match": {field: text}},
+                                 "size": 10}, default_field=field).collect()
+    multi = es_search(norm_idx, {"query": {"multi_match": {
+        "query": text, "fields": [field]}}, "size": 10},
+        default_field=field).collect()
+    assert match and [tuple(r) for r in multi] == [tuple(r) for r in match]
+
+
+def test_multi_match_mixes_norm_and_normless_fields(norm_idx):
+    """best_fields over a field with norms and one without, in one scan,
+    is the max of the per-field match scores."""
+    per = [_match(norm_idx, f, "abc") for f in ("ng", "text")]
+    got = {r.doc_id: r.score for r in es_search(norm_idx, {"query": {
+        "multi_match": {"query": "abc", "fields": ["ng", "text"]}},
+        "size": 10}).collect()}
+    assert got == {d: max(p[d] for p in per if d in p)
+                   for d in set(per[0]) | set(per[1])}

@@ -336,3 +336,31 @@ def test_scroll_route_on_mapping_index(keyed):
     page = _post(f"{keyed}/_search?scroll=1m",
                  {"size": 2, "sort": [{"text": "desc"}]})
     assert [h["_id"] for h in page["hits"]["hits"]] == ["abc", "2"]
+
+
+def test_bulk_keeps_a_numeric_key_type_with_ansi_off(spark):
+    """A bulk `_id` is cast to the table's key type: with ANSI off, a
+    string `_id` would widen a bigint key to string in the snapshot's
+    union, and `_source`/`_doc` of an existing doc would then miss."""
+    from serenedb_spark.server.es_http import EsShim
+
+    shim = EsShim(spark)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .select("doc_id", "text").limit(3)
+    shim.create_index("numkey", docs, {"text": "simple"}, key="doc_id")
+    first = docs.orderBy("doc_id").first()
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        shim.bulk(json.dumps({"index": {"_index": "numkey",
+                                        "_id": "90000001"}}) + "\n"
+                  + json.dumps({"text": "gamma delta"}) + "\n")
+        shim.refresh("numkey")
+        store = shim._index("numkey").docstore
+        assert dict(store.dtypes)["doc_id"] == "bigint"
+        src, status = shim.get_source("numkey", str(first.doc_id))
+        assert status == 200 and src["doc_id"] == first.doc_id
+        assert shim.get_doc("numkey", "90000001")["_source"] == {
+            "doc_id": 90000001, "text": "gamma delta"}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)

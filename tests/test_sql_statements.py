@@ -168,8 +168,14 @@ def test_set_show_reset(ss):
     assert ss.show_variable("sdb_nprobe") == 4
     names = [r.name for r in ss.sql("SHOW ALL").collect()]
     assert "sdb_nprobe" in names
-    # non-sdb SET falls through to Spark's own SET
-    ss.sql("SET spark.sql.ansi.enabled = false")
+    # non-sdb SET falls through to Spark's own SET; the SparkSession is
+    # shared by the whole run, so the setting is restored
+    old = ss.spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        ss.sql("SET spark.sql.ansi.enabled = false")
+        assert ss.spark.conf.get("spark.sql.ansi.enabled") == "false"
+    finally:
+        ss.spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 # ---- GRANT / REVOKE -------------------------------------------------------
